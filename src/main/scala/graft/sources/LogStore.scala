@@ -71,11 +71,18 @@ object HadoopLogStore extends LogStore {
   private def fsOf(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
-  override def list(spark: SparkSession, dir: String): Seq[String] = {
+  override def list(spark: SparkSession, dir: String): Seq[String] =
+    listStats(spark, dir).keys.toSeq
+
+  /** (length, modification time) of each file directly under `dir`, by
+    * name; empty if absent.
+    */
+  def listStats(spark: SparkSession, dir: String): Map[String, (Long, Long)] = {
     val d = new Path(dir)
     val fs = fsOf(spark, d)
-    if (!fs.exists(d)) Seq.empty
-    else fs.listStatus(d).toSeq.filter(_.isFile).map(_.getPath.getName)
+    if (!fs.exists(d)) Map.empty
+    else fs.listStatus(d).iterator.filter(_.isFile)
+      .map(f => f.getPath.getName -> ((f.getLen, f.getModificationTime))).toMap
   }
 
   override def read(spark: SparkSession, path: String): String = {
@@ -180,5 +187,14 @@ object HadoopLogStore extends LogStore {
     val p = new Path(path)
     fsOf(spark, p).delete(p, false)
     ()
+  }
+
+  /** (length, modification time) of the file at `path`; None if absent. */
+  def stat(spark: SparkSession, path: String): Option[(Long, Long)] = {
+    val p = new Path(path)
+    try {
+      val st = fsOf(spark, p).getFileStatus(p)
+      Some((st.getLen, st.getModificationTime))
+    } catch { case _: java.io.FileNotFoundException => None }
   }
 }

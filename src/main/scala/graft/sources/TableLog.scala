@@ -194,46 +194,78 @@ object TableLog {
   private final case class DeltaFile(meta: Seq[(String, String)],
     removes: Seq[String], adds: Seq[Entry], legacyReplace: Boolean)
 
-  /** Parsed log-file cache (r17): manifests and checkpoints are IMMUTABLE
-    * once published — the [[LogStore.writeIfAbsent]] CAS is the only writer
-    * and versions are never rewritten (vacuum only DELETES, and every read
-    * path keeps its exists() probe first, so post-vacuum behavior — the
-    * typed "vacuumed?" errors — is unchanged). Parsed content keyed by
-    * absolute path is therefore valid for the life of the JVM. Engaged
-    * ONLY for the default [[HadoopLogStore]] singleton: a plugged store
-    * (conflict-injecting test mocks, conditional-put object stores) sees
-    * every read exactly as before. Bounded LRU so unbounded distinct roots
-    * over a long session cannot pin memory. The tallies are the probe
-    * surface for the streaming source's one-parse-per-version claim
-    * (a graftlog tail re-walked `(v-1, v]` manifests per micro-batch AND
-    * re-replayed the whole delta chain per stream construction — constant
-    * at gate scale, a real tax at production commit rates).
+  /** Parsed log-file cache: a manifest or checkpoint does not change once
+    * published — the [[LogStore.writeIfAbsent]] CAS is its only writer.
+    * The same PATH can hold a different file, though: a root deleted and
+    * rebuilt at the same path, or a vacuumed version committed again. So
+    * an entry is stamped with the file's (length, mtime), taken from the
+    * existence probe every read makes anyway (or from the listing
+    * [[history]] makes), and served only while the stamp matches; a successful write, vacuum's deletes and a restore
+    * also drop entries outright. Engaged ONLY for the default
+    * [[HadoopLogStore]] singleton: a plugged store (conflict-injecting
+    * test mocks, conditional-put object stores) sees every read exactly
+    * as before. Bounded LRU so unbounded distinct roots over a long
+    * session cannot pin memory. The tallies are the probe surface for the
+    * streaming source's one-parse-per-version claim (a graftlog tail
+    * re-walked `(v-1, v]` manifests per micro-batch AND re-replayed the
+    * whole delta chain per stream construction — constant at gate scale,
+    * a real tax at production commit rates) and for invalidations
+    * (dropped entries plus stamp mismatches).
     */
   private[graft] val manifestReadTally =
     new java.util.concurrent.atomic.AtomicLong
   private[graft] val manifestCacheHitTally =
     new java.util.concurrent.atomic.AtomicLong
+  private[graft] val manifestCacheInvalidationTally =
+    new java.util.concurrent.atomic.AtomicLong
+  private final case class Stamped(len: Long, mtime: Long, delta: DeltaFile)
   private val deltaCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, DeltaFile](256, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Stamped](256, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, DeltaFile]): Boolean = size() > 8192
+          e: java.util.Map.Entry[String, Stamped]): Boolean = size() > 8192
     })
 
-  private def readDelta(spark: SparkSession, store: LogStore,
-      path: String): DeltaFile =
+  /** The parsed log file at `path`; throws `missing` if there is none.
+    * `listed` is its (length, mtime) when the caller has just listed the
+    * directory.
+    */
+  private def readDelta(spark: SparkSession, store: LogStore, path: String,
+      missing: => String, listed: Option[(Long, Long)] = None): DeltaFile = {
+    def absent: Nothing = throw new IllegalStateException(missing)
     if (!store.eq(HadoopLogStore)) {
+      if (!store.exists(spark, path)) absent
       manifestReadTally.incrementAndGet()
       parseDelta(store.read(spark, path))
     } else {
+      val (len, mtime) =
+        listed.orElse(HadoopLogStore.stat(spark, path)).getOrElse(absent)
       val hit = deltaCache.get(path)
-      if (hit != null) { manifestCacheHitTally.incrementAndGet(); hit }
-      else {
+      if (hit != null && hit.len == len && hit.mtime == mtime) {
+        manifestCacheHitTally.incrementAndGet(); hit.delta
+      } else {
+        if (hit != null) manifestCacheInvalidationTally.incrementAndGet()
         manifestReadTally.incrementAndGet()
         val d = parseDelta(store.read(spark, path))
-        deltaCache.put(path, d)
+        deltaCache.put(path, Stamped(len, mtime, d))
         d
       }
     }
+  }
+
+  private def invalidate(path: String): Unit =
+    if (deltaCache.remove(path) != null)
+      manifestCacheInvalidationTally.incrementAndGet()
+
+  /** Drop every cached log file under `root`. */
+  private def invalidateRoot(root: String): Unit = {
+    val prefix = logDir(root) + "/"
+    deltaCache.synchronized {
+      val it = deltaCache.keySet.iterator
+      while (it.hasNext) if (it.next().startsWith(prefix)) {
+        it.remove(); manifestCacheInvalidationTally.incrementAndGet()
+      }
+    }
+  }
 
   private def parseDelta(content: String): DeltaFile = {
     val meta = Seq.newBuilder[(String, String)]
@@ -393,15 +425,13 @@ object TableLog {
         case _ => ()
       }
     }
-    cp.foreach(c =>
-      applyDelta(readDelta(spark, store, checkpointPath(root, c))))
+    cp.foreach(c => applyDelta(readDelta(spark, store,
+      checkpointPath(root, c), s"checkpoint $c vanished under $root")))
     var u = cp.getOrElse(0L) + 1
     while (u <= v) {
-      if (!store.exists(spark, manifestPath(root, u)))
-        throw new IllegalStateException(
-          s"manifest for version $u missing under $root (vacuumed past its " +
-            "checkpoint?) — cannot reconstruct the snapshot")
-      applyDelta(readDelta(spark, store, manifestPath(root, u)))
+      applyDelta(readDelta(spark, store, manifestPath(root, u),
+        s"manifest for version $u missing under $root (vacuumed past its " +
+          "checkpoint?) — cannot reconstruct the snapshot"))
       u += 1
     }
     LogState(v, m.values.toVector, schemaJson, epochMax, partColsMeta,
@@ -496,6 +526,7 @@ object TableLog {
       throw new CommitConflictException(
         s"commit of version $next lost the race (manifest exists); " +
           "re-plan against the new head and retry")
+    invalidate(manifestPath(root, next))
     maybeCheckpoint(spark, root, next, store)
     next
   }
@@ -568,11 +599,9 @@ object TableLog {
     val out = Set.newBuilder[String]
     var u = vFrom + 1
     while (u <= vTo) {
-      if (!store.exists(spark, manifestPath(root, u)))
-        throw new IllegalStateException(
-          s"manifest for version $u missing under $root — cannot compute " +
-            "the conflict footprint (vacuumed?)")
-      val d = readDelta(spark, store, manifestPath(root, u))
+      val d = readDelta(spark, store, manifestPath(root, u),
+        s"manifest for version $u missing under $root — cannot compute " +
+          "the conflict footprint (vacuumed?)")
       if (d.legacyReplace) return None
       out ++= d.removes
       out ++= d.adds.map(_.path)
@@ -603,8 +632,9 @@ object TableLog {
       st.colmapMeta.map("#colmap:" + _).toSeq ++
       st.epochMax.map("#epochmax:" + _).toSeq ++
       st.entries.map(fmtAdd)
-    store.writeIfAbsent(spark, checkpointPath(root, version),
-      lines.mkString("", "\n", "\n"))
+    if (store.writeIfAbsent(spark, checkpointPath(root, version),
+        lines.mkString("", "\n", "\n")))
+      invalidate(checkpointPath(root, version))
     if (readPointer(spark, root, store).forall(_ < version))
       store.writeOverwrite(spark, pointerPath(root), version.toString)
   }
@@ -2073,6 +2103,9 @@ object TableLog {
     * version.
     */
   def restore(spark: SparkSession, root: String, version: Long): Long = {
+    // a rollback reads back as far as `version`: take every log file it
+    // reads from the store, not from entries parsed before this call
+    invalidateRoot(root)
     val head = headVersion(spark, root)
     require(head.nonEmpty, s"no committed versions under $root")
     val target = state(spark, root, Some(version))
@@ -2112,11 +2145,9 @@ object TableLog {
     val removed = scala.collection.mutable.LinkedHashSet.empty[String]
     var u = vFrom + 1
     while (u <= vTo) {
-      if (!store.exists(spark, manifestPath(root, u)))
-        throw new IllegalStateException(
-          s"manifest for version $u missing under $root — file-level " +
-            "changes need the delta chain (vacuumed?)")
-      val d = readDelta(spark, store, manifestPath(root, u))
+      val d = readDelta(spark, store, manifestPath(root, u),
+        s"manifest for version $u missing under $root — file-level " +
+          "changes need the delta chain (vacuumed?)")
       if (d.legacyReplace)
         throw new IllegalStateException(
           s"version $u of $root is a legacy full-snapshot manifest — it " +
@@ -2240,8 +2271,14 @@ object TableLog {
     */
   def history(spark: SparkSession, root: String): DataFrame = {
     val store = LogStore.resolve(spark)
+    // one listing stamps every manifest: no existence probe per version
+    val listed =
+      if (store.eq(HadoopLogStore)) HadoopLogStore.listStats(spark, logDir(root))
+      else Map.empty[String, (Long, Long)]
     val rows = versions(spark, root).map { v =>
-      val d = readDelta(spark, store, manifestPath(root, v))
+      val d = readDelta(spark, store, manifestPath(root, v),
+        s"manifest for version $v vanished under $root",
+        listed.get(s"v$v.manifest"))
       Row(v, d.meta.collectFirst { case ("op", o) => o }.orNull,
         d.adds.size.toLong, d.removes.size.toLong,
         d.meta.collectFirst { case ("epoch", e) => e.toLong }
@@ -2305,8 +2342,9 @@ object TableLog {
       es.map(_.path) ++ es.flatMap(_.dvs)
     }.toSet
     old.foreach { v =>
-      store.delete(spark, manifestPath(root, v))
-      store.delete(spark, checkpointPath(root, v))
+      Seq(manifestPath(root, v), checkpointPath(root, v)).foreach { p =>
+        store.delete(spark, p); invalidate(p)
+      }
     }
     // stale checkpoints BETWEEN kept versions are fine to keep; only
     // sub-horizon ones were deleted above

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.SparkSession
 
@@ -17,13 +17,21 @@ import org.apache.spark.sql.SparkSession
   */
 object TapePublisher {
 
-  /** Topic directory layout used by file mode: `$root/<topic>/<name>.json`. */
+  /** Topic directory layout used by file mode: `$root/<topic>/<name>.json`.
+    * The frames land in a hidden (`.`-prefixed) temp file in the same
+    * directory, which is then renamed over the target in one atomic step:
+    * a file source lists no hidden files, so a listing taken mid-write sees
+    * either no file or the whole one, never a truncated step.
+    */
   def publishFile(root: String, topic: String, frames: Seq[String],
       name: String = "0000"): Unit = {
     val dir = Paths.get(root, topic)
     Files.createDirectories(dir)
-    Files.write(dir.resolve(s"$name.json"),
-      frames.mkString("\n").getBytes(StandardCharsets.UTF_8))
+    val tmp = dir.resolve(s".$name.json.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      Files.write(tmp, frames.mkString("\n").getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, dir.resolve(s"$name.json"), StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
     ()
   }
 

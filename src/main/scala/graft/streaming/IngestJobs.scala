@@ -263,12 +263,16 @@ object IngestJobs {
       "realtime_prices", sink, checkpointDir))
 
   /** ForecastsJob sink: the SMA5/SMA20 stream → `forecasts` table
-    * (init.sql:43-49 columns, plus seq/price_mwh provenance).
+    * (init.sql:43-49 columns, plus seq/price_mwh provenance). A new query
+    * starts with one state partition: the forecast folds per hub, a
+    * handful of keys ([[StreamingOps.forecastStream]]).
     */
   def writeForecasts(forecasts: org.apache.spark.sql.Dataset[ForecastRow],
       sink: SinkConfig, checkpointDir: String): StreamingQuery =
-    writeTable(forecasts.toDF()
-      .select(col("ts"), col("hub"), col("sma5"), col("sma20"),
-        col("forecast_next"), col("seq"), col("price_mwh")),
-      "forecasts", sink, checkpointDir)
+    StreamingOps.withStatePartitions(forecasts.sparkSession, 1) {
+      writeTable(forecasts.toDF()
+        .select(col("ts"), col("hub"), col("sma5"), col("sma20"),
+          col("forecast_next"), col("seq"), col("price_mwh")),
+        "forecasts", sink, checkpointDir)
+    }
 }

@@ -77,30 +77,26 @@ object MemoryReplay {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[I]
     val name = s"graft_replay_${runId.incrementAndGet()}"
-    // a stateful query pins its state-store partition count from
-    // shuffle.partitions at FIRST start; a replay's micro-batches are small,
-    // so the session default (sized for batch scans) only multiplies
-    // state-store file overhead per batch. Set it for the start() call and
-    // restore immediately — never leaked across the session (the round-2
-    // ADVICE lesson on session-wide conf mutation). Same discipline for the
-    // state-store provider override (heap default vs RocksDB — the 100 TB
-    // deploy knob: at rate×TTL ≈ millions of live buckets the heap
+    // a replay's micro-batches are small, so the session's partition count
+    // (sized for batch scans) only multiplies state-store file overhead per
+    // batch: pin the caller's count for start() alone. Same discipline for
+    // the state-store provider override (heap default vs RocksDB — the
+    // 100 TB deploy knob: at rate×TTL ≈ millions of live buckets the heap
     // provider is the first thing to fall over; the provider choice must
     // not change output, which StreamStateProbe's A/B row asserts).
     val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
     val prevProv = spark.conf.getOption(provKey)
     val query =
       try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
         stateStoreProvider.foreach(spark.conf.set(provKey, _))
-        f(input.toDS()).writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .start()
+        StreamingOps.withStatePartitions(spark, statePartitions) {
+          f(input.toDS()).writeStream
+            .format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .start()
+        }
       } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
         if (stateStoreProvider.isDefined)
           prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
       }
@@ -144,12 +140,9 @@ object MemoryReplay {
       statePartitions: Int = 8,
       mode: OutputMode = OutputMode.Append()): DataFrame = {
     val name = s"graft_replay_${runId.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val query =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        out.writeStream.format("memory").queryName(name).outputMode(mode).start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val query = StreamingOps.withStatePartitions(spark, statePartitions) {
+      out.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    }
     try { query.processAllAvailable(); captureState(query) }
     finally query.stop()
     detach(spark, name)
@@ -236,16 +229,13 @@ object MemoryReplay {
     val inL = MemoryStream[L]
     val inR = MemoryStream[R]
     val name = s"graft_replay_${runId.incrementAndGet()}"
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val query =
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-        f(inL.toDS(), inR.toDS()).writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(OutputMode.Append())
-          .start()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    val query = StreamingOps.withStatePartitions(spark, statePartitions) {
+      f(inL.toDS(), inR.toDS()).writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(OutputMode.Append())
+        .start()
+    }
     try {
       val chunkL = math.max(1, (tapeL.size + nBatches - 1) / nBatches)
       val chunkR = math.max(1, (tapeR.size + nBatches - 1) / nBatches)

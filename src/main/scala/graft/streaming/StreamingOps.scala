@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.operators.{HubState, MarketEvent, PnlKernel, PnlRow}
@@ -184,12 +184,40 @@ object StreamingOps {
 
   private def sortedKey(e: MarketEvent): (Long, Long) = (e.ts.getTime, e.seq)
 
+  /** The per-hub folds' grouping. There are only a handful of hubs
+    * (`MarketGen.Hubs`), so the input is coalesced to one partition: under
+    * one state partition ([[withStatePartitions]]) that `SinglePartition`
+    * already satisfies the stateful operator's distribution and the plan
+    * has no shuffle at all. Under a larger count (a checkpoint that
+    * recorded one, or a replay's `statePartitions`) Spark re-inserts the
+    * hash exchange, so the fold's output does not depend on the count.
+    */
+  private def byHub(events: Dataset[MarketEvent]) = {
+    val spark = events.sparkSession
+    import spark.implicits._
+    events.coalesce(1).groupByKey(_.hub)
+  }
+
+  /** Run `start` — a `writeStream...start()` — with the state-partition
+    * count pinned to `n`. A stateful query takes its count from
+    * `spark.sql.shuffle.partitions` when it first starts and records it in
+    * its offset log (a restart reuses the recorded count), so the conf is
+    * set only around `start()` and restored afterwards: it never leaks
+    * into the rest of the session.
+    */
+  private[streaming] def withStatePartitions[A](spark: SparkSession, n: Int)(
+      start: => A): A = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, n.toString)
+    try start finally spark.conf.set(key, prev)
+  }
+
   /** Streaming SMA5/SMA20 forecast per hub (reference ForecastsJob). */
   def forecastStream(events: Dataset[MarketEvent]): Dataset[ForecastRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.hub)
+    byHub(events)
       .flatMapGroupsWithState[SmaState, ForecastRow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (hub, it, state) =>
@@ -215,8 +243,7 @@ object StreamingOps {
       Dataset[graft.operators.EwmaRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.hub)
+    byHub(events)
       .flatMapGroupsWithState[EwmaState, graft.operators.EwmaRow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (hub, it, state) =>
@@ -242,8 +269,7 @@ object StreamingOps {
       z: Int = 3): Dataset[graft.operators.AnomalyRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.hub)
+    byHub(events)
       .flatMapGroupsWithState[AnomalyState, graft.operators.AnomalyRow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (hub, it, state) =>
@@ -268,8 +294,7 @@ object StreamingOps {
   def pnlStream(events: Dataset[MarketEvent]): Dataset[PnlRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.hub)
+    byHub(events)
       .flatMapGroupsWithState[HubState, PnlRow](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
         case (_, it, state) =>
@@ -1095,22 +1120,25 @@ object StreamingOps {
     * map on the PnL operator's output and feeds two JDBC sinks from one job
     * (PnlAndExposureJob.java:57-76; SURVEY.md §3 E3). In Structured Streaming
     * that is one `writeStream.foreachBatch` writing both tables from the same
-    * batch DataFrame — one state store, two appends.
+    * batch DataFrame — one state store, two appends. A new query starts
+    * with one state partition ([[pnlStream]] keys by hub, a handful of keys).
     */
   def writePnlAndExposure(pnl: Dataset[PnlRow], outDir: String,
       checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery = {
     val spark = pnl.sparkSession
     import spark.implicits._
-    pnl.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[PnlRow], _: Long) =>
-        val b = batch.persist()
-        b.write.mode("append").parquet(s"$outDir/positions_pnl")
-        b.map(PnlKernel.exposure).write.mode("append").parquet(s"$outDir/price_exposure")
-        b.unpersist()
-        ()
-      }
-      .start()
+    withStatePartitions(spark, 1) {
+      pnl.writeStream
+        .outputMode(OutputMode.Append())
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch { (batch: Dataset[PnlRow], _: Long) =>
+          val b = batch.persist()
+          b.write.mode("append").parquet(s"$outDir/positions_pnl")
+          b.map(PnlKernel.exposure).write.mode("append").parquet(s"$outDir/price_exposure")
+          b.unpersist()
+          ()
+        }
+        .start()
+    }
   }
 }

@@ -4,22 +4,38 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{MarketEvent, Pnl}
+import graft.operators.{MarketEvent, Pnl, PnlKernel, PnlRow}
 import graft.sources.{MarketGen, TapePublisher}
 import graft.streaming.{Ingest, IngestJobs, StreamingOps}
 import graft.streaming.IngestJobs.{SinkConfig, SourceConfig}
 
 /** Seeded generators (SURVEY §2 S6-S9) + wired ingest jobs (S1-S4, W1-W7):
   * distribution invariants of the tapes, an end-to-end replay writing every
-  * job-written reference table from one generated tape, and a checkpoint
-  * kill-and-restart proof for the PnL dual-sink writer.
+  * job-written reference table from one generated tape, and checkpoint
+  * kill-and-restart proofs for the PnL dual-sink writer.
   */
 class IngestJobsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
+
+  /** State stores the query's last batch committed. */
+  private def stateStores(q: StreamingQuery): Long =
+    q.lastProgress.stateOperators.head.numStateStoreInstances
+
+  /** A hub fold ran as one single-task stage: one state store, no shuffle. */
+  private def assertSingleStateStage(q: StreamingQuery): Unit = {
+    assert(stateStores(q) == 1)
+    val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+      .lastExecution.executedPlan
+    assert(plan.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+      plan.treeString)
+  }
 
   test("kafka source/sink option wiring matches the reference consumer/producer config") {
     // no broker or connector jar exists in the sandbox, so the option maps
@@ -125,8 +141,11 @@ class IngestJobsSpec extends AnyFunSuite {
       StreamingOps.pnlStream(events), warehouse, s"$ckpt/pnl_dual")
 
     val qs = ingestQs :+ fcQ :+ pnlQ
-    try qs.foreach(_.processAllAvailable())
-    finally qs.foreach(_.stop())
+    try {
+      qs.foreach(_.processAllAvailable())
+      assertSingleStateStage(fcQ)
+      assertSingleStateStage(pnlQ)
+    } finally qs.foreach(_.stop())
 
     def table(name: String) = spark.read.parquet(s"$warehouse/$name")
     // row counts match the tape exactly
@@ -183,7 +202,14 @@ class IngestJobsSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$wh/tbl").count() == 1)
   }
 
-  test("writePnlAndExposure recovers from a kill-and-restart without dupes or loss") {
+  /** Kill-and-restart of the PnL dual sink over the sf0.001 events: `first`
+    * writes half of them into a checkpoint and dies, then
+    * [[StreamingOps.writePnlAndExposure]] resumes it over the other half.
+    * The output must equal `Pnl.replay` of all events bit for bit, with no
+    * duplicates or loss. Returns the state stores each run committed.
+    */
+  private def killAndRestart(
+      first: (Dataset[PnlRow], String, String) => StreamingQuery): (Long, Long) = {
     import spark.implicits._
     val root = Files.createTempDirectory("graft_ingest_ckpt")
     val inDir = root.resolve("in"); Files.createDirectories(inDir)
@@ -207,24 +233,90 @@ class IngestJobsSpec extends AnyFunSuite {
       ()
     }
 
-    def runOnce(): Unit = {
+    def runOnce(write: (Dataset[PnlRow], String, String) => StreamingQuery): Long = {
       val events = spark.readStream.schema(schema)
         .option("timestampFormat", tsFmt).json(inDir.toString).as[MarketEvent]
-      val q = StreamingOps.writePnlAndExposure(
-        StreamingOps.pnlStream(events), outDir, ckpt)
-      try q.processAllAvailable() finally q.stop()
+      val q = write(StreamingOps.pnlStream(events), outDir, ckpt)
+      try { q.processAllAvailable(); stateStores(q) } finally q.stop()
     }
 
     addFile(half1, "0000")
-    runOnce() // processes half 1, commits checkpoint, dies
+    val storesFirst = runOnce(first) // processes half 1, commits checkpoint, dies
     addFile(half2, "0001")
-    runOnce() // restarted query must resume state, not reprocess half 1
+    // the restarted query must resume state, not reprocess half 1
+    val storesResumed = runOnce(StreamingOps.writePnlAndExposure)
 
     val want = Pnl.replay(all.toDS()).collect().map(_.toString).sorted
     val got = spark.read.parquet(s"$outDir/positions_pnl")
-      .as[graft.operators.PnlRow].collect().map(_.toString).sorted
+      .as[PnlRow].collect().map(_.toString).sorted
     assert(got.length == want.length, s"got ${got.length} rows, want ${want.length}")
     assert(got.sameElements(want))
     assert(spark.read.parquet(s"$outDir/price_exposure").count() == got.length)
+    (storesFirst, storesResumed)
+  }
+
+  test("writePnlAndExposure recovers from a kill-and-restart without dupes or loss") {
+    assert(killAndRestart(StreamingOps.writePnlAndExposure) == ((1L, 1L)))
+  }
+
+  test("writePnlAndExposure resumes a checkpoint that recorded 4 state partitions") {
+    import spark.implicits._
+    // the dual sink as it was written before it pinned one state partition:
+    // a plain start() under the session's 4 shuffle partitions
+    def fourPartitionWriter(pnl: Dataset[PnlRow], outDir: String,
+        ckpt: String): StreamingQuery = {
+      val key = "spark.sql.shuffle.partitions"
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, "4")
+      try pnl.writeStream
+        .outputMode(OutputMode.Append())
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: Dataset[PnlRow], _: Long) =>
+          val b = batch.persist()
+          b.write.mode("append").parquet(s"$outDir/positions_pnl")
+          b.map(PnlKernel.exposure).write.mode("append")
+            .parquet(s"$outDir/price_exposure")
+          b.unpersist()
+          ()
+        }
+        .start()
+      finally spark.conf.set(key, prev)
+    }
+    // Spark restores the recorded count from the offset log: the resumed
+    // query keeps 4 state stores (and its hash exchange), output unchanged
+    assert(killAndRestart(fourPartitionWriter) == ((4L, 4L)))
+  }
+
+  test("publishFile is atomic: no temp file left, a file-source tail sees only whole files") {
+    val root = Files.createTempDirectory("graft_publish").toString
+    val topic = Paths.get(root, "prices"); Files.createDirectories(topic)
+    val lines = 20000
+    val nFiles = 8
+    val frames = (0 until lines).map(i => f"""{"i":$i%08d}""")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Long)]
+    val q = spark.readStream.text(topic.toString)
+      .select(input_file_name().as("f"))
+      .writeStream
+      .foreachBatch { (b: DataFrame, _: Long) =>
+        b.groupBy("f").count().collect()
+          .foreach(r => seen.add((r.getString(0), r.getLong(1))))
+        ()
+      }
+      .start()
+    // the tail lists the topic while the publisher is writing into it
+    val publisher = new Thread(() =>
+      (0 until nFiles).foreach(i =>
+        TapePublisher.publishFile(root, "prices", frames, f"$i%04d")))
+    try {
+      publisher.start()
+      while (publisher.isAlive) q.processAllAvailable()
+      publisher.join()
+      q.processAllAvailable()
+    } finally q.stop()
+    val got = seen.asScala.toSeq
+    assert(got.size == nFiles, got)
+    assert(got.forall(_._2 == lines), s"a file was read before it was whole: $got")
+    assert(Files.list(topic).iterator().asScala.map(_.getFileName.toString)
+      .toSeq.sorted == (0 until nFiles).map(i => f"$i%04d.json"))
   }
 }

@@ -1040,4 +1040,39 @@ class TableLogSpec extends AnyFunSuite {
     assert(TableLog.rebaseTally.get() > 0L,
       "4 racing writers over 20 commits should exercise the rebase path")
   }
+
+  test("a root rebuilt at the same path in one JVM reads fresh manifests") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val root = tmp("trebuild")
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    def build(base: Long): Unit = {
+      TableLog.overwrite(Seq((base, base)).toDF("k", "v"), root)         // v1
+      TableLog.append(Seq((base + 1, base + 1)).toDF("k", "v"), root)   // v2
+    }
+    def keys = TableLog.read(spark, root).select("k").as[Long].collect().sorted.toSeq
+    def ops = TableLog.history(spark, root).collect().map(_.getString(1)).toSeq
+    build(0L)
+    assert(keys == Seq(0L, 1L) && ops == Seq("overwrite", "append"))
+    // delete the root and rebuild it in place, as a rerun that recreates
+    // its table does: every read must come from the new manifests
+    val inv = TableLog.manifestCacheInvalidationTally.get
+    rm(new java.io.File(root))
+    build(100L)
+    assert(keys == Seq(100L, 101L))
+    assert(TableLog.read(spark, root, Some(1L)).select("k").as[Long]
+      .collect().toSeq == Seq(100L))
+    assert(TableLog.manifestCacheInvalidationTally.get > inv)
+    // a same-length rewrite that bypasses the commit path (another
+    // process) is caught by the (length, mtime) stamp
+    assert(ops == Seq("overwrite", "append"))
+    val m2 = Paths.get(s"$root/_graft_log/v2.manifest")
+    val mtime = Files.getLastModifiedTime(m2).toMillis
+    Files.writeString(m2, Files.readString(m2).replace("#op:append", "#op:APPEND"))
+    Files.setLastModifiedTime(m2,
+      java.nio.file.attribute.FileTime.fromMillis(mtime + 2000))
+    assert(ops == Seq("overwrite", "APPEND"))
+  }
 }

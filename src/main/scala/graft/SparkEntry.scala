@@ -3519,8 +3519,8 @@ object SparkEntry {
     // corpus in id order at 1 tick/second; ttl = n/4 seconds, chosen where
     // the fixture has candidate pairs BOTH inside the window (the stream
     // must emit them) and beyond it (it must NOT — evicted, the state
-    // bound's proof) at every sf (TtlProbe: 15/13 at sf0.001, 9/16 at
-    // sf0.01, 127/129 at sf0.1). Batch twin: the q75 band join filtered
+    // bound's proof) at every sf (measured in r13, inside/beyond pairs:
+    // 15/13 at sf0.001, 9/16 at sf0.01, 127/129 at sf0.1). Batch twin: the q75 band join filtered
     // to |ts_a − ts_b| ≤ ttl. Equality + both-regimes-nonempty pinned as
     // booleans.
     "q192_streaming_neardup_ttl" -> ((s, d) => {

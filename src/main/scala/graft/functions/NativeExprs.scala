@@ -555,8 +555,8 @@ case class PqScore(codes: Expression, lut: Expression, kExpr: Expression)
   * `array_max` / `slice(reverse(array_sort(...)))`. At 64 cells that
   * projection generated borderline-huge methods — the stage fell out of
   * whole-stage codegen (or HotSpot refused the method) and ran ~100×
-  * slower than its arithmetic over a 200k-vector corpus (AnnCoreProbe,
-  * r17); staging the dots through graft_pqlut recovered the corpus map
+  * slower than its arithmetic over a 200k-vector corpus (r17 kernel A/B,
+  * VERDICT.md); staging the dots through graft_pqlut recovered the corpus map
   * but left a measured q97 regression from the surviving 64-struct
   * consumers. These kernels keep the EXACT semantics of the expression
   * form on non-null inputs: score = lut[c] / (nrm · cnrm[c]) (same
@@ -589,6 +589,9 @@ abstract class CellKernel extends Expression with CodegenFallback {
         if (!cnrms.foldable || !cids.foldable)
           TypeCheckResult.TypeCheckFailure(
             "cell kernel cnrms/cids must be literal arrays")
+        else if (cnrms.eval() == null || cids.eval() == null)
+          TypeCheckResult.TypeCheckFailure(
+            "cell kernel cnrms/cids must not be null")
         else if (cnrmArr.length != cidArr.length)
           TypeCheckResult.TypeCheckFailure(
             "cell kernel cnrms and cids must have equal length")
@@ -646,7 +649,13 @@ case class CellTopIds(lut: Expression, nrm: Expression, cnrms: Expression,
     if (base != TypeCheckResult.TypeCheckSuccess) base
     else if (nExpr.dataType != IntegerType || !nExpr.foldable)
       TypeCheckResult.TypeCheckFailure("cell kernel n must be a literal int")
-    else TypeCheckResult.TypeCheckSuccess
+    else {
+      // a null n would unbox to 0 and silently return no cells
+      val n = nExpr.eval()
+      if (n == null || n.asInstanceOf[Int] < 1)
+        TypeCheckResult.TypeCheckFailure("cell kernel n must be >= 1")
+      else TypeCheckResult.TypeCheckSuccess
+    }
   }
   @transient private lazy val nVal: Int = nExpr.eval(null).asInstanceOf[Int]
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
@@ -669,7 +678,7 @@ case class CellTopIds(lut: Expression, nrm: Expression, cnrms: Expression,
         if (s != 0) s else java.lang.Long.compare(cidArr(b), cidArr(a))
       }
     })
-    val n = math.max(0, math.min(nVal, k))
+    val n = math.min(nVal, k)
     val out = new Array[Long](n)
     c = 0
     while (c < n) { out(c) = cidArr(order(c)); c += 1 }

@@ -108,7 +108,7 @@ object Quantize {
     * hash-ordered sample, hash-ordered init, lowest-index tie-breaks,
     * empty clusters keep their old centroid.
     *
-    * Measured (PqProbe): training helps small corpora (sf0.001 recall@10
+    * Measured (`Probe recall`): training helps small corpora (sf0.001 recall@10
     * 0.98 → 1.00) but HURTS the large one (sf0.1 0.92 → 0.88 — the books
     * overfit the 4096-row sample's density and lose tail coverage), so
     * [[pqKnn]] defaults to the sampled books (trainIters = 0); pass
@@ -172,7 +172,7 @@ object Quantize {
     * partition.
     *
     * Defaults (m=8, 256-entry codebooks, 16× oversample) measured: recall@10
-    * vs brute force = 0.98 / 1.00 / 0.92 at sf0.001/0.01/0.1 (PqProbe).
+    * vs brute force = 0.98 / 1.00 / 0.92 at sf0.001/0.01/0.1 (`Probe recall`).
     * Codebook resolution must grow with corpus density — 16-entry books
     * that score 0.82 on 2.5k vectors score 0.34 on 25k; 256 entries is the
     * probe-backed default for these fixtures, and a real deployment trains
@@ -246,7 +246,7 @@ object Quantize {
     * Centroids and codebooks are deterministic hash-smallest samples
     * collected once (KBs), inlined as literals.
     *
-    * Measured (PqProbe, recall@10 vs brute force, embeddings fixture):
+    * Measured (`Probe recall`, recall@10 vs brute force, embeddings fixture):
     * nprobe=8 → 0.38/0.42/0.48 at sf0.001/0.01/0.1 — EXACTLY equal to
     * plain [[graft.operators.Similarity.ivfKnn]] at the same nprobe, i.e.
     * the PQ stage is loss-free here (16× oversample + exact rescore absorb

@@ -135,8 +135,8 @@ object Similarity {
     * inlined spelling). The inlined form put tables·planes literal-vector
     * dot subtrees into one projection; past ~64 dots that exceeds the
     * generated-method budget and drops the whole stage out of whole-stage
-    * codegen — measured 42 s vs 0.3 s over 200k vectors (AnnCoreProbe,
-    * r17). `df` must carry the vector as `v`.
+    * codegen — measured 42 s vs 0.3 s over 200k vectors (r17 kernel A/B,
+    * VERDICT.md). `df` must carry the vector as `v`.
     */
   private[graft] def withBucketEntries(df: DataFrame, planes: Int, tables: Int,
       dim: Int): DataFrame = {
@@ -259,7 +259,7 @@ object Similarity {
     // mul-then-div doubles, same nan-safe ordering, same cid tie-breaks
     // (NativeExprSpec pins kernel ≡ expression). The inlined literal-dot
     // struct array broke whole-stage codegen past ~64 cells and ran ~100×
-    // slower on a 200k corpus (AnnCoreProbe).
+    // slower on a 200k corpus (r17 kernel A/B, VERDICT.md).
     val dimV = cents.head._2.size
     val centsFlat = typedLit(cents.toSeq.flatMap(_._2)).cast("array<double>")
     val cnrmsLit = typedLit(cents.toSeq.map(_._3)).cast("array<double>")

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.{MarketGen, TapePublisher}
 import graft.streaming.IngestJobs
 import graft.streaming.IngestJobs.{SinkConfig, SourceConfig}
@@ -30,14 +28,7 @@ object LiveSmoke {
     val url = sys.env("GRAFT_SMOKE_JDBC")
     val user = sys.env.getOrElse("GRAFT_SMOKE_USER", "graft")
     val password = sys.env.getOrElse("GRAFT_SMOKE_PASSWORD", "graft")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(4)
 
     val tape = MarketGen.marketTape(seed = 42L, steps = 200)
     val lmp = MarketGen.lmpTape(seed = 42L, steps = 50)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Full streaming-gate cycle under the RocksDB state-store provider — the
   * deploy-default evidence run (VERDICT r11 Next #4): every MemoryReplay-
   * driven gate query executes twice at the given sf, once under the default
@@ -37,13 +35,7 @@ object RocksGate {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.local(16)
     spark.sparkContext.setLogLevel("ERROR")
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"

@@ -138,16 +138,8 @@ object ScaleProbe {
     val dir = positional.headOption.getOrElse("/tmp/scaleprobe")
     // arg 2 = the 1× source fixtures the 10× sets replicate from
     val srcDir = positional.drop(1).headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.local(cpus)
     import org.apache.spark.sql.functions._
     import graft.operators.{Dedup, Pipeline, Similarity}
 

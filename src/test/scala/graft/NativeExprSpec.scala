@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -168,6 +169,36 @@ class NativeExprSpec extends AnyFunSuite {
       "argmax kernel diverged from array_max struct spelling")
     assert(both.filter(not(col("k_top") === col("e_top"))).count() == 0,
       "top-n kernel diverged from reverse(array_sort) struct spelling")
+  }
+
+  test("cell kernels reject null literals and n < 1 at analysis") {
+    // a null n would unbox to 0 and return [] for every row, and a null
+    // cnrms/cids literal would throw an NPE from the type check
+    GraftFunctions.register(spark)
+    import spark.implicits._
+    val df = Seq((Seq(1.0, 2.0), 1.0)).toDF("lut", "nrm")
+    val cnrms = typedLit(Seq(1.0, 1.0)).cast("array<double>")
+    val cids = typedLit(Seq(7L, 9L)).cast("array<bigint>")
+    def top(cn: Column, ci: Column, n: Column) =
+      df.select(call_function("graft_celltop", col("lut"), col("nrm"), cn, ci, n))
+    def argmax(cn: Column, ci: Column) =
+      df.select(call_function("graft_cellargmax", col("lut"), col("nrm"), cn, ci))
+    val nullD = lit(null).cast("array<double>")
+    val nullL = lit(null).cast("array<bigint>")
+    val bads: Seq[() => org.apache.spark.sql.DataFrame] = Seq(
+      () => top(cnrms, cids, lit(null).cast("int")),
+      () => top(cnrms, cids, lit(0)),
+      () => top(nullD, cids, lit(1)),
+      () => top(cnrms, nullL, lit(1)),
+      () => argmax(nullD, cids),
+      () => argmax(cnrms, nullL))
+    for (bad <- bads) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](bad().collect())
+      assert(e.getMessage.contains("cell kernel"), e.getMessage)
+    }
+    // the legal calls still analyze: scores (1.0, 2.0) → cid 9 first
+    assert(top(cnrms, cids, lit(1)).head().getSeq[Long](0) == Seq(9L))
+    assert(argmax(cnrms, cids).head().getLong(0) == 9L)
   }
 
   test("graft_bands rejects non-literal and degenerate geometry at analysis") {

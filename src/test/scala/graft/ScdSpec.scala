@@ -74,7 +74,7 @@ class ScdSpec extends AnyFunSuite {
     // window distribution by accident — the exchange must be real
     val df = Scd.scd2(spark.range(10).selectExpr("id % 3 as key",
       "'v' as attr", "timestamp'2024-01-01' as ts", "id as seq"))
-    // formatted explain expands the AQE-wrapped tree (the QPlan recipe);
+    // formatted explain expands the AQE-wrapped tree (the `Probe plan` recipe);
     // count the op-list entries, not the tree glyphs, to avoid double counts
     val exchanges = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))

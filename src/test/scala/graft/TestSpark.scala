@@ -9,15 +9,7 @@ object TestSpark {
     // writes derby.log to CWD unless told otherwise, and the catalog
     // default warehouse lands at ./spark-warehouse — both belong in target/
     System.setProperty("derby.stream.error.file", "target/derby.log")
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = GraftSession.local(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -12,19 +12,27 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class TopKRewriteSpec extends AnyFunSuite {
 
-  private def extSession(): SparkSession = {
-    val base = TestSpark.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s = SparkSession.builder().master(base.sparkContext.master)
-      .withExtensions(new GraftExtensions).getOrCreate()
-    SparkSession.setDefaultSession(base)
-    SparkSession.setActiveSession(base)
-    s
+  private val s2 = TestSpark.spark // carries GraftExtensions
+
+  /** `q`'s rows with the rewrite rule excluded for this one optimization —
+    * the Window plan the rewrite must reproduce. The session carries
+    * GraftExtensions, so without the exclusion the reference would be the
+    * rewrite itself.
+    */
+  private def windowReference(q: DataFrame): Set[(Long, Long, Int)] = {
+    val key = "spark.sql.optimizer.excludedRules"
+    val prev = s2.conf.getOption(key)
+    s2.conf.set(key, "graft.plans.TopKRewrite")
+    try {
+      val ref = q.select("*") // a fresh Dataset: optimized under the exclusion
+      val optimized = ref.queryExecution.optimizedPlan.toString
+      assert(optimized.contains("Window"), s"reference must keep the Window:\n$optimized")
+      assert(!optimized.contains("graft_topk"), s"reference must not be rewritten:\n$optimized")
+      ref.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    } finally prev.fold(s2.conf.unset(key))(s2.conf.set(key, _))
   }
 
   test("latest-3 per user rewrites to graft_topk and matches the window result") {
-    val s2 = extSession()
     val e = Tables.events(s2, "/root/testdata/sf0.001")
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts").desc, col("event_id").desc)
     val q = e.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
@@ -33,19 +41,12 @@ class TopKRewriteSpec extends AnyFunSuite {
     assert(!optimized.contains("Window"), s"window must be rewritten:\n$optimized")
     assert(optimized.contains("graft_topk"), s"expected topk aggregate:\n$optimized")
     val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    // same query through the plain session (no rewrite rule)
-    val base = TestSpark.spark
-    val eb = Tables.events(base, "/root/testdata/sf0.001")
-    val want = eb.withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      .select(col("user_id"), col("event_id"), col("rn"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val want = windowReference(q)
     assert(got.nonEmpty && got == want)
   }
 
   test("ties: rewritten result is a valid row_number outcome") {
-    val s2 = extSession()
-    val sp = s2
-    import sp.implicits._
+    import s2.implicits._
     // 3 keys × 6 rows with DUPLICATE order values: row_number's choice among
     // ties is arbitrary, so the rewrite must return k rows per key whose
     // order values equal the true top-k value multiset
@@ -66,7 +67,6 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("ascending windows rewrite to the bottom-k aggregate and match") {
-    val s2 = extSession()
     val e = Tables.events(s2, "/root/testdata/sf0.001")
     // oldest-3 per user: ASC NullsFirst (the ASC default) → bottom-k
     val asc = Window.partitionBy(col("user_id")).orderBy(col("ts").asc, col("event_id").asc)
@@ -75,18 +75,12 @@ class TopKRewriteSpec extends AnyFunSuite {
     val optimized = q.queryExecution.optimizedPlan.toString
     assert(!optimized.contains("Window"), s"asc window must be rewritten:\n$optimized")
     val got = q.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val base = TestSpark.spark
-    val eb = Tables.events(base, "/root/testdata/sf0.001")
-    val want = eb.withColumn("rn", row_number().over(asc)).filter(col("rn") <= 3)
-      .select(col("user_id"), col("event_id"), col("rn"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    val want = windowReference(q)
     assert(got.nonEmpty && got == want)
   }
 
   test("ascending rewrite keeps nulls first like the window it replaces") {
-    val s2 = extSession()
-    val sp = s2
-    import sp.implicits._
+    import s2.implicits._
     val df = Seq(("a", Some(3L), 1), ("a", None, 2), ("a", Some(1L), 3), ("a", Some(9L), 4),
       ("b", None, 5), ("b", None, 6), ("b", Some(0L), 7))
       .toDF("k", "v", "id")
@@ -100,7 +94,6 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("non-eligible windows are left alone") {
-    val s2 = extSession()
     val e = Tables.events(s2, "/root/testdata/sf0.001")
     // non-default null ordering: outside the soundness envelope
     val mixed = Window.partitionBy(col("user_id"))

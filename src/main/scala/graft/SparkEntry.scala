@@ -1306,10 +1306,11 @@ object SparkEntry {
     // so this query turns their quality contracts into an oracle-checkable
     // result: each metric is a boolean floor computed against the exact
     // counterpart inside one plan, and the oracle asserts all-true. Floors
-    // come from measurements at sf0.001/0.01/0.1 (lsh_knn recall 0.86–0.90,
-    // ivf 0.38–0.48 on the isotropic fixture, lsh dup recall 0.86–0.95)
-    // with ~2× margin, so a silent recall regression turns the round red
-    // while fixture-level variance cannot.
+    // sit below the `Probe recall` figures at sf0.001/0.01/0.1: lsh_knn
+    // 0.84/0.96/0.96 (floor 0.6), ivf 0.44/0.36/0.54 on the isotropic
+    // fixture (floor 0.25), lsh dup recall 0.92/0.97/0.84 (floor 0.7). A
+    // recall regression past the floor turns the round red; the spread
+    // across scales does not.
     "q44_ann_quality" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val bf = Similarity.bruteForceKnn(e, col("vec_id") < 5, k = 10)
@@ -4667,7 +4668,7 @@ object SparkEntry {
     }),
 
     // Streaming twin of q176 (StreamingOps.tickGapStream): the gap audit
-    // maintained LIVE by mapGroupsWithState over the replayed event tape —
+    // maintained LIVE by an Update-mode keyed fold over the replayed tape —
     // state is one O(1) summary per stream (key-bounded, not
     // history-bounded), each batch emits the refreshed row, and the final
     // per-stream emission must equal the batch audit exactly (shared

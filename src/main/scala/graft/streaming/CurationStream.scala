@@ -138,11 +138,14 @@ object CurationStream {
     * semi-joined against the static benchmark shingle-hash set
     * (`benchHashes`, one `sk` BIGINT column, distinct), then counted per
     * doc — mirror of [[graft.operators.Corpus.decontaminate]]'s eval side
-    * with the train index frozen. Update-mode aggregation: a doc's
-    * shingles land in its arrival batch, so each doc emits exactly one
-    * (doc_id, n_sh, n_hit) row; docs with zero hits emit NOTHING (the
-    * semi-join drops all their rows) — the assembler left-joins and fills
-    * 0, same as the batch operator.
+    * with the train index frozen. Update-mode aggregation: a doc whose
+    * rows all land in ONE micro-batch emits exactly one (doc_id, n_sh,
+    * n_hit) row. That is the contract the funnel's tape keeps (one row per
+    * doc); a doc whose rows span several batches re-emits with a grown,
+    * cumulative `n_hit`, and [[decontamFlags]] keeps only its last
+    * emission. Docs with zero hits emit NOTHING (the semi-join drops all
+    * their rows) — the assembler left-joins and fills 0, same as the batch
+    * operator.
     */
   def decontamHitsStream(docs: DataFrame, idCol: String, textCol: String,
       benchHashes: DataFrame, shingleN: Int = 3): DataFrame = {
@@ -158,6 +161,29 @@ object CurationStream {
       .agg(count(lit(1)).as("n_hit"))
   }
 
+  /** Stage 4's per-doc flag: `decontam_ok` is false iff the share of the
+    * doc's distinct shingles found in the benchmark index reaches
+    * `contamThreshold`. `docs` is (doc_id, text) with one row per doc, and
+    * `hits` is [[decontamHitsStream]]'s update stream. `hits` is reduced to
+    * one row per doc first, keeping its last emission (`max(n_hit)`, since
+    * the counts are cumulative): the left join and its `nDocs` broadcast
+    * bound both assume one row per doc.
+    */
+  private[graft] def decontamFlags(docs: DataFrame, hits: DataFrame,
+      contamThreshold: Double, nDocs: Long): DataFrame = {
+    val frac = when(col("n_sh") === 0, lit(0.0))
+      .otherwise(col("n_hit").cast("double") / col("n_sh"))
+    docs
+      .select(col("doc_id"),
+        size(call_function("graft_shingles", col("text"), lit(3)))
+          .cast("long").as("n_sh"))
+      .join(Joins.hintSmallBounded(
+          hits.groupBy(col("doc_id")).agg(max(col("n_hit")).as("n_hit")), nDocs),
+        Seq("doc_id"), "left")
+      .na.fill(0L, Seq("n_hit"))
+      .select(col("doc_id"), (!(frac >= contamThreshold)).as("decontam_ok"))
+  }
+
   /** Drive the whole ingest funnel over a frozen tape (the q195 gate
     * harness): each chained stage replays through its REAL streaming
     * operator in ordered micro-batches via [[MemoryReplay]] — the tape
@@ -169,18 +195,6 @@ object CurationStream {
     * same [[Pipeline.stageOneFlags]] call runs on the stream) and
     * re-derived batch-side only to label eliminated docs.
     */
-  /** Wall-clock a funnel stage to stderr when SPARK_GRAFT_FUNNEL_TIMING
-    * is set — dev-only probe, zero cost otherwise.
-    */
-  private def timed[A](label: String)(f: => A): A =
-    if (sys.env.contains("SPARK_GRAFT_FUNNEL_TIMING")) {
-      val t0 = System.nanoTime()
-      val r = f
-      System.err.println(
-        f"[funnel] $label%-14s ${(System.nanoTime() - t0) / 1e9}%6.2f s")
-      r
-    } else f
-
   def replayFunnel(spark: SparkSession, docs: DataFrame, idCol: Column,
       textCol: Column, benchPred: Column, contamThreshold: Double = 0.5,
       nBatches: Int = 4): DataFrame = {
@@ -203,17 +217,17 @@ object CurationStream {
     // order, one table version per micro-batch (the q219 pattern). Later
     // stages NARROW the same stream with a broadcast id-join against the
     // previous stage's keepers.
-    val tapeRoot = timed("tape_write")(MemoryReplay.writeTape(spark,
-      candidates.select(col("doc_id"), col("text")), "doc_id", nBatches))
+    val tapeRoot = MemoryReplay.writeTape(spark,
+      candidates.select(col("doc_id"), col("text")), "doc_id", nBatches)
 
     // Stage 1+2 (one query): stateless flags -> survivors -> exact-keep
     // flag stream.
-    val exactFlags = timed("s2_exact")(MemoryReplay.drainTape(spark, tapeRoot)(df =>
+    val exactFlags = MemoryReplay.drainTape(spark, tapeRoot)(df =>
         exactKeepStream(
           Pipeline.stageOneFlags(df)
             .filter(col("lang_ok") && col("quality_ok")),
           "doc_id", "text"))
-      .toDF("doc_id", "exact_keep").localCheckpoint())
+      .toDF("doc_id", "exact_keep").localCheckpoint()
 
     // Stage 3: exact-canonical survivors stream through the band index;
     // the verify join reads the landed store (here: the survivor frame).
@@ -232,11 +246,11 @@ object CurationStream {
       .select(col("doc_id"), col("text")).localCheckpoint()
     val s2Sets = hb(
       shingleStore(s2, col("doc_id"), col("text")).localCheckpoint())
-    val drops = timed("s3_neardup")(MemoryReplay.drainTape(spark, tapeRoot)(df =>
+    val drops = MemoryReplay.drainTape(spark, tapeRoot)(df =>
         nearDupDropsStream(df.join(s2ids, Seq("doc_id")),
           "doc_id", "text", storeSets = s2Sets)
         .select(col("doc_a"), col("doc_b")).as[(Long, Long)])
-      .toDF("doc_a", "doc_b").select(col("doc_b").as("doc_id")).distinct())
+      .toDF("doc_a", "doc_b").select(col("doc_b").as("doc_id")).distinct()
     val nearFlags = s2.select(col("doc_id"))
       .join(hb(drops.withColumn("_d", lit(true))), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(!col("_d"), lit(true)).as("neardup_keep"))
@@ -254,22 +268,13 @@ object CurationStream {
     val benchHashes = Joins.hintSmall(base.filter(col("is_bench"))
       .select(explode(call_function("graft_shingles", col("text"), lit(3))).as("s"))
       .select(xxhash64(col("s")).as("sk")).distinct().localCheckpoint())
-    val hits = timed("s4_decontam")(MemoryReplay.drainTape(spark, tapeRoot,
+    val hits = MemoryReplay.drainTape(spark, tapeRoot,
         mode = OutputMode.Update())(df =>
         decontamHitsStream(df.join(s3ids, Seq("doc_id")),
           "doc_id", "text", benchHashes)
         .as[(Long, Long, Long)])
-      .toDF("doc_id", "n_sh", "n_hit"))
-    val frac = when(col("n_sh") === 0, lit(0.0))
-      .otherwise(col("n_hit").cast("double") / col("n_sh"))
-    val deconFlags = s3
-      .select(col("doc_id"),
-        size(call_function("graft_shingles", col("text"), lit(3)))
-          .cast("long").as("n_sh"))
-      .join(hb(hits.select(col("doc_id"), col("n_hit"))),
-        Seq("doc_id"), "left")
-      .na.fill(0L, Seq("n_hit"))
-      .select(col("doc_id"), (!(frac >= contamThreshold)).as("decontam_ok"))
+      .toDF("doc_id", "n_sh", "n_hit")
+    val deconFlags = decontamFlags(s3, hits, contamThreshold, nDocs)
 
     MemoryReplay.dropTape(tapeRoot) // every stage's output is materialized
     candidates.select(col("doc_id"), col("lang_ok"), col("quality_ok"))
@@ -281,6 +286,19 @@ object CurationStream {
         coalesce(col("lang_ok") && col("quality_ok") && col("exact_keep") &&
           col("neardup_keep") && col("decontam_ok"), lit(false)).as("kept"))
   }
+
+  /** Per-stage state-store footprint of the LAST [[replayFunnelTtl]] run:
+    * (stage, MemoryReplay.lastStateStats) captured after each internal
+    * replay — the audit surface ScaleProbe's --funnel-stream law reads
+    * (state must sit at rate×TTL per stage, not tape length). Volatile
+    * single-slot like MemoryReplay's: replays are sequential in-session.
+    */
+  @volatile var lastStageStats: List[(String, Seq[(String, Long, Long)])] = Nil
+
+  /** The TTL the last [[replayFunnelTtl]] run used (ms) — lets a probe pin
+    * a longer tape to the SAME window for the flat-state comparison.
+    */
+  @volatile var lastTtlMs: Long = 0L
 
   /** The BOUNDED-STATE ingest funnel (the q196 gate harness): the
     * [[replayFunnel]] composition with both content-growing state ops
@@ -306,21 +324,8 @@ object CurationStream {
     * Output: one row per ADMITTED occurrence — (doc_id, tick); a doc whose
     * content went silent past the TTL appears twice, which IS the
     * re-admission contract.
-    */
-  /** Per-stage state-store footprint of the LAST [[replayFunnelTtl]] run:
-    * (stage, MemoryReplay.lastStateStats) captured after each internal
-    * replay — the audit surface ScaleProbe's --funnel-stream law reads
-    * (state must sit at rate×TTL per stage, not tape length). Volatile
-    * single-slot like MemoryReplay's: replays are sequential in-session.
-    */
-  @volatile var lastStageStats: List[(String, Seq[(String, Long, Long)])] = Nil
-
-  /** The TTL the last [[replayFunnelTtl]] run used (ms) — lets a probe pin
-    * a longer tape to the SAME window for the flat-state comparison.
-    */
-  @volatile var lastTtlMs: Long = 0L
-
-  /** @param skCol optional 64-bit MEDIA SKETCH column (e.g.
+    *
+    * @param skCol optional 64-bit MEDIA SKETCH column (e.g.
     *   [[graft.operators.Multimodal.imageDHash]] over the doc's image
     *   asset): when present, a FOURTH stage routes the keeper occurrences
     *   through [[StreamingOps.sketchNearDupStreamTtl]] with the SAME TTL,

@@ -2,8 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, KeyValueGroupedDataset, SparkSession}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.operators.{HubState, MarketEvent, PnlKernel, PnlRow}
 
@@ -178,7 +178,8 @@ final case class ForecastRow(
   * Within a micro-batch the group's events are sorted by `(ts, seq)` — the
   * pinned deterministic stand-in for the reference's nondeterministic Kafka
   * arrival order (SURVEY.md §7 "hard parts"). Across micro-batches state
-  * carries over exactly like the reference's keyed state.
+  * carries over exactly like the reference's keyed state. The folds with
+  * one state value per key share that skeleton ([[keyedFold]]).
   */
 object StreamingOps {
 
@@ -213,49 +214,57 @@ object StreamingOps {
     try start finally spark.conf.set(key, prev)
   }
 
+  /** The ordered per-key fold shared by the forecast, EWMA, anomaly, PnL,
+    * SCD2, tick-gap and drawdown operators: each micro-batch's rows of a
+    * group are sorted by `order`, `step` threads the state through them
+    * (it sees `None` only for the key's first row ever), and `end` may
+    * emit from the final state before it is stored. With `NoTimeout` Spark
+    * calls a group only when it has rows, so a final state always exists.
+    */
+  private def keyedFold[K, I, S: Encoder, O: Encoder, T: Ordering](
+      grouped: KeyValueGroupedDataset[K, I], mode: OutputMode, order: I => T)(
+      step: (K, Option[S], I) => (S, IterableOnce[O]),
+      end: (K, S) => (S, IterableOnce[O]) = (_: K, s: S) => (s, Nil)): Dataset[O] =
+    grouped.flatMapGroupsWithState[S, O](mode, GroupStateTimeout.NoTimeout()) {
+      (key, rows, state) =>
+        val out = Vector.newBuilder[O]
+        val st = rows.toVector.sortBy(order).foldLeft(state.getOption) { (prev, r) =>
+          val (s, o) = step(key, prev, r); out ++= o; Some(s)
+        }
+        val (last, o) = end(key, st.get)
+        state.update(last)
+        (out ++= o).result().iterator
+    }
+
   /** Streaming SMA5/SMA20 forecast per hub (reference ForecastsJob). */
   def forecastStream(events: Dataset[MarketEvent]): Dataset[ForecastRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    byHub(events)
-      .flatMapGroupsWithState[SmaState, ForecastRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (hub, it, state) =>
-          var w = state.getOption.map(_.window.toVector).getOrElse(Vector.empty)
-          val out = it.toVector.sortBy(sortedKey).map { e =>
-            w = (w :+ e.price_mwh).takeRight(20)
-            val last5 = w.takeRight(5)
-            val sma5 = last5.sum / last5.size
-            val sma20 = w.sum / w.size
-            ForecastRow(e.seq, e.ts, hub, e.price_mwh, sma5, sma20, sma5)
-          }
-          state.update(SmaState(w))
-          out.iterator
-      }
+    keyedFold(byHub(events), OutputMode.Append(), sortedKey) {
+      (hub: String, prev: Option[SmaState], e: MarketEvent) =>
+        val w = (prev.fold(Vector.empty[Double])(_.window.toVector) :+ e.price_mwh)
+          .takeRight(20)
+        val last5 = w.takeRight(5)
+        val sma5 = last5.sum / last5.size
+        (SmaState(w), Some(ForecastRow(e.seq, e.ts, hub, e.price_mwh, sma5,
+          w.sum / w.size, sma5)))
+    }
   }
 
-  /** Streaming EWMA per hub — [[graft.operators.Sma.ewmaStep]] under
-    * `flatMapGroupsWithState`, batch-equivalent by construction (same
-    * kernel, same pinned per-batch `(ts, seq)` order, state carries the
-    * single running double across micro-batches).
+  /** Streaming EWMA per hub — [[graft.operators.Sma.ewmaStep]] in
+    * [[keyedFold]], batch-equivalent by construction (same kernel, same
+    * pinned per-batch `(ts, seq)` order, state carries the single running
+    * double across micro-batches).
     */
   def ewmaStream(events: Dataset[MarketEvent], alpha: Double):
       Dataset[graft.operators.EwmaRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    byHub(events)
-      .flatMapGroupsWithState[EwmaState, graft.operators.EwmaRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (hub, it, state) =>
-          var s: Option[Double] = state.getOption.map(_.s)
-          val out = it.toVector.sortBy(sortedKey).map { e =>
-            val v = graft.operators.Sma.ewmaStep(s, e.price_mwh, alpha)
-            s = Some(v)
-            graft.operators.EwmaRow(e.seq, e.ts, hub, e.price_mwh, v)
-          }
-          s.foreach(v => state.update(EwmaState(v)))
-          out.iterator
-      }
+    keyedFold(byHub(events), OutputMode.Append(), sortedKey) {
+      (hub: String, prev: Option[EwmaState], e: MarketEvent) =>
+        val v = graft.operators.Sma.ewmaStep(prev.map(_.s), e.price_mwh, alpha)
+        (EwmaState(v), Some(graft.operators.EwmaRow(e.seq, e.ts, hub, e.price_mwh, v)))
+    }
   }
 
   /** Streaming twin of [[graft.operators.Sma.rollingAnomalies]] (q119 ⇄
@@ -269,44 +278,27 @@ object StreamingOps {
       z: Int = 3): Dataset[graft.operators.AnomalyRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    byHub(events)
-      .flatMapGroupsWithState[AnomalyState, graft.operators.AnomalyRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (hub, it, state) =>
-          var ring = state.getOption.map(_.cents.toVector).getOrElse(Vector.empty)
-          val out = it.toVector.sortBy(sortedKey).flatMap { e =>
-            val pc = Math.round(e.price_mwh * 100)
-            val win = ring :+ pc
-            ring = win.takeRight(window - 1)
-            if (win.length == window) {
-              val (dev2, thr) = graft.operators.Sma.anomalyScores(win, z)
-              if (dev2 > thr)
-                Some(graft.operators.AnomalyRow(e.seq, e.ts, hub, e.price_mwh, dev2, thr))
-              else None
-            } else None
-          }
-          state.update(AnomalyState(ring))
-          out.iterator
-      }
+    keyedFold(byHub(events), OutputMode.Append(), sortedKey) {
+      (hub: String, prev: Option[AnomalyState], e: MarketEvent) =>
+        val win = prev.fold(Vector.empty[Long])(_.cents.toVector) :+
+          Math.round(e.price_mwh * 100)
+        val flagged = if (win.length != window) None else {
+          val (dev2, thr) = graft.operators.Sma.anomalyScores(win, z)
+          Option.when(dev2 > thr)(
+            graft.operators.AnomalyRow(e.seq, e.ts, hub, e.price_mwh, dev2, thr))
+        }
+        (AnomalyState(win.takeRight(window - 1)), flagged)
+    }
   }
 
   /** Streaming PnL/positions per hub (reference PnlCalculator). */
   def pnlStream(events: Dataset[MarketEvent]): Dataset[PnlRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    byHub(events)
-      .flatMapGroupsWithState[HubState, PnlRow](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, it, state) =>
-          var st = state.getOption.getOrElse(HubState.empty)
-          val out = it.toVector.sortBy(sortedKey).flatMap { e =>
-            val (st2, rows) = PnlKernel.step(st, e)
-            st = st2
-            rows
-          }
-          state.update(st)
-          out.iterator
-      }
+    keyedFold(byHub(events), OutputMode.Append(), sortedKey) {
+      (_: String, prev: Option[HubState], e: MarketEvent) =>
+        PnlKernel.step(prev.getOrElse(HubState.empty), e)
+    }
   }
 
   /** §2.7 extension — event-time windowed aggregation with a watermark.
@@ -333,7 +325,7 @@ object StreamingOps {
   }
 
   /** Streaming SCD2 maintenance — [[graft.operators.Scd.scd2]]'s twin as a
-    * CDC-style `flatMapGroupsWithState` operator (Update mode): each key
+    * CDC-style [[keyedFold]] (Update mode): each key
     * carries its open run (attr, from) as state; an attribute change emits
     * the CLOSED predecessor interval exactly once, and the current open
     * interval is (re-)emitted every batch it could have changed in — the
@@ -345,29 +337,16 @@ object StreamingOps {
   def scd2Stream(updates: Dataset[KeyedUpdate]): Dataset[ScdRow] = {
     val spark = updates.sparkSession
     import spark.implicits._
-    updates
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[ScdState, ScdRow](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          var st = state.getOption
-          val out = Vector.newBuilder[ScdRow]
-          it.toVector.sortBy(e => (e.ts.getTime, e.seq)).foreach { e =>
-            st match {
-              case None =>
-                st = Some(ScdState(e.attr, e.ts, e.seq))
-              case Some(s) if s.attr != e.attr =>
-                out += ScdRow(key, s.attr, s.fromTs, s.fromSeq, Some(e.ts), is_current = false)
-                st = Some(ScdState(e.attr, e.ts, e.seq))
-              case _ => () // run continues — nothing to emit
-            }
-          }
-          st.foreach { s =>
-            state.update(s)
-            out += ScdRow(key, s.attr, s.fromTs, s.fromSeq, None, is_current = true)
-          }
-          out.result().iterator
-      }
+    def row(key: Long, s: ScdState, to: Option[Timestamp]) =
+      ScdRow(key, s.attr, s.fromTs, s.fromSeq, to, is_current = to.isEmpty)
+    keyedFold(updates.groupByKey(_.key), OutputMode.Update(),
+        (e: KeyedUpdate) => (e.ts.getTime, e.seq))(
+      (key: Long, prev: Option[ScdState], e: KeyedUpdate) => prev match {
+        case Some(s) if s.attr == e.attr => (s, None) // run continues
+        case _ => // first run, or a change closes the predecessor
+          (ScdState(e.attr, e.ts, e.seq), prev.map(row(key, _, Some(e.ts))))
+      },
+      (key: Long, s: ScdState) => (s, Some(row(key, s, None))))
   }
 
   /** Streaming OHLC+VWAP bars — [[graft.operators.Bars.ohlcVwap]]'s twin
@@ -471,7 +450,9 @@ object StreamingOps {
 
   /** Streaming exact dedup by CONTENT (the streaming face of Dedup.exact):
     * emits each arriving doc's id the first time its content fingerprint
-    * is seen; later copies are swallowed. Within a micro-batch the min id
+    * is seen; later copies are swallowed — the keepers of
+    * [[CurationStream.exactKeepStream]], one fold and one state (a
+    * `FirstSeen` per fingerprint) for both. Within a micro-batch the min id
     * wins, so when the tape arrives in id order the kept set is exactly
     * Dedup.exact's canonical min-id-per-group — the q80 gate hash-checks
     * that equality against the batch oracle.
@@ -499,22 +480,9 @@ object StreamingOps {
     * pins determinism.
     */
   def exactDedupStream(docs: DataFrame, idCol: String, textCol: String): Dataset[Long] = {
-    import org.apache.spark.sql.functions._
     val spark = docs.sparkSession
     import spark.implicits._
-    val (h1, h2, ln) = contentFp128(col(textCol))
-    docs
-      .select(col(idCol).cast("long").as("doc_id"),
-        h1.as("fp_h1"), h2.as("fp_h2"), ln.as("fp_len"))
-      .as[(Long, Long, Long, Long)]
-      .groupByKey(r => (r._2, r._3, r._4))
-      .flatMapGroupsWithState[FirstSeen, Long](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, it, state) =>
-          val minId = it.map(_._1).min
-          if (state.exists) Iterator.empty
-          else { state.update(FirstSeen(minId)); Iterator.single(minId) }
-      }
+    CurationStream.exactKeepStream(docs, idCol, textCol).filter(_._2).map(_._1)
   }
 
   /** 128-bit streaming content fingerprint: two xxhash64 lanes (the second
@@ -844,6 +812,8 @@ object StreamingOps {
   private def tsMicros(ts: Timestamp): Long =
     (ts.getTime - ts.getNanos / 1000000) * 1000L + ts.getNanos / 1000
 
+  private def tickKey(e: TimedEvent): (Long, Long) = (tsMicros(e.ts), e.event_id)
+
   /** Streaming twin of [[graft.operators.Sequential.tickGapAudit]]: the
     * live missing-interval monitor a feed operator runs WHILE the tape
     * lands, instead of auditing it afterwards. State per stream is the
@@ -853,34 +823,27 @@ object StreamingOps {
     * holds at any tape length; each micro-batch emits the refreshed audit
     * row for exactly the streams it touched (Update mode). Events must
     * arrive in the pinned (ts, seq) order (the S5 no-watermark contract);
-    * within a batch the iterator is re-sorted because mapGroupsWithState
-    * guarantees grouping, not order.
+    * within a batch [[keyedFold]] re-sorts them, because the group's
+    * iterator guarantees grouping, not order.
     */
   def tickGapStream(events: Dataset[TimedEvent],
       thresholdUs: Long): Dataset[GapRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[GapState, GapRow](GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          var st = state.getOption.getOrElse(
-            GapState(0L, 0L, 0L, -1L, 0L, 0L))
-          it.toVector.sortBy(e => (tsMicros(e.ts), e.event_id)).foreach { e =>
-            val t = tsMicros(e.ts)
-            if (st.n == 0) st = st.copy(first = t, last = t, n = 1)
-            else {
-              val g = t - st.last
-              st = st.copy(last = t, n = st.n + 1,
-                maxGap = math.max(st.maxGap, g),
-                nGt = if (g > thresholdUs) st.nGt + 1 else st.nGt)
-            }
-          }
-          st = st.copy(batch = st.batch + 1)
-          state.update(st)
-          GapRow(key, st.batch, st.n, st.last - st.first,
-            if (st.maxGap >= 0) Some(st.maxGap) else None, st.nGt)
-      }
+    keyedFold(events.groupByKey(_.event_type), OutputMode.Update(), tickKey)(
+      (_: String, prev: Option[GapState], e: TimedEvent) => {
+        val t = tsMicros(e.ts)
+        (prev.fold(GapState(t, t, 1L, -1L, 0L, 0L)) { st =>
+          val g = t - st.last
+          st.copy(last = t, n = st.n + 1, maxGap = math.max(st.maxGap, g),
+            nGt = if (g > thresholdUs) st.nGt + 1 else st.nGt)
+        }, Nil)
+      },
+      (key: String, st: GapState) => {
+        val s = st.copy(batch = st.batch + 1)
+        (s, Some(GapRow(key, s.batch, s.n, s.last - s.first,
+          Option.when(s.maxGap >= 0)(s.maxGap), s.nGt)))
+      })
   }
 
   /** Streaming twin of [[graft.operators.Sequential.maxDrawdown]]: the
@@ -893,21 +856,17 @@ object StreamingOps {
   def drawdownStream(events: Dataset[TimedEvent]): Dataset[DdRow] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[DdState, DdRow](GroupStateTimeout.NoTimeout()) {
-        case (key, it, state) =>
-          var st = state.getOption.getOrElse(
-            DdState(0L, Long.MinValue, Long.MaxValue, 0L, 0L))
-          it.toVector.sortBy(e => (tsMicros(e.ts), e.event_id)).foreach { e =>
-            val c = math.floor(e.value * 100).toLong
-            st = DdState(st.n + 1, math.max(st.maxC, c), math.min(st.minC, c),
-              math.max(st.best, math.max(st.maxC, c) - c), st.batch)
-          }
-          st = st.copy(batch = st.batch + 1)
-          state.update(st)
-          DdRow(key, st.batch, st.n, st.maxC, st.minC, st.best)
-      }
+    keyedFold(events.groupByKey(_.event_type), OutputMode.Update(), tickKey)(
+      (_: String, prev: Option[DdState], e: TimedEvent) => {
+        val st = prev.getOrElse(DdState(0L, Long.MinValue, Long.MaxValue, 0L, 0L))
+        val c = math.floor(e.value * 100).toLong
+        (DdState(st.n + 1, math.max(st.maxC, c), math.min(st.minC, c),
+          math.max(st.best, math.max(st.maxC, c) - c), st.batch), Nil)
+      },
+      (key: String, st: DdState) => {
+        val s = st.copy(batch = st.batch + 1)
+        (s, Some(DdRow(key, s.batch, s.n, s.maxC, s.minC, s.best)))
+      })
   }
 
   /** Reference R3/R4 ("DISTINCT ON … ORDER BY ts DESC") as a live view:

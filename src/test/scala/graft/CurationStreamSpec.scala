@@ -1,9 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.CurationStream
+import graft.streaming.{CurationStream, MemoryReplay}
 
 /** Hand fixture through the INGEST-time curation funnel: one doc per
   * elimination stage, plus the one deliberate batch/stream divergence —
@@ -56,6 +57,28 @@ class CurationStreamSpec extends AnyFunSuite {
   test("funnel output is invariant to the micro-batch split") {
     assert(flags(1) == flags(4))
     assert(flags(4) == flags(6))
+  }
+
+  test("decontam flags: a doc whose hits span two micro-batches gets one flag row") {
+    val sp = spark
+    import sp.implicits._
+    graft.functions.GraftFunctions.register(spark)
+    val bench = Seq(benchText).toDF("text")
+      .select(explode(call_function("graft_shingles", col("text"), lit(3))).as("s"))
+      .select(xxhash64(col("s")).as("sk")).distinct()
+    // doc 6 arrives in both micro-batches, so the Update-mode aggregate
+    // emits its group twice, with a cumulative count
+    val hits = MemoryReplay.replayChunks(spark,
+        Seq(Seq((6L, benchText), (1L, docA)), Seq((6L, benchText))),
+        mode = OutputMode.Update())(ds =>
+        CurationStream.decontamHitsStream(ds.toDF("doc_id", "text"),
+          "doc_id", "text", bench).as[(Long, Long, Long)])
+      .toDF("doc_id", "n_sh", "n_hit")
+    assert(hits.filter(col("doc_id") === 6L).count() == 2L)
+    val docs = Seq((1L, docA), (6L, benchText)).toDF("doc_id", "text")
+    val flags = CurationStream.decontamFlags(docs, hits, 0.5, nDocs = 2L)
+      .collect().map(r => (r.getLong(0), r.getBoolean(1)))
+    assert(flags.sorted.toSeq == Seq((1L, true), (6L, false)))
   }
 
   test("TTL funnel: in-window dups swallowed, content re-admitted after TTL, near-dup drops within window") {

@@ -1,11 +1,13 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{MarketEvent, Pnl, PnlRow, Sma}
-import graft.streaming.{Ingest, MemoryReplay, StreamingOps}
+import graft.operators.{AnomalyRow, MarketEvent, Pnl, Sma}
+import graft.streaming.{Ingest, KeyedUpdate, MemoryReplay, StreamingOps, TimedEvent}
 
 /** Streaming ≡ batch parity (SURVEY.md §5.4): MemoryStream chunks through
   * the flatMapGroupsWithState operators must reproduce the batch fold /
@@ -75,100 +77,119 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("streaming PnL over 3 micro-batches equals batch replay bit-for-bit") {
+  private lazy val prices = marketEvents.filter(_.kind == "price")
+
+  /** Restart tapes cut from the market tape: a tick stream per event kind,
+    * and SCD2 updates over seven keys whose attribute is the event kind.
+    */
+  private lazy val ticks =
+    marketEvents.map(e => TimedEvent(e.seq, e.ts, e.kind, e.price_mwh))
+  private lazy val updates =
+    marketEvents.map(e => KeyedUpdate(e.seq % 7, e.kind, e.ts, e.seq))
+
+  /** Each keyed fold against its batch reference: (fold, N, the fold's
+    * rows over n micro-batches, the reference's rows, row equality). ==
+    * on doubles means the fold is BIT-identical across the state cuts; the
+    * anomaly ring's 7 small chunks make windows straddle a cut.
+    */
+  private val parityFolds: Seq[(String, Int, Int => Seq[Any], () => Seq[Any],
+      (Any, Any) => Boolean)] = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[MarketEvent]
-    val q = StreamingOps.pnlStream(input.toDS())
-      .writeStream.format("memory").queryName("pnl_out").outputMode("append").start()
-    try {
-      val n = marketEvents.size
-      marketEvents.grouped(math.max(1, n / 3 + 1)).foreach { chunk =>
-        input.addData(chunk)
-        q.processAllAvailable()
-      }
-      val got = spark.table("pnl_out").as[PnlRow].collect().sortBy(r => (r.seq, r.account))
-      val want = Pnl.replay(marketEvents.toDS()).collect().sortBy(r => (r.seq, r.account))
-      assert(got.length == want.length)
-      got.zip(want).foreach { case (g, w) => assert(g == w) }
-    } finally q.stop()
+    def replay[I: Encoder, O: Encoder](tape: Seq[I], n: Int)(
+        f: Dataset[I] => Dataset[O]): Seq[O] =
+      MemoryReplay.replay(spark, tape, n)(f).as[O].collect().toSeq
+    val exact: (Any, Any) => Boolean = _ == _
+    val within1e9: (Any, Any) => Boolean = {
+      case ((gs, g5: Double, g20: Double), (ws, w5: Double, w20: Double)) =>
+        gs == ws && math.abs(g5 - w5) < 1e-9 && math.abs(g20 - w20) < 1e-9
+    }
+    Seq(
+      ("pnlStream", 3,
+        n => replay(marketEvents, n)(StreamingOps.pnlStream).sortBy(r => (r.seq, r.account)),
+        () => Pnl.replay(marketEvents.toDS()).collect().toSeq.sortBy(r => (r.seq, r.account)),
+        exact),
+      ("ewmaStream", 3,
+        n => replay(prices, n)(StreamingOps.ewmaStream(_, alpha = 0.25)).sortBy(_.seq),
+        () => Sma.ewma(prices.toDS(), alpha = 0.25).collect().toSeq.sortBy(_.seq),
+        exact),
+      ("anomalyStream", 7,
+        n => replay(prices, n)(StreamingOps.anomalyStream(_)).sortBy(_.seq),
+        () => Sma.rollingAnomalies(prices.toDS().toDF(), col("hub"), col("price_mwh"),
+            Seq(col("ts"), col("seq")))
+          .as[AnomalyRow].collect().toSeq.sortBy(_.seq),
+        exact),
+      ("forecastStream", 4,
+        n => replay(prices, n)(StreamingOps.forecastStream)
+          .map(r => (r.seq, r.sma5, r.sma20)).sortBy(_._1),
+        () => Sma.withForecast(prices.toDS().toDF(), col("hub"), col("price_mwh"),
+            Seq(col("ts"), col("seq")))
+          .select(col("seq"), col("sma5"), col("sma20")).as[(Long, Double, Double)]
+          .collect().toSeq.sortBy(_._1),
+        within1e9))
   }
 
-  test("streaming EWMA over 3 micro-batches equals batch fold bit-for-bit") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prices = marketEvents.filter(_.kind == "price")
-    val input = MemoryStream[MarketEvent]
-    val q = StreamingOps.ewmaStream(input.toDS(), alpha = 0.25)
-      .writeStream.format("memory").queryName("ewma_out").outputMode("append").start()
-    try {
-      prices.grouped(math.max(1, prices.size / 3 + 1)).foreach { chunk =>
-        input.addData(chunk)
-        q.processAllAvailable()
+  for ((name, n, run, reference, same) <- parityFolds)
+    test(s"$name equals its batch reference at 1 and $n micro-batches") {
+      val want = reference()
+      Seq(1, n).foreach { splits =>
+        val got = run(splits)
+        assert(want.nonEmpty && got.length == want.length, s"$splits batches")
+        got.zip(want).foreach { case (g, w) =>
+          assert(same(g, w), s"$splits batches: $g != $w")
+        }
       }
-      val got = spark.table("ewma_out").as[graft.operators.EwmaRow]
-        .collect().sortBy(_.seq)
-      val want = graft.operators.Sma.ewma(prices.toDS(), alpha = 0.25)
-        .collect().sortBy(_.seq)
-      assert(got.length == want.length && got.nonEmpty)
-      // == on doubles: the fold must be BIT-identical across the state cut
-      got.zip(want).foreach { case (g, w) => assert(g == w) }
+    }
+
+  /** Each micro-batch's rows of `f` over `tape` in four batches, by batch
+    * id. `foreachBatch` collects them, since a restarted query's memory
+    * sink would start empty. With `restart`, the query stops after every
+    * batch and resumes on the same checkpoint.
+    */
+  private def batchRows[I: Encoder](tape: Seq[I], mode: OutputMode,
+      restart: Boolean)(f: Dataset[I] => Dataset[_]): Seq[(Long, Seq[String])] = {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val input = MemoryStream[I]
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_fold_ckpt").toString
+    val out = scala.collection.concurrent.TrieMap.empty[Long, Seq[String]]
+    def start() = f(input.toDS()).toDF().writeStream.outputMode(mode)
+      .option("checkpointLocation", ckpt)
+      .foreachBatch { (b: DataFrame, id: Long) =>
+        out.put(id, b.collect().map(_.toString).sorted.toSeq); ()
+      }
+      .start()
+    var q = start()
+    try tape.grouped((tape.size + 3) / 4).foreach { c =>
+      input.addData(c)
+      q.processAllAvailable()
+      if (restart) { q.stop(); q = start() }
     } finally q.stop()
+    out.toSeq.sortBy(_._1)
   }
 
-  test("streaming anomaly ring survives micro-batch cuts: equals batch window plan") {
+  /** The seven keyedFold operators, each as its per-batch rows over its
+    * tape with or without a restart after every batch.
+    */
+  private val restartFolds: Seq[(String, Boolean => Seq[(Long, Seq[String])])] = {
     import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prices = marketEvents.filter(_.kind == "price")
-    val input = MemoryStream[MarketEvent]
-    val q = StreamingOps.anomalyStream(input.toDS())
-      .writeStream.format("memory").queryName("anom_out").outputMode("append").start()
-    try {
-      // tiny chunks: many windows STRADDLE a state cut
-      prices.grouped(math.max(1, prices.size / 7 + 1)).foreach { chunk =>
-        input.addData(chunk)
-        q.processAllAvailable()
-      }
-      val got = spark.table("anom_out").as[graft.operators.AnomalyRow]
-        .collect().sortBy(_.seq)
-      val want = graft.operators.Sma.rollingAnomalies(
-          prices.toDS().toDF(), org.apache.spark.sql.functions.col("hub"),
-          org.apache.spark.sql.functions.col("price_mwh"),
-          Seq(org.apache.spark.sql.functions.col("ts"),
-            org.apache.spark.sql.functions.col("seq")))
-        .as[graft.operators.AnomalyRow].collect().sortBy(_.seq)
-      assert(got.length == want.length && got.nonEmpty)
-      got.zip(want).foreach { case (g, w) => assert(g == w) }
-    } finally q.stop()
+    val append = OutputMode.Append()
+    val update = OutputMode.Update()
+    Seq(
+      ("forecastStream", r => batchRows(prices, append, r)(StreamingOps.forecastStream)),
+      ("ewmaStream", r => batchRows(prices, append, r)(StreamingOps.ewmaStream(_, 0.25))),
+      ("anomalyStream", r => batchRows(prices, append, r)(StreamingOps.anomalyStream(_))),
+      ("pnlStream", r => batchRows(marketEvents, append, r)(StreamingOps.pnlStream)),
+      ("scd2Stream", r => batchRows(updates, update, r)(StreamingOps.scd2Stream)),
+      ("tickGapStream",
+        r => batchRows(ticks, update, r)(StreamingOps.tickGapStream(_, 1800000000L))),
+      ("drawdownStream", r => batchRows(ticks, update, r)(StreamingOps.drawdownStream)))
   }
 
-  test("streaming SMA forecast over 4 micro-batches matches batch window op") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val prices = marketEvents.filter(_.kind == "price")
-    val input = MemoryStream[MarketEvent]
-    val q = StreamingOps.forecastStream(input.toDS())
-      .writeStream.format("memory").queryName("fc_out").outputMode("append").start()
-    try {
-      prices.grouped(math.max(1, prices.size / 4 + 1)).foreach { chunk =>
-        input.addData(chunk)
-        q.processAllAvailable()
-      }
-      val got = spark.table("fc_out").collect()
-        .map(r => (r.getAs[Long]("seq"), r.getAs[Double]("sma5"), r.getAs[Double]("sma20")))
-        .sortBy(_._1)
-      val want = Sma.withForecast(prices.toDS().toDF(), col("hub"), col("price_mwh"),
-          Seq(col("ts"), col("seq")))
-        .select(col("seq"), col("sma5"), col("sma20")).collect()
-        .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-        .sortBy(_._1)
-      assert(got.length == want.length && got.nonEmpty)
-      got.zip(want).foreach { case ((gs, g5, g20), (ws, w5, w20)) =>
-        assert(gs == ws)
-        assert(math.abs(g5 - w5) < 1e-9 && math.abs(g20 - w20) < 1e-9)
-      }
-    } finally q.stop()
-  }
+  for ((name, run) <- restartFolds)
+    test(s"$name survives a kill-and-restart at every micro-batch boundary") {
+      val want = run(false)
+      assert(want.size == 4 && want.exists(_._2.nonEmpty))
+      assert(run(true) == want)
+    }
 
   test("streaming near-dup cold bucket: cap bounds emissions and state growth") {
     import spark.implicits._

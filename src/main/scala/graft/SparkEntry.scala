@@ -514,6 +514,112 @@ object SparkEntry {
        |         realized_pnl + position_mw * (last_price_mwh - avg_price_mwh) AS total_pnl
        |  FROM (SELECT * FROM te UNION ALL SELECT * FROM pe) raw)""".stripMargin
 
+  /** Shared q06/q55 oracle: the PnL fold replayed (the streaming path must
+    * reproduce the batch fold exactly).
+    */
+  private val PNL_REPLAY_SQL =
+    s"""WITH RECURSIVE $PNL_CTES
+      |SELECT * FROM u ORDER BY seq, account""".stripMargin
+
+  /** Shared q16/q56 oracle: per-hub SMA5/SMA20 forecasts over the price ticks. */
+  private val MARKET_SMA_SQL =
+    s"""WITH $M_CTE
+      |SELECT seq, ts, hub, price_mwh,
+      |  avg(price_mwh) OVER w5 AS sma5, avg(price_mwh) OVER w20 AS sma20,
+      |  avg(price_mwh) OVER w5 AS forecast_next
+      |FROM m WHERE kind = 'price'
+      |WINDOW
+      |  w5 AS (PARTITION BY hub ORDER BY ts, seq ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
+      |  w20 AS (PARTITION BY hub ORDER BY ts, seq ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
+      |ORDER BY seq""".stripMargin
+
+  /** Shared q41/q76 oracle: the latest 3 events per user. */
+  private val TOPK_PER_GROUP_SQL =
+    """SELECT user_id, CAST(rn AS BIGINT) AS rn, ts, event_id, value FROM (
+      |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value,
+      |    row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
+      |  FROM events) x
+      |WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin
+
+  /** Shared q176/q183 oracle: per event_type tick count, span and gaps
+    * over 30 min.
+    */
+  private val TICK_GAPS_SQL =
+    """WITH e AS (
+      |  SELECT event_type, epoch_us(ts) AS t, event_id FROM events),
+      |g AS (
+      |  SELECT event_type, t,
+      |    t - lag(t) OVER (PARTITION BY event_type ORDER BY t, event_id) AS gap
+      |  FROM e)
+      |SELECT event_type, CAST(count(*) AS BIGINT) AS n_ticks,
+      |  CAST(max(t) - min(t) AS BIGINT) AS span_us,
+      |  CAST(max(gap) AS BIGINT) AS max_gap_us,
+      |  CAST(count(CASE WHEN gap > 1800000000 THEN 1 END) AS BIGINT) AS n_gaps_gt
+      |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  /** Shared q184/q186 oracle: per event_type peak-to-trough drawdown in
+    * cents.
+    */
+  private val DRAWDOWN_SQL =
+    """WITH e AS (
+      |  SELECT event_type, epoch_us(ts) AS t, event_id,
+      |    CAST(floor(value * 100) AS BIGINT) AS c
+      |  FROM events),
+      |m AS (
+      |  SELECT event_type, c,
+      |    max(c) OVER (PARTITION BY event_type ORDER BY t, event_id
+      |                 ROWS UNBOUNDED PRECEDING) AS peak
+      |  FROM e)
+      |SELECT event_type, CAST(count(*) AS BIGINT) AS n_ticks,
+      |  CAST(max(c) AS BIGINT) AS max_cents,
+      |  CAST(min(c) AS BIGINT) AS min_cents,
+      |  CAST(max(peak - c) AS BIGINT) AS max_drawdown_cents
+      |FROM m GROUP BY event_type ORDER BY event_type""".stripMargin
+
+  /** Shared q199/q202/q203/q204/q210 oracle: planted-sketch pairs within
+    * hamming distance 3.
+    */
+  private val MEDIA_PAIRS_SQL =
+    s"""WITH $DHASH_SK_CTE
+      |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+      |       bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) AS hamming
+      |FROM sk a JOIN sk b ON a.doc_id < b.doc_id
+      |WHERE bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= 3
+      |ORDER BY doc_a, doc_b""".stripMargin
+
+  /** Shared q213/q226/q233 oracle: the documents a n_chars-range delete keeps. */
+  private val LOG_DELETE_SQL =
+    """SELECT doc_id, source, n_chars FROM documents
+      |WHERE n_chars IS NULL OR n_chars < 150 OR n_chars > 250
+      |ORDER BY doc_id""".stripMargin
+
+  /** Shared q222/q231 oracle: change-data-feed rows of the logged table. */
+  private val LOG_CDF_ROWS_SQL =
+    s"""WITH $MERGE_CTE,
+      |merged AS (
+      |  SELECT k, source, v, seq FROM mu
+      |  QUALIFY row_number() OVER (PARTITION BY k ORDER BY seq DESC) = 1)
+      |SELECT k, source, v, seq, 'insert' AS _change_type
+      |FROM mupd WHERE k >= 10000000
+      |UNION ALL
+      |SELECT k, source, v, seq, 'update_preimage'
+      |FROM mbase WHERE k % 3 = 0 OR k % 7 = 0
+      |UNION ALL
+      |SELECT k, source, v, seq, 'update_postimage'
+      |FROM merged WHERE k < 10000000 AND (k % 3 = 0 OR k % 7 = 0)
+      |ORDER BY k, _change_type""".stripMargin
+
+  /** Shared q223/q228 oracle: the logged table's commit history. */
+  private val LOG_HISTORY_SQL =
+    """SELECT * FROM (VALUES
+      |  (CAST(1 AS BIGINT), 'overwrite', CAST(4 AS BIGINT),
+      |   CAST(0 AS BIGINT), CAST(NULL AS BIGINT)),
+      |  (2, 'append', 1, 0, 7),
+      |  (3, 'delete', 1, 1, NULL),
+      |  (4, 'compact', 0, 0, NULL))
+      |  AS t(version, op, n_add, n_remove, epoch)
+      |ORDER BY version""".stripMargin
+
   // ---------------------------------------------------------------------------
   // Flagship
   // ---------------------------------------------------------------------------
@@ -2273,11 +2379,10 @@ object SparkEntry {
       TableLog.overwrite(src.filter(col("doc_id") % 4 === 0), root) // v1
       (1L to 3L).foreach(k =>                                       // v2..v4
         TableLog.appendBatch(src.filter(col("doc_id") % 4 === k), k, root))
-      graft.streaming.LogTail.consumeVersions[(Long, String), (Long, Boolean)](
-        s, root, 0L,
-        df => df.as[(Long, String)])(ds =>
+      graft.streaming.MemoryReplay.drainTape(s, root)(df =>
           graft.streaming.CurationStream.exactKeepStream(
-            ds.toDF("doc_id", "content"), "doc_id", "content"))
+            df.as[(Long, String)].toDF("doc_id", "content"),
+            "doc_id", "content"))
         .toDF("doc_id", "exact_keep")
         .orderBy(col("doc_id"))
     }),
@@ -5014,27 +5119,14 @@ object SparkEntry {
         |  w20 AS (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP), event_id ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
         |ORDER BY event_id""".stripMargin,
 
-    "q06_pnl_replay" ->
-      s"""WITH RECURSIVE $PNL_CTES
-         |SELECT * FROM u ORDER BY seq, account""".stripMargin,
+    "q06_pnl_replay" -> PNL_REPLAY_SQL,
 
     // identical oracle to q06 — the STREAMING path must reproduce the batch
     // fold's answer exactly (arrival order is the same pinned (ts, seq))
-    "q55_streaming_pnl" ->
-      s"""WITH RECURSIVE $PNL_CTES
-         |SELECT * FROM u ORDER BY seq, account""".stripMargin,
+    "q55_streaming_pnl" -> PNL_REPLAY_SQL,
 
     // identical oracle to q16 — streaming SMA ≡ batch window
-    "q56_streaming_sma" ->
-      s"""WITH $M_CTE
-         |SELECT seq, ts, hub, price_mwh,
-         |  avg(price_mwh) OVER w5 AS sma5, avg(price_mwh) OVER w20 AS sma20,
-         |  avg(price_mwh) OVER w5 AS forecast_next
-         |FROM m WHERE kind = 'price'
-         |WINDOW
-         |  w5 AS (PARTITION BY hub ORDER BY ts, seq ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-         |  w20 AS (PARTITION BY hub ORDER BY ts, seq ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |ORDER BY seq""".stripMargin,
+    "q56_streaming_sma" -> MARKET_SMA_SQL,
 
     "q07_exposure" ->
       s"""WITH RECURSIVE $PNL_CTES
@@ -5101,16 +5193,7 @@ object SparkEntry {
       """SELECT event_type, count(DISTINCT user_id) AS n_users, count(*) AS n
         |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
 
-    "q16_market_forecasts" ->
-      s"""WITH $M_CTE
-         |SELECT seq, ts, hub, price_mwh,
-         |  avg(price_mwh) OVER w5 AS sma5, avg(price_mwh) OVER w20 AS sma20,
-         |  avg(price_mwh) OVER w5 AS forecast_next
-         |FROM m WHERE kind = 'price'
-         |WINDOW
-         |  w5 AS (PARTITION BY hub ORDER BY ts, seq ROWS BETWEEN 4 PRECEDING AND CURRENT ROW),
-         |  w20 AS (PARTITION BY hub ORDER BY ts, seq ROWS BETWEEN 19 PRECEDING AND CURRENT ROW)
-         |ORDER BY seq""".stripMargin,
+    "q16_market_forecasts" -> MARKET_SMA_SQL,
 
     "q17_latest_positions" ->
       s"""WITH RECURSIVE $PNL_CTES
@@ -5357,34 +5440,16 @@ object SparkEntry {
     // because hamming ≤ 3 forces a shared 16-bit chunk (pigeonhole). The
     // engine side recovers every bit from REAL decoded PNG pixels; only the
     // fixture encoder and this oracle know the arithmetic.
-    "q199_image_phash_pairs" ->
-      s"""WITH $DHASH_SK_CTE
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) AS hamming
-        |FROM sk a JOIN sk b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "q199_image_phash_pairs" -> MEDIA_PAIRS_SQL,
 
     // Same planted-pattern arithmetic as q199 (deliberately: the ENGINE
     // paths differ completely — PCM energy walk vs PNG pixel averaging —
     // while the oracle pins both to one ground truth)
-    "q202_audio_fingerprint_pairs" ->
-      s"""WITH $DHASH_SK_CTE
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) AS hamming
-        |FROM sk a JOIN sk b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "q202_audio_fingerprint_pairs" -> MEDIA_PAIRS_SQL,
 
     // Streaming twin of q199 — same exact all-pairs ground truth (the
     // pigeonhole index loses nothing at hamming ≤ 3 over an ordered tape)
-    "q204_streaming_media_dedup" ->
-      s"""WITH $DHASH_SK_CTE
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) AS hamming
-        |FROM sk a JOIN sk b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "q204_streaming_media_dedup" -> MEDIA_PAIRS_SQL,
 
     // The TTL twin: q199's pair universe restricted to the trailing
     // window — parity-ordered ranks, gap ≤ n/4 (eviction is strictly-
@@ -5408,23 +5473,11 @@ object SparkEntry {
     // The mixed tape converges on q199's ground truth: every modality's
     // decoder recovers the same planted bits, and the pigeonhole streaming
     // index loses nothing at hamming ≤ 3 over an ordered tape
-    "q210_streaming_mixed_media" ->
-      s"""WITH $DHASH_SK_CTE
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) AS hamming
-        |FROM sk a JOIN sk b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "q210_streaming_mixed_media" -> MEDIA_PAIRS_SQL,
 
     // Same planted-pattern ground truth, third engine path (box walk +
     // stts run expansion)
-    "q203_video_fingerprint_pairs" ->
-      s"""WITH $DHASH_SK_CTE
-        |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |       bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) AS hamming
-        |FROM sk a JOIN sk b ON a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.s1, b.s1)) + bit_count(xor(a.s2, b.s2)) <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin,
+    "q203_video_fingerprint_pairs" -> MEDIA_PAIRS_SQL,
 
     // Window prefix-sum re-derivation of the quantized next-fit packing:
     // keeps are the pre-inflated files, bins are floor(exclusive-cumsum /
@@ -5475,10 +5528,7 @@ object SparkEntry {
         |ORDER BY k""".stripMargin,
 
     // The post-delete head is exactly the range's complement
-    "q213_log_delete" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE n_chars IS NULL OR n_chars < 150 OR n_chars > 250
-        |ORDER BY doc_id""".stripMargin,
+    "q213_log_delete" -> LOG_DELETE_SQL,
 
     // Pruning must be invisible to semantics: the pruned-read + row-filter
     // result IS the plain filter
@@ -5572,10 +5622,7 @@ object SparkEntry {
 
     // The DV head is exactly the range's complement (NULL rows kept) —
     // identical contract to the rewrite delete, different mechanism
-    "q226_deletion_vectors" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE n_chars IS NULL OR n_chars < 150 OR n_chars > 250
-        |ORDER BY doc_id""".stripMargin,
+    "q226_deletion_vectors" -> LOG_DELETE_SQL,
 
     // v1 and the restored v3 are the SAME derivation; v2 is the accident
     "q224_log_restore" ->
@@ -5592,47 +5639,13 @@ object SparkEntry {
     // Every CDF image re-derived: inserts are the offset %11 keys,
     // updated keys (%3/%7) emit the base row as preimage and the max-seq
     // winner as postimage, untouched keys emit nothing
-    "q222_log_cdf_rows" ->
-      s"""WITH $MERGE_CTE,
-        |merged AS (
-        |  SELECT k, source, v, seq FROM mu
-        |  QUALIFY row_number() OVER (PARTITION BY k ORDER BY seq DESC) = 1)
-        |SELECT k, source, v, seq, 'insert' AS _change_type
-        |FROM mupd WHERE k >= 10000000
-        |UNION ALL
-        |SELECT k, source, v, seq, 'update_preimage'
-        |FROM mbase WHERE k % 3 = 0 OR k % 7 = 0
-        |UNION ALL
-        |SELECT k, source, v, seq, 'update_postimage'
-        |FROM merged WHERE k < 10000000 AND (k % 3 = 0 OR k % 7 = 0)
-        |ORDER BY k, _change_type""".stripMargin,
+    "q222_log_cdf_rows" -> LOG_CDF_ROWS_SQL,
 
     // the SQL-surface change feed is the same derivation as q222
-    "q231_sql_log_cdf" ->
-      s"""WITH $MERGE_CTE,
-        |merged AS (
-        |  SELECT k, source, v, seq FROM mu
-        |  QUALIFY row_number() OVER (PARTITION BY k ORDER BY seq DESC) = 1)
-        |SELECT k, source, v, seq, 'insert' AS _change_type
-        |FROM mupd WHERE k >= 10000000
-        |UNION ALL
-        |SELECT k, source, v, seq, 'update_preimage'
-        |FROM mbase WHERE k % 3 = 0 OR k % 7 = 0
-        |UNION ALL
-        |SELECT k, source, v, seq, 'update_postimage'
-        |FROM merged WHERE k < 10000000 AND (k % 3 = 0 OR k % 7 = 0)
-        |ORDER BY k, _change_type""".stripMargin,
+    "q231_sql_log_cdf" -> LOG_CDF_ROWS_SQL,
 
     // The audit trail is fully deterministic — a literal table
-    "q223_log_history" ->
-      """SELECT * FROM (VALUES
-        |  (CAST(1 AS BIGINT), 'overwrite', CAST(4 AS BIGINT),
-        |   CAST(0 AS BIGINT), CAST(NULL AS BIGINT)),
-        |  (2, 'append', 1, 0, 7),
-        |  (3, 'delete', 1, 1, NULL),
-        |  (4, 'compact', 0, 0, NULL))
-        |  AS t(version, op, n_add, n_remove, epoch)
-        |ORDER BY version""".stripMargin,
+    "q223_log_history" -> LOG_HISTORY_SQL,
 
     // Manifest counts must equal the plain GROUP BY (and the total the
     // plain COUNT(*)) — metadata answering is invisible to semantics
@@ -5689,10 +5702,7 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
 
     // the SQL delete's complement (NULL n_chars never matches BETWEEN)
-    "q233_sql_delete" ->
-      """SELECT doc_id, source, n_chars FROM documents
-        |WHERE n_chars IS NULL OR n_chars < 150 OR n_chars > 250
-        |ORDER BY doc_id""".stripMargin,
+    "q233_sql_delete" -> LOG_DELETE_SQL,
 
     // rename is metadata-only: the read is the source derivation under
     // the new logical name
@@ -5702,15 +5712,7 @@ object SparkEntry {
         |ORDER BY doc_id""".stripMargin,
 
     // q223's deterministic audit trail, reached through pure SQL
-    "q228_sql_log_history" ->
-      """SELECT * FROM (VALUES
-        |  (CAST(1 AS BIGINT), 'overwrite', CAST(4 AS BIGINT),
-        |   CAST(0 AS BIGINT), CAST(NULL AS BIGINT)),
-        |  (2, 'append', 1, 0, 7),
-        |  (3, 'delete', 1, 1, NULL),
-        |  (4, 'compact', 0, 0, NULL))
-        |  AS t(version, op, n_add, n_remove, epoch)
-        |ORDER BY version""".stripMargin,
+    "q228_sql_log_history" -> LOG_HISTORY_SQL,
 
     // Full re-derivation of the trained classifier: marker-augmented text,
     // q197's portable hashed token counts, per-language centroid sums,
@@ -7244,12 +7246,7 @@ object SparkEntry {
         |       -CAST(sum(tf * logp) AS DOUBLE) / CAST(sum(tf) AS DOUBLE) AS mean_surprisal
         |FROM j GROUP BY 1 ORDER BY 1""".stripMargin,
 
-    "q76_sql_native_funcs" ->
-      """SELECT user_id, CAST(rn AS BIGINT) AS rn, ts, event_id, value FROM (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        |  FROM events) x
-        |WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
+    "q76_sql_native_funcs" -> TOPK_PER_GROUP_SQL,
 
     "q58_decontaminate" ->
       """WITH tk AS (SELECT doc_id, list_filter(string_split(text, ' '), x -> x <> '') AS toks
@@ -7444,12 +7441,7 @@ object SparkEntry {
         |  quantile_cont(l_extendedprice, 0.9) AS p90
         |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
 
-    "q41_topk_per_group" ->
-      """SELECT user_id, CAST(rn AS BIGINT) AS rn, ts, event_id, value FROM (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, value,
-        |    row_number() OVER (PARTITION BY user_id ORDER BY CAST(ts AS TIMESTAMP) DESC, event_id DESC) AS rn
-        |  FROM events) x
-        |WHERE rn <= 3 ORDER BY user_id, rn""".stripMargin,
+    "q41_topk_per_group" -> TOPK_PER_GROUP_SQL,
 
     "q30_da_rt_latest" ->
       s"""WITH $DA_RT_CTES
@@ -7777,36 +7769,11 @@ object SparkEntry {
 
     // mirrors q176: per-key lag window (the oracle's one-task spelling of
     // the engine's two-pass fragment stitch), same 30-min threshold
-    "q176_tick_gaps" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) AS t, event_id FROM events),
-        |g AS (
-        |  SELECT event_type, t,
-        |    t - lag(t) OVER (PARTITION BY event_type ORDER BY t, event_id) AS gap
-        |  FROM e)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_ticks,
-        |  CAST(max(t) - min(t) AS BIGINT) AS span_us,
-        |  CAST(max(gap) AS BIGINT) AS max_gap_us,
-        |  CAST(count(CASE WHEN gap > 1800000000 THEN 1 END) AS BIGINT) AS n_gaps_gt
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q176_tick_gaps" -> TICK_GAPS_SQL,
 
     // mirrors q184: running-peak window (the oracle's one-task spelling of
     // the engine's seam-combine), same floor(value*100) cents
-    "q184_drawdown" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) AS t, event_id,
-        |    CAST(floor(value * 100) AS BIGINT) AS c
-        |  FROM events),
-        |m AS (
-        |  SELECT event_type, c,
-        |    max(c) OVER (PARTITION BY event_type ORDER BY t, event_id
-        |                 ROWS UNBOUNDED PRECEDING) AS peak
-        |  FROM e)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_ticks,
-        |  CAST(max(c) AS BIGINT) AS max_cents,
-        |  CAST(min(c) AS BIGINT) AS min_cents,
-        |  CAST(max(peak - c) AS BIGINT) AS max_drawdown_cents
-        |FROM m GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q184_drawdown" -> DRAWDOWN_SQL,
 
     // mirrors q190: the same distinct (source, token) frame via unnest,
     // token self-join, duckMicro jaccard
@@ -7902,21 +7869,7 @@ object SparkEntry {
 
     // mirrors q186: the streaming drawdown's final per-stream state must
     // equal the batch audit — same oracle as q184
-    "q186_streaming_drawdown" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) AS t, event_id,
-        |    CAST(floor(value * 100) AS BIGINT) AS c
-        |  FROM events),
-        |m AS (
-        |  SELECT event_type, c,
-        |    max(c) OVER (PARTITION BY event_type ORDER BY t, event_id
-        |                 ROWS UNBOUNDED PRECEDING) AS peak
-        |  FROM e)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_ticks,
-        |  CAST(max(c) AS BIGINT) AS max_cents,
-        |  CAST(min(c) AS BIGINT) AS min_cents,
-        |  CAST(max(peak - c) AS BIGINT) AS max_drawdown_cents
-        |FROM m GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q186_streaming_drawdown" -> DRAWDOWN_SQL,
 
     // mirrors q185: rank() (min-rank ties) − 1 over n_chars = the engine's
     // cum-before; duckMicro over (n − 1)
@@ -7978,18 +7931,7 @@ object SparkEntry {
 
     // mirrors q183: the streaming gap monitor's final per-stream state must
     // equal the batch audit — same oracle as q176
-    "q183_streaming_gaps" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) AS t, event_id FROM events),
-        |g AS (
-        |  SELECT event_type, t,
-        |    t - lag(t) OVER (PARTITION BY event_type ORDER BY t, event_id) AS gap
-        |  FROM e)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_ticks,
-        |  CAST(max(t) - min(t) AS BIGINT) AS span_us,
-        |  CAST(max(gap) AS BIGINT) AS max_gap_us,
-        |  CAST(count(CASE WHEN gap > 1800000000 THEN 1 END) AS BIGINT) AS n_gaps_gt
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
+    "q183_streaming_gaps" -> TICK_GAPS_SQL,
 
     // mirrors q177: the exact all-pairs dup graph (the q23 equivalence)
     // rolled up by unordered source pair

@@ -493,9 +493,8 @@ class GraftLogSourceProvider extends DataSourceRegister
 }
 
 /** Versions-as-offsets micro-batch source over a [[TableLog]] commit log —
-  * the Delta-source shape, and the retirement of [[graft.streaming.LogTail]]
-  * 's driver-side MemoryStream bridge: `getBatch` plans the window's
-  * APPENDED FILES as one native parquet relation
+  * the Delta-source shape, and the only way to tail a table log: `getBatch`
+  * plans the window's APPENDED FILES as one native parquet relation
   * ([[GraftLog.relation]] flagged streaming), so a version's rows flow
   * executor-to-executor and NEVER touch the driver.
   *
@@ -512,12 +511,21 @@ class GraftLogSourceProvider extends DataSourceRegister
   *
   * Options: `startingVersion` (consume strictly AFTER this version;
   * default 0 = since inception), `maxVersionsPerBatch` (default 1),
-  * `onRewrite` ∈ fail | skip | deliverAdds — the [[graft.streaming.LogTail
-  * .RewritePolicy]] stances for versions that REWROTE files (fail throws
-  * the typed error without advancing; skip delivers nothing; deliverAdds
-  * delivers the rewrite's added files raw — at-least-once redelivery,
-  * and a DV commit's re-added files are delivered WITHOUT the vector
-  * applied, Delta's ignoreChanges contract).
+  * `onRewrite` ∈ fail | skip | deliverAdds — the stances every log
+  * streaming source ends up offering for a version that REWROTE files
+  * (compact/delete/merge/overwrite: not an append, so "what did it add" is
+  * not a file-level question):
+  *  - fail (default): throw the typed [[NonAppendVersionException]]
+  *    WITHOUT advancing — nothing silently dropped; the consumer decides
+  *    (full reprocess from the snapshot, or a [[TableLog.readChanges]]
+  *    over the window).
+  *  - skip: pass the version delivering NOTHING — for maintenance-only
+  *    rewrites. Rows a rewrite commit ADDED (a merge's new keys) are not
+  *    delivered, which is weaker than Delta's ignoreChanges.
+  *  - deliverAdds: deliver the rewrite's added files raw — Delta's
+  *    ignoreChanges contract: at-least-once redelivery of every row the
+  *    rewrite carried along, and a DV commit's re-added files arrive
+  *    WITHOUT the vector applied; the consumer must be idempotent.
   *
   * The recorded table schema at the window's END governs each read
   * (additive evolution NULL-fills older batches); output is aligned to the
@@ -539,9 +547,9 @@ class GraftLogSource(spark: SparkSession, root: String,
     parameters.get("maxVersionsPerBatch").map(_.toLong).getOrElse(1L)
   private val onRewrite =
     parameters.getOrElse("onRewrite", "fail").toLowerCase match {
-      case "fail" => graft.streaming.LogTail.Fail
-      case "skip" => graft.streaming.LogTail.Skip
-      case "deliveradds" => graft.streaming.LogTail.DeliverAdds
+      case "fail" => GraftLogSource.Fail
+      case "skip" => GraftLogSource.Skip
+      case "deliveradds" => GraftLogSource.DeliverAdds
       case other => throw new IllegalArgumentException(
         s"onRewrite must be fail | skip | deliverAdds, got $other")
     }
@@ -601,17 +609,17 @@ class GraftLogSource(spark: SparkSession, root: String,
     val vFrom = start.map(o => verOf(o)).getOrElse(startingVersion)
     val vTo = verOf(end)
     deliveredTo = math.max(deliveredTo, vTo)
-    // per-version policy walk over (vFrom, vTo] — LogTail semantics
+    // per-version policy walk over (vFrom, vTo]
     val adds = Vector.newBuilder[TableLog.Entry]
     var v = vFrom + 1
     while (v <= vTo) {
       val (a, r) = TableLog.fileChanges(spark, root, v - 1, v)
       if (r.isEmpty) adds ++= a
       else onRewrite match {
-        case graft.streaming.LogTail.Skip => ()
-        case graft.streaming.LogTail.DeliverAdds => adds ++= a
-        case graft.streaming.LogTail.Fail =>
-          throw new graft.streaming.LogTail.NonAppendVersionException(
+        case GraftLogSource.Skip => ()
+        case GraftLogSource.DeliverAdds => adds ++= a
+        case GraftLogSource.Fail =>
+          throw new NonAppendVersionException(
             s"version $v of $root rewrote files (compaction/delete/merge); " +
               "an append tail cannot express it as new rows — reprocess " +
               "from the snapshot, use readChanges, or set onRewrite = " +
@@ -650,8 +658,21 @@ class GraftLogSource(spark: SparkSession, root: String,
 }
 
 private[graft] object GraftLogSource {
+  /** The parsed `onRewrite` option (see the class scaladoc). */
+  private sealed trait RewritePolicy
+  private case object Fail extends RewritePolicy
+  private case object Skip extends RewritePolicy
+  private case object DeliverAdds extends RewritePolicy
+
   def tableSchema(spark: SparkSession, root: String): StructType =
     TableLog.schemaOf(spark, root).getOrElse(throw new IllegalArgumentException(
       s"graftlog stream over $root needs a table with a recorded schema " +
         "(any data commit records one); pass .schema(...) to override"))
 }
+
+/** [[GraftLogSource]] met a version that rewrote files under
+  * `onRewrite = fail`. The source's offset stays BEFORE that version —
+  * nothing was silently dropped.
+  */
+final class NonAppendVersionException(msg: String)
+  extends IllegalStateException(msg)

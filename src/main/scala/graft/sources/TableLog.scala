@@ -502,8 +502,9 @@ object TableLog {
     val adds = entries.filter(e => !prev.get(e.path).contains(e))
     // a path whose ENTRY changed in place (same file, new bytes/stats/dvs)
     // commits as remove + re-add — the shape deleteVectors uses — so
-    // fileChanges/readAppended/LogTail classify the window as a CHANGE,
-    // never as an append that would redeliver the whole file as new rows
+    // fileChanges/readAppended/the graftlog source classify the window as
+    // a CHANGE, never as an append that would redeliver the whole file as
+    // new rows
     val dropped = prev.keys.filterNot(newPaths.contains)
     val replaced = adds.map(_.path).filter(prev.contains)
     val removes = (dropped ++ replaced).toSeq.sorted
@@ -1218,7 +1219,7 @@ object TableLog {
 
   /** Build a frame over an arbitrary entry subset of one snapshot (the
     * shared machinery of [[read]], [[readPruned]], [[delete]]'s rewrite
-    * side and [[graft.streaming.LogTail]]'s per-version delivery).
+    * side and per-version change reads).
     * Entries carrying DELETION VECTORS get their dead rows anti-joined
     * away on (file key, row_index) — zero effect on DV-less snapshots.
     * `withPos = true` keeps the `__file`/`__ri` helper columns in the

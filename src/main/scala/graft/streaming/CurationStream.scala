@@ -287,19 +287,6 @@ object CurationStream {
           col("neardup_keep") && col("decontam_ok"), lit(false)).as("kept"))
   }
 
-  /** Per-stage state-store footprint of the LAST [[replayFunnelTtl]] run:
-    * (stage, MemoryReplay.lastStateStats) captured after each internal
-    * replay — the audit surface ScaleProbe's --funnel-stream law reads
-    * (state must sit at rate×TTL per stage, not tape length). Volatile
-    * single-slot like MemoryReplay's: replays are sequential in-session.
-    */
-  @volatile var lastStageStats: List[(String, Seq[(String, Long, Long)])] = Nil
-
-  /** The TTL the last [[replayFunnelTtl]] run used (ms) — lets a probe pin
-    * a longer tape to the SAME window for the flat-state comparison.
-    */
-  @volatile var lastTtlMs: Long = 0L
-
   /** The BOUNDED-STATE ingest funnel (the q196 gate harness): the
     * [[replayFunnel]] composition with both content-growing state ops
     * swapped for their rate×TTL variants — stage-1 flags →
@@ -343,24 +330,13 @@ object CurationStream {
       ttlMsOverride: Option[Long] = None,
       skCol: Option[Column] = None): DataFrame = {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
-    val s1 = Pipeline.stageOneFlags(
-        docs.select(idCol.as("doc_id"), textCol.as("text"),
-          skCol.getOrElse(lit(0L)).cast("long").as("sk")))
-      .filter(col("lang_ok") && col("quality_ok"))
-      .select(col("doc_id"), col("text"), col("sk"))
-      .localCheckpoint()
+    val s1 = stageOneKeepers(docs, idCol, textCol, skCol).localCheckpoint()
     val n = s1.count()
-    // default TTL tracks the corpus (the q196 gate's near-dup-window
-    // geometry); a probe overrides it to hold rate×TTL FIXED while the
-    // tape grows — the bounded-state law the TTL ops exist for
-    val ttlMs = ttlMsOverride.getOrElse((n / 2) * 1000L)
+    val ttlMs = ttlMsOverride.getOrElse(defaultTtlMs(n))
     // every stage frame below is keyed by occurrence; each doc emits at
     // most 3 occurrences, so 3n bounds them all — one size gate, zero
     // extra count jobs ([[Joins.hintSmallBounded]], r17)
     def hb(df: DataFrame): DataFrame = Joins.hintSmallBounded(df, 3 * n)
-    lastTtlMs = ttlMs
-    lastStageStats = Nil
     // occurrence tape: the tick IS the occurrence id (globally unique —
     // base even in [2, 2n], in-window odd, far regime in (3n, 4n]).
     // Built DISTRIBUTED (rank → conditional re-emissions), never collected:
@@ -392,8 +368,6 @@ object CurationStream {
           df.select(col("occ"), col("ts"), col("text")),
           "occ", "ts", "text", ttlMs = ttlMs))
       .toDF("occ").localCheckpoint())
-    lastStageStats = lastStageStats :+
-      ("s2_exact_ttl" -> MemoryReplay.lastStateStats)
     val keepers = occDf.join(keepTicks, Seq("occ")).localCheckpoint()
     // Stage 3 — TTL'd band index over the keepers; verify against the
     // landed occurrence store (recall-exact r=2/b=64 geometry). The
@@ -423,8 +397,6 @@ object CurationStream {
             >= 0.5)
           .select(col("occ_b")).as[Long])
       .toDF("occ").distinct()
-    lastStageStats = lastStageStats :+
-      ("s3_band_ttl" -> MemoryReplay.lastStateStats)
     // Stage 4 (optional) — TTL'd MEDIA sketch index over the same keeper
     // tape, in PARALLEL with the text stage (both see every keeper; a doc
     // drops if EITHER modality is an in-window dup). Pairs are emitted
@@ -433,16 +405,13 @@ object CurationStream {
     val mediaDrops = skCol match {
       case None => None
       case Some(_) =>
-        val md = MemoryReplay.drainTape(spark, tapeRoot)(df =>
+        Some(MemoryReplay.drainTape(spark, tapeRoot)(df =>
             StreamingOps.sketchNearDupStreamTtl(
               df.join(keepTicks, Seq("occ"))
                 .select(col("occ"), col("ts"), col("sk")),
               "occ", "ts", "sk", ttlMs = ttlMs)
               .map(_._2))
-          .toDF("occ").distinct()
-        lastStageStats = lastStageStats :+
-          ("s4_media_ttl" -> MemoryReplay.lastStateStats)
-        Some(md)
+          .toDF("occ").distinct())
     }
     MemoryReplay.dropTape(tapeRoot) // every stage's output is materialized
     val afterText = keepers
@@ -454,4 +423,31 @@ object CurationStream {
           .filter(col("_m").isNull))
       .select(col("doc_id"), col("occ").as("tick"))
   }
+
+  /** Stage-one survivors of `docs` as (doc_id, text, sk): the rows every
+    * [[replayFunnelTtl]] stage replays.
+    */
+  private def stageOneKeepers(docs: DataFrame, idCol: Column, textCol: Column,
+      skCol: Option[Column]): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    Pipeline.stageOneFlags(
+        docs.select(idCol.as("doc_id"), textCol.as("text"),
+          skCol.getOrElse(lit(0L)).cast("long").as("sk")))
+      .filter(col("lang_ok") && col("quality_ok"))
+      .select(col("doc_id"), col("text"), col("sk"))
+  }
+
+  /** The TTL [[replayFunnelTtl]] uses unless overridden: it tracks the
+    * corpus (the q196 gate's near-dup-window geometry, `n` stage-one
+    * survivors). A probe overrides it to hold rate×TTL FIXED while the tape
+    * grows — the bounded-state law the TTL ops exist for.
+    */
+  private def defaultTtlMs(n: Long): Long = (n / 2) * 1000L
+
+  /** The TTL a [[replayFunnelTtl]] run over `docs` uses by default, so a
+    * probe can pin a longer tape to the same window.
+    */
+  private[graft] def defaultTtlMs(docs: DataFrame, idCol: Column,
+      textCol: Column): Long =
+    defaultTtlMs(stageOneKeepers(docs, idCol, textCol, None).count())
 }

@@ -4,7 +4,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** Drive a streaming operator to completion over a frozen tape and hand back
   * the materialized sink — the harness that lets the driver's DuckDB oracle
@@ -31,23 +31,6 @@ object MemoryReplay {
     */
   private val runId = new AtomicInteger(0)
 
-  /** State-store footprint of the LAST completed replay, captured from the
-    * final `StreamingQueryProgress.stateOperators` before `stop()`:
-    * (operatorName, numRowsTotal, memoryUsedBytes) per stateful operator.
-    * This is the 100 TB audit surface for the streaming families — which
-    * state grows with DISTINCT CONTENT (dedup fingerprints, band indexes)
-    * vs stays key-bounded (per-hub folds) — recorded per family in
-    * BASELINE.md by [[graft.tools.StreamStateProbe]]. Volatile single-slot:
-    * replays are sequential within a session (Verify/Bench/probe all run
-    * queries one at a time).
-    */
-  @volatile var lastStateStats: Seq[(String, Long, Long)] = Nil
-
-  private def captureState(query: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-    lastStateStats = Option(query.lastProgress).toSeq
-      .flatMap(_.stateOperators.toSeq)
-      .map(so => (so.operatorName, so.numRowsTotal, so.memoryUsedBytes))
-
   /** Replay `tape` through `f` in `nBatches` ordered micro-batches; returns
     * the complete output as a batch DataFrame. `mode` defaults to Append;
     * Update-mode operators (mapGroupsWithState) pass OutputMode.Update() —
@@ -56,97 +39,70 @@ object MemoryReplay {
     */
   def replay[I: Encoder, O: Encoder](spark: SparkSession, tape: Seq[I],
       nBatches: Int, statePartitions: Int = 8,
-      mode: OutputMode = OutputMode.Append(),
-      stateStoreProvider: Option[String] = None)(f: Dataset[I] => Dataset[O]): DataFrame = {
+      mode: OutputMode = OutputMode.Append())(f: Dataset[I] => Dataset[O]): DataFrame = {
     val chunk = math.max(1, (tape.size + nBatches - 1) / nBatches)
-    replayChunks(spark, tape.grouped(chunk).toSeq, statePartitions, mode,
-      stateStoreProvider)(f)
+    replayChunks(spark, tape.grouped(chunk).toSeq, statePartitions, mode)(f)
   }
 
   /** [[replay]] with CALLER-DEFINED micro-batch boundaries: each element of
-    * `chunks` becomes exactly one batch, in order. This is the seam the
-    * commit-log tailer ([[graft.streaming.LogTail]]) uses — one batch per
-    * committed table version, so batch boundaries mean something (a
-    * version's rows never split across batches and state carries over at
-    * exactly the commit points).
+    * `chunks` becomes exactly one batch, in order, so a chunk's rows never
+    * split across batches and state carries over at exactly the chunk
+    * boundaries.
     */
   def replayChunks[I: Encoder, O: Encoder](spark: SparkSession,
       chunks: Seq[Seq[I]], statePartitions: Int = 8,
-      mode: OutputMode = OutputMode.Append(),
-      stateStoreProvider: Option[String] = None)(f: Dataset[I] => Dataset[O]): DataFrame = {
+      mode: OutputMode = OutputMode.Append())(f: Dataset[I] => Dataset[O]): DataFrame = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[I]
-    val name = s"graft_replay_${runId.incrementAndGet()}"
-    // a replay's micro-batches are small, so the session's partition count
-    // (sized for batch scans) only multiplies state-store file overhead per
-    // batch: pin the caller's count for start() alone. Same discipline for
-    // the state-store provider override (heap default vs RocksDB — the
-    // 100 TB deploy knob: at rate×TTL ≈ millions of live buckets the heap
-    // provider is the first thing to fall over; the provider choice must
-    // not change output, which StreamStateProbe's A/B row asserts).
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = spark.conf.getOption(provKey)
-    val query =
-      try {
-        stateStoreProvider.foreach(spark.conf.set(provKey, _))
-        StreamingOps.withStatePartitions(spark, statePartitions) {
-          f(input.toDS()).writeStream
-            .format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .start()
-        }
-      } finally {
-        if (stateStoreProvider.isDefined)
-          prevProv.fold(spark.conf.unset(provKey))(spark.conf.set(provKey, _))
-      }
-    try {
-      // processAllAvailable per chunk forces a micro-batch boundary, so the
-      // operator's state genuinely persists across batches (one addData of
-      // the whole tape would collapse the replay into a single batch and
-      // prove nothing about state carry-over)
+    // processAllAvailable per chunk forces a micro-batch boundary, so the
+    // operator's state genuinely persists across batches (one addData of
+    // the whole tape would collapse the replay into a single batch and
+    // prove nothing about state carry-over)
+    run(spark, f(input.toDS()), statePartitions, mode) { query =>
       chunks.filter(_.nonEmpty).foreach { c =>
         input.addData(c)
         query.processAllAvailable()
       }
-      captureState(query)
-    } finally query.stop()
-    detach(spark, name)
+    }
   }
 
-  /** Materialize the memory sink's rows off the catalog, then drop its temp
-    * view: every replay otherwise leaves a `graft_replay_N` table pinning its
-    * full output in driver memory for the life of the session — Bench at
-    * reps=3 runs ~21 replays per session. localCheckpoint copies the rows to
-    * executor block storage (freed by the ContextCleaner when the returned
-    * frame is collected), so dropping the view loses nothing.
+  /** The one memory-sink runner. It starts `out` (built inside, under the
+    * caller's state-partition count: a replay's micro-batches are small, so
+    * the session's partition count, sized for batch scans, would only
+    * multiply state-store file overhead per batch), lets `feed` drive it,
+    * stops it, then materializes the sink's rows off the catalog and drops
+    * its temp view: every replay otherwise leaves a `graft_replay_N` table
+    * pinning its full output in driver memory for the life of the session —
+    * Bench at reps=3 runs ~21 replays per session. localCheckpoint copies
+    * the rows to executor block storage (freed by the ContextCleaner when
+    * the returned frame is collected), so dropping the view loses nothing.
     */
-  private def detach(spark: SparkSession, name: String): DataFrame = {
-    val out = spark.table(name).localCheckpoint()
+  private def run[O](spark: SparkSession, out: => Dataset[O],
+      statePartitions: Int, mode: OutputMode)(
+      feed: StreamingQuery => Unit): DataFrame = {
+    val name = s"graft_replay_${runId.incrementAndGet()}"
+    val query = StreamingOps.withStatePartitions(spark, statePartitions) {
+      out.writeStream.format("memory").queryName(name).outputMode(mode).start()
+    }
+    try feed(query) finally query.stop()
+    val rows = spark.table(name).localCheckpoint()
     spark.catalog.dropTempView(name)
-    out
+    rows
   }
 
   /** Run an ALREADY-CONSTRUCTED streaming Dataset to completion against the
-    * memory sink and hand back the materialized output — the runner half of
-    * [[replayChunks]] without the MemoryStream tape: the input here is a
-    * real streaming SOURCE (e.g. `spark.readStream.format("graftlog")`),
-    * so rows flow executor-side and the driver never holds a batch.
+    * memory sink and hand back the materialized output — [[replayChunks]]
+    * without the MemoryStream tape: the input here is a real streaming
+    * SOURCE (e.g. `spark.readStream.format("graftlog")`), so rows flow
+    * executor-side and the driver never holds a batch.
     * `processAllAvailable` drives micro-batches until the source reports
     * no new data — with a self-pacing source (graftlog's one version per
     * batch) that preserves meaningful batch boundaries.
     */
   def drain[O](spark: SparkSession, out: Dataset[O],
       statePartitions: Int = 8,
-      mode: OutputMode = OutputMode.Append()): DataFrame = {
-    val name = s"graft_replay_${runId.incrementAndGet()}"
-    val query = StreamingOps.withStatePartitions(spark, statePartitions) {
-      out.writeStream.format("memory").queryName(name).outputMode(mode).start()
-    }
-    try { query.processAllAvailable(); captureState(query) }
-    finally query.stop()
-    detach(spark, name)
-  }
+      mode: OutputMode = OutputMode.Append()): DataFrame =
+    run(spark, out, statePartitions, mode)(_.processAllAvailable())
 
   /** Stage `frame` as a LOGGED-TABLE TAPE: ONE data-write job lays the
     * rows down hive-partitioned into `nBatches` contiguous `orderCol`
@@ -203,19 +159,6 @@ object MemoryReplay {
     rm(new java.io.File(root))
   }
 
-  /** [[replay]] with the tape in a LOGGED TABLE instead of driver memory
-    * (round 16 — no driver-side tape build): [[writeTape]] then
-    * [[drainTape]], scratch table deleted after the drain.
-    */
-  def replayLogged[O](spark: SparkSession, frame: DataFrame,
-      orderCol: String, nBatches: Int, statePartitions: Int = 8,
-      mode: OutputMode = OutputMode.Append())(
-      f: DataFrame => Dataset[O]): DataFrame = {
-    val root = writeTape(spark, frame, orderCol, nBatches)
-    try drainTape(spark, root, statePartitions, mode)(f)
-    finally dropTape(root)
-  }
-
   /** Two-stream replay for stream-stream operators (interval join): both
     * tapes advance in index-lockstep chunks — for time-sorted tapes of the
     * same span that keeps the two event-time fronts roughly aligned, and
@@ -228,15 +171,8 @@ object MemoryReplay {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val inL = MemoryStream[L]
     val inR = MemoryStream[R]
-    val name = s"graft_replay_${runId.incrementAndGet()}"
-    val query = StreamingOps.withStatePartitions(spark, statePartitions) {
-      f(inL.toDS(), inR.toDS()).writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(OutputMode.Append())
-        .start()
-    }
-    try {
+    run(spark, f(inL.toDS(), inR.toDS()), statePartitions,
+        OutputMode.Append()) { query =>
       val chunkL = math.max(1, (tapeL.size + nBatches - 1) / nBatches)
       val chunkR = math.max(1, (tapeR.size + nBatches - 1) / nBatches)
       tapeL.grouped(chunkL).toSeq.zipAll(
@@ -246,8 +182,6 @@ object MemoryReplay {
           if (cr.nonEmpty) inR.addData(cr)
           query.processAllAvailable()
         }
-      captureState(query)
-    } finally query.stop()
-    detach(spark, name)
+    }
   }
 }

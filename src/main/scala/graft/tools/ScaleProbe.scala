@@ -374,34 +374,40 @@ object ScaleProbe {
       // INDEX state/wall, and the decode prep-pass has its own measured
       // throughput row in --media-hundredx)
       val mediaSk = xxhash64(floor(col("doc_id") / 8))
-      def run(label: String, d: String, ttlOverride: Option[Long],
+      // the replays' start order: replayFunnelTtl drains one stage each
+      val stages = Seq("s2_exact_ttl", "s3_band_ttl", "s4_media_ttl")
+      def gateTtl(d: String): Long =
+        CurationStream.defaultTtlMs(docsOf(d), col("doc_id"), col("text"))
+      def run(label: String, d: String, ttlMs: Long,
           withMedia: Boolean): Double = {
         val t0 = System.nanoTime()
-        val rows = CurationStream.replayFunnelTtl(spark, docsOf(d),
-          col("doc_id"), col("text"), ttlMsOverride = ttlOverride,
-          skCol = if (withMedia) Some(mediaSk) else None).count()
+        val (rows, perStage) = StreamStateProbe.stateOf(spark) {
+          CurationStream.replayFunnelTtl(spark, docsOf(d),
+            col("doc_id"), col("text"), ttlMsOverride = Some(ttlMs),
+            skCol = if (withMedia) Some(mediaSk) else None).count()
+        }
         val w = (System.nanoTime() - t0) / 1e9
-        println(f"[probe] $label%-36s ${w}%8.2f s  ($rows rows, ttl=${CurationStream.lastTtlMs / 1000}s)")
-        CurationStream.lastStageStats.foreach { case (stage, stats) =>
+        println(f"[probe] $label%-36s ${w}%8.2f s  ($rows rows, ttl=${ttlMs / 1000}s)")
+        stages.zip(perStage).foreach { case (stage, stats) =>
           stats.foreach { case (op, rows2, bytes) =>
             println(f"[probe]   $label $stage state: rows=$rows2 bytes=$bytes ($op)")
           }
         }
         w
       }
-      val w1 = run("1x funnelTtl (gate ttl)", srcDir, None, withMedia = false)
-      val ttl1 = CurationStream.lastTtlMs
-      run("10x funnelTtl (gate ttl)", dir, None, withMedia = false)
-      val w10 = run("10x funnelTtl (ttl pinned to 1x)", dir, Some(ttl1),
+      val ttl1 = gateTtl(srcDir)
+      val ttl10 = gateTtl(dir)
+      val w1 = run("1x funnelTtl (gate ttl)", srcDir, ttl1, withMedia = false)
+      run("10x funnelTtl (gate ttl)", dir, ttl10, withMedia = false)
+      val w10 = run("10x funnelTtl (ttl pinned to 1x)", dir, ttl1,
         withMedia = false)
       println(f"[probe] funnel-stream wall exp=${math.log(w10 / w1) / math.log(10.0)}%.2f (1x -> 10x, fixed rate×TTL)")
       // the media-stage law (q207's fourth stage): same contract — state
       // at rate×TTL, flat when the window is pinned while the tape is 10×
-      val m1 = run("1x funnelTtl+media (gate ttl)", srcDir, None,
+      val m1 = run("1x funnelTtl+media (gate ttl)", srcDir, ttl1,
         withMedia = true)
-      val ttlM = CurationStream.lastTtlMs
-      run("10x funnelTtl+media (gate ttl)", dir, None, withMedia = true)
-      val m10 = run("10x funnelTtl+media (ttl pinned to 1x)", dir, Some(ttlM),
+      run("10x funnelTtl+media (gate ttl)", dir, ttl10, withMedia = true)
+      val m10 = run("10x funnelTtl+media (ttl pinned to 1x)", dir, ttl1,
         withMedia = true)
       println(f"[probe] funnel-stream+media wall exp=${math.log(m10 / m1) / math.log(10.0)}%.2f (1x -> 10x, fixed rate×TTL)")
     }

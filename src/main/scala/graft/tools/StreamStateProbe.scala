@@ -16,17 +16,50 @@ import graft.streaming.MemoryReplay
   */
 object StreamStateProbe {
 
-  /** every MemoryReplay-gated query in SparkEntry */
-  val FAMILIES: Seq[String] = Seq(
-    "q55_streaming_pnl", "q56_streaming_sma", "q63_streaming_window",
-    "q68_streaming_session", "q70_streaming_sliding",
-    "q71_streaming_interval_join", "q75_streaming_neardup",
-    "q80_streaming_dedup", "q85_streaming_latest",
-    "q105_streaming_ewma", "q110_streaming_bars", "q112_streaming_scd2",
-    "q122_streaming_anomaly", "q162_streaming_heavy_hitters",
-    "q183_streaming_gaps", "q186_streaming_drawdown",
-    "q192_streaming_neardup_ttl", "q193_streaming_dedup_ttl",
-    "q204_streaming_media_dedup", "q205_streaming_media_dedup_ttl")
+  /** One stateful operator's (operatorName, numRowsTotal, memoryUsedBytes)
+    * from a query's last `StreamingQueryProgress`.
+    */
+  type OpState = (String, Long, Long)
+
+  /** Run `body`, and return with its result the state-store footprint of
+    * every streaming query it started, in start order: each query's
+    * stateful operators from its last progress event. A listener is
+    * registered for the length of `body` only. After `body`, the call waits
+    * for each started query's terminated event (the listener bus delivers a
+    * query's progress events before it), then removes the listener.
+    */
+  def stateOf[T](spark: SparkSession)(body: => T): (T, Seq[Seq[OpState]]) = {
+    import java.util.UUID
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started = scala.collection.mutable.ArrayBuffer.empty[UUID]
+    val last = scala.collection.mutable.Map.empty[UUID, Seq[OpState]]
+    val ended = scala.collection.mutable.Set.empty[UUID]
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        synchronized { started += e.runId; () }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = synchronized {
+        last(e.progress.runId) = e.progress.stateOperators.toSeq
+          .map(so => (so.operatorName, so.numRowsTotal, so.memoryUsedBytes))
+      }
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        synchronized { ended += e.runId; notifyAll() }
+    }
+    spark.streams.addListener(listener)
+    try {
+      val out = body
+      listener.synchronized {
+        val deadline = System.currentTimeMillis() + 120000L
+        while (!started.forall(ended)) {
+          val left = deadline - System.currentTimeMillis()
+          if (left <= 0) throw new IllegalStateException(
+            s"streaming queries never terminated: ${started.filterNot(ended)}")
+          listener.wait(left)
+        }
+        (out, started.toSeq.map(id => last.getOrElse(id, Nil)))
+      }
+    } finally spark.streams.removeListener(listener)
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
@@ -35,14 +68,14 @@ object StreamStateProbe {
     if (args.contains("--sketch-only")) {
       sketchTtlGrowthProbe(spark, sfDir); spark.stop(); return
     }
-    FAMILIES.foreach { name =>
-      MemoryReplay.lastStateStats = Nil
-      val n =
+    RocksGate.streamingGates.foreach { name =>
+      val (n, perQuery) = stateOf(spark) {
         try graft.SparkEntry.queries(name)(spark, sfDir).count()
         catch { case e: Throwable =>
           println(s"[state-probe] $name FAILED: ${e.getMessage}"); -1L }
-      MemoryReplay.lastStateStats match {
-        case Nil =>
+      }
+      perQuery.flatten match {
+        case Seq() =>
           println(f"[state-probe] $name%-32s out=$n%7d  (stateless or no progress captured)")
         case ops => ops.foreach { case (op, rows, bytes) =>
           println(f"[state-probe] $name%-32s out=$n%7d  state: $op rows=$rows bytes=$bytes")
@@ -55,6 +88,10 @@ object StreamStateProbe {
     rocksDbAbProbe(spark, sfDir)
     spark.stop()
   }
+
+  /** Rows and bytes of every stateful operator `body`'s replays ran. */
+  private def fmt(s: Seq[Seq[OpState]]): String =
+    s.flatten.map { case (_, r, b) => s"rows=$r bytes=$b" }.mkString("; ")
 
   /** The media sketch index's flat-state law (the q204/q205 pair, same
     * shape as [[ttlGrowthProbe]]'s band-index rows): cycle the corpus with
@@ -78,22 +115,20 @@ object StreamStateProbe {
             graft.operators.Multimodal.dHashPatternOf(id + c.toLong * 7919L * n))
         }
       }
-    def fmt(s: Seq[(String, Long, Long)]): String =
-      s.map { case (_, r, b) => s"rows=$r bytes=$b" }.mkString("; ")
     Seq(3, 6).foreach { cycles =>
       val tp = tape(cycles)
-      MemoryReplay.lastStateStats = Nil
-      MemoryReplay.replay(spark, tp, nBatches = 4 * cycles)(ds =>
-        graft.streaming.StreamingOps.sketchNearDupStreamTtl(
-          ds.toDF("doc_id", "ts", "sk"), "doc_id", "ts", "sk",
-          ttlMs = ttlMs)).count()
-      val ttlStats = MemoryReplay.lastStateStats
-      MemoryReplay.lastStateStats = Nil
-      MemoryReplay.replay(spark, tp.map(e => (e._1, e._3)),
-        nBatches = 4 * cycles)(ds =>
-        graft.streaming.StreamingOps.sketchNearDupStream(
-          ds.toDF("doc_id", "sk"), "doc_id", "sk")).count()
-      val unbStats = MemoryReplay.lastStateStats
+      val (_, ttlStats) = stateOf(spark) {
+        MemoryReplay.replay(spark, tp, nBatches = 4 * cycles)(ds =>
+          graft.streaming.StreamingOps.sketchNearDupStreamTtl(
+            ds.toDF("doc_id", "ts", "sk"), "doc_id", "ts", "sk",
+            ttlMs = ttlMs)).count()
+      }
+      val (_, unbStats) = stateOf(spark) {
+        MemoryReplay.replay(spark, tp.map(e => (e._1, e._3)),
+          nBatches = 4 * cycles)(ds =>
+          graft.streaming.StreamingOps.sketchNearDupStream(
+            ds.toDF("doc_id", "sk"), "doc_id", "sk")).count()
+      }
       println(s"[state-probe] ttl-sketch-index cycles=$cycles docs=${tp.size} " +
         s"ttl=${ttlMs / 1000}s  ${fmt(ttlStats)}")
       println(s"[state-probe] unbounded-sketch cycles=$cycles docs=${tp.size} " +
@@ -121,8 +156,8 @@ object StreamStateProbe {
         label: String): Unit = {
       val trades = tape.filter(_.kind == "trade")
       val prices = tape.filter(_.kind == "price")
-      MemoryReplay.lastStateStats = Nil
-      val n = MemoryReplay.replay2(spark, trades, prices, nBatches = 4,
+      val (n, st) = stateOf(spark) {
+        MemoryReplay.replay2(spark, trades, prices, nBatches = 4,
           statePartitions = 4)(
           (tl, pr) => graft.streaming.StreamingOps.intervalJoinStream(
             tl.toDF().select(col("seq").as("t_seq"), col("ts").as("t_ts"),
@@ -134,10 +169,9 @@ object StreamStateProbe {
             lookbackSec = 300L, watermarkDelay = delay)
             .select(col("t_seq"), col("hub"), col("p_seq"), col("p_px"))
             .as[graft.streaming.IntervalPair]).count()
-      val st = MemoryReplay.lastStateStats
-        .map { case (_, r, b) => s"rows=$r bytes=$b" }.mkString("; ")
+      }
       println(s"[state-probe] interval-join    $label events=${tape.size} " +
-        s"out=$n  state: $st")
+        s"out=$n  state: ${fmt(st)}")
     }
     Seq("2 minutes", "10 minutes", "40 minutes").foreach { d =>
       run(all, d, f"delay=${d.split(' ')(0) + "m"}%-14s")
@@ -164,20 +198,28 @@ object StreamStateProbe {
     val tape = graft.Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
       .as[(Long, String)].collect().toSeq.sortBy(_._1)
+    val provKey = "spark.sql.streaming.stateStore.providerClass"
     val rocks =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    // the provider conf is read at query start, so setting it around a
+    // replay is the mechanism a deploy (and RocksGate) uses
+    def underProvider(label: String, prov: Option[String])(
+        run: => Seq[Long]): Seq[Long] = {
+      prov.foreach(spark.conf.set(provKey, _))
+      val (kept, st) = try stateOf(spark)(run)
+        finally if (prov.isDefined) spark.conf.unset(provKey)
+      val mem = st.flatten.map { case (_, r, b) => s"rows=$r memBytes=$b" }
+      println(f"[state-probe] $label kept=${kept.size}%d  state: ${mem.mkString("; ")}")
+      kept
+    }
     val results = Seq(("heap", None), ("rocksdb", Some(rocks)))
       .map { case (label, prov) =>
-        MemoryReplay.lastStateStats = Nil
-        val kept = MemoryReplay.replay(spark, tape, nBatches = 4,
-            stateStoreProvider = prov)(ds =>
-            graft.streaming.StreamingOps.exactDedupStream(
-              ds.toDF("doc_id", "text"), "doc_id", "text"))
-          .collect().map(_.getLong(0)).sorted.toSeq
-        val st = MemoryReplay.lastStateStats
-          .map { case (_, r, b) => s"rows=$r memBytes=$b" }.mkString("; ")
-        println(f"[state-probe] dedup-provider   $label%-8s kept=${kept.size}%d  state: $st")
-        kept
+        underProvider(f"dedup-provider   $label%-8s", prov) {
+          MemoryReplay.replay(spark, tape, nBatches = 4)(ds =>
+              graft.streaming.StreamingOps.exactDedupStream(
+                ds.toDF("doc_id", "text"), "doc_id", "text"))
+            .collect().map(_.getLong(0)).sorted.toSeq
+        }
       }
     println(s"[state-probe] provider-identity heap==rocksdb: " +
       s"${results(0) == results(1)}")
@@ -191,17 +233,13 @@ object StreamStateProbe {
     }
     val ttlResults = Seq(("heap", None), ("rocksdb", Some(rocks)))
       .map { case (label, prov) =>
-        MemoryReplay.lastStateStats = Nil
-        val kept = MemoryReplay.replay(spark, ttlTape, nBatches = 4,
-            stateStoreProvider = prov)(ds =>
-            graft.streaming.StreamingOps.exactDedupStreamTtl(
-              ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
-              ttlMs = ttlMs))
-          .collect().map(_.getLong(0)).sorted.toSeq
-        val st = MemoryReplay.lastStateStats
-          .map { case (_, r, b) => s"rows=$r memBytes=$b" }.mkString("; ")
-        println(f"[state-probe] ttl-provider     $label%-8s kept=${kept.size}%d  state: $st")
-        kept
+        underProvider(f"ttl-provider     $label%-8s", prov) {
+          MemoryReplay.replay(spark, ttlTape, nBatches = 4)(ds =>
+              graft.streaming.StreamingOps.exactDedupStreamTtl(
+                ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
+                ttlMs = ttlMs))
+            .collect().map(_.getLong(0)).sorted.toSeq
+        }
       }
     println(s"[state-probe] ttl-provider-identity heap==rocksdb: " +
       s"${ttlResults(0) == ttlResults(1)}")
@@ -240,20 +278,18 @@ object StreamStateProbe {
       }
     Seq(3, 6).foreach { cycles =>
       val tp = tape(cycles)
-      MemoryReplay.lastStateStats = Nil
-      graft.streaming.MemoryReplay.replay(spark, tp, nBatches = 4 * cycles)(
-        ds => graft.streaming.StreamingOps.nearDupCandidatesStreamTtl(
-          ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
-          ttlMs = ttlMs)).count()
-      val ttlStats = MemoryReplay.lastStateStats
-      MemoryReplay.lastStateStats = Nil
-      graft.streaming.MemoryReplay.replay(spark, tp.map(e => (e._1, e._3)),
-        nBatches = 4 * cycles)(
-        ds => graft.streaming.StreamingOps.nearDupCandidatesStream(
-          ds.toDF("doc_id", "text"), "doc_id", "text")).count()
-      val unbStats = MemoryReplay.lastStateStats
-      def fmt(s: Seq[(String, Long, Long)]): String =
-        s.map { case (_, r, b) => s"rows=$r bytes=$b" }.mkString("; ")
+      val (_, ttlStats) = stateOf(spark) {
+        MemoryReplay.replay(spark, tp, nBatches = 4 * cycles)(
+          ds => graft.streaming.StreamingOps.nearDupCandidatesStreamTtl(
+            ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
+            ttlMs = ttlMs)).count()
+      }
+      val (_, unbStats) = stateOf(spark) {
+        MemoryReplay.replay(spark, tp.map(e => (e._1, e._3)),
+          nBatches = 4 * cycles)(
+          ds => graft.streaming.StreamingOps.nearDupCandidatesStream(
+            ds.toDF("doc_id", "text"), "doc_id", "text")).count()
+      }
       println(s"[state-probe] ttl-band-index   cycles=$cycles docs=${tp.size} " +
         s"ttl=${ttlMs / 1000}s  ${fmt(ttlStats)}")
       println(s"[state-probe] unbounded-index  cycles=$cycles docs=${tp.size} " +
@@ -261,18 +297,18 @@ object StreamStateProbe {
       // same tape through the EXACT-dedup pair (q193 vs q80): the TTL'd
       // fingerprint store must stay flat at ~rate×TTL while the unbounded
       // index grows with distinct content
-      MemoryReplay.lastStateStats = Nil
-      graft.streaming.MemoryReplay.replay(spark, tp, nBatches = 4 * cycles)(
-        ds => graft.streaming.StreamingOps.exactDedupStreamTtl(
-          ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
-          ttlMs = ttlMs)).count()
-      val ttlDedup = MemoryReplay.lastStateStats
-      MemoryReplay.lastStateStats = Nil
-      graft.streaming.MemoryReplay.replay(spark, tp.map(e => (e._1, e._3)),
-        nBatches = 4 * cycles)(
-        ds => graft.streaming.StreamingOps.exactDedupStream(
-          ds.toDF("doc_id", "text"), "doc_id", "text")).count()
-      val unbDedup = MemoryReplay.lastStateStats
+      val (_, ttlDedup) = stateOf(spark) {
+        MemoryReplay.replay(spark, tp, nBatches = 4 * cycles)(
+          ds => graft.streaming.StreamingOps.exactDedupStreamTtl(
+            ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
+            ttlMs = ttlMs)).count()
+      }
+      val (_, unbDedup) = stateOf(spark) {
+        MemoryReplay.replay(spark, tp.map(e => (e._1, e._3)),
+          nBatches = 4 * cycles)(
+          ds => graft.streaming.StreamingOps.exactDedupStream(
+            ds.toDF("doc_id", "text"), "doc_id", "text")).count()
+      }
       println(s"[state-probe] ttl-exact-dedup  cycles=$cycles docs=${tp.size} " +
         s"ttl=${ttlMs / 1000}s  ${fmt(ttlDedup)}")
       println(s"[state-probe] unbounded-dedup  cycles=$cycles docs=${tp.size} " +

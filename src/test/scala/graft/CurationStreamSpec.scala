@@ -142,23 +142,28 @@ class CurationStreamSpec extends AnyFunSuite {
       4L -> 0xF0F0L, 5L -> 0xFF00FFL, 6L -> 0xF0F0F0F0L, 7L -> 0xFFFFFFFFL)
     val docs = texts.map { case (id, t) => (id, t, sk(id)) }
       .toDF("doc_id", "text", "sk")
-    val out = CurationStream.replayFunnelTtl(spark, docs, col("doc_id"),
-        col("text"), nBatches = 3, skCol = Some(col("sk")))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (out, withMedia) = graft.tools.StreamStateProbe.stateOf(spark) {
+      CurationStream.replayFunnelTtl(spark, docs, col("doc_id"),
+          col("text"), nBatches = 3, skCol = Some(col("sk")))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(!out.exists(_._1 == 2L),
       s"in-window media dup must drop the later occurrence: $out")
     assert(out.exists(_._1 == 3L) && out.exists(_._1 == 8L),
       s"beyond-ttl media pair must keep both sides: $out")
     Seq(1L, 4L, 6L, 7L).foreach(id =>
       assert(out.exists(_._1 == id), s"clean doc $id must be admitted"))
-    // media stage's state footprint was captured for the probe surface
-    assert(CurationStream.lastStageStats.exists(_._1 == "s4_media_ttl"))
-    // no sketch column → identical to the text-only funnel; no media stats
-    val textOnly = CurationStream.replayFunnelTtl(spark, docs, col("doc_id"),
-        col("text"), nBatches = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    // the media stage is a third stateful replay (exact, band, media)
+    assert(withMedia.size == 3 && withMedia.forall(_.nonEmpty),
+      s"state per stage: $withMedia")
+    // no sketch column → identical to the text-only funnel; no media stage
+    val (textOnly, textStages) = graft.tools.StreamStateProbe.stateOf(spark) {
+      CurationStream.replayFunnelTtl(spark, docs, col("doc_id"),
+          col("text"), nBatches = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(textOnly.map(_._1) == texts.map(_._1).toSet)
-    assert(!CurationStream.lastStageStats.exists(_._1 == "s4_media_ttl"))
+    assert(textStages.size == 2, s"state per stage: $textStages")
     // split invariance with the media stage on
     val out1 = CurationStream.replayFunnelTtl(spark, docs, col("doc_id"),
         col("text"), nBatches = 1, skCol = Some(col("sk")))

@@ -5,7 +5,8 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftLogSource, TableLog}
+import graft.sources.{GraftLogSource, NonAppendVersionException, TableLog}
+import graft.streaming.MemoryReplay
 
 /** Round-15 `format("graftlog")` relation + streaming source: one
   * manifest-fed relation per snapshot (the union-per-partition plan and the
@@ -308,32 +309,55 @@ class GraftLogSourceSpec extends AnyFunSuite {
       s"one version per micro-batch in commit order, got ${got.toSeq.map(_._2.size)}")
   }
 
+  /** Micro-batches a `graftlog` tail of `root` delivers until it is
+    * caught up, as key sets in batch order; empty batches are dropped.
+    * Rows land in `seen`, so a caller can read what arrived before a
+    * failure.
+    */
+  private def tailKeys(root: String, checkpoint: Option[String],
+      opts: (String, String)*)(
+      seen: java.util.concurrent.ConcurrentLinkedQueue[Set[Long]] =
+        new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]())
+      : Seq[Set[Long]] = {
+    val w = spark.readStream.format("graftlog").options(opts.toMap).load(root)
+      .writeStream.outputMode("append")
+    checkpoint.foreach(w.option("checkpointLocation", _))
+    val q = w.foreachBatch { (b: DataFrame, _: Long) =>
+      seen.add(b.select("k").as[Long](
+        org.apache.spark.sql.Encoders.scalaLong).collect().toSet)
+      ()
+    }.start()
+    try q.processAllAvailable() finally q.stop()
+    seen.toArray(Array.empty[Set[Long]]).toSeq.filter(_.nonEmpty)
+  }
+
   test("streaming: restart resumes from the checkpoint, delivering only new versions") {
     import spark.implicits._
     val root = tmp("glresume")
-    val cp = tmp("glresume_cp")
+    val cp = Some(tmp("glresume_cp"))
     TableLog.overwrite((1L to 10L).map(i => (i, i)).toDF("k", "v"), root) // v1
     TableLog.append((11L to 20L).map(i => (i, i)).toDF("k", "v"), root)  // v2
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
-    def run(): Unit = {
-      val q = spark.readStream.format("graftlog").load(root)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", cp)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          seen.add(b.select("k").as[Long](
-            org.apache.spark.sql.Encoders.scalaLong).collect().toSet)
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-    }
-    run()
-    assert(seen.toArray(Array.empty[Set[Long]]).flatten.toSet == (1L to 20L).toSet)
-    seen.clear()
+    assert(tailKeys(root, cp)().flatten.toSet == (1L to 20L).toSet)
+    assert(tailKeys(root, cp)().isEmpty,
+      "a restart with no new version must deliver nothing")
     TableLog.append((21L to 30L).map(i => (i, i)).toDF("k", "v"), root)  // v3
-    run()
-    val second = seen.toArray(Array.empty[Set[Long]])
-    assert(second.flatten.toSet == (21L to 30L).toSet,
-      s"restart must deliver ONLY the new version, got ${second.toSeq}")
+    val second = tailKeys(root, cp)()
+    assert(second == Seq((21L to 30L).toSet),
+      s"restart must deliver ONLY the new version, got $second")
+    // a persisted version is a position too: a fresh tail started after
+    // v2 delivers exactly v3
+    assert(tailKeys(root, None, "startingVersion" -> "2")() ==
+      Seq((21L to 30L).toSet), "startingVersion must resume after v2")
+    // state carries across version batches: v4 re-appends v1's content
+    // (v = 1), so the dedup keep stream sees it as a dup, not a fresh keep
+    TableLog.append(Seq((31L, 1L)).toDF("k", "v"), root)                 // v4
+    val kept = MemoryReplay.drainTape(spark, root)(df =>
+        graft.streaming.CurationStream.exactKeepStream(
+          df.select(col("k").as("doc_id"), col("v").cast("string").as("c")),
+          "doc_id", "c"))
+      .collect().map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
+    assert(kept.toSeq == (1L to 30L).map(_ -> true) :+ (31L -> false),
+      s"state must carry across version batches: ${kept.toSeq}")
   }
 
   test("streaming rewrite policies: fail throws typed; skip skips; deliverAdds redelivers") {
@@ -342,35 +366,35 @@ class GraftLogSourceSpec extends AnyFunSuite {
     TableLog.overwrite((1L to 20L).map(i => (i, i)).toDF("k", "v"), root) // v1
     TableLog.delete(spark, root, col("k") <= 5L)                          // v2: rewrite
     TableLog.append(Seq((21L, 21L)).toDF("k", "v"), root)                 // v3
-    def collectWith(policy: String): Seq[Set[Long]] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
-      val q = spark.readStream.format("graftlog")
-        .option("onRewrite", policy).load(root)
-        .writeStream.outputMode("append")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          seen.add(b.select("k").as[Long](
-            org.apache.spark.sql.Encoders.scalaLong).collect().toSet)
-          ()
-        }.start()
-      try q.processAllAvailable() finally q.stop()
-      seen.toArray(Array.empty[Set[Long]]).toSeq
-    }
-    // fail: the rewrite version kills the query with the typed error
+    def collectWith(policy: String, from: Long = 0L): Seq[Seq[Long]] =
+      tailKeys(root, None, "onRewrite" -> policy,
+        "startingVersion" -> from.toString)().map(_.toSeq.sorted)
+    // fail: the rewrite version kills the query with the typed error, after
+    // the appends before it were delivered
+    val cp = Some(tmp("glpolicy_cp"))
+    val before = new java.util.concurrent.ConcurrentLinkedQueue[Set[Long]]()
     val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      collectWith("fail")
+      tailKeys(root, cp, "onRewrite" -> "fail")(before)
     }
     def chain(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
-    assert(chain(ex).exists(
-      _.isInstanceOf[graft.streaming.LogTail.NonAppendVersionException]),
+    assert(chain(ex).exists(_.isInstanceOf[NonAppendVersionException]),
       s"fail policy must surface the typed error, got $ex")
+    assert(before.toArray(Array.empty[Set[Long]]).toSeq.filter(_.nonEmpty) ==
+      Seq((1L to 20L).toSet), "the append before the rewrite is delivered")
+    // the refused rewrite did not advance the offset: restarting the same
+    // checkpoint under deliverAdds delivers v2's adds, then v3
+    assert(tailKeys(root, cp, "onRewrite" -> "deliverAdds")()
+      .map(_.toSeq.sorted) == Seq((6L to 20L).toSeq, Seq(21L)))
     // skip: v1 and v3 arrive, the rewrite delivers nothing
-    assert(collectWith("skip").filter(_.nonEmpty)
-      .map(_.toSeq.sorted) == Seq((1L to 20L).toSeq, Seq(21L)))
+    assert(collectWith("skip") == Seq((1L to 20L).toSeq, Seq(21L)))
+    assert(collectWith("skip", from = 1L) == Seq(Seq(21L)))
     // deliverAdds: the rewrite's re-added survivors are redelivered
     // (at-least-once, Delta's ignoreChanges contract)
-    assert(collectWith("deliverAdds").filter(_.nonEmpty)
-      .map(_.toSeq.sorted) == Seq((1L to 20L).toSeq, (6L to 20L).toSeq, Seq(21L)))
+    assert(collectWith("deliverAdds") ==
+      Seq((1L to 20L).toSeq, (6L to 20L).toSeq, Seq(21L)))
+    assert(collectWith("deliverAdds", from = 1L) ==
+      Seq((6L to 20L).toSeq, Seq(21L)))
   }
 
   test("DV relation is snapshot-pinned: later commits are invisible to a loaded frame") {

@@ -5,18 +5,31 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** GraftSession is the only session builder in the main sources, so no
-  * tool or entry point can drift from the bench's config again.
+/** Source-scan guards on the main sources. GraftSession is the only session
+  * builder, so no tool or entry point can drift from the bench's config
+  * again; MemoryReplay's runner is the only memory sink, and the streaming
+  * package keeps no mutable slots a second run in the same JVM could read.
   */
 class GraftSessionSpec extends AnyFunSuite {
 
-  test("SparkSession.builder appears in src/main/scala only in GraftSession") {
-    val builder = """SparkSession\s*\.\s*(builder|Builder)""".r
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
+  /** (file name, match count) of every main source under `sub` that matches. */
+  private def hits(sub: String, pattern: String): Seq[(String, Int)] = {
+    val files = Files.walk(Paths.get("src/main/scala", sub)).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty, "main sources not found from the working directory")
-    val hits = files.map(f => f.getFileName.toString ->
-      builder.findAllIn(Files.readString(f)).size).filter(_._2 > 0)
-    assert(hits == Seq("GraftSession.scala" -> 1), s"session builders: $hits")
+    files.map(f => f.getFileName.toString ->
+      pattern.r.findAllIn(Files.readString(f)).size).filter(_._2 > 0)
+  }
+
+  test("SparkSession.builder appears in src/main/scala only in GraftSession") {
+    val found = hits("", """SparkSession\s*\.\s*(builder|Builder)""")
+    assert(found == Seq("GraftSession.scala" -> 1), s"session builders: $found")
+  }
+
+  test("one memory sink in src/main/scala; no @volatile var in graft/streaming") {
+    val sinks = hits("", """format\s*\(\s*"memory"\s*\)""")
+    assert(sinks == Seq("MemoryReplay.scala" -> 1), s"memory sinks: $sinks")
+    val slots = hits("graft/streaming", """@volatile\s+var\b""")
+    assert(slots.isEmpty, s"mutable slots in graft.streaming: $slots")
   }
 }

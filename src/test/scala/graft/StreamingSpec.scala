@@ -743,16 +743,19 @@ class StreamingSpec extends AnyFunSuite {
       (2L, new java.sql.Timestamp(2000L), text),
       (3L, new java.sql.Timestamp(100000L), text),
       (4L, new java.sql.Timestamp(101000L), text))
-    val got = graft.streaming.MemoryReplay.replay(spark, tape, nBatches = 4)(ds =>
-        StreamingOps.nearDupCandidatesStreamTtl(
-          ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
-          ttlMs = 10000L))
-      .toDF("doc_a", "doc_b").distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val (got, state) = graft.tools.StreamStateProbe.stateOf(spark) {
+      graft.streaming.MemoryReplay.replay(spark, tape, nBatches = 4)(ds =>
+          StreamingOps.nearDupCandidatesStreamTtl(
+            ds.toDF("doc_id", "ts", "text"), "doc_id", "ts", "text",
+            ttlMs = 10000L))
+        .toDF("doc_a", "doc_b").distinct().collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     assert(got == Set((1L, 2L), (3L, 4L)), s"got=$got")
     // bucket state after the replay holds only the live window's members
     // (docs 3 and 4), not the evicted ones
-    val rows = graft.streaming.MemoryReplay.lastStateStats.map(_._2).sum
+    assert(state.size == 1, s"one replay, one query: $state")
+    val rows = state.head.map(_._2).sum
     assert(rows > 0 && rows <= 8, s"state rows=$rows — expected ≤ numBands buckets")
   }
 

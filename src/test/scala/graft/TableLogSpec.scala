@@ -241,41 +241,6 @@ class TableLogSpec extends AnyFunSuite {
       s"since-inception diff against the empty snapshot: ${got.toSeq}")
   }
 
-  test("LogTail meets a rewrite: nothing lost, typed stop, skipRewrites skips") {
-    import spark.implicits._
-    import graft.streaming.LogTail
-    val root = tmp("ttailrw")
-    TableLog.overwrite(Seq((1L, 10L)).toDF("k", "v"), root)      // v1
-    TableLog.append(Seq((2L, 20L)).toDF("k", "v"), root)         // v2
-    TableLog.deleteRange(spark, root, 5L, 15L, "v")              // v3 rewrite
-    TableLog.append(Seq((3L, 30L)).toDF("k", "v"), root)         // v4
-    val t = LogTail.tail(spark, root)
-    // appends BEFORE the rewrite are delivered first, position parks
-    // exactly before the rewrite
-    val p1 = t.poll()
-    assert(p1.map(_._1) == Seq(1L, 2L) && t.position == 2L,
-      s"appends before the rewrite must be delivered: ${p1.map(_._1)}")
-    // the rewrite is now first pending: typed stop, position unchanged
-    intercept[LogTail.NonAppendVersionException] { t.poll() }
-    assert(t.position == 2L, "a refused rewrite must not advance the offset")
-    // Skip passes the rewrite delivering nothing and resumes the appends
-    val s = LogTail.tail(spark, root, startAfter = 2L,
-      onRewrite = LogTail.Skip)
-    val p2 = s.poll()
-    assert(p2.map(_._1) == Seq(4L) && s.position == 4L,
-      s"Skip must pass the rewrite and deliver v4: ${p2.map(_._1)}")
-    // DeliverAdds redelivers the rewrite's surviving rows (at-least-once,
-    // Delta's ignoreChanges semantics) — nothing a rewrite ADDED is lost
-    val d = LogTail.tail(spark, root, startAfter = 2L,
-      onRewrite = LogTail.DeliverAdds)
-    val p3 = d.poll()
-    assert(p3.map(_._1) == Seq(3L, 4L) && d.position == 4L)
-    // v3 (deleteRange of v in [5,15]) rewrote the file holding k=1 only;
-    // its add = the surviving k=2 row
-    assert(p3.head._2.collect().map(_.getLong(0)).sorted.toSeq == Seq(2L),
-      "DeliverAdds must carry the rewrite's added files' rows")
-  }
-
   test("first commit via append records schema + layout; empty table keeps both") {
     import spark.implicits._
     // append as the FIRST commit (the streaming-sink-into-fresh-root path)
@@ -538,10 +503,22 @@ class TableLogSpec extends AnyFunSuite {
     val (adds, removes) = TableLog.fileChanges(spark, root, 1L, v2)
     assert(removes.nonEmpty && adds.map(_.path).toSet.subsetOf(filesBefore),
       "replaced-in-place files must show in both change lists")
-    val tl = graft.streaming.LogTail.tail(spark, root)
-    assert(tl.poll().map(_._1) == Seq(1L),
-      "the v1 appends are delivered; the DV version parks the tail")
-    intercept[graft.streaming.LogTail.NonAppendVersionException] { tl.poll() }
+    // a graftlog tail delivers the v1 appends; the DV version stops it
+    // with the typed error
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val tail = spark.readStream.format("graftlog").load(root)
+      .writeStream.foreachBatch {
+        (b: org.apache.spark.sql.DataFrame, _: Long) => batches.add(b.count()); ()
+      }.start()
+    val stop = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      try tail.processAllAvailable() finally tail.stop()
+    }
+    assert(Iterator.iterate[Throwable](stop)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[graft.sources.NonAppendVersionException]),
+      s"the DV version must stop the tail with the typed error: $stop")
+    import scala.jdk.CollectionConverters._
+    assert(batches.asScala.toSeq.filter(_ != 0L) == Seq(docs.count()),
+      "the v1 appends are delivered before the DV version")
     // vacuum keeps the DV sidecars of live files
     TableLog.vacuum(spark, root, keepVersions = 1, orphanMinAgeMs = 0L)
     assert(TableLog.read(spark, root).collect().map(_.toString).sorted
@@ -623,45 +600,6 @@ class TableLogSpec extends AnyFunSuite {
     // ADVICE r13: the live file's checksum sidecar survives the sweep
     assert(new java.io.File(s"$liveDir/.$liveName.crc").exists(),
       "live data file's .crc sidecar must not be swept")
-  }
-
-  test("LogTail: versions are offsets — poll picks up exactly the new commits, resumably") {
-    import spark.implicits._
-    import graft.streaming.LogTail
-    val root = tmp("ttail")
-    TableLog.overwrite(Seq((1L, "a")).toDF("k", "c"), root) // v1
-    TableLog.append(Seq((2L, "b")).toDF("k", "c"), root)    // v2
-    val t0 = LogTail.tail(spark, root)
-    val p1 = t0.poll()
-    assert(p1.map(_._1) == Seq(1L, 2L), "first poll sees all versions")
-    assert(p1.map(_._2.count()).sum == 2L)
-    assert(t0.poll().isEmpty, "idle poll must be empty")
-    TableLog.append(Seq((3L, "c"), (4L, "d")).toDF("k", "c"), root) // v3
-    val p2 = t0.poll()
-    assert(p2.map(_._1) == Seq(3L) && p2.head._2.count() == 2L,
-      "only the NEW version's rows arrive — the base is never re-read")
-    // restart from a persisted position = a fresh tail at that offset
-    val resumed = LogTail.tail(spark, root, startAfter = 2L)
-    assert(resumed.poll().map(_._1) == Seq(3L), "resume replays from the offset")
-    // appended rows carry the schema at the head (additive evolution)
-    TableLog.append(Seq((5L, "e", 9L)).toDF("k", "c", "x"), root) // v4
-    val p3 = t0.poll()
-    assert(p3.map(_._1) == Seq(4L))
-    assert(p3.head._2.columns.toSeq == Seq("k", "c", "x"))
-    // consumeVersions drives a stateful op with one batch per version:
-    // dedup state must carry across commit boundaries (k=1's content "a"
-    // re-appended in a LATER version is a dup, not a fresh keep)
-    TableLog.append(Seq((6L, "a")).toDF("k", "c"), root) // v5: dup of v1
-    val out = LogTail.consumeVersions[(Long, String), (Long, Boolean)](
-      spark, root, 0L,
-      df => df.select(col("k"), col("c"))
-        .as[(Long, String)])(ds =>
-        graft.streaming.CurationStream.exactKeepStream(
-          ds.toDF("doc_id", "content"), "doc_id", "content"))
-      .collect().map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-    assert(out.toSeq == Seq((1L, true), (2L, true), (3L, true), (4L, true),
-      (5L, true), (6L, false)),
-      s"state must carry across version batches: ${out.toSeq}")
   }
 
   test("appendStream with auto-compaction: live file count stays bounded, data exact") {

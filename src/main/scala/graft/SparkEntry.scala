@@ -1985,23 +1985,23 @@ object SparkEntry {
         .orderBy(col("k"))
     }),
 
-    // MANIFEST-LEVEL DATA SKIPPING (TableLog.overwriteWithStats +
-    // readPruned) — planning-layer file pruning, the layer ABOVE parquet
-    // footer min/max: per-file (min, max) of n_chars ride in the manifest,
-    // the table is range-clustered on that column so file ranges are
-    // tight, and the pruned read plans only the files whose stats
-    // intersect the predicate range — no footer opened, no directory
-    // listed for the skipped files (WarehouseSpec asserts inputFiles
-    // actually shrank; this gate pins that pruning is SOUND: pruned read +
-    // row filter ≡ plain filter, which is the entire oracle).
+    // MANIFEST-LEVEL DATA SKIPPING (TableLog.overwrite with statCols + a
+    // filtered TableLog.read) — planning-layer file pruning, the layer
+    // ABOVE parquet footer min/max: per-file (min, max) of n_chars ride in
+    // the manifest, the table is range-clustered on that column so file
+    // ranges are tight, and the graftlog index plans only the files whose
+    // stats intersect the filter's range — no footer opened, no directory
+    // listed for the skipped files (WarehouseSpec asserts the planned
+    // files actually shrank; this gate pins that pruning is SOUND:
+    // filtered read ≡ plain filter, which is the entire oracle).
     "q212_manifest_skipping" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tskip")
-      graft.sources.TableLog.overwriteWithStats(
+      graft.sources.TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
           .repartitionByRange(8, col("n_chars")),
-        root, "n_chars")
-      graft.sources.TableLog.readPruned(s, root, "n_chars", 150L, 250L)
+        root, statCols = Seq("n_chars"))
+      graft.sources.TableLog.read(s, root)
         .filter(col("n_chars").between(150L, 250L))
         .orderBy(col("doc_id"))
     }),
@@ -2019,10 +2019,10 @@ object SparkEntry {
     "q213_log_delete" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tdel")
-      graft.sources.TableLog.overwriteWithStats(
+      graft.sources.TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
           .repartitionByRange(8, col("n_chars")),
-        root, "n_chars")
+        root, statCols = Seq("n_chars"))
       graft.sources.TableLog.deleteRange(s, root, 150L, 250L, "n_chars")
       graft.sources.TableLog.read(s, root).orderBy(col("doc_id"))
     }),
@@ -2117,20 +2117,19 @@ object SparkEntry {
     // AUTOMATICALLY inside a plain .filter(): the manifest-fed FileIndex
     // evaluates the partition predicate against the typed partition row
     // (no directory walked) and turns the pushed data filters into
-    // per-column bounds matched against per-file stats (readPruned's
-    // explicit API became implicit). The partition column itself is a real
-    // partition column of the scan, typed by the recorded schema, never
-    // path-inferred. Soundness gate: format read + filter ≡ plain filter
-    // (the q212 discipline); the numFiles-shrink of each layer is
-    // GraftLogSourceSpec's.
+    // per-column bounds matched against per-file stats. The partition
+    // column itself is a real partition column of the scan, typed by the
+    // recorded schema, never path-inferred. Soundness gate: format read +
+    // filter ≡ plain filter (the q212 discipline); the numFiles-shrink of
+    // each layer is GraftLogSourceSpec's.
     "q216_partitioned_log" -> ((s, d) => {
       import graft.sources.TableLog
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tplog")
-      TableLog.overwritePartitioned(
+      TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
           .repartitionByRange(4, col("n_chars")),
-        root, Seq("source"), "n_chars")
+        root, Seq("source"), Seq("n_chars"))
       s.read.format("graftlog").load(root)
         .filter(col("source") === "src3" &&
           col("n_chars").between(150L, 300L))
@@ -2176,35 +2175,35 @@ object SparkEntry {
       import graft.sources.TableLog
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tpdl")
-      TableLog.overwriteWithStats(
+      TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
-          .repartitionByRange(8, col("n_chars")), root, "n_chars")
+          .repartitionByRange(8, col("n_chars")),
+        root, statCols = Seq("n_chars"))
       TableLog.delete(s, root,
         col("n_chars") % 7 === 0 && col("n_chars") >= 150)
       TableLog.read(s, root).orderBy(col("doc_id"))
     }),
 
     // Z-ORDERED LOG TABLE + 2-D BOX SKIPPING (Warehouse.zValue composed
-    // with TableLog multi-column stats + readPrunedMulti) — the table is
-    // range-clustered on the MORTON INTERLEAVING of (doc_id, n_chars), so
-    // every file covers a tight box in BOTH dimensions at once, per-file
-    // stats of both columns ride in the manifest, and a 2-d box predicate
-    // prunes files on both axes at the PLANNING layer — single-column
-    // clustering can only ever skip on one. Soundness gate (the q212
-    // discipline): pruned box read + row filter ≡ plain filter; the
-    // both-axes inputFiles shrink is TableLogSpec's.
+    // with TableLog multi-column stats) — the table is range-clustered on
+    // the MORTON INTERLEAVING of (doc_id, n_chars), so every file covers a
+    // tight box in BOTH dimensions at once, per-file stats of both columns
+    // ride in the manifest, and the filtered read's 2-d box prunes files on
+    // both axes at the PLANNING layer — single-column clustering can only
+    // ever skip on one. Soundness gate (the q212 discipline): filtered box
+    // read ≡ plain filter; the both-axes planned-files shrink is
+    // TableLogSpec's.
     "q225_zorder_log" -> ((s, d) => {
       import graft.sources.{TableLog, Warehouse}
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tzord")
-      TableLog.overwriteWithStats(
+      TableLog.overwrite(
         Warehouse.zClustered(docs.select(col("doc_id"), col("n_chars")),
           "doc_id", "n_chars", n = 16),
-        root, "doc_id", "n_chars")
+        root, statCols = Seq("doc_id", "n_chars"))
       val idHi = docs.agg(max(col("doc_id"))).head().getLong(0) / 4
       val (ncLo, ncHi) = (150L, 300L)
-      TableLog.readPrunedMulti(s, root,
-          Map("doc_id" -> ((0L, idHi)), "n_chars" -> ((ncLo, ncHi))))
+      TableLog.read(s, root)
         .filter(col("doc_id").between(0L, idHi) &&
           col("n_chars").between(ncLo, ncHi))
         .orderBy(col("doc_id"))
@@ -2214,8 +2213,9 @@ object SparkEntry {
     // positional-delete shape): row-level delete with ZERO data rewrite —
     // matching (file, row_index) positions land in one sidecar parquet,
     // touched entries reference it (`d:` tokens) and every reader
-    // anti-joins the dead rows away; stats/partition triage keeps
-    // provably-clean files untouched and fully-dead files drop outright.
+    // filters the dead rows away; the same file-skip decision as a
+    // filtered read keeps provably-clean files untouched, and fully-dead
+    // files drop outright.
     // The gate pins complement semantics (same oracle discipline as the
     // rewrite delete q213); the zero-rewrite entry identity, live-count
     // maintenance, stacking, materialize-on-compact and vacuum protection
@@ -2224,9 +2224,10 @@ object SparkEntry {
       import graft.sources.TableLog
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tdv")
-      TableLog.overwriteWithStats(
+      TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
-          .repartitionByRange(8, col("n_chars")), root, "n_chars")
+          .repartitionByRange(8, col("n_chars")),
+        root, statCols = Seq("n_chars"))
       TableLog.deleteVectors(s, root, col("n_chars").between(150L, 250L))
       TableLog.read(s, root).orderBy(col("doc_id"))
     }),
@@ -2303,8 +2304,8 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "thist")
       val sel = docs.select(col("doc_id"), col("n_chars"))
-      TableLog.overwriteWithStats(
-        sel.repartition(4), root, "n_chars")                    // v1
+      TableLog.overwrite(
+        sel.repartition(4), root, statCols = Seq("n_chars"))     // v1
       TableLog.appendBatch(
         sel.filter(col("doc_id") % 5 === 0).coalesce(1), 7L, root) // v2
       TableLog.deleteRange(s, root, 1000000000L, 2000000000L,
@@ -2326,10 +2327,10 @@ object SparkEntry {
       import graft.sources.TableLog
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tcnt")
-      TableLog.overwritePartitioned(
+      TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
           .repartitionByRange(4, col("n_chars")),
-        root, Seq("source"), "n_chars")
+        root, Seq("source"), Seq("n_chars"))
       TableLog.partitionRowCounts(s, root)
         .withColumn("total", lit(TableLog.rowCounts(s, root)))
         .orderBy(col("source"))
@@ -2337,10 +2338,10 @@ object SparkEntry {
 
     // PARTITION-TRIAGED DELETE (TableLog.delete on a partitioned logged
     // table) — the "forget one source" compliance shape: the predicate's
-    // string-equality constraint (source = 'src3') is derived from the
-    // expression tree, every OTHER partition's files are kept BY
-    // REFERENCE (their manifest partition value contradicts the
-    // constraint — no file opened), and only src3's files are read,
+    // partition conjunct (source = 'src3') is evaluated on each file's
+    // typed manifest partition value by the graftlog index, every OTHER
+    // partition's files are kept BY REFERENCE (no file opened), and only
+    // src3's files are read,
     // row-filtered by the full predicate (the n_chars conjunct) and
     // rewritten in layout. The gate pins complement semantics; the
     // untouched-partition entry identity is TableLogSpec's.
@@ -2348,10 +2349,10 @@ object SparkEntry {
       import graft.sources.TableLog
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tpdp")
-      TableLog.overwritePartitioned(
+      TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
           .repartitionByRange(4, col("n_chars")),
-        root, Seq("source"), "n_chars")
+        root, Seq("source"), Seq("n_chars"))
       TableLog.delete(s, root,
         col("source") === "src3" && col("n_chars") % 2 === 0)
       TableLog.read(s, root).orderBy(col("doc_id"))
@@ -2421,8 +2422,8 @@ object SparkEntry {
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tsqlhist")
       val sel = docs.select(col("doc_id"), col("n_chars"))
-      TableLog.overwriteWithStats(
-        sel.repartition(4), root, "n_chars")                        // v1
+      TableLog.overwrite(
+        sel.repartition(4), root, statCols = Seq("n_chars"))         // v1
       TableLog.appendBatch(
         sel.filter(col("doc_id") % 5 === 0).coalesce(1), 7L, root)  // v2
       TableLog.deleteRange(s, root, 1000000000L, 2000000000L,
@@ -2493,9 +2494,10 @@ object SparkEntry {
       import graft.sources.TableLog
       val docs = t(s, d, "documents")
       val root = logRoot(s, d, "tsqldel")
-      TableLog.overwriteWithStats(
+      TableLog.overwrite(
         docs.select(col("doc_id"), col("source"), col("n_chars"))
-          .repartitionByRange(8, col("n_chars")), root, "n_chars")
+          .repartitionByRange(8, col("n_chars")),
+        root, statCols = Seq("n_chars"))
       graft.functions.GraftFunctions.register(s)
       val v = s.sql(s"SELECT version FROM graft_log_delete('$root', " +
         "'n_chars BETWEEN 150 AND 250')").head().getLong(0)
@@ -2516,8 +2518,9 @@ object SparkEntry {
       val docs = t(s, d, "documents")
         .select(col("doc_id"), col("source"), col("n_chars"))
       val root = logRoot(s, d, "trename")
-      TableLog.overwriteWithStats(docs.filter(col("doc_id") % 2 === 0)
-        .repartitionByRange(4, col("n_chars")), root, "n_chars")     // v1
+      TableLog.overwrite(docs.filter(col("doc_id") % 2 === 0)
+        .repartitionByRange(4, col("n_chars")),
+        root, statCols = Seq("n_chars"))                             // v1
       TableLog.renameColumn(s, root, "n_chars", "char_count")        // v2
       TableLog.append(docs.filter(col("doc_id") % 2 === 1)
         .withColumnRenamed("n_chars", "char_count"), root)           // v3
@@ -2542,11 +2545,11 @@ object SparkEntry {
       import graft.sources.TableLog
       val orders = t(s, d, "orders")
       val root = logRoot(s, d, "ttyped")
-      TableLog.overwriteWithStats(
+      TableLog.overwrite(
         orders.select(col("o_orderkey"), col("o_orderdate"),
             col("o_totalprice"), col("o_orderpriority"))
           .repartitionByRange(8, col("o_orderdate")),
-        root, "o_orderdate", "o_totalprice", "o_orderpriority")
+        root, statCols = Seq("o_orderdate", "o_totalprice", "o_orderpriority"))
       s.read.format("graftlog").load(root)
         .filter(col("o_orderdate") >= lit("1997-01-01").cast("timestamp_ntz") &&
           col("o_orderdate") < lit("1998-01-01").cast("timestamp_ntz") &&

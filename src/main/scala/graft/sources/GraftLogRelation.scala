@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, PlanExpression, Predicate}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.{col, lit}
@@ -37,11 +38,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * Both pruning layers run INSIDE `listFiles`, invisible to the user:
   * partition filters are evaluated against the typed partition row
   * (Catalyst `Predicate` over the manifest values — no directory walked),
-  * and data filters are turned into per-column bounds by the SAME
-  * conservative walker the delete triage uses ([[TableLog.predicateBounds]])
-  * and matched against the manifest's per-file min/max stats. A plain
+  * and data filters are turned into per-column bounds by one conservative
+  * walker ([[TableLog.predicateBounds]]) and matched against the
+  * manifest's per-file min/max stats. A plain
   * `df.filter(col("n_chars") > 150)` therefore skips whole files at the
-  * PLANNING layer — [[TableLog.readPruned]]'s explicit API became implicit.
+  * PLANNING layer. This index is the table log's ONLY file-skip decision:
+  * [[TableLog.delete]] and [[TableLog.deleteVectors]] plan the predicate's
+  * read and touch exactly the files its scan lists
+  * ([[GraftLogFileIndex.plannedEntries]]).
   *
   * Registered as `format("graftlog")` ([[GraftLogSourceProvider]]): batch
   * reads via `spark.read.format("graftlog").option("version", v).load(root)`,
@@ -112,35 +116,51 @@ private[graft] class GraftLogFileIndex(
   }
 
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    select(partitionFilters, dataFilters).collect {
+      case (row, es) if es.nonEmpty => PartitionDirectory(row, es.map(_._2).toArray)
+    }
+
+  /** The groups, and within them the files, a scan with this filter split
+    * can touch. Partition filters evaluate against the typed partition row;
+    * data filters become conservative per-column bounds matched against
+    * each file's recorded (min, max). A file with no stat of the bound's
+    * kind on a bounded column is always kept — skipping stays sound.
+    */
+  private def select(partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression])
+      : Seq[(InternalRow, Seq[(TableLog.Entry, FileStatus)])] = {
     val kept =
       if (partitionFilters.isEmpty || partitionSchema.isEmpty) groups
       else boundPredicate(partitionFilters) match {
         case None => groups
         case Some(pred) => groups.filter { case (row, _) => pred.eval(row) }
       }
-    // manifest-stat skipping: conservative per-column bounds implied by the
-    // pushed data filters vs each file's recorded (min, max) — long stats
-    // for integral columns, TYPED stats (string/double/timestamp/date) for
-    // the rest. A file with no stats on a bounded column is always read —
-    // skipping stays sound.
-    val (bounds, tbounds) = dataFilters.reduceOption(And) match {
-      case None => (Map.empty[String, (Option[Long], Option[Long])],
-        Map.empty[String, (String, Option[String], Option[String])])
-      case Some(e) =>
-        (try TableLog.predicateBounds(e) catch { case NonFatal(_) => Map.empty },
-         try TableLog.predicateTypedBounds(e) catch { case NonFatal(_) => Map.empty })
+    val bounds = dataFilters.reduceOption(And).map(e =>
+      try TableLog.predicateBounds(e) catch { case NonFatal(_) => Map.empty })
+      .getOrElse(Map.empty)
+    if (bounds.isEmpty) kept
+    else kept.map { case (row, es) =>
+      (row, es.filterNot { case (e, _) =>
+        bounds.exists { case (c, b) => disjoint(e, c, b) } })
     }
-    kept.map { case (row, es) =>
-      val live =
-        if (bounds.isEmpty && tbounds.isEmpty) es
-        else es.filterNot { case (e, _) =>
-          bounds.exists { case (c, b) =>
-            e.stats.get(c).exists(TableLog.statDisjoint(_, b)) } ||
-          tbounds.exists { case (c, b) =>
-            e.tstats.get(c).exists(TableLog.typedStatDisjoint(_, b)) } }
-      PartitionDirectory(row, live.map(_._2).toArray)
-    }.filter(_.files.nonEmpty)
+  }
+
+  /** File `e`'s recorded (min, max) on `c` provably misses bound `b`: long
+    * stats for kind `l`, typed stats of the same kind otherwise. No stat of
+    * that kind never skips.
+    */
+  private def disjoint(e: TableLog.Entry, c: String,
+      b: (String, Option[String], Option[String])): Boolean = {
+    val (kind, lo, hi) = b
+    val stat =
+      if (kind == "l")
+        e.stats.get(c).map { case (mn, mx) => (mn.toString, mx.toString) }
+      else e.tstats.get(c).collect { case (k, mn, mx) if k == kind => (mn, mx) }
+    stat.exists { case (mn, mx) =>
+      lo.exists(TableLog.typedCompare(kind, mx, _) < 0) ||
+        hi.exists(TableLog.typedCompare(kind, mn, _) > 0)
+    }
   }
 
   /** Bind the filters' attributes to partition-row ordinals and build an
@@ -175,6 +195,30 @@ private[graft] class GraftLogFileIndex(
     */
   override def sizeInBytes: Long =
     math.max(1L, groups.iterator.flatMap(_._2).map(_._2.getLen).sum)
+}
+
+private[graft] object GraftLogFileIndex {
+
+  /** The entries `df`'s graftlog file scan would read: the scan's own
+    * static partition/data filter split, listed by its index (the filters
+    * a runtime subquery carries are dropped, as the scan itself does).
+    * None when the plan holds no graftlog scan, or more than one: a legacy
+    * pre-schema table read through parquet, or a plan the optimizer
+    * emptied (`lit(false)`). A caller must then assume every entry.
+    */
+  def plannedEntries(df: DataFrame): Option[Seq[TableLog.Entry]] =
+    df.queryExecution.sparkPlan.collect {
+      case s: FileSourceScanExec
+          if s.relation.location.isInstanceOf[GraftLogFileIndex] => s
+    } match {
+      case Seq(s) =>
+        def static(fs: Seq[Expression]) =
+          fs.filterNot(_.exists(_.isInstanceOf[PlanExpression[_]]))
+        Some(s.relation.location.asInstanceOf[GraftLogFileIndex]
+          .select(static(s.partitionFilters), static(s.dataFilters))
+          .flatMap(_._2.map(_._1)))
+      case _ => None
+    }
 }
 
 private[graft] object GraftLog {
@@ -435,12 +479,7 @@ class GraftLogSourceProvider extends DataSourceRegister
     val partCols = GraftLogWrite.csv(parameters, "partitionBy")
     (partCols ++ statCols).foreach(c => require(data.columns.contains(c),
       s"option column '$c' is not in the written schema ${data.columns.toSeq}"))
-    def create(): Unit = {
-      if (partCols.nonEmpty)
-        TableLog.overwritePartitioned(data, root, partCols, statCols: _*)
-      else TableLog.overwriteWithStats(data, root, statCols: _*)
-      ()
-    }
+    def create(): Unit = { TableLog.overwrite(data, root, partCols, statCols); () }
     mode match {
       case SaveMode.Append =>
         if (!exists && (partCols.nonEmpty || statCols.nonEmpty)) create()

@@ -32,8 +32,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    checkpoints + _last_checkpoint).
   *  - PLANNING WITHOUT LISTING: entries carry file SIZE, optional HIVE
   *    PARTITION VALUES and optional PER-FILE (min, max) COLUMN STATS (any
-  *    number of long-typed columns), so scans prune whole files — by
-  *    partition equality and/or stat ranges — before any footer is opened.
+  *    number of integral, string, double, timestamp or date columns), so
+  *    scans prune whole files — by partition predicate and/or stat ranges —
+  *    before any footer is opened. One decision does it for reads and
+  *    deletes alike: [[GraftLogFileIndex]]'s.
   *  - SCHEMA IN THE LOG: every data commit records the table schema
   *    (`#schema:` metadata), so time travel reads each version with the
   *    schema it HAD, additive evolution NULL-fills old files at read time,
@@ -58,7 +60,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *      `-\t<path>`       remove the file from the snapshot;
   *      `+\t<path>\t<bytes|?>[\tp:<k>=<v>]…[\ts:<col>=<lo>:<hi>]…`
   *                        add a file (root-relative path, size, hive
-  *                        partition values, per-column long stats);
+  *                        partition values, per-column long stats; `t:`
+  *                        typed stats, `r:` row count and `d:` deletion
+  *                        vectors ride the same way — see [[Entry]]);
   *      a line with none of those prefixes is tolerated as a legacy bare
   *      add (`path[\tbytes]`).
   *  - `v<N>.checkpoint` — the FULL snapshot at N in add-line form, plus
@@ -650,32 +654,18 @@ object TableLog {
   /** Write `df`'s rows as new data files under a unique commit dir and
     * return their entries (root-relative path + size) — no manifest is
     * committed yet, so the files are invisible until the caller commits.
+    * Non-empty `partCols` writes a HIVE-PARTITIONED layout inside the
+    * commit dir (`c<uuid>/k=v/…/part-*.parquet`), and each entry records
+    * its partition values (raw directory-escaped form): that is what lets
+    * the graftlog index prune partitions from the manifest alone and
+    * [[read]] reconstruct the partition columns without path inference.
     */
-  def writeData(df: DataFrame, root: String): Seq[Entry] = {
+  def writeData(df: DataFrame, root: String,
+      partCols: Seq[String] = Nil): Seq[Entry] = {
     val spark = df.sparkSession
     val sub = newCommitDir()
-    df.write.parquet(s"$root/$sub")
-    val p = new org.apache.hadoop.fs.Path(s"$root/$sub")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.listStatus(p).toSeq
-      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
-        !s.getPath.getName.startsWith("."))
-      .map(s => Entry(s"$sub/${s.getPath.getName}", Some(s.getLen)))
-      .sortBy(_.path)
-  }
-
-  /** [[writeData]] with a HIVE-PARTITIONED layout inside the commit dir
-    * (`c<uuid>/k=v/…/part-*.parquet`); each entry records its partition
-    * values (raw directory-escaped form), which is what lets [[readPruned]]
-    * prune by partition equality from the manifest alone and [[read]]
-    * reconstruct the partition columns without path inference.
-    */
-  def writeDataPartitioned(df: DataFrame, root: String,
-      partCols: Seq[String]): Seq[Entry] = {
-    require(partCols.nonEmpty, "writeDataPartitioned needs partition columns")
-    val spark = df.sparkSession
-    val sub = newCommitDir()
-    df.write.partitionBy(partCols: _*).parquet(s"$root/$sub")
+    (if (partCols.isEmpty) df.write else df.write.partitionBy(partCols: _*))
+      .parquet(s"$root/$sub")
     val base = new org.apache.hadoop.fs.Path(s"$root/$sub")
     val fs = base.getFileSystem(spark.sessionState.newHadoopConf())
     val qBase = fs.makeQualified(base).toString.stripSuffix("/")
@@ -709,55 +699,36 @@ object TableLog {
     * overwrite — the schema is replaced too, no compatibility check). A
     * blind replace depends on no prior state, so it commits against
     * whatever head it finds (last-write-wins). Returns the new version.
-    */
-  def overwrite(df: DataFrame, root: String): Long =
-    overwriteWithStats(df, root)
-
-  /** [[overwrite]] with PER-FILE (min, max) STATS on `statCols` collected
-    * into the manifest — data skipping at the PLANNING layer: a later
-    * [[readPruned]] drops whole files from the plan by comparing the
-    * predicate range against manifest stats, before any footer is opened
-    * or any task scheduled. At 100 TB this is the layer above parquet
-    * min/max skipping (which still costs a footer read per file and a
-    * listed directory): one manifest read plans the whole scan. Stats are
-    * collected by one aggregation over the just-written (page-cached)
-    * files — the real formats fold this into the write itself. Cluster the
-    * data on the stat columns first (`repartitionByRange`) or the per-file
-    * ranges overlap and nothing skips.
+    *
+    * `partCols` gives the table a hive-partitioned layout (the recorded
+    * schema is `df`'s full schema including partition columns; [[read]]
+    * reconstructs them from the manifest). `statCols` collects PER-FILE
+    * (min, max) STATS into the manifest — data skipping at the PLANNING
+    * layer: a later filtered read drops whole files from the plan by
+    * comparing the predicate's bounds against manifest stats, before any
+    * footer is opened or any task scheduled. At 100 TB this is the layer
+    * above parquet min/max skipping (which still costs a footer read per
+    * file and a listed directory): one manifest read plans the whole scan.
+    * Stats are collected by one aggregation over the just-written
+    * (page-cached) files — the real formats fold this into the write
+    * itself. Cluster the data on the stat columns first
+    * (`repartitionByRange`) or the per-file ranges overlap and nothing
+    * skips. Partition columns prune via their manifest values, not stats.
     *
     * NULL semantics: a file whose stat-column values are ALL NULL gets no
     * stats for that column (always read — sound); a mixed file's stats
     * cover its non-null values, still sound because a NULL never satisfies
     * the range predicate the caller re-applies row-level.
     */
-  def overwriteWithStats(df: DataFrame, root: String,
-      statCols: String*): Long = {
+  def overwrite(df: DataFrame, root: String, partCols: Seq[String] = Nil,
+      statCols: Seq[String] = Nil): Long = {
     val spark = df.sparkSession
     val head = headVersion(spark, root).getOrElse(0L)
     val prev = if (head == 0L) Vector.empty
       else state(spark, root, Some(head)).entries
-    val files = withStats(spark, root, writeData(df, root), statCols)
+    val files = withStats(spark, root, writeData(df, root, partCols), statCols)
     // a full replace RESETS column mapping: the new files' names ARE the
     // new schema's names (physical = logical again)
-    commitDelta(spark, root, files, prev.map(_.path), Some(head),
-      Seq("op:overwrite", schemaMeta(df), partColsMeta(Nil),
-        colmapMeta(Map.empty)))
-  }
-
-  /** Full-snapshot REPLACE with a hive-partitioned layout + optional
-    * per-file stats on `statCols` (data columns only — partition columns
-    * prune via their manifest values, not stats). The schema recorded is
-    * `df`'s full schema including partition columns; [[read]] reconstructs
-    * them from the manifest.
-    */
-  def overwritePartitioned(df: DataFrame, root: String,
-      partCols: Seq[String], statCols: String*): Long = {
-    val spark = df.sparkSession
-    val head = headVersion(spark, root).getOrElse(0L)
-    val prev = if (head == 0L) Vector.empty
-      else state(spark, root, Some(head)).entries
-    val files = withStats(spark, root,
-      writeDataPartitioned(df, root, partCols), statCols)
     commitDelta(spark, root, files, prev.map(_.path), Some(head),
       Seq("op:overwrite", schemaMeta(df), partColsMeta(partCols.sorted),
         colmapMeta(Map.empty)))
@@ -781,8 +752,7 @@ object TableLog {
     val rev = st.map(colmapOf).getOrElse(Map.empty).map(_.swap)
     val statCols = st.map(trackedStatCols).getOrElse(Seq.empty)
       .map(p => rev.getOrElse(p, p)).filter(df.columns.contains)
-    if (partCols.nonEmpty) overwritePartitioned(df, root, partCols, statCols: _*)
-    else overwriteWithStats(df, root, statCols: _*)
+    overwrite(df, root, partCols, statCols)
   }
 
   /** Commit `df` APPENDED to the current snapshot: the manifest records
@@ -818,13 +788,8 @@ object TableLog {
     guardRetiredPhysical(st, df)
     val cm = st.map(colmapOf).getOrElse(Map.empty)
     val phys = toPhysical(df, cm)
-    val staged =
-      if (partCols.nonEmpty) writeDataPartitioned(phys, root, partCols)
-      else writeData(phys, root)
-    val files =
-      if (statCols.isEmpty) staged
-      else withStats(spark, root, staged, statCols
-        .filter(df.columns.contains).map(c => cm.getOrElse(c, c)))
+    val files = withStats(spark, root, writeData(phys, root, partCols),
+      statCols.filter(df.columns.contains).map(c => cm.getOrElse(c, c)))
     // blind append: a lost CAS auto-rebases (appends commute at file
     // level); the schema/layout meta is recomputed per attempt against the
     // base the commit actually lands on
@@ -909,13 +874,6 @@ object TableLog {
     if (cm.isEmpty) df
     else df.select(df.columns.toSeq.map(c =>
       org.apache.spark.sql.functions.col(c).as(cm.getOrElse(c, c))): _*)
-
-  /** Re-key a logical-name-keyed map (predicate bounds) to physical names
-    * so triage can consult the physically-keyed manifest stats.
-    */
-  private def mapKeys[B](m: Map[String, B],
-      cm: Map[String, String]): Map[String, B] =
-    if (cm.isEmpty) m else m.map { case (k, v) => cm.getOrElse(k, k) -> v }
 
   /** Refuse — BEFORE anything is staged — a batch whose new column reuses
     * the retired PHYSICAL name of a renamed column: its physical name
@@ -1112,7 +1070,7 @@ object TableLog {
             // keep the stat only when BOTH bounds round-trip UTF-8 — a
             // value that doesn't (binary-ish string) has no faithful
             // java.lang.String form, and recording its damaged image
-            // would make typedStatDisjoint unsound; no stat = always
+            // would make file skipping unsound; no stat = always
             // read = sound
             if (java.util.Arrays.equals(
                   loS.getBytes(java.nio.charset.StandardCharsets.UTF_8), loB) &&
@@ -1217,40 +1175,20 @@ object TableLog {
     regexp_extract(col("_metadata.file_path"), FileKeyRegex, 1)
   }
 
-  /** Build a frame over an arbitrary entry subset of one snapshot (the
-    * shared machinery of [[read]], [[readPruned]], [[delete]]'s rewrite
-    * side and per-version change reads).
-    * Entries carrying DELETION VECTORS get their dead rows anti-joined
-    * away on (file key, row_index) — zero effect on DV-less snapshots.
-    * `withPos = true` keeps the `__file`/`__ri` helper columns in the
-    * output (the [[deleteVectors]] build side).
-    */
-  /** Total sidecar bytes above which deletion vectors are applied as the
+  /** Position count above which deletion vectors are applied as the
     * distributed ANTI-JOIN instead of the inline run-set filter: the
     * inline path collects the sidecars to the driver once and ships
     * run-length pairs as plan literals — per-row membership is two binary
     * searches, zero shuffle — which is the right trade up to millions of
-    * positions; a 10⁹-row delete keeps the join. Runs compress contiguous
-    * deletes (a range delete over clustered data is ONE pair), so the
-    * plan-literal cost is O(runs), far below O(positions) in practice.
-    * The DECISION costs only O(#sidecars) driver stat calls — no Spark
-    * job runs unless the inline path is taken (that one collect replaces
-    * a per-read shuffle at execution and is the trade being made).
-    */
-  val DvInlineMaxBytesKey = "spark.graft.dv.inline.maxBytes"
-
-  private def dvInlineMaxBytes(spark: SparkSession): Long =
-    spark.conf.getOption(DvInlineMaxBytesKey).map(_.toLong)
-      .getOrElse(32L << 20)
-
-  /** Hard cap on the POSITION COUNT the inline path may materialize:
-    * parquet delta/RLE encodes sorted row indexes so densely that a
-    * bytes-only threshold is no bound at all — 32 MB of sidecar can decode
-    * to hundreds of millions of positions, and a scattered delete would
-    * then build a multi-GB runs array on the driver and inside every task
-    * binary. The count is read from the sidecars' FOOTERS (row count ==
-    * position count, O(#sidecars) driver metadata reads, no job), so the
-    * decision is exact before anything is collected.
+    * positions; a 10⁹-row delete keeps the join. The count is read from
+    * the sidecars' FOOTERS (row count == position count, O(#sidecars)
+    * driver metadata reads, no job), so the decision is exact before
+    * anything is collected, and it bounds everything the inline path
+    * builds: it collects one row per position and packs at most one run
+    * per position (runs compress contiguous deletes — a range delete over
+    * clustered data is ONE pair). Sidecar bytes bound nothing: parquet
+    * delta/RLE encodes sorted row indexes so densely that 32 MB can decode
+    * to hundreds of millions of positions.
     */
   val DvInlineMaxPositionsKey = "spark.graft.dv.inline.maxPositions"
 
@@ -1271,18 +1209,12 @@ object TableLog {
   }
 
   /** Whether a snapshot's sidecars fit the INLINE representation (the
-    * run-set scan filter): under both the byte and the exact position cap.
+    * run-set scan filter): at most [[DvInlineMaxPositionsKey]] positions.
     * Costs O(#sidecars) driver metadata reads, no job.
     */
   private[graft] def dvInlineEligible(spark: SparkSession, root: String,
-      dvPaths: Seq[String]): Boolean = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    val sidecarBytes = dvPaths.map(p => fs.getFileStatus(
-      new org.apache.hadoop.fs.Path(s"$root/$p")).getLen).sum
-    sidecarBytes <= dvInlineMaxBytes(spark) &&
-      dvPositionCount(spark, root, dvPaths) <= dvInlineMaxPositions(spark)
-  }
+      dvPaths: Seq[String]): Boolean =
+    dvPositionCount(spark, root, dvPaths) <= dvInlineMaxPositions(spark)
 
   /** Collect the sidecars' positions into the [[graft.functions.DvLive]]
     * literal triple (one small parquet read job — the collect that
@@ -1295,6 +1227,13 @@ object TableLog {
       .select(col("file"), col("ri")).collect())
   }
 
+  /** Build a frame over an arbitrary entry subset of one snapshot (the
+    * shared machinery of [[read]], the deletes' rewrite side and
+    * per-version change reads). Entries carrying DELETION VECTORS get
+    * their dead rows filtered away on (file key, row_index) — zero effect
+    * on DV-less snapshots. `withPos = true` keeps the `__file`/`__ri`
+    * helper columns in the output (the [[deleteVectors]] build side).
+    */
   private[graft] def readEntrySet(spark: SparkSession, root: String,
       entries: Seq[Entry], schemaJson: Option[String],
       withPos: Boolean = false,
@@ -1442,7 +1381,7 @@ object TableLog {
       version: Option[Long] = None,
       partitionEq: Map[String, String] = Map.empty): Long = {
     val st = state(spark, root, version)
-    // unlike readPruned (whose superset is sound because the caller
+    // unlike file skipping (whose superset is sound because the reader
     // re-filters rows), this count IS the answer — an unknown key must be
     // an error, never a silent full-table count
     val known = partColsOf(st).toSet
@@ -1494,60 +1433,37 @@ object TableLog {
       .agg(sum(col("n_rows")).as("n_rows"))
   }
 
-  /** Read `version` (default head) PRUNED at the PLANNING layer: files
-    * whose manifest partition values contradict `partitionEq` or whose
-    * `statCol` [min, max] stats miss `[lo, hi]` never enter the plan — no
-    * footer opened, no directory listed. Files without stats on `statCol`
-    * are always read (skipping must be sound, never guessed); the caller
-    * still applies the row-level predicate (exactly parquet footer
-    * skipping's contract, one layer earlier). NULL stat-column rows never
-    * satisfy a range predicate, so a pruned file's NULL rows are not a
-    * loss. `partitionEq` values are compared against the UNESCAPED
-    * partition value.
-    */
-  def readPruned(spark: SparkSession, root: String, statCol: String,
-      lo: Long, hi: Long, version: Option[Long] = None,
-      partitionEq: Map[String, String] = Map.empty): DataFrame =
-    readPrunedMulti(spark, root, Map(statCol -> ((lo, hi))), version,
-      partitionEq)
-
-  /** [[readPruned]] for an N-DIMENSIONAL box: a file enters the plan only
-    * if EVERY range intersects its stats for that column (missing stats →
-    * always read; sound). With data clustered on a z-value of the box's
-    * columns ([[Warehouse.zValue]] via `clusterBy`/`repartitionByRange`),
-    * each file covers a tight box in all dimensions at once and a 2-d box
-    * predicate prunes on BOTH axes — single-column range clustering can
-    * only ever skip on one. The caller still applies the row-level
-    * predicate (the q212 contract).
-    */
-  def readPrunedMulti(spark: SparkSession, root: String,
-      ranges: Map[String, (Long, Long)], version: Option[Long] = None,
-      partitionEq: Map[String, String] = Map.empty): DataFrame = {
-    val st = state(spark, root, version)
-    val cand = st.entries.filter { e =>
-      partitionEq.forall { case (k, v) =>
-        e.partition.get(k).forall(unescapePath(_) == v) } &&
-      ranges.forall { case (c, (lo, hi)) =>
-        e.stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi } }
-    }
-    if (cand.isEmpty)
-      readEntrySet(spark, root, st.entries, st.schemaJson, colmap = colmapOf(st)).limit(0)
-    else readEntrySet(spark, root, cand, st.schemaJson, colmap = colmapOf(st))
-  }
-
   // -------------------------------------------------------------------------
   // Row-level delete (stats-triaged)
   // -------------------------------------------------------------------------
 
+  /** The entries of `st` a `predicate` can touch — the triage of
+    * [[delete]] and [[deleteVectors]]. The predicate's filtered read is
+    * planned, and its graftlog scan's index lists the files for the scan's
+    * own partition/data filter split ([[GraftLogFileIndex.plannedEntries]]),
+    * so a delete skips exactly the files a read of the same predicate
+    * skips. Filter pushdown through the column-mapping alias already
+    * yields physical names. A plan with no graftlog scan touches every
+    * entry (sound). Keeps `st.entries` order.
+    */
+  private[graft] def touchedBy(spark: SparkSession, root: String, st: LogState,
+      predicate: Column): Vector[Entry] = {
+    val read = readEntrySet(spark, root, st.entries, st.schemaJson,
+      colmap = colmapOf(st)).filter(predicate)
+    GraftLogFileIndex.plannedEntries(read).fold(st.entries) { planned =>
+      val paths = planned.map(_.path).toSet
+      st.entries.filter(e => paths(e.path))
+    }
+  }
+
   /** Row-level DELETE of rows matching an arbitrary `predicate` — the
-    * compliance/forget path, made SURGICAL by the manifest stats: the
-    * predicate's DERIVABLE per-column bounds (conjuncts like `c >= v`,
-    * `c = v`, `c BETWEEN lo AND hi`, through casts, AND/OR composition)
-    * are extracted from the expression tree, and every file whose stats
-    * PROVE it disjoint from the bounds is kept BY REFERENCE — same entry,
-    * stats intact, zero IO (the skipping machinery in reverse). Only the
-    * possibly-intersecting files (plus stats-less ones, which might hold
-    * anything) are read, filtered to `NOT coalesce(predicate, false)` —
+    * compliance/forget path, made SURGICAL by the manifest: every file the
+    * predicate's read would skip ([[touchedBy]] — partition predicates
+    * evaluated on the typed partition values, derivable per-column bounds
+    * like `c >= v`, `c = v`, `c BETWEEN lo AND hi` matched against the
+    * stats) is kept BY REFERENCE — same entry, stats intact, zero IO. Only
+    * the possibly-intersecting files (plus stats-less ones, which might
+    * hold anything) are read, filtered to `NOT coalesce(predicate, false)` —
     * NULL-predicate rows are KEPT, SQL delete semantics — and rewritten
     * with fresh stats on every column the table tracks. A predicate with
     * no derivable bounds (e.g. pure `c % 7 = 0`) degrades to a full
@@ -1565,40 +1481,16 @@ object TableLog {
     val head = headVersion(spark, root)
     require(head.nonEmpty, s"no committed versions under $root")
     val st = state(spark, root, Some(head.get))
-    // resolve the predicate against the snapshot's schema (lazy — no IO):
-    // the analyzed Filter condition is the Expression the bounds walker
-    // reads, with name resolution and integral promotions already applied
-    val cond = readEntrySet(spark, root, st.entries, st.schemaJson, colmap = colmapOf(st))
-      .filter(predicate).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition
-      }
-    // triage bounds re-key LOGICAL → PHYSICAL (manifest stats and
-    // partition tokens are keyed by physical names, which never change)
+    val touched = touchedBy(spark, root, st, predicate)
     val cm = colmapOf(st)
-    val bounds = mapKeys(cond.map(predicateBounds).getOrElse(Map.empty), cm)
-    val tbounds =
-      mapKeys(cond.map(predicateTypedBounds).getOrElse(Map.empty), cm)
-    val eqStrings =
-      mapKeys(cond.map(predicateEqStrings).getOrElse(Map.empty), cm)
-    val touched = st.entries.filterNot(e =>
-      bounds.exists { case (c, b) => e.stats.get(c).exists(statDisjoint(_, b)) } ||
-        tbounds.exists { case (c, b) =>
-          e.tstats.get(c).exists(typedStatDisjoint(_, b)) } ||
-        partitionDisjoint(e, bounds, eqStrings))
-    val statCols = trackedStatCols(st)
-    val partCols = partColsOf(st)
     val rewritten =
       if (touched.isEmpty) Seq.empty
       else {
         val survivors = toPhysical(
           readEntrySet(spark, root, touched, st.schemaJson, colmap = cm)
             .filter(not(coalesce(predicate, lit(false)))), cm)
-        val files =
-          if (partCols.nonEmpty)
-            writeDataPartitioned(survivors, root, partCols)
-          else writeData(survivors, root)
-        withStats(spark, root, files, statCols)
+        withStats(spark, root, writeData(survivors, root, partColsOf(st)),
+          trackedStatCols(st))
       }
     // untouched entries ride along implicitly: only the delta is logged.
     // A lost CAS rebases iff no intervening commit touched the files this
@@ -1613,8 +1505,8 @@ object TableLog {
     * the files holding matching rows, the matching (file, row_index)
     * positions are written as ONE small sidecar parquet and referenced
     * from the touched entries (`d:` tokens); every reader anti-joins the
-    * vectors away. Same triage as [[delete]] (stats bounds + partition
-    * values keep provably-clean files untouched), and files whose EVERY
+    * vectors away. Same triage as [[delete]] ([[touchedBy]] keeps
+    * provably-clean files untouched), and files whose EVERY
     * row matches are dropped outright (no vector needed). Per-entry live
     * row counts are adjusted from the vector build itself, so
     * [[rowCounts]] stays metadata-only; min/max stats stay (a delete can
@@ -1636,24 +1528,7 @@ object TableLog {
     val head = headVersion(spark, root)
     require(head.nonEmpty, s"no committed versions under $root")
     val st = state(spark, root, Some(head.get))
-    val cond = readEntrySet(spark, root, st.entries, st.schemaJson, colmap = colmapOf(st))
-      .filter(predicate).queryExecution.analyzed.collectFirst {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition
-      }
-    // triage bounds re-key LOGICAL → PHYSICAL (manifest stats and
-    // partition tokens are keyed by physical names, which never change)
-    val cm = colmapOf(st)
-    val bounds = mapKeys(cond.map(predicateBounds).getOrElse(Map.empty), cm)
-    val tbounds =
-      mapKeys(cond.map(predicateTypedBounds).getOrElse(Map.empty), cm)
-    val eqStrings =
-      mapKeys(cond.map(predicateEqStrings).getOrElse(Map.empty), cm)
-    val touched = st.entries.filterNot(e =>
-      bounds.exists { case (c, b) => e.stats.get(c).exists(statDisjoint(_, b)) } ||
-        tbounds.exists { case (c, b) =>
-          e.tstats.get(c).exists(typedStatDisjoint(_, b)) } ||
-        partitionDisjoint(e, bounds, eqStrings))
+    val touched = touchedBy(spark, root, st, predicate)
     if (touched.isEmpty)
       return commitDeltaRebasing(spark, root, Nil, Nil, head.get,
         _ => Seq("op:delete"))
@@ -1704,17 +1579,23 @@ object TableLog {
   }
 
   /** Conservative per-column bounds implied by a predicate: every MATCHING
-    * row must have `col ∈ [lo, hi]` (open sides = None). AND intersects,
-    * OR hulls (a column unbounded on either branch drops out), comparisons
-    * see through integral casts; anything unrecognized contributes nothing
-    * — the result is always a SUPERSET of the matching region, which is
-    * what makes keep-by-reference sound.
+    * row must have `col ∈ [lo, hi]` (open sides = None) in the order of
+    * the bound's KIND — `l` (integral, compared against [[Entry.stats]])
+    * or a [[Entry.tstats]] kind: `s` string, `d` double, `t` timestamp,
+    * `D` date, values in the same canonical encoding as the stats (long
+    * and string raw, double via Double.toString, timestamp epoch micros,
+    * date epoch days). AND intersects, OR hulls (a column unbounded on
+    * either branch drops out), kind mismatches drop the column, anything
+    * unrecognized contributes nothing — the result is always a SUPERSET of
+    * the matching region, which is what makes file skipping sound.
     */
   private[graft] def predicateBounds(e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Map[String, (Option[Long], Option[Long])] = {
+      : Map[String, (String, Option[String], Option[String])] = {
     import org.apache.spark.sql.catalyst.expressions._
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+    import org.apache.spark.sql.types.{ByteType, DateType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, TimestampNTZType, TimestampType}
+    import org.apache.spark.unsafe.types.UTF8String
+    type B = (String, Option[String], Option[String])
     def width(t: org.apache.spark.sql.types.DataType): Option[Int] = t match {
       case ByteType => Some(1); case ShortType => Some(2)
       case IntegerType => Some(4); case LongType => Some(8)
@@ -1742,171 +1623,60 @@ object TableLog {
         if (wide) attrOf(c.child) else None
       case _ => None
     }
-    // a cast of the LITERAL is transparent only when the value survives
-    // the cast (the analyzer only emits widening literal casts, but a
-    // hand-built narrowing cast must not leak the uncast value)
-    def litOf(x: Expression): Option[Long] = x match {
+    // an integral LITERAL's cast is transparent only when the value
+    // survives the cast (the analyzer only emits widening literal casts,
+    // but a hand-built narrowing cast must not leak the uncast value)
+    def longOf(x: Expression): Option[Long] = x match {
       case Literal(v, LongType) => Some(v.asInstanceOf[Long])
       case Literal(v, IntegerType) => Some(v.asInstanceOf[Int].toLong)
       case Literal(v, ShortType) => Some(v.asInstanceOf[Short].toLong)
       case Literal(v, ByteType) => Some(v.asInstanceOf[Byte].toLong)
       case c: Cast => for {
-        v <- litOf(c.child)
+        v <- longOf(c.child)
         w <- width(c.dataType)
         if w == 8 ||
           (v >= -(1L << (8 * w - 1)) && v <= (1L << (8 * w - 1)) - 1)
       } yield v
       case _ => None
     }
-    type B = (Option[Long], Option[Long])
-    def cmp(l: Expression, r: Expression,
-        attrOp: Long => B, litOp: Long => B): Map[String, B] =
-      (attrOf(l), litOf(r), attrOf(r), litOf(l)) match {
-        case (Some(n), Some(v), _, _) => Map(n -> attrOp(v))
-        case (_, _, Some(n), Some(v)) => Map(n -> litOp(v))
-        case _ => Map.empty
-      }
-    def intersect(a: Map[String, B], b: Map[String, B]): Map[String, B] =
-      (a.keySet ++ b.keySet).map { k =>
-        val (alo, ahi) = a.getOrElse(k, (None, None))
-        val (blo, bhi) = b.getOrElse(k, (None, None))
-        k -> ((maxOpt(alo, blo), minOpt(ahi, bhi)))
-      }.toMap
-    def hull(a: Map[String, B], b: Map[String, B]): Map[String, B] =
-      (a.keySet intersect b.keySet).map { k =>
-        val (alo, ahi) = a(k); val (blo, bhi) = b(k)
-        k -> (((alo, blo) match { case (Some(x), Some(y)) => Some(math.min(x, y)); case _ => None },
-               (ahi, bhi) match { case (Some(x), Some(y)) => Some(math.max(x, y)); case _ => None }))
-      }.filter { case (_, (lo, hi)) => lo.nonEmpty || hi.nonEmpty }.toMap
-    e match {
-      case And(l, r) => intersect(predicateBounds(l), predicateBounds(r))
-      case Or(l, r) => hull(predicateBounds(l), predicateBounds(r))
-      case GreaterThan(l, r) =>
-        cmp(l, r, v => (Some(v), None), v => (None, Some(v)))
-      case GreaterThanOrEqual(l, r) =>
-        cmp(l, r, v => (Some(v), None), v => (None, Some(v)))
-      case LessThan(l, r) =>
-        cmp(l, r, v => (None, Some(v)), v => (Some(v), None))
-      case LessThanOrEqual(l, r) =>
-        cmp(l, r, v => (None, Some(v)), v => (Some(v), None))
-      case EqualTo(l, r) =>
-        cmp(l, r, v => (Some(v), Some(v)), v => (Some(v), Some(v)))
-      case _ => Map.empty
-    }
-  }
-
-  /** Conservative per-column STRING-EQUALITY sets implied by a predicate:
-    * every matching row must have `col ∈ set`. AND keeps either side's
-    * constraint (both must hold), OR needs both sides to constrain the
-    * column (sets union); `=`, `<=>` and `IN` over string literals
-    * contribute. Same superset discipline as [[predicateBounds]] — used
-    * by [[delete]] to keep whole partitions by reference when their value
-    * contradicts the predicate.
-    */
-  private[graft] def predicateEqStrings(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Map[String, Set[String]] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.types.StringType
-    def attrOf(x: Expression): Option[String] = x match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def strOf(x: Expression): Option[String] = x match {
-      case Literal(v, StringType) if v != null => Some(v.toString)
-      case _ => None
-    }
-    def eq(l: Expression, r: Expression): Map[String, Set[String]] =
-      (attrOf(l), strOf(r), attrOf(r), strOf(l)) match {
-        case (Some(n), Some(s), _, _) => Map(n -> Set(s))
-        case (_, _, Some(n), Some(s)) => Map(n -> Set(s))
-        case _ => Map.empty
-      }
-    e match {
-      case And(l, r) =>
-        val (a, b) = (predicateEqStrings(l), predicateEqStrings(r))
-        (a.keySet ++ b.keySet).map { k =>
-          k -> ((a.get(k), b.get(k)) match {
-            case (Some(x), Some(y)) => x intersect y
-            case (x, y) => x.orElse(y).get
-          })
-        }.toMap
-      case Or(l, r) =>
-        val (a, b) = (predicateEqStrings(l), predicateEqStrings(r))
-        (a.keySet intersect b.keySet).map(k => k -> (a(k) ++ b(k))).toMap
-      case EqualTo(l, r) => eq(l, r)
-      case EqualNullSafe(l, r) => eq(l, r) // null <=> 'x' is false: same set
-      case In(a, vs) if vs.nonEmpty && vs.forall(strOf(_).nonEmpty) =>
-        attrOf(a).map(n => Map(n -> vs.flatMap(strOf).toSet))
-          .getOrElse(Map.empty)
-      case _ => Map.empty
-    }
-  }
-
-  /** Conservative per-column TYPED bounds implied by a predicate — the
-    * string/double/timestamp/date companion of [[predicateBounds]]: every
-    * matching row must have `col ∈ [lo, hi]` in the column kind's order,
-    * values carried in the same canonical encoding as [[Entry.tstats]]
-    * (string raw, double via Double.toString, timestamp epoch micros,
-    * date epoch days). Direct attribute-vs-literal comparisons only (no
-    * cast-seeing — the analyzer folds literal-side casts before this
-    * runs); AND intersects, OR hulls, kind mismatches drop out. Same
-    * superset discipline: the result always covers the matching region.
-    */
-  private[graft] def predicateTypedBounds(
-      e: org.apache.spark.sql.catalyst.expressions.Expression)
-      : Map[String, (String, Option[String], Option[String])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.types.{DateType, DoubleType, FloatType, StringType, TimestampNTZType, TimestampType}
-    import org.apache.spark.unsafe.types.UTF8String
-    type TB = (String, Option[String], Option[String])
-    def attrOf(x: Expression): Option[String] = x match {
-      case a: UnresolvedAttribute => Some(a.name)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    // any FOLDABLE expression of a supported type contributes — an
-    // ANALYZED (not yet constant-folded) predicate still carries
-    // cast('1997-01-01' as timestamp) / to_timestamp(...) shapes, and the
-    // delete triage walks analyzed conditions
-    def litOf(x: Expression): Option[(String, String)] =
+    // any other FOLDABLE value of a typed kind contributes — an analyzed
+    // (not yet constant-folded) predicate still carries
+    // cast('1997-01-01' as timestamp) / to_timestamp(...) shapes
+    def typedOf(x: Expression): Option[(String, String)] =
       if (!x.resolved || !x.foldable) None
       else (scala.util.Try(x.eval()).getOrElse(null), x.dataType) match {
         case (null, _) => None
         case (v: UTF8String, StringType) => Some(("s", v.toString))
         // -0.0 canonicalizes to 0.0 on BOTH sides (stats and bounds) so
         // the Double.compare order never disagrees with SQL's == at zero
-        case (v, DoubleType) =>
-          val d = v.asInstanceOf[Double]
-          Some(("d", (if (d == 0.0) 0.0 else d).toString))
+        case (v, DoubleType) => Some(("d", canonDouble(v.asInstanceOf[Double])))
         case (v, FloatType) =>
-          val d = v.asInstanceOf[Float].toDouble
-          Some(("d", (if (d == 0.0) 0.0 else d).toString))
-        case (v, TimestampType) => Some(("t", v.toString))
+          Some(("d", canonDouble(v.asInstanceOf[Float].toDouble)))
         // NTZ values carry epoch micros too — same kind, same order
-        case (v, TimestampNTZType) => Some(("t", v.toString))
+        case (v, TimestampType | TimestampNTZType) => Some(("t", v.toString))
         case (v, DateType) => Some(("D", v.toString))
         case _ => None
       }
-    def cmp(l: Expression, r: Expression,
-        attrOp: (String, String) => TB,
-        litOp: (String, String) => TB): Map[String, TB] =
+    def litOf(x: Expression): Option[(String, String)] =
+      longOf(x).map(v => ("l", v.toString)).orElse(typedOf(x))
+    def cmp(l: Expression, r: Expression, attrLo: Boolean,
+        attrHi: Boolean): Map[String, B] = {
+      def bound(k: String, v: String, lo: Boolean, hi: Boolean): B =
+        (k, Some(v).filter(_ => lo), Some(v).filter(_ => hi))
       (attrOf(l), litOf(r), attrOf(r), litOf(l)) match {
-        case (Some(n), Some((k, v)), _, _) => Map(n -> attrOp(k, v))
-        case (_, _, Some(n), Some((k, v))) => Map(n -> litOp(k, v))
+        case (Some(n), Some((k, v)), _, _) => Map(n -> bound(k, v, attrLo, attrHi))
+        // literal first: the comparison mirrors
+        case (_, _, Some(n), Some((k, v))) => Map(n -> bound(k, v, attrHi, attrLo))
         case _ => Map.empty
       }
+    }
     def pick(k: String, a: Option[String], b: Option[String],
         takeMax: Boolean): Option[String] = (a, b) match {
       case (Some(x), Some(y)) =>
-        val c = typedCompare(k, x, y)
-        Some(if ((c >= 0) == takeMax) x else y)
+        Some(if ((typedCompare(k, x, y) >= 0) == takeMax) x else y)
       case _ => a.orElse(b)
     }
-    def intersect(a: Map[String, TB], b: Map[String, TB]): Map[String, TB] =
+    def intersect(a: Map[String, B], b: Map[String, B]): Map[String, B] =
       (a.keySet ++ b.keySet).flatMap { key =>
         (a.get(key), b.get(key)) match {
           case (Some((ka, alo, ahi)), Some((kb, blo, bhi))) =>
@@ -1916,31 +1686,26 @@ object TableLog {
           case (x, y) => x.orElse(y).map(key -> _)
         }
       }.toMap
-    def hull(a: Map[String, TB], b: Map[String, TB]): Map[String, TB] =
+    def hull(a: Map[String, B], b: Map[String, B]): Map[String, B] =
       (a.keySet intersect b.keySet).flatMap { key =>
         val (ka, alo, ahi) = a(key); val (kb, blo, bhi) = b(key)
+        def widest(x: Option[String], y: Option[String], takeMax: Boolean) =
+          if (x.isEmpty || y.isEmpty) None else pick(ka, x, y, takeMax)
         if (ka != kb) None
         else {
-          val lo = for { x <- alo; y <- blo }
-            yield if (typedCompare(ka, x, y) <= 0) x else y
-          val hi = for { x <- ahi; y <- bhi }
-            yield if (typedCompare(ka, x, y) >= 0) x else y
+          val lo = widest(alo, blo, takeMax = false)
+          val hi = widest(ahi, bhi, takeMax = true)
           if (lo.isEmpty && hi.isEmpty) None else Some(key -> ((ka, lo, hi)))
         }
       }.toMap
     e match {
-      case And(l, r) => intersect(predicateTypedBounds(l), predicateTypedBounds(r))
-      case Or(l, r) => hull(predicateTypedBounds(l), predicateTypedBounds(r))
-      case GreaterThan(l, r) =>
-        cmp(l, r, (k, v) => (k, Some(v), None), (k, v) => (k, None, Some(v)))
-      case GreaterThanOrEqual(l, r) =>
-        cmp(l, r, (k, v) => (k, Some(v), None), (k, v) => (k, None, Some(v)))
-      case LessThan(l, r) =>
-        cmp(l, r, (k, v) => (k, None, Some(v)), (k, v) => (k, Some(v), None))
-      case LessThanOrEqual(l, r) =>
-        cmp(l, r, (k, v) => (k, None, Some(v)), (k, v) => (k, Some(v), None))
-      case EqualTo(l, r) =>
-        cmp(l, r, (k, v) => (k, Some(v), Some(v)), (k, v) => (k, Some(v), Some(v)))
+      case And(l, r) => intersect(predicateBounds(l), predicateBounds(r))
+      case Or(l, r) => hull(predicateBounds(l), predicateBounds(r))
+      case GreaterThan(l, r) => cmp(l, r, attrLo = true, attrHi = false)
+      case GreaterThanOrEqual(l, r) => cmp(l, r, attrLo = true, attrHi = false)
+      case LessThan(l, r) => cmp(l, r, attrLo = false, attrHi = true)
+      case LessThanOrEqual(l, r) => cmp(l, r, attrLo = false, attrHi = true)
+      case EqualTo(l, r) => cmp(l, r, attrLo = true, attrHi = true)
       case _ => Map.empty
     }
   }
@@ -1949,7 +1714,7 @@ object TableLog {
     * collected under: strings byte-wise as UTF-8 (code-point order, what
     * Spark's min/max over UTF8String uses — NOT Java String.compareTo,
     * which diverges above the BMP), doubles IEEE with NaN greatest
-    * (Spark's ordering), timestamps/dates as longs.
+    * (Spark's ordering), integrals (`l`), timestamps and dates as longs.
     */
   private[graft] def typedCompare(kind: String, a: String, b: String): Int =
     kind match {
@@ -1957,56 +1722,6 @@ object TableLog {
         .compareTo(org.apache.spark.unsafe.types.UTF8String.fromString(b))
       case "d" => java.lang.Double.compare(a.toDouble, b.toDouble)
       case _ => java.lang.Long.compare(a.toLong, b.toLong)
-    }
-
-  /** Typed file stats (kind, mn, mx) provably miss bound (kind, lo, hi)?
-    * A kind mismatch never skips (sound).
-    */
-  private[graft] def typedStatDisjoint(stat: (String, String, String),
-      b: (String, Option[String], Option[String])): Boolean = {
-    val (kind, mn, mx) = stat
-    val (bk, lo, hi) = b
-    kind == bk && (
-      lo.exists(l => typedCompare(kind, mx, l) < 0) ||
-      hi.exists(h => typedCompare(kind, mn, h) > 0))
-  }
-
-  private def maxOpt(a: Option[Long], b: Option[Long]): Option[Long] =
-    (a, b) match { case (Some(x), Some(y)) => Some(math.max(x, y))
-      case _ => a.orElse(b) }
-  private def minOpt(a: Option[Long], b: Option[Long]): Option[Long] =
-    (a, b) match { case (Some(x), Some(y)) => Some(math.min(x, y))
-      case _ => a.orElse(b) }
-
-  /** File stats [mn, mx] provably miss bound [lo, hi]? (Shared with the
-    * [[GraftLogFileIndex]] scan-planning skip.)
-    */
-  private[graft] def statDisjoint(stats: (Long, Long),
-      b: (Option[Long], Option[Long])): Boolean = {
-    val (mn, mx) = stats
-    b._1.exists(lo => mx < lo) || b._2.exists(hi => mn > hi)
-  }
-
-  /** A file is provably untouched by a predicate when its PARTITION VALUE
-    * contradicts a derived constraint — the delete-a-whole-source
-    * compliance shape keeps every other partition by reference without
-    * opening a file (shared by [[delete]] and [[deleteVectors]]).
-    */
-  private def partitionDisjoint(e: Entry,
-      bounds: Map[String, (Option[Long], Option[Long])],
-      eqStrings: Map[String, Set[String]]): Boolean =
-    e.partition.exists { case (c, raw) =>
-      val constrained = eqStrings.contains(c) || bounds.contains(c)
-      if (raw == "__HIVE_DEFAULT_PARTITION__")
-        constrained // NULL never satisfies an equality/range constraint
-      else {
-        val v = unescapePath(raw)
-        eqStrings.get(c).exists(set => !set.contains(v)) ||
-        bounds.get(c).exists { case (lo, hi) =>
-          scala.util.Try(v.toLong).toOption.exists(n =>
-            lo.exists(n < _) || hi.exists(n > _))
-        }
-      }
     }
 
   // -------------------------------------------------------------------------
@@ -2057,11 +1772,8 @@ object TableLog {
           if (clusterBy.isEmpty) small.repartition(nBins)
           else small.repartitionByRange(nBins, clusterBy.map(col): _*),
           colmapOf(st))
-        val partCols = partColsOf(st)
-        val files =
-          if (partCols.nonEmpty) writeDataPartitioned(df, root, partCols)
-          else writeData(df, root)
-        withStats(spark, root, files, trackedStatCols(st))
+        withStats(spark, root, writeData(df, root, partColsOf(st)),
+          trackedStatCols(st))
       }
     // a lost CAS rebases iff nothing touched the compacted smalls —
     // concurrent appends land untouched next to the compaction
@@ -2083,11 +1795,7 @@ object TableLog {
     val merged = Warehouse.mergeUpsert(
       readEntrySet(spark, root, st.entries, st.schemaJson, colmap = colmapOf(st)),
       updates, keyCols, seqCol)
-    val partCols = partColsOf(st)
-    val physMerged = toPhysical(merged, colmapOf(st))
-    val files =
-      if (partCols.nonEmpty) writeDataPartitioned(physMerged, root, partCols)
-      else writeData(physMerged, root)
+    val files = writeData(toPhysical(merged, colmapOf(st)), root, partColsOf(st))
     commitDelta(spark, root, files, st.entries.map(_.path), Some(head.get),
       Seq("op:merge", schemaMeta(merged)))
   }
@@ -2353,7 +2061,7 @@ object TableLog {
     val fs = rootP.getFileSystem(spark.sessionState.newHadoopConf())
     val now = System.currentTimeMillis()
     // sweep: recursively within dirs of exactly the commit-dir shape
-    // writeData/writeDataPartitioned produce — never unrelated directories
+    // writeData produces — never unrelated directories
     // a user parked under the root
     def sweep(dir: org.apache.hadoop.fs.Path, relDir: String): Unit = {
       fs.listStatus(dir).foreach { f =>
@@ -2400,44 +2108,22 @@ object TableLog {
     * it forward. Sound under the single-writer-per-stream contract (epoch
     * ids commit in increasing order — see object doc). A marker file
     * remains as a fast-path cache; losing it merely costs the state read.
-    * The batch's data files are staged ONCE; only the manifest commit
-    * retries on [[CommitConflictException]] (appends commute, and
-    * re-staging would orphan the first attempt's files).
+    * The batch stages and commits through [[append]]: its data files are
+    * staged ONCE, and only the manifest commit rebases on a lost CAS
+    * (appends commute, and re-staging would orphan the first attempt's
+    * files) — the schema meta re-derived per attempt against the base it
+    * lands on, so a concurrent writer's evolution is never clobbered.
     */
   def appendBatch(batch: DataFrame, batchId: Long, root: String,
-      casRetries: Int = 5, statCols: Seq[String] = Nil): Unit = {
+      statCols: Seq[String] = Nil): Unit = {
     val spark = batch.sparkSession
     val store = LogStore.resolve(spark)
     val marker = s"${logDir(root)}/epochs/epoch-$batchId"
     def alreadyCommitted: Boolean =
       headVersion(spark, root).exists(h =>
         state(spark, root, Some(h)).epochMax.exists(batchId <= _))
-    if (!store.exists(spark, marker) && !alreadyCommitted) {
-      val head = headVersion(spark, root)
-      val st = head.map(h => state(spark, root, Some(h)))
-      val partCols = st.map(partColsOf).getOrElse(Seq.empty)
-      require(partCols.forall(batch.columns.contains),
-        s"append to a partitioned table must carry its partition columns " +
-          s"($partCols)")
-      guardRetiredPhysical(st, batch)
-      val cm = st.map(colmapOf).getOrElse(Map.empty)
-      val phys = toPhysical(batch, cm)
-      val plain =
-        if (partCols.nonEmpty) writeDataPartitioned(phys, root, partCols)
-        else writeData(phys, root)
-      val staged =
-        if (statCols.isEmpty) plain
-        else withStats(spark, root, plain, statCols
-          .filter(batch.columns.contains).map(c => cm.getOrElse(c, c)))
-      // the rebasing commit re-derives the schema meta per attempt against
-      // the base it lands on — a concurrent writer's evolution is never
-      // clobbered by a retried epoch (the pre-round-15 loop reused the
-      // first attempt's stale meta)
-      commitDeltaRebasing(spark, root, staged, Nil, head.getOrElse(0L),
-        base => appendMeta(spark, root, base, batch, partCols,
-          Seq(s"epoch:$batchId")),
-        maxRebases = casRetries)
-    }
+    if (!store.exists(spark, marker) && !alreadyCommitted)
+      append(batch, root, meta = Seq(s"epoch:$batchId"), statCols)
     store.writeIfAbsent(spark, marker, "")
     ()
   }

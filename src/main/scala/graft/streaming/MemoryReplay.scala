@@ -120,7 +120,7 @@ object MemoryReplay {
       .toString
     val withB = frame.withColumn("tape_b",
       ntile(nBatches).over(Window.orderBy(col(orderCol))))
-    val staged = TableLog.writeDataPartitioned(withB, root, Seq("tape_b"))
+    val staged = TableLog.writeData(withB, root, Seq("tape_b"))
     val schemaJson = withB.schema.json
     val segs = staged.groupBy(_.partition("tape_b").toLong).toSeq.sortBy(_._1)
     var acc = Vector.empty[TableLog.Entry]

@@ -543,7 +543,7 @@ object ScaleProbe {
       rm(new java.io.File(root3))
       val dvDf = spark.range(1000000L).select(col("id").as("k"),
         col("id").as("v")).repartitionByRange(8, col("v"))
-      TableLog.overwriteWithStats(dvDf, root3, "v")
+      TableLog.overwrite(dvDf, root3, statCols = Seq("v"))
       def readWall(): Double = {
         val t0 = System.nanoTime()
         TableLog.read(spark, root3).agg(sum(col("k"))).head()
@@ -557,9 +557,9 @@ object ScaleProbe {
           TableLog.deleteVectors(spark, root3,
             col("v").between(lo, hi))
           val inline = { readWall(); readWall() }
-          spark.conf.set(TableLog.DvInlineMaxBytesKey, "-1")
+          spark.conf.set(TableLog.DvInlineMaxPositionsKey, "0")
           val anti = { readWall(); readWall() }
-          spark.conf.unset(TableLog.DvInlineMaxBytesKey)
+          spark.conf.unset(TableLog.DvInlineMaxPositionsKey)
           println(f"[probe] dv-law: deleted=$label%-3s  base=${base}%.3f s  " +
             f"inline=${inline}%.3f s (${(inline / base - 1) * 100}%+.0f%%)  " +
             f"antijoin=${anti}%.3f s (${(anti / base - 1) * 100}%+.0f%%)")

@@ -23,29 +23,12 @@ class GraftLogSourceSpec extends AnyFunSuite {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
 
-  /** Files the executed scan would read: the scan node's OWN filter split
-    * driven back through the FileIndex — asserts both the strategy wiring
-    * (filters reached the scan) and the index's pruning.
-    */
-  private def plannedFiles(df: DataFrame): Int = {
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec => f
-    }
-    assert(scans.size == 1,
-      s"a graftlog read must plan exactly ONE file scan, got ${scans.size}")
-    val s = scans.head
-    s.relation.location
-      .listFiles(s.partitionFilters.filterNot(_.references.isEmpty),
-        s.dataFilters)
-      .map(_.files.size).sum
-  }
-
   test("batch relation: one scan (no union), typed partition column, time travel, evolution") {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val root = tmp("glbatch")
-    TableLog.overwritePartitioned(
-      docs.repartitionByRange(4, col("n_chars")), root, Seq("source"), "n_chars")
+    TableLog.overwrite(
+      docs.repartitionByRange(4, col("n_chars")), root, Seq("source"), Seq("n_chars"))
     TableLog.append(docs.limit(50)
       .withColumn("extra", col("doc_id") * 2), root) // v2: additive column
     val head = spark.read.format("graftlog").load(root)
@@ -70,14 +53,14 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
     val root = tmp("glprune")
-    TableLog.overwritePartitioned(
-      docs.repartitionByRange(4, col("n_chars")), root, Seq("source"), "n_chars")
+    TableLog.overwrite(
+      docs.repartitionByRange(4, col("n_chars")), root, Seq("source"), Seq("n_chars"))
     val base = spark.read.format("graftlog").load(root)
-    val all = plannedFiles(base)
-    val partPruned = plannedFiles(base.filter(col("source") === "src3"))
-    val statPruned = plannedFiles(
+    val all = PlannedFiles(base)
+    val partPruned = PlannedFiles(base.filter(col("source") === "src3"))
+    val statPruned = PlannedFiles(
       base.filter(col("n_chars").between(150L, 300L)))
-    val both = plannedFiles(base.filter(col("source") === "src3" &&
+    val both = PlannedFiles(base.filter(col("source") === "src3" &&
       col("n_chars").between(150L, 300L)))
     assert(partPruned < all, s"partition pruning must engage: $partPruned / $all")
     assert(statPruned < all, s"stat skipping must engage: $statPruned / $all")
@@ -98,9 +81,9 @@ class GraftLogSourceSpec extends AnyFunSuite {
       .select(col("o_orderkey"), col("o_orderdate"), col("o_totalprice"),
         col("o_orderpriority"))
     val root = tmp("gltyped")
-    TableLog.overwriteWithStats(
+    TableLog.overwrite(
       orders.repartitionByRange(8, col("o_orderdate")),
-      root, "o_orderdate", "o_totalprice", "o_orderpriority")
+      root, statCols = Seq("o_orderdate", "o_totalprice", "o_orderpriority"))
     // the manifest carries typed tokens for all three kinds
     val es = TableLog.manifestEntries(spark, root)
     assert(es.forall(e => e.tstats.get("o_orderdate").exists(_._1 == "t") &&
@@ -108,18 +91,18 @@ class GraftLogSourceSpec extends AnyFunSuite {
       e.tstats.get("o_orderpriority").exists(_._1 == "s")),
       s"typed stats must ride in the manifest: ${es.head.tstats}")
     val base = spark.read.format("graftlog").load(root)
-    val all = plannedFiles(base)
+    val all = PlannedFiles(base)
     // timestamp range: the table is ts-clustered, so the window prunes hard
-    val tsPruned = plannedFiles(base.filter(
+    val tsPruned = PlannedFiles(base.filter(
       col("o_orderdate") >= lit("1997-01-01").cast("timestamp_ntz") &&
         col("o_orderdate") < lit("1998-01-01").cast("timestamp_ntz")))
     assert(tsPruned < all, s"timestamp-range skipping must engage: $tsPruned / $all")
     // a range OUTSIDE the data prunes everything
-    assert(plannedFiles(base.filter(
+    assert(PlannedFiles(base.filter(
       col("o_orderdate") >= lit("2050-01-01").cast("timestamp_ntz"))) == 0)
-    assert(plannedFiles(base.filter(col("o_totalprice") > 1e12)) == 0,
+    assert(PlannedFiles(base.filter(col("o_totalprice") > 1e12)) == 0,
       "double stats must skip an impossible threshold")
-    assert(plannedFiles(base.filter(col("o_orderpriority") > "9")) == 0,
+    assert(PlannedFiles(base.filter(col("o_orderpriority") > "9")) == 0,
       "string stats must skip an impossible range")
     // soundness: ts-window read ≡ plain derivation
     val want = orders.filter(
@@ -156,11 +139,11 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val df = ((1L to 50L).map(i => (i, -0.0)) ++
       (51L to 100L).map(i => (i, 5.0))).toDF("k", "v")
       .repartitionByRange(2, col("v"))
-    TableLog.overwriteWithStats(df, root, "v")
+    TableLog.overwrite(df, root, statCols = Seq("v"))
     // SQL semantics: -0.0 >= 0.0 is TRUE — OUR stat layer must not prune
     // file A (canonicalized stats): both files stay in the plan
     val base = spark.read.format("graftlog").load(root)
-    assert(plannedFiles(base.filter(col("v") >= 0.0)) == 2,
+    assert(PlannedFiles(base.filter(col("v") >= 0.0)) == 2,
       "manifest stat skipping must not prune the -0.0 file")
     // NOTE the residual: parquet's OWN row-group filter drops the -0.0
     // rows under pushdown — verified identical on a vanilla
@@ -204,7 +187,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val root = tmp("gldv")
     val df = (1L to 100L).map(i => (i, i * 10)).toDF("k", "v")
       .repartitionByRange(4, col("v"))
-    TableLog.overwriteWithStats(df, root, "v")
+    TableLog.overwrite(df, root, statCols = Seq("v"))
     TableLog.deleteVectors(spark, root, col("v") <= 300L)
     val got = spark.read.format("graftlog").load(root)
     // round 16: the RDD[Row] seam is retired for inline-eligible vectors —
@@ -245,7 +228,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val root = tmp("gldvrep")
     val df = (1L to 5000L).map(i => (i, i)).toDF("k", "v")
       .repartitionByRange(8, col("v"))
-    TableLog.overwriteWithStats(df, root, "v")
+    TableLog.overwrite(df, root, statCols = Seq("v"))
     TableLog.deleteVectors(spark, root, col("v").between(100L, 900L))
     TableLog.deleteVectors(spark, root, col("v") % 13 === 0) // stacked
     val want = (1L to 5000L).filterNot(v => (v >= 100 && v <= 900) || v % 13 == 0)
@@ -261,12 +244,12 @@ class GraftLogSourceSpec extends AnyFunSuite {
         inline.queryExecution.executedPlan)
     assert(inline.select("k").as[Long].collect().sorted.toSeq == want)
     // forced anti-join fallback: byte-identical result
-    spark.conf.set(TableLog.DvInlineMaxBytesKey, "-1")
+    spark.conf.set(TableLog.DvInlineMaxPositionsKey, "0")
     try {
       val joined = TableLog.read(spark, root)
       assert(joins(joined).nonEmpty, "fallback must be the anti-join")
       assert(joined.select("k").as[Long].collect().sorted.toSeq == want)
-    } finally spark.conf.unset(TableLog.DvInlineMaxBytesKey)
+    } finally spark.conf.unset(TableLog.DvInlineMaxPositionsKey)
     // both representations stay correct through a later rewrite
     TableLog.compact(spark, root, targetBytes = 1L << 30)
     assert(TableLog.read(spark, root).select("k").as[Long].collect()
@@ -427,7 +410,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val root = tmp("gldvcap")
     val df = (1L to 4000L).map(i => (i, i)).toDF("k", "v")
       .repartitionByRange(4, col("v"))
-    TableLog.overwriteWithStats(df, root, "v")
+    TableLog.overwrite(df, root, statCols = Seq("v"))
     // scattered delete: ~1300 positions, tiny sidecar bytes
     TableLog.deleteVectors(spark, root, col("v") % 3 === 0)
     val want = (1L to 4000L).filterNot(_ % 3 == 0)
@@ -435,8 +418,8 @@ class GraftLogSourceSpec extends AnyFunSuite {
       dfr.queryExecution.sparkPlan.collect { case j: BaseJoinExec => j }
     // under the default caps the sidecar is inline-eligible
     assert(joins(TableLog.read(spark, root)).isEmpty)
-    // a position cap below the actual count forces the anti-join even
-    // though the BYTES threshold still passes — the RLE-density hazard
+    // a position cap below the actual count forces the anti-join, however
+    // few bytes the sidecar takes — the RLE-density hazard
     spark.conf.set(TableLog.DvInlineMaxPositionsKey, "100")
     try {
       val fallback = TableLog.read(spark, root)
@@ -492,7 +475,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val root = tmp("glrename")
     val df = (1L to 1000L).map(i => (i, i * 3)).toDF("k", "v")
       .repartitionByRange(4, col("v"))
-    TableLog.overwriteWithStats(df, root, "v")                        // v1
+    TableLog.overwrite(df, root, statCols = Seq("v"))                        // v1
     val filesV1 = TableLog.manifestEntries(spark, root)
     TableLog.renameColumn(spark, root, "v", "val3")                   // v2
     // METADATA-ONLY: not one data file changed
@@ -504,8 +487,8 @@ class GraftLogSourceSpec extends AnyFunSuite {
     assert(head.filter(col("val3") === 30L).select("k").as[Long].head() == 10L)
     // data skipping still engages: the filter on the LOGICAL name pushes
     // through the alias to the physical column the stats are keyed by
-    val all = plannedFiles(head.filter(col("val3") > -1L))
-    val pruned = plannedFiles(head.filter(col("val3") > 2500L))
+    val all = PlannedFiles(head.filter(col("val3") > -1L))
+    val pruned = PlannedFiles(head.filter(col("val3") > 2500L))
     assert(pruned < all && pruned > 0,
       s"stats keyed by physical name must keep pruning: $pruned / $all")
     // time travel reads v1 under ITS OWN mapping (the old name)
@@ -552,8 +535,8 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val dirty = Seq(1L).toDF("k")
       .withColumn("s", lit(Array[Byte](0xFF.toByte, 0xFF.toByte)).cast("string"))
     val clean = Seq(2L).toDF("k").withColumn("s", lit("b"))
-    TableLog.overwriteWithStats(dirty.union(clean)
-      .repartitionByRange(2, col("k")), root, "s")
+    TableLog.overwrite(dirty.union(clean)
+      .repartitionByRange(2, col("k")), root, statCols = Seq("s"))
     val es = TableLog.manifestEntries(spark, root)
     // the dirty file records NO string stat (its bytes don't round-trip
     // through java.lang.String); the clean file records one

@@ -113,7 +113,7 @@ class TableLogSpec extends AnyFunSuite {
       // slice and writes one tight-range file into every source dir, so
       // every partition gets several skippable files
       .repartitionByRange(4, col("n_chars"))
-    TableLog.overwritePartitioned(docs, root, Seq("source"), "n_chars")
+    TableLog.overwrite(docs, root, Seq("source"), Seq("n_chars"))
     // round trip: schema order, partition column typed + populated
     val all = TableLog.read(spark, root)
     assert(all.columns.toSeq == Seq("doc_id", "source", "n_chars"))
@@ -126,21 +126,18 @@ class TableLogSpec extends AnyFunSuite {
     val src = docs.filter(col("n_chars").between(150L, 300L))
       .groupBy("source").count().orderBy(col("source"))
       .head().getString(0)
-    val one = TableLog.readPruned(spark, root, "n_chars", Long.MinValue,
-      Long.MaxValue, partitionEq = Map("source" -> src))
-    assert(one.inputFiles.length < all.inputFiles.length,
-      s"partition pruning must drop files: ${one.inputFiles.length} of ${all.inputFiles.length}")
+    val one = all.filter(col("source") === src)
+    assert(PlannedFiles(one) < PlannedFiles(all),
+      s"partition pruning must drop files: ${PlannedFiles(one)} of ${PlannedFiles(all)}")
     assert(one.count() == docs.filter(col("source") === src).count())
     // layer 2: stats range prunes further WITHIN the partition
-    val both = TableLog.readPruned(spark, root, "n_chars", 150L, 300L,
-      partitionEq = Map("source" -> src))
-    assert(both.inputFiles.length < one.inputFiles.length,
-      s"stats must prune within the partition: ${both.inputFiles.length} of ${one.inputFiles.length}")
-    // soundness: pruned + row filter ≡ plain filter
+    val both = one.filter(col("n_chars").between(150L, 300L))
+    assert(PlannedFiles(both) < PlannedFiles(one),
+      s"stats must prune within the partition: ${PlannedFiles(both)} of ${PlannedFiles(one)}")
+    // soundness: pruned read ≡ plain filter
     val wantF = docs.filter(col("source") === src &&
       col("n_chars").between(150L, 300L)).collect().map(_.toString).sorted
-    val gotF = both.filter(col("source") === src &&
-      col("n_chars").between(150L, 300L)).collect().map(_.toString).sorted
+    val gotF = both.collect().map(_.toString).sorted
     assert(wantF.nonEmpty && gotF.sameElements(wantF))
   }
 
@@ -148,8 +145,8 @@ class TableLogSpec extends AnyFunSuite {
     val root = tmp("tpdel")
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
-    TableLog.overwriteWithStats(docs.repartitionByRange(8, col("n_chars")),
-      root, "n_chars")
+    TableLog.overwrite(docs.repartitionByRange(8, col("n_chars")),
+      root, statCols = Seq("n_chars"))
     val before = TableLog.manifestEntries(spark, root)
     val provablyOut = before.filter(_.stats.get("n_chars").exists(_._2 < 150L))
     assert(provablyOut.nonEmpty, "fixture needs files below the bound")
@@ -178,19 +175,22 @@ class TableLogSpec extends AnyFunSuite {
     val a = org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("a")
     val b = org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute("b")
     def lit(v: Long) = Literal(v, LongType)
+    // integral bounds are kind "l", values in the long stats' encoding
+    def l(lo: Option[Long], hi: Option[Long]) =
+      ("l", lo.map(_.toString), hi.map(_.toString))
     assert(TableLog.predicateBounds(And(GreaterThanOrEqual(a, lit(5)),
-      LessThan(a, lit(10)))) == Map("a" -> ((Some(5L), Some(10L)))))
+      LessThan(a, lit(10)))) == Map("a" -> l(Some(5L), Some(10L))))
     assert(TableLog.predicateBounds(Or(EqualTo(a, lit(3)), EqualTo(a, lit(9))))
-      == Map("a" -> ((Some(3L), Some(9L)))))
+      == Map("a" -> l(Some(3L), Some(9L))))
     // OR with an unbounded branch must drop the column (conservative)
     assert(TableLog.predicateBounds(Or(EqualTo(a, lit(3)),
       GreaterThan(b, lit(0)))) == Map.empty)
     // literal-first comparison mirrors; cast seen through
     assert(TableLog.predicateBounds(GreaterThan(lit(7),
-      Cast(a, LongType))) == Map("a" -> ((None, Some(7L)))))
+      Cast(a, LongType))) == Map("a" -> l(None, Some(7L))))
     // a conjunct nobody understands contributes nothing but doesn't erase
     assert(TableLog.predicateBounds(And(EqualTo(Remainder(a, lit(7)), lit(0)),
-      GreaterThanOrEqual(a, lit(150)))) == Map("a" -> ((Some(150L), None))))
+      GreaterThanOrEqual(a, lit(150)))) == Map("a" -> l(Some(150L), None)))
     // NARROWING casts of the attribute are opaque (cast(a AS int) = 5 also
     // matches a = 2^32+5 — seeing through it would keep matching files);
     // unknown child type admits only the to-long widening
@@ -203,7 +203,7 @@ class TableLogSpec extends AnyFunSuite {
       "resolved long->int cast must not derive bounds")
     val aInt = AttributeReference("a", IntegerType)()
     assert(TableLog.predicateBounds(EqualTo(Cast(aInt, LT), Literal(5L, LT)))
-      == Map("a" -> ((Some(5L), Some(5L)))),
+      == Map("a" -> l(Some(5L), Some(5L))),
       "resolved widening cast is transparent")
     // a literal whose cast would wrap is opaque too
     assert(TableLog.predicateBounds(EqualTo(a,
@@ -255,7 +255,7 @@ class TableLogSpec extends AnyFunSuite {
     // a momentarily-EMPTY partitioned table keeps its layout: the next
     // append must still demand + use the partition columns
     val root2 = tmp("tkeeppart")
-    TableLog.overwritePartitioned(
+    TableLog.overwrite(
       Seq((1L, "p1"), (2L, "p2")).toDF("k", "p"), root2, Seq("p"))
     TableLog.delete(spark, root2, lit(true))
     assert(TableLog.read(spark, root2).count() == 0L)
@@ -275,7 +275,7 @@ class TableLogSpec extends AnyFunSuite {
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("source"), col("n_chars"))
       .repartitionByRange(4, col("n_chars"))
-    TableLog.overwritePartitioned(docs, root, Seq("source"), "n_chars")
+    TableLog.overwrite(docs, root, Seq("source"), Seq("n_chars"))
     val before = TableLog.manifestEntries(spark, root)
     val others = before.filterNot(_.partition.get("source").contains("src3"))
     assert(others.nonEmpty && others.size < before.size)
@@ -293,30 +293,14 @@ class TableLogSpec extends AnyFunSuite {
     assert(TableLog.read(spark, root).count() ==
       docs.filter(!(col("source") === "src3" && col("n_chars") % 2 === 0))
         .count())
-    // the eq-set algebra directly: AND intersects, OR unions, IN collects
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.types.StringType
-    val s0 = UnresolvedAttribute("s")
-    def sl(v: String) = Literal.create(v, StringType)
-    assert(TableLog.predicateEqStrings(Or(EqualTo(s0, sl("a")),
-      EqualTo(s0, sl("b")))) == Map("s" -> Set("a", "b")))
-    assert(TableLog.predicateEqStrings(And(EqualTo(s0, sl("a")),
-      EqualTo(UnresolvedAttribute("t"), sl("x")))) ==
-      Map("s" -> Set("a"), "t" -> Set("x")))
-    assert(TableLog.predicateEqStrings(In(s0, Seq(sl("a"), sl("b"))))
-      == Map("s" -> Set("a", "b")))
-    assert(TableLog.predicateEqStrings(Or(EqualTo(s0, sl("a")),
-      GreaterThan(UnresolvedAttribute("n"), Literal(1L)))) == Map.empty,
-      "an OR branch without the column must drop it")
   }
 
   test("clustered compact re-tightens per-file ranges so skipping survives") {
     val root = tmp("tcclust")
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
-    TableLog.overwriteWithStats(docs.repartitionByRange(8, col("n_chars")),
-      root, "n_chars")
+    TableLog.overwrite(docs.repartitionByRange(8, col("n_chars")),
+      root, statCols = Seq("n_chars"))
     val target = TableLog.manifestEntries(spark, root)
       .flatMap(_.bytes).max * 3 // every file small -> full rewrite
     TableLog.compact(spark, root, target, clusterBy = Seq("n_chars"))
@@ -341,8 +325,8 @@ class TableLogSpec extends AnyFunSuite {
     val total = docs.count()
     val bySrc = docs.groupBy("source").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    TableLog.overwritePartitioned(docs.repartitionByRange(4, col("n_chars")),
-      root, Seq("source"), "n_chars")
+    TableLog.overwrite(docs.repartitionByRange(4, col("n_chars")),
+      root, Seq("source"), Seq("n_chars"))
     assert(TableLog.manifestEntries(spark, root).forall(_.rows.nonEmpty),
       "stats-collecting writers must record per-file counts")
     // THE metadata-only proof: destroy the data files; counts still answer
@@ -358,8 +342,8 @@ class TableLogSpec extends AnyFunSuite {
     // hybrid: a count-less append is counted by scanning JUST its files
     val root2 = tmp("tcount2")
     import spark.implicits._
-    TableLog.overwriteWithStats(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"),
-      root2, "v")
+    TableLog.overwrite(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"),
+      root2, statCols = Seq("v"))
     TableLog.append(Seq((3L, 30L)).toDF("k", "v"), root2) // no stats: no count
     val e2 = TableLog.manifestEntries(spark, root2)
     assert(e2.exists(_.rows.isEmpty) && e2.exists(_.rows.nonEmpty),
@@ -431,31 +415,29 @@ class TableLogSpec extends AnyFunSuite {
     val root = tmp("tzbox")
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
-    TableLog.overwriteWithStats(
+    TableLog.overwrite(
       Warehouse.zClustered(docs, "doc_id", "n_chars", n = 16),
-      root, "doc_id", "n_chars")
-    val all = TableLog.read(spark, root).inputFiles.length
+      root, statCols = Seq("doc_id", "n_chars"))
+    val read = TableLog.read(spark, root)
+    val all = PlannedFiles(read)
     val idHi = docs.agg(max(col("doc_id"))).head().getLong(0) / 4
-    val dOnly = TableLog.readPrunedMulti(spark, root,
-      Map("doc_id" -> ((0L, idHi)))).inputFiles.length
-    val nOnly = TableLog.readPrunedMulti(spark, root,
-      Map("n_chars" -> ((150L, 300L)))).inputFiles.length
-    val box = TableLog.readPrunedMulti(spark, root,
-      Map("doc_id" -> ((0L, idHi)), "n_chars" -> ((150L, 300L))))
+    val dOnly = PlannedFiles(read.filter(col("doc_id").between(0L, idHi)))
+    val nOnly = PlannedFiles(read.filter(col("n_chars").between(150L, 300L)))
+    val box = read.filter(col("doc_id").between(0L, idHi) &&
+      col("n_chars").between(150L, 300L))
     assert(dOnly < all && nOnly < all,
       s"z-clustering must let EACH axis prune: $dOnly / $nOnly of $all")
     // ≤ on the box (a range-partitioner boundary shift of one file must
     // not flake the suite) plus a strict win over no pruning at all —
     // the pruning-layer composition, not a sampled-split lottery
-    assert(box.inputFiles.length <= math.min(dOnly, nOnly) &&
-      box.inputFiles.length < all,
+    assert(PlannedFiles(box) <= math.min(dOnly, nOnly) &&
+      PlannedFiles(box) < all,
       s"the box must prune at least as hard as both single axes: " +
-        s"${box.inputFiles.length} vs $dOnly / $nOnly of $all")
+        s"${PlannedFiles(box)} vs $dOnly / $nOnly of $all")
     // soundness
     val want = docs.filter(col("doc_id").between(0L, idHi) &&
       col("n_chars").between(150L, 300L)).collect().map(_.toString).sorted
-    val got = box.filter(col("doc_id").between(0L, idHi) &&
-      col("n_chars").between(150L, 300L)).collect().map(_.toString).sorted
+    val got = box.collect().map(_.toString).sorted
     assert(want.nonEmpty && got.sameElements(want))
   }
 
@@ -463,8 +445,8 @@ class TableLogSpec extends AnyFunSuite {
     val root = tmp("tdv")
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
-    TableLog.overwriteWithStats(docs.repartitionByRange(8, col("n_chars")),
-      root, "n_chars")
+    TableLog.overwrite(docs.repartitionByRange(8, col("n_chars")),
+      root, statCols = Seq("n_chars"))
     val before = TableLog.manifestEntries(spark, root)
     def dataFiles() = TableLog.manifest(spark, root)
       .filter(f => new java.io.File(s"$root/$f").exists()).toSet
@@ -697,7 +679,7 @@ class TableLogSpec extends AnyFunSuite {
       val src = if (i % 2 == 0) "a b" else "x:y"
       (i, src, i * 10)
     }.toDF("k", "src", "v")
-    TableLog.overwritePartitioned(df, root, Seq("src"), "v")
+    TableLog.overwrite(df, root, Seq("src"), Seq("v"))
     val v2 = TableLog.deleteVectors(spark, root, col("k") % 4 === 0)
     // the delete must actually take effect at head (entries carry d: tokens)
     val after = TableLog.manifestEntries(spark, root, Some(v2))
@@ -862,7 +844,7 @@ class TableLogSpec extends AnyFunSuite {
     val root = tmp("ttokens")
     val nasty = Seq((1L, "a:b\tc=d%e"), (2L, "z:z\tz=z%z"))
       .toDF("k", "s")
-    TableLog.overwriteWithStats(nasty.coalesce(1), root, "s")
+    TableLog.overwrite(nasty.coalesce(1), root, statCols = Seq("s"))
     val e = TableLog.manifestEntries(spark, root).head
     assert(e.tstats("s") == (("s", "a:b\tc=d%e", "z:z\tz=z%z")),
       s"escaped stat values must roundtrip: ${e.tstats}")
@@ -1012,5 +994,73 @@ class TableLogSpec extends AnyFunSuite {
     Files.setLastModifiedTime(m2,
       java.nio.file.attribute.FileTime.fromMillis(mtime + 2000))
     assert(ops == Seq("overwrite", "APPEND"))
+  }
+
+  test("one triage: deletes touch exactly the files a filtered read plans, for every stat kind") {
+    import org.apache.spark.sql.Column
+    val root = tmp("ttriage")
+    // every column grows with id, so range-clustering on n gives each file
+    // a tight range on all of them; 8 slices × 4 sources = 32 files
+    val rows = spark.range(0, 2000).select(
+      col("id").as("n"), col("id").cast("int").as("i"),
+      (col("id") * 0.5).as("d"),
+      lpad(col("id").cast("string"), 5, "0").as("s"),
+      timestamp_seconds(col("id") * 3600).as("ts"),
+      date_add(lit("2020-01-01").cast("date"), (col("id") / 10).cast("int"))
+        .as("dt"),
+      concat(lit("src"), (col("id") % 4).cast("string")).as("source"))
+    TableLog.overwrite(rows.repartitionByRange(8, col("n")), root,
+      Seq("source"), Seq("n", "i", "d", "s", "ts", "dt"))
+    val all = TableLog.manifestEntries(spark, root).map(_.path).toSet
+    assert(all.size == 32, s"fixture must write 32 files: ${all.size}")
+    val sorted = (df: org.apache.spark.sql.DataFrame) =>
+      df.select(rows.columns.toSeq.map(col): _*).collect().map(_.toString).sorted.toSeq
+    // (name, predicate, must the triage skip files?)
+    val cases: Seq[(String, Column, Boolean)] = Seq(
+      ("partition =", col("source") === "src1", true),
+      ("partition IN", col("source").isin("src1", "src2"), true),
+      ("partition OR", col("source") === "src1" || col("source") === "src3", true),
+      ("partition AND long", col("source") === "src2" && col("n") >= 1500L, true),
+      ("partition through a function", upper(col("source")) === "SRC3", true),
+      ("long range", col("n").between(500L, 700L), true),
+      ("widening cast", col("i").cast("long") >= 1800L, true),
+      ("double", col("d") > 800.0, true),
+      ("string", col("s") < "00300", true),
+      ("timestamp", col("ts") >= lit("1970-03-01 00:00:00").cast("timestamp"), true),
+      ("date", col("dt") <= lit("2020-01-20").cast("date"), true),
+      ("NULL literal OR range",
+        col("s") === lit(null).cast("string") || col("n") < 100L, true),
+      ("NULL literal", col("n") === lit(null).cast("long"), false),
+      ("no derivable bound", col("n") % 7 === 0, false),
+      ("underivable AND double", col("n") % 7 === 0 && col("d") <= 200.0, true))
+    cases.foreach { case (name, p, prunes) =>
+      TableLog.restore(spark, root, 1L) // every case starts from v1's files
+      val head = TableLog.read(spark, root)
+      // a plan the optimizer empties reads no file, and a delete that
+      // cannot see a scan must assume every file
+      val planned = PlannedFiles.paths(head.filter(p)).getOrElse(all)
+      assert(!prunes || planned.size < all.size,
+        s"$name: the filtered read must skip files (${planned.size} of ${all.size})")
+      val holding = head.filter(p)
+        .select(regexp_extract(input_file_name(), TableLog.FileKeyRegex, 1))
+        .distinct().collect().map(_.getString(0)).toSet
+      assert(holding.subsetOf(planned),
+        s"$name: files holding matching rows were skipped: ${holding -- planned}")
+      assert(TableLog.touchedBy(spark, root, TableLog.state(spark, root), p)
+        .map(_.path).toSet == planned,
+        s"$name: deleteVectors' triage must equal the read's planned files")
+      val want = sorted(rows.filter(not(coalesce(p, lit(false)))))
+      val vd = TableLog.delete(spark, root, p)
+      assert(TableLog.fileChanges(spark, root, vd - 1, vd)._2.toSet == planned,
+        s"$name: delete must rewrite exactly the planned files")
+      assert(sorted(TableLog.read(spark, root)) == want, s"$name: delete rows")
+      TableLog.restore(spark, root, 1L)
+      val vv = TableLog.deleteVectors(spark, root, p)
+      val dvTouched = TableLog.fileChanges(spark, root, vv - 1, vv)._2.toSet
+      assert(dvTouched.subsetOf(planned) && holding.subsetOf(dvTouched),
+        s"$name: deleteVectors must touch the matching files within the plan")
+      assert(sorted(TableLog.read(spark, root)) == want,
+        s"$name: deleteVectors rows")
+    }
   }
 }

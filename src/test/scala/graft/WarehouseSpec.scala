@@ -540,22 +540,22 @@ class WarehouseSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_tskip").toString
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
-    TableLog.overwriteWithStats(docs.repartitionByRange(8, col("n_chars")),
-      root, "n_chars")
+    TableLog.overwrite(docs.repartitionByRange(8, col("n_chars")),
+      root, statCols = Seq("n_chars"))
     val all = TableLog.read(spark, root)
-    val pruned = TableLog.readPruned(spark, root, "n_chars", 150L, 250L)
+    val pruned = all.filter(col("n_chars").between(150L, 250L))
     // the skip is REAL: fewer files enter the plan than the table holds
-    assert(all.inputFiles.length >= 8)
-    assert(pruned.inputFiles.length < all.inputFiles.length,
-      s"stats must prune files: ${pruned.inputFiles.length} vs ${all.inputFiles.length}")
-    // and SOUND: pruned + row filter == plain filter
-    val want = all.filter(col("n_chars").between(150L, 250L))
+    assert(PlannedFiles(all) >= 8)
+    assert(PlannedFiles(pruned) < PlannedFiles(all),
+      s"stats must prune files: ${PlannedFiles(pruned)} vs ${PlannedFiles(all)}")
+    // and SOUND: the pruned read == plain filter over the source
+    val want = docs.filter(col("n_chars").between(150L, 250L))
       .collect().map(_.toString).sorted
-    val got = pruned.filter(col("n_chars").between(150L, 250L))
-      .collect().map(_.toString).sorted
+    val got = pruned.collect().map(_.toString).sorted
     assert(want.nonEmpty && got.sameElements(want))
     // a disjoint range prunes everything but stays schema-correct
-    val none = TableLog.readPruned(spark, root, "n_chars", 10000000L, 20000000L)
+    val none = all.filter(col("n_chars").between(10000000L, 20000000L))
+    assert(PlannedFiles(none) == 0)
     assert(none.columns.toSeq == all.columns.toSeq && none.count() == 0L)
   }
 
@@ -564,8 +564,8 @@ class WarehouseSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_tdel").toString
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
-    TableLog.overwriteWithStats(docs.repartitionByRange(8, col("n_chars")),
-      root, "n_chars")
+    TableLog.overwrite(docs.repartitionByRange(8, col("n_chars")),
+      root, statCols = Seq("n_chars"))
     val before = TableLog.manifestEntries(spark, root)
     val untouchedBefore = before.filter(_.stats.get("n_chars").exists {
       case (mn, mx) => mx < 150L || mn > 250L })

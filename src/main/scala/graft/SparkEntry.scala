@@ -25,15 +25,29 @@ object SparkEntry {
   /** events with ts normalized to microsecond precision (Tables.events). */
   private def ev(s: SparkSession, dir: String): DataFrame = Tables.events(s, dir)
 
+  /** Scratch roots this JVM created under java.io.tmpdir ([[rtDir]],
+    * [[logRoot]]). They are keyed by the Spark application id, so no later
+    * JVM reuses one: one shutdown hook deletes them all when this JVM exits.
+    */
+  private val scratchRoots = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  sys.addShutdownHook(scratchRoots.forEach(r => rmTree(new java.io.File(r))))
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+  }
+
   /** Per-session-unique tmp dir for the q84/q90/q91 round-trip gates: keyed
     * by the Spark application id so two concurrent sessions benchmarking the
     * same fixture cannot overwrite each other's files mid-read; reps within
     * one session reuse the dir (mode overwrite). The dirs are small
-    * (one table) and land in java.io.tmpdir.
+    * (one table), land in java.io.tmpdir and go when the JVM exits.
     */
-  private def rtDir(s: SparkSession, dir: String, codec: String): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_${codec}_" +
+  private def rtDir(s: SparkSession, dir: String, codec: String): String = {
+    val root = s"${System.getProperty("java.io.tmpdir")}/graft_${codec}_" +
       s"${s.sparkContext.applicationId}_${new java.io.File(dir).getName}"
+    scratchRoots.add(root)
+    root
+  }
 
   private val ntz: Column => Column = _.cast("timestamp_ntz")
 
@@ -44,12 +58,8 @@ object SparkEntry {
     * a table-sized temp dir per rep.
     */
   private def logRoot(s: SparkSession, dir: String, tag: String): String = {
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_${tag}_" +
-      s"${s.sparkContext.applicationId}_${new java.io.File(dir).getName}"
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    rm(new java.io.File(root))
+    val root = rtDir(s, dir, tag)
+    rmTree(new java.io.File(root))
     new java.io.File(root).mkdirs()
     root
   }
@@ -1919,9 +1929,9 @@ object SparkEntry {
     // packing (Corpus.packShardsByCount), driving a (file_id, bytes) unit
     // stream. The gate manifest is fixture arithmetic (one unit per doc,
     // n_chars as bytes, every 17th file pre-inflated past target so BOTH
-    // actions appear at every sf); WarehouseSpec drives the same planner
-    // over REAL written parquet footers and executes the rewrite
-    // (Warehouse.compactByPlan), asserting one file per bin.
+    // actions appear at every sf); WarehouseSpec checks the planner's
+    // keep set, dense bins, 2·target ceiling and exact bin-count law; the
+    // rewrite itself is TableLog.compact's (keeps by reference).
     "q200_compaction_plan" -> ((s, d) => {
       val mf = t(s, d, "documents").select(
         col("doc_id").as("file_id"),
@@ -2834,11 +2844,7 @@ object SparkEntry {
       Seq(ot, ct).foreach { name =>
         s.sql(s"DROP TABLE IF EXISTS $name")
         val wh = java.net.URI.create(s.conf.get("spark.sql.warehouse.dir")).getPath
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles).foreach(_.foreach(rm))
-          f.delete()
-        }
-        rm(new java.io.File(wh, name))
+        rmTree(new java.io.File(wh, name))
       }
       t(s, d, "orders").write.mode("overwrite").format("parquet")
         .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(ot)

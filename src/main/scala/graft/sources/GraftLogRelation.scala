@@ -618,7 +618,6 @@ class GraftLogSource(spark: SparkSession, root: String,
   private def verOf(o: AnyRef): Long = o match {
     case l: LongOffset => l.offset
     case o: OffsetV2 => o.json.trim.toLong
-    case o: OffsetV1 => o.json.trim.toLong
   }
 
   override def prepareForTriggerAvailableNow(): Unit =

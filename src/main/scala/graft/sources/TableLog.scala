@@ -3,14 +3,13 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 
-/** Manifest COMMIT LOG — the "metastore pointer swap" seam that
-  * [[Warehouse.compact]]'s two-rename visibility caveat and
-  * [[Warehouse.mergeUpsertPartitioned]]'s same-path-checkpoint note both
-  * punt to. This is the protocol core Delta/Iceberg are built on: a table
-  * IS the file list reconstructed from its log, and the COMMIT POINT is one
-  * atomic publish of `_graft_log/v<N>.manifest` through the [[LogStore]]
-  * CAS — readers either see version N complete or not at all, never a
-  * half-written directory.
+/** Manifest COMMIT LOG — the one code path that rewrites, overwrites or
+  * exactly-once appends table files (compaction, merge, delete, the
+  * streaming sink). This is the protocol core Delta/Iceberg are built on:
+  * a table IS the file list reconstructed from its log, and the COMMIT
+  * POINT is one atomic publish of `_graft_log/v<N>.manifest` through the
+  * [[LogStore]] CAS — readers either see version N complete or not at
+  * all, never a half-written directory.
   *
   * What the log buys at 100 TB, concretely:
   *  - ATOMIC maintenance: compaction/merge/delete write NEW files next to

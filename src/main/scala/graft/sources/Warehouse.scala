@@ -1,162 +1,15 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 
-/** Bucketed warehouse tables — the co-located-join path for keys that are
-  * joined repeatedly (SURVEY §4: orders⋈customer, fold tables keyed by
-  * hub/account). Writing both sides bucketed on the join key by the same
-  * bucket count lets every subsequent equi-join run with ZERO exchanges:
-  * each bucket pair joins in place, which at 100 TB removes the dominant
-  * shuffle from every repeat of the join. The cost is paid once at write
-  * time (the bucket spec hashes rows to files).
+/** Pure-DataFrame warehouse maintenance pieces: a small-files compaction
+  * planner ([[compactionPlan]], q200), a CDC MERGE ([[mergeUpsert]], q208
+  * and [[TableLog.mergeUpsert]]) and the Z-order clustering key
+  * ([[zValue]], [[scaleToBits]], [[zClustered]]; q93, q225). None of them
+  * touches a file: rewriting, overwriting or appending table files
+  * exactly once is [[TableLog]]'s job, through its manifest commit.
   */
 object Warehouse {
-
-  /** Write `df` as a bucketed+sorted managed table (parquet). Sorting
-    * within buckets additionally enables sort-merge joins without a sort
-    * step.
-    */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write.mode("overwrite")
-      .format("parquet")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .saveAsTable(table)
-
-  def read(spark: SparkSession, table: String): DataFrame = spark.table(table)
-
-  /** Write `df` hive-partitioned by `partCols`. At scale the win is
-    * partition pruning: a filter on a partition column prunes whole
-    * directories at planning time, so a hub- or day-scoped query reads
-    * only its slice of a 100 TB table — the scan's `PartitionFilters`
-    * (asserted in WarehouseSpec) instead of a post-scan row filter.
-    * Partition columns must be coarse (hub, date) — one directory per
-    * value; never partition by a high-cardinality key.
-    */
-  def writePartitioned(df: DataFrame, path: String, partCols: Seq[String]): Unit =
-    df.write.mode("overwrite").partitionBy(partCols: _*).parquet(path)
-
-  /** Compact a parquet directory's small files — the maintenance pass every
-    * streaming sink needs: micro-batch appends (IngestJobs.writeTable et al)
-    * leave one file per batch per task, and a 100 TB table fed at a 10 s
-    * checkpoint cadence accumulates millions of footer-sized files whose
-    * open/seek overhead eventually dominates every scan.
-    *
-    * `sortCol` picks the layout: None → coalesce-style rewrite into
-    * ~`targetBytes` files (no shuffle beyond AQE's rebalance); Some(col) →
-    * `repartitionByRange` on that column, so each output file covers a tight
-    * key range and min/max footer stats turn point/range filters into file
-    * skips (poor man's clustering).
-    *
-    * Visibility contract — honest version: the write goes to a temp sibling
-    * and is published by a two-rename swap (path→__old, __compacting→path),
-    * so a reader never sees a HALF-compacted directory — but between the two
-    * renames there is a window where the directory does not exist at all and
-    * a concurrent reader errors, and `java.io.File.renameTo` limits this
-    * implementation to the local filesystem. On a real deployment the flip
-    * belongs behind a metastore/table-format pointer swap (the atomic-commit
-    * problem Iceberg/Delta exist to solve); this local form is the
-    * maintenance pass for the sandbox warehouse. A crash between the renames
-    * leaves only `__old`; the next compact run recovers it (restore-then-
-    * compact) and clears any stale `__compacting`/`__old` leftovers.
-    */
-  def compact(spark: SparkSession, path: String, targetBytes: Long = 128L << 20,
-      sortCol: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.col
-    recoverSwap(path)
-    val df = spark.read.parquet(path)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = math.max(1, (bytes / BigInt(targetBytes)).toInt +
-      (if (bytes % BigInt(targetBytes) > 0) 1 else 0))
-    val arranged = sortCol.fold(df.repartition(n))(c => df.repartitionByRange(n, col(c)))
-    publishSwap(arranged, path)
-  }
-
-  /** Write `arranged` to the temp sibling and publish via the two-rename
-    * swap (see [[compact]]'s scaladoc for the visibility contract).
-    */
-  private def publishSwap(arranged: DataFrame, path: String): Unit = {
-    val tmp = path + "__compacting"
-    arranged.write.mode("overwrite").parquet(tmp)
-    val fs = new java.io.File(path)
-    val bak = new java.io.File(path + "__old")
-    if (!fs.renameTo(bak)) throw new java.io.IOException(s"cannot swap $path")
-    if (!new java.io.File(tmp).renameTo(fs)) {
-      bak.renameTo(fs) // roll back visibility before failing
-      throw new java.io.IOException(s"cannot publish compacted $path")
-    }
-    rmTree(bak)
-  }
-
-  /** Crash recovery from a previous interrupted swap: if only the __old
-    * backup survives, restore it; clear stale temp/backup dirs so the
-    * renames can't collide.
-    */
-  private def recoverSwap(path: String): Unit = {
-    val cur = new java.io.File(path)
-    val oldBak = new java.io.File(path + "__old")
-    val stale = new java.io.File(path + "__compacting")
-    if (!cur.exists() && oldBak.exists() && !oldBak.renameTo(cur))
-      throw new java.io.IOException(s"cannot restore $path from __old backup")
-    if (stale.exists()) rmTree(stale)
-    if (oldBak.exists() && cur.exists()) rmTree(oldBak)
-  }
-
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
-  }
-
-  /** Real file-size manifest of a parquet table root: one row per data
-    * file with (file_id, partition, file, bytes) — `partition` is the
-    * file's directory RELATIVE to the root ('' for a flat layout,
-    * 'source=src0' etc. for hive-partitioned tables, nested dirs joined
-    * with '/'), and file_id is the rank in lexicographic (partition, name)
-    * order, so ids are deterministic across runs over the same directory.
-    * Listing is RECURSIVE — a hive-partitioned root (exactly the layout
-    * [[writePartitioned]] and micro-batch sinks produce) yields every leaf
-    * data file, where a flat `listStatus` would silently return zero rows
-    * and downstream maintenance would no-op on the most common real-table
-    * shape. This is the input surface of [[compactionPlan]] /
-    * [[compactionPlanPartitioned]]; WarehouseSpec drives it over real
-    * written footers. Listing goes through the Hadoop `FileSystem` API
-    * resolved from the path — the same resolution Spark's own file index
-    * uses — so the manifest works against file://, HDFS and object stores
-    * alike (a `java.io.File` listing would silently return nothing for any
-    * storage a 100 TB table actually lives on). Driver-side and one small
-    * row per FILE, never per row of data: KB-to-MB scale even for a 100 TB
-    * table.
-    *
-    * HIDDEN/TEMP paths are excluded the way Spark's own file index excludes
-    * them (InMemoryFileIndex.shouldFilterOutPathName): any file whose name
-    * or whose RELATIVE directory chain contains a component starting with
-    * `_` or `.` — a crashed write's `_temporary/` task attempts, a leftover
-    * `__compact_staging/`, `.crc` sidecars. Without this, compaction would
-    * manifest (and then resurrect into its output) uncommitted task data
-    * that `spark.read` itself would never see.
-    */
-  def fileManifest(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val qRoot = fs.makeQualified(root).toString.stripSuffix("/")
-    def hidden(c: String) = c.startsWith("_") || c.startsWith(".")
-    val buf = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val s0 = it.next()
-      val name = s0.getPath.getName
-      if (name.endsWith(".parquet") && !hidden(name)) {
-        val parent = fs.makeQualified(s0.getPath.getParent).toString
-          .stripSuffix("/")
-        val rel = if (parent == qRoot) "" else parent.stripPrefix(qRoot + "/")
-        if (rel.isEmpty || !rel.split('/').exists(hidden))
-          buf += ((rel, name, s0.getLen))
-      }
-    }
-    buf.sortBy(f => (f._1, f._2)).zipWithIndex.toSeq
-      .map { case ((part, name, len), i) => (i.toLong, part, name, len) }
-      .toDF("file_id", "partition", "file", "bytes")
-  }
 
   /** Small-files compaction PLAN: given a (file_id, bytes) manifest, emit
     * one row per file with the maintenance decision —
@@ -180,9 +33,9 @@ object Warehouse {
     * the q200 gate hash-match a DuckDB window-sum re-derivation.
     *
     * At 100 TB this is a plan over file METADATA (millions of rows at
-    * most); the expensive part — the rewrite — is [[compactByPlan]], and
-    * splitting plan from execution is what lets an operator review or
-    * throttle the rewrite set before burning cluster IO on it.
+    * most); the rewrite itself is [[TableLog.compact]]'s, and splitting
+    * plan from execution is what lets an operator review or throttle the
+    * rewrite set before burning cluster IO on it.
     */
   def compactionPlan(files: DataFrame, idCol: Column, bytesCol: Column,
       targetBytes: Long): DataFrame = {
@@ -204,144 +57,6 @@ object Warehouse {
           .select(col("doc_id").as("file_id"), col("n_tok").as("bytes"),
             lit("rewrite").as("action"), col("shard").as("bin"))
     keeps.unionByName(packs)
-  }
-
-  /** [[compactionPlan]] SCOPED PER PARTITION — the form a hive-partitioned
-    * table needs: bins NEVER merge across partition values (a bin spanning
-    * two partition directories could not be written back into the layout,
-    * and partition-pruned reads must keep skipping whole directories), so
-    * each partition packs its own small files independently with bin ids
-    * dense from 0 WITHIN the partition.
-    *
-    * The arithmetic is the same budget-quantized exclusive-prefix-sum law
-    * as the flat planner (keeps ≥ target at bin −1; rewrites at
-    * ⌊excl-prefix(bytes)/target⌋ in file_id order; no bin over 2·target),
-    * expressed here as ONE window partitioned by the partition value:
-    * per-partition windows parallelize across partitions — the flat
-    * planner's two-pass RDD machinery exists to avoid a single-partition
-    * GLOBAL sort, which a partitioned table's layout already avoids for
-    * free. Still all-integer and SQL-expressible (keeps contribute 0 to
-    * the running sum, so interleaved keep rows don't perturb the packing).
-    * Input/output rows are file METADATA only.
-    *
-    * Output: (file_id, partition, bytes, action, bin).
-    */
-  def compactionPlanPartitioned(files: DataFrame, idCol: Column,
-      partCol: Column, bytesCol: Column, targetBytes: Long): DataFrame = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.expressions.Window
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val f = files.select(idCol.cast("long").as("file_id"),
-      partCol.cast("string").as("partition"), bytesCol.cast("long").as("bytes"))
-    val w = Window.partitionBy(col("partition")).orderBy(col("file_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    f.withColumn("excl", coalesce(sum(
-        when(col("bytes") < targetBytes, col("bytes")).otherwise(lit(0L)))
-          .over(w), lit(0L)))
-      .select(col("file_id"), col("partition"), col("bytes"),
-        when(col("bytes") >= targetBytes, lit("keep"))
-          .otherwise(lit("rewrite")).as("action"),
-        when(col("bytes") >= targetBytes, lit(-1L))
-          .otherwise(floor(col("excl") / targetBytes)).as("bin"))
-  }
-
-  /** Execute a compaction against `path` into `outPath`, PRESERVING the
-    * table layout: the plan is [[compactionPlanPartitioned]] over the
-    * recursive [[fileManifest]] (a flat directory is simply the
-    * one-partition '' case, where the partitioned planner's window reduces
-    * to the flat planner's exclusive prefix sum — same bins), and each
-    * partition directory is compacted independently — its rewrite set read
-    * back once and written one file per bin (a bin-keyed repartition puts
-    * all of a bin's rows in one task; the `__bin` staging dirs are then
-    * flattened to `compacted-<bin>-<staged-name>.parquet` alongside the
-    * kept files — the staged part-file's unique suffix prevents aliasing
-    * against keeps from a PREVIOUS compaction cycle — so `outPath` mirrors
-    * the source layout and reads as ONE parquet table — no mixed
-    * partition/non-partition output, no phantom `__bin` column).
-    * Keeps pass through by Hadoop-FS copy (file://, HDFS, object stores —
-    * same reasoning as [[fileManifest]]; at real scale a metastore pointer
-    * move replaces the copy, but the op must not silently no-op off the
-    * local filesystem). Returns the executed plan.
-    *
-    * Scale shape: one distributed rewrite job per partition holding small
-    * files — the natural unit, because bins never span partitions and
-    * production compaction is scoped to the partitions an ingest/retention
-    * window touched (the OPTIMIZE ... WHERE pattern) rather than a whole
-    * 100 TB table at once; within a partition the rewrite shuffle carries
-    * only the small-file rows. Driver-side pieces stay manifest-sized.
-    */
-  def compactByPlan(spark: SparkSession, path: String, targetBytes: Long,
-      outPath: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val manifest = fileManifest(spark, path).localCheckpoint()
-    val plan = compactionPlanPartitioned(manifest, col("file_id"),
-      col("partition"), col("bytes"), targetBytes).localCheckpoint()
-    val named = plan
-      .join(manifest.select(col("file_id"), col("file")), Seq("file_id"))
-      .select(col("partition"), col("file"), col("action"), col("bin"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getString(2), r.getLong(3)))
-    val hconf = spark.sessionState.newHadoopConf()
-    val outRoot = new org.apache.hadoop.fs.Path(outPath)
-    val outFs = outRoot.getFileSystem(hconf)
-    outFs.mkdirs(outRoot)
-    named.groupBy(_._1).toSeq.sortBy(_._1).foreach { case (part, rows) =>
-      val srcDir = if (part.isEmpty) path else s"$path/$part"
-      val dstDir = if (part.isEmpty) outPath else s"$outPath/$part"
-      outFs.mkdirs(new org.apache.hadoop.fs.Path(dstDir))
-      // keeps FIRST, so a later bin-file landing can never be clobbered
-      // by a keep copy — and bin names below embed the staged part-file's
-      // unique suffix, so a keep that IS a previous cycle's compacted-*
-      // output cannot collide with this cycle's bins either
-      rows.filter(_._3 == "keep").map(_._2).foreach { f =>
-        val src = new org.apache.hadoop.fs.Path(s"$srcDir/$f")
-        org.apache.hadoop.fs.FileUtil.copy(
-          src.getFileSystem(hconf), src, outFs,
-          new org.apache.hadoop.fs.Path(s"$dstDir/$f"),
-          false, true, hconf)
-      }
-      val binOfFile = rows.filter(_._3 == "rewrite").map(r => (r._2, r._4)).toSeq
-      if (binOfFile.nonEmpty) {
-        import spark.implicits._
-        val binMap = binOfFile.toDF("__file", "__bin")
-        val staging = s"$dstDir/__compact_staging"
-        spark.read.parquet(binOfFile.map(f => s"$srcDir/${f._1}"): _*)
-          .withColumn("__file", element_at(split(input_file_name(), "/"), -1))
-          .join(broadcast(binMap), Seq("__file"))
-          .drop("__file")
-          .repartition(col("__bin"))
-          .write.mode("overwrite").partitionBy("__bin")
-          .parquet(staging)
-        // flatten: staging/__bin=N/part-<task>-<uuid>.parquet ->
-        // dstDir/compacted-N-<uuid>.parquet (the staged name's unique
-        // suffix rides along, so repeated compaction cycles into reused
-        // outputs can never alias). A bin USUALLY lands as one file, but a
-        // session with spark.sql.files.maxRecordsPerFile set (or a bin
-        // overflowing that cap) legally writes 2+ — every data file is
-        // renamed with the same collision-free scheme rather than failing
-        // a finished rewrite on an arity check. rename() returns FALSE
-        // instead of throwing on an existing destination — check it, or
-        // the staging delete below would silently destroy bin data
-        val stP = new org.apache.hadoop.fs.Path(staging)
-        outFs.listStatus(stP).filter(s =>
-            s.isDirectory && s.getPath.getName.startsWith("__bin=")).foreach { d =>
-          val bin = d.getPath.getName.stripPrefix("__bin=")
-          val dataFiles = outFs.listStatus(d.getPath)
-            .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-          require(dataFiles.nonEmpty, s"bin $bin produced no data files")
-          dataFiles.foreach { f =>
-            val dst = new org.apache.hadoop.fs.Path(
-              s"$dstDir/compacted-$bin-${f.getPath.getName}")
-            if (!outFs.rename(f.getPath, dst))
-              throw new java.io.IOException(
-                s"cannot publish bin $bin: rename to $dst failed" +
-                  (if (outFs.exists(dst)) " (destination exists)" else ""))
-          }
-        }
-        outFs.delete(stP, true)
-      }
-    }
-    plan
   }
 
   /** CDC MERGE upsert — maintain a LATEST-STATE base table from a keyed
@@ -377,88 +92,6 @@ object Warehouse {
       .unionByName(winners)
   }
 
-  /** [[mergeUpsert]] executed against a hive-partitioned parquet base table
-    * with a PARTITION-SCOPED rewrite: only partitions containing touched
-    * keys are read (the q138 pruning machinery — the partition predicate
-    * prunes directories at plan time) and only those partitions are
-    * rewritten (dynamic partition overwrite), so untouched partitions'
-    * files are never opened, never rewritten, and stay byte-identical —
-    * WarehouseSpec proves that on real files rather than claiming it.
-    *
-    * Contract: `partCol` is STABLE per key (the update row carries the
-    * key's current partition — the standard CDC partitioning constraint;
-    * a key that migrates partitions needs a delete event in the old one),
-    * and updates carry the full base schema. The merged frame is
-    * materialized (localCheckpoint) before the overwrite because source
-    * and destination are the same path — at real scale this seam is a
-    * staging write + metastore pointer swap (the Iceberg/Delta commit);
-    * the checkpoint is partition-scoped, never table-scoped.
-    *
-    * Returns the merged touched-partition frame that was written.
-    */
-  def mergeUpsertPartitioned(spark: SparkSession, basePath: String,
-      updates: DataFrame, keyCols: Seq[String], seqCol: String,
-      partCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val touched = updates.select(col(partCol)).distinct().collect()
-      .map(_.get(0)).toSeq
-    val base = spark.read.parquet(basePath)
-      .filter(col(partCol).isin(touched: _*))
-    val merged = mergeUpsert(base, updates, keyCols, seqCol).localCheckpoint()
-    val modeKey = "spark.sql.sources.partitionOverwriteMode"
-    val prev = spark.conf.getOption(modeKey)
-    spark.conf.set(modeKey, "dynamic")
-    try merged.write.mode("overwrite").partitionBy(partCol).parquet(basePath)
-    finally prev.fold(spark.conf.unset(modeKey))(spark.conf.set(modeKey, _))
-    merged
-  }
-
-  /** One micro-batch of [[mergeUpsertStream]] — split out so the epoch-
-    * replay idempotence is directly testable (the
-    * [[graft.streaming.IngestJobs.jdbcBatchExactlyOnce]] pattern, with the
-    * warehouse's own filesystem as the ledger store): a marker file
-    * `epoch-<id>` is written AFTER the partition overwrite commits, so a
-    * crash-replayed epoch either re-runs the (idempotent — same checkpointed
-    * batch merges to the same state) merge or no-ops on the marker. The
-    * marker write itself is the usual create-file commit point; a crash
-    * between overwrite and marker re-merges once, converging to the same
-    * bytes.
-    */
-  def mergeUpsertBatch(batch: DataFrame, batchId: Long, basePath: String,
-      keyCols: Seq[String], seqCol: String, partCol: String,
-      ledgerPath: String): Unit = {
-    val spark = batch.sparkSession
-    val hconf = spark.sessionState.newHadoopConf()
-    val ledger = new org.apache.hadoop.fs.Path(ledgerPath)
-    val fs = ledger.getFileSystem(hconf)
-    fs.mkdirs(ledger)
-    val marker = new org.apache.hadoop.fs.Path(s"$ledgerPath/epoch-$batchId")
-    if (!fs.exists(marker)) {
-      mergeUpsertPartitioned(spark, basePath, batch, keyCols, seqCol, partCol)
-      fs.create(marker, true).close()
-    }
-  }
-
-  /** Continuous CDC maintenance of a latest-state partitioned base table:
-    * every micro-batch of the keyed update stream MERGEs into `basePath`
-    * via [[mergeUpsertBatch]] (partition-scoped rewrite + epoch-ledger
-    * idempotence). `foreachBatch` is the right seam because the merge is a
-    * multi-partition read-modify-write, not an append — the same reasoning
-    * as the JDBC exactly-once sink.
-    */
-  def mergeUpsertStream(updates: DataFrame, basePath: String,
-      keyCols: Seq[String], seqCol: String, partCol: String,
-      checkpointDir: String, ledgerPath: String):
-      org.apache.spark.sql.streaming.StreamingQuery =
-    updates.writeStream
-      .outputMode("update")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        mergeUpsertBatch(batch, id, basePath, keyCols, seqCol, partCol,
-          ledgerPath)
-      }
-      .start()
-
   /** Morton/Z-value of two columns already scaled to `[0, 2^bits)` ints:
     * interleaves their low `bits` bits (a in the even positions, b in the
     * odd), so sorting by the result gives locality in BOTH dimensions —
@@ -490,9 +123,10 @@ object Warehouse {
   }
 
   /** Range-partition `df` into `n` tasks by the Z-VALUE of (colA, colB) —
-    * the ONE clustering recipe behind [[compactZOrdered]], the q225
-    * z-ordered logged table and its spec (one implementation, so a bounds
-    * or bit-width change can never diverge the gate from what it tests):
+    * the ONE clustering recipe behind the q225 z-ordered logged table
+    * (committed by [[TableLog.overwrite]]) and its spec (one
+    * implementation, so a bounds or bit-width change can never diverge the
+    * gate from what it tests):
     * both columns' (min, max) come from one tiny agg, each is min/max
     * scaled to `bits`, and the Morton interleaving drives
     * `repartitionByRange` so every output file covers a tight box in BOTH
@@ -507,23 +141,5 @@ object Warehouse {
       scaleToBits(col(colA), r.getDouble(0), r.getDouble(1), bits),
       scaleToBits(col(colB), r.getDouble(2), r.getDouble(3), bits), bits)
     df.withColumn("__z", z).repartitionByRange(n, col("__z")).drop("__z")
-  }
-
-  /** [[compact]] with TWO-dimensional clustering ([[zClustered]]): each
-    * output file covers a tight box in (colA, colB) space and parquet
-    * footer min/max stats on BOTH columns turn 2-d box predicates into
-    * file skips — single-column `sortCol` clustering only ever skips on
-    * one axis. WarehouseSpec asserts the skip effect on real footer
-    * ranges.
-    */
-  def compactZOrdered(spark: SparkSession, path: String,
-      colA: String, colB: String, targetBytes: Long = 128L << 20,
-      bits: Int = 16): Unit = {
-    recoverSwap(path)
-    val df = spark.read.parquet(path)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val n = math.max(1, (bytes / BigInt(targetBytes)).toInt +
-      (if (bytes % BigInt(targetBytes) > 0) 1 else 0))
-    publishSwap(zClustered(df, colA, colB, n, bits), path)
   }
 }

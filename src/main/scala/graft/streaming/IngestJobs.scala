@@ -94,35 +94,6 @@ object IngestJobs {
       }
       .start()
 
-  /** One micro-batch into its own `batch_id=<id>` partition via dynamic
-    * partition overwrite: a batch replayed after a crash OVERWRITES its own
-    * partition instead of appending duplicates. Idempotent by construction —
-    * calling this twice with the same id is a no-op.
-    */
-  def appendBatchIdempotent(batch: DataFrame, id: Long, tablePath: String): Unit =
-    batch.withColumn("batch_id", lit(id))
-      .write.mode("overwrite").partitionBy("batch_id")
-      // per-write option, NOT session conf: a session-wide "dynamic" would
-      // silently turn later overwrite+partitionBy writes into partial ones
-      .option("partitionOverwriteMode", "dynamic")
-      .parquet(tablePath)
-
-  /** [[writeTable]] upgraded from the reference's at-least-once JDBC
-    * semantics (SURVEY §2.6: non-transactional sink + checkpoint ⇒ possible
-    * duplicates on recovery) to effective exactly-once for the parquet
-    * sink: Structured Streaming replays a failed epoch with the SAME batch
-    * id, and [[appendBatchIdempotent]] makes that replay overwrite itself.
-    */
-  def writeTableIdempotent(parsed: DataFrame, table: String, warehouse: String,
-      checkpointDir: String): StreamingQuery =
-    parsed.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$checkpointDir/$table")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        appendBatchIdempotent(batch, id, s"$warehouse/$table")
-      }
-      .start()
-
   /** One micro-batch into a JDBC table EXACTLY ONCE — the transactional
     * upgrade of the reference's at-least-once JDBC sink (a non-
     * transactional batch insert + a separately-committed checkpoint can
@@ -142,8 +113,8 @@ object IngestJobs {
     * steps against the same staging content; crash after ⇒ the ledger row
     * makes the replay a no-op. The visible table therefore holds each
     * epoch exactly once, for any interleaving of failures — the same
-    * argument as [[appendBatchIdempotent]]'s partition overwrite, moved
-    * into the database's transaction where a JDBC sink needs it.
+    * argument as [[graft.sources.TableLog.appendStream]]'s epoch token,
+    * moved into the database's transaction where a JDBC sink needs it.
     *
     * Scale note: the driver-side step is two statements per MICRO-BATCH
     * (not per row); the bulk insert runs inside the database from the

@@ -889,26 +889,6 @@ object StreamingOps {
           best
       }
 
-  /** Upsert sink for [[latestPerGroupStream]]: each micro-batch overwrites
-    * only the key partitions it touched (dynamic partition overwrite,
-    * passed per write — never mutated session-wide), so the parquet
-    * directory is always the current snapshot. Keys must be coarse enough
-    * to partition by (account, hub — the reference's DISTINCT ON keys).
-    */
-  def writeLatestSnapshot[T](latest: Dataset[T], partCols: Seq[String],
-      outDir: String, checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    latest.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[T], _: Long) =>
-        batch.toDF().write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy(partCols: _*)
-          .parquet(outDir)
-        ()
-      }
-      .start()
-
   /** Streaming MinHash-LSH near-dup candidates — the streaming face of
     * [[graft.operators.Dedup.minhashLsh]]. Each LSH band bucket keys a
     * state holding the doc ids seen in that bucket (the same inverted

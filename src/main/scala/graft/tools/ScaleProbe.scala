@@ -414,20 +414,18 @@ object ScaleProbe {
     if (args.contains("--funnel-stream")) {
       funnelStreamSection(); spark.stop(); return
     }
-    // --compaction-law: the maintenance planner's growth exponents over
+    // --compaction-law: the maintenance planner's growth exponent over
     // 10k/100k/1M-row synthetic file manifests (metadata-only — the plan
     // is the cheap half of compaction by design, and this row proves it
-    // stays that way): both the flat two-pass prefix-sum planner
-    // (compactionPlan, the q200 surface) and the per-partition window form
-    // (compactionPlanPartitioned, 64 partition dirs) are fit on the
-    // 100k→1M decade. File sizes hash-scatter across [1, 4096] against
-    // target 2000, so keeps and rewrites both stay ~materially populated.
+    // stays that way): the two-pass prefix-sum planner (compactionPlan,
+    // the q200 surface) is fit on the 100k→1M decade. File sizes
+    // hash-scatter across [1, 4096] against target 2000, so keeps and
+    // rewrites both stay ~materially populated.
     def compactionLawSection(): Unit = {
       import graft.sources.Warehouse
       def manifest(n: Long) = spark.range(0, n, 1, 32)
         .select(col("id").as("file_id"),
-          (pmod(xxhash64(col("id")), lit(4096L)) + lit(1L)).as("bytes"),
-          concat(lit("part="), pmod(col("id"), lit(64L))).as("partition"))
+          (pmod(xxhash64(col("id")), lit(4096L)) + lit(1L)).as("bytes"))
       // materialize through the bin column: a bare count() lets the
       // optimizer eliminate the unreferenced window/packing entirely (the
       // decontam-probe lesson)
@@ -435,23 +433,14 @@ object ScaleProbe {
         val r = df.agg(count(lit(1)), sum(col("bin"))).head()
         r.getLong(0) + r.getLong(1) * 0
       }
-      val flat = Seq(("10k", 10000L), ("100k", 100000L), ("1M", 1000000L))
+      val walls = Seq(("10k", 10000L), ("100k", 100000L), ("1M", 1000000L))
         .map { case (label, n) =>
           measure(s"$label compactionPlan") {
             force(Warehouse.compactionPlan(manifest(n), col("file_id"),
               col("bytes"), targetBytes = 2000L))
           }
         }
-      println(s"[probe] compactionPlan growth: ${expFit(flat)}")
-      val part = Seq(("10k", 10000L), ("100k", 100000L), ("1M", 1000000L))
-        .map { case (label, n) =>
-          measure(s"$label compactionPlanPartitioned") {
-            force(Warehouse.compactionPlanPartitioned(manifest(n),
-              col("file_id"), col("partition"), col("bytes"),
-              targetBytes = 2000L))
-          }
-        }
-      println(s"[probe] compactionPlanPartitioned growth: ${expFit(part)}")
+      println(s"[probe] compactionPlan growth: ${expFit(walls)}")
     }
     if (args.contains("--compaction-law")) {
       compactionLawSection(); spark.stop(); return

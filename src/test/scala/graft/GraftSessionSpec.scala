@@ -7,8 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guards on the main sources. GraftSession is the only session
   * builder, so no tool or entry point can drift from the bench's config
-  * again; MemoryReplay's runner is the only memory sink, and the streaming
-  * package keeps no mutable slots a second run in the same JVM could read.
+  * again; MemoryReplay's runner is the only memory sink, the streaming
+  * package keeps no mutable slots a second run in the same JVM could read,
+  * and TableLog's manifest commit is the only way a table file is rewritten
+  * (no directory swap, no dynamic partition overwrite).
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -31,5 +33,10 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(sinks == Seq("MemoryReplay.scala" -> 1), s"memory sinks: $sinks")
     val slots = hits("graft/streaming", """@volatile\s+var\b""")
     assert(slots.isEmpty, s"mutable slots in graft.streaming: $slots")
+  }
+
+  test("no renameTo or partitionOverwriteMode in src/main/scala") {
+    val found = hits("", """renameTo|partitionOverwriteMode""")
+    assert(found.isEmpty, s"in-place table rewrites: $found")
   }
 }

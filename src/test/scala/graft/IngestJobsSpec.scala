@@ -177,31 +177,6 @@ class IngestJobsSpec extends AnyFunSuite {
     assert(got.sameElements(want))
   }
 
-  test("appendBatchIdempotent: replaying a batch id overwrites, never duplicates") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("graft_idem").resolve("t").toString
-    val b0 = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    val b1 = Seq((3L, "c")).toDF("id", "s")
-    IngestJobs.appendBatchIdempotent(b0, 0L, dir)
-    IngestJobs.appendBatchIdempotent(b1, 1L, dir)
-    // crash-replay of epoch 1 — same id, same data
-    IngestJobs.appendBatchIdempotent(b1, 1L, dir)
-    val got = spark.read.parquet(dir)
-    assert(got.count() == 3, "replayed batch must overwrite its own partition")
-    assert(got.select(col("id")).collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L))
-    // the streaming writer wires the same primitive per micro-batch
-    val inDir = Files.createTempDirectory("graft_idem_in")
-    val wh = Files.createTempDirectory("graft_idem_wh").toString
-    val ckpt = Files.createTempDirectory("graft_idem_ck").toString
-    Seq((10L, "x")).toDF("id", "s").coalesce(1).write.json(inDir.resolve("d").toString)
-    val stream = spark.readStream
-      .schema(org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, s STRING"))
-      .json(inDir.resolve("d").toString)
-    val q = IngestJobs.writeTableIdempotent(stream, "tbl", wh, ckpt)
-    try q.processAllAvailable() finally q.stop()
-    assert(spark.read.parquet(s"$wh/tbl").count() == 1)
-  }
-
   /** Kill-and-restart of the PnL dual sink over the sf0.001 events: `first`
     * writes half of them into a checkpoint and dies, then
     * [[StreamingOps.writePnlAndExposure]] resumes it over the other half.

@@ -25,29 +25,30 @@ class StreamingSpec extends AnyFunSuite {
   test("latestPerGroupStream snapshot equals the batch DISTINCT ON over all batches") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val root = java.nio.file.Files.createTempDirectory("graft_latest")
-    val outDir = root.resolve("snapshot").toString
-    val ckpt = root.resolve("ckpt").toString
     val input = MemoryStream[MarketEvent]
     val latest = StreamingOps.latestPerGroupStream[String, MarketEvent](
       input.toDS(), _.hub, e => (e.ts.getTime, e.seq))
-    val q = StreamingOps.writeLatestSnapshot(latest, Seq("hub"), outDir, ckpt)
+    // Update mode emits each touched hub's new latest row; folding the
+    // batches into a hub -> seq map is the current snapshot
+    val snapshot = scala.collection.concurrent.TrieMap.empty[String, Long]
+    val q = latest.writeStream.outputMode(OutputMode.Update())
+      .foreachBatch { (batch: Dataset[MarketEvent], _: Long) =>
+        batch.collect().foreach(e => snapshot.put(e.hub, e.seq)); ()
+      }
+      .start()
     try {
       val n = marketEvents.size
       marketEvents.grouped(math.max(1, n / 3 + 1)).foreach { chunk =>
         input.addData(chunk)
         q.processAllAvailable()
       }
-      // the snapshot dir holds exactly the latest event per hub, every batch
-      // folded in — identical to the batch window over the full tape
-      val got = spark.read.parquet(outDir)
-        .select(col("seq"), col("hub")).collect()
-        .map(r => r.getAs[String]("hub") -> r.getAs[Long]("seq")).toMap
+      // exactly the latest event per hub, every batch folded in —
+      // identical to the batch window over the full tape
       val want = graft.operators.LatestPerGroup.latest(
           marketEvents.toDF(), Seq(col("hub")), Seq(col("ts"), col("seq")))
         .select(col("seq"), col("hub")).collect()
         .map(r => r.getAs[String]("hub") -> r.getAs[Long]("seq")).toMap
-      assert(got.nonEmpty && got == want)
+      assert(snapshot.nonEmpty && snapshot.toMap == want)
     } finally q.stop()
   }
 

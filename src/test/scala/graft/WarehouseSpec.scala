@@ -5,147 +5,29 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.Warehouse
 
-/** Bucketed tables must (a) produce identical join results and (b) remove
-  * every Exchange from the equi-join plan — the co-located join that makes
-  * repeated big joins shuffle-free at scale.
+/** Warehouse's pure-DataFrame pieces (the compaction planner, the CDC
+  * merge), TableLog's commit-log maintenance (compaction, vacuum, deletes,
+  * the exactly-once stream sink) and the q138/q139 layout plans.
   */
 class WarehouseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  test("bucketed orders ⋈ customer joins with zero exchanges, same result") {
-    val orders = Tables.load(spark, dir, "orders")
-      .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    val customer = Tables.load(spark, dir, "customer")
-      .select(col("c_custkey"), col("c_name"))
-    Warehouse.writeBucketed(orders, "wh_orders", "o_custkey", 8)
-    Warehouse.writeBucketed(customer.withColumnRenamed("c_custkey", "o_custkey"),
-      "wh_customer", "o_custkey", 8)
-    try {
-      val a = Warehouse.read(spark, "wh_orders")
-      val b = Warehouse.read(spark, "wh_customer")
-      // AQE would broadcast this small side and hide the bucketing effect;
-      // merge-join hint keeps the plan in sort-merge so the assertion is on
-      // the bucket co-location itself
-      val joined = a.hint("merge").join(b, Seq("o_custkey"))
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must have no shuffle, got:\n$plan")
-      val viaBuckets = joined.groupBy(col("c_name")).agg(sum(col("o_totalprice")).as("s"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val naive = orders.join(customer, orders("o_custkey") === customer("c_custkey"))
-        .groupBy(col("c_name")).agg(sum(col("o_totalprice")).as("s"))
-        .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-      assert(viaBuckets.nonEmpty && viaBuckets == naive)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS wh_orders")
-      spark.sql("DROP TABLE IF EXISTS wh_customer")
-    }
-  }
-
-  test("partitioned table prunes directories at the scan for partition-key filters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString + "/events"
-    val events = Tables.events(spark, "/root/testdata/sf0.001")
-    Warehouse.writePartitioned(events, dir, Seq("event_type"))
-    val q = spark.read.parquet(dir).filter(col("event_type") === "click")
-    val scan = q.queryExecution.executedPlan.toString
-      .linesIterator.find(_.contains("PartitionFilters")).getOrElse("")
-    assert(scan.contains("event_type"),
-      s"partition-key filter must reach PartitionFilters, got: $scan")
-    // pruning must not change results vs the unpartitioned read
-    assert(q.count() == events.filter(col("event_type") === "click").count())
-    // and a partition column round-trips (moved to directory, read back)
-    assert(q.columns.contains("event_type"))
-  }
-
-  test("z-ordered compaction: 2-d box predicates skip most files on footer stats") {
+  test("compactionPlan: keeps >= target, dense bins under 2x target, exact bin count") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_zorder").toString
-    val path = s"$root/grid"
-    // 40k rows on a 200x200 grid, written in shuffled (locality-free) order
-    val grid = (0 until 40000).map { i => (i.toLong, (i % 200).toLong, (i / 200).toDouble) }
-    scala.util.Random.shuffle(grid).toDF("id", "x", "y")
-      .repartition(16).write.mode("overwrite").parquet(path)
-    val want = spark.read.parquet(path).collect().map(_.toString).sorted
-    Warehouse.compactZOrdered(spark, path, "x", "y", targetBytes = 16L << 10)
-    val got = spark.read.parquet(path).collect().map(_.toString).sorted
-    assert(got.sameElements(want), "z-order compaction must not change the data")
-    // per-file footer-equivalent ranges on BOTH dimensions
-    val perFile = spark.read.parquet(path)
-      .select(input_file_name().as("f"), col("x"), col("y"))
-      .groupBy(col("f")).agg(
-        min(col("x")).as("xlo"), max(col("x")).as("xhi"),
-        min(col("y")).as("ylo"), max(col("y")).as("yhi"))
-      .collect()
-    assert(perFile.length >= 8, s"need several files, got ${perFile.length}")
-    // a small 2-d box (10% of each axis): most files' min/max boxes miss it
-    val hit = perFile.count { r =>
-      !(r.getAs[Long]("xhi") < 60L || r.getAs[Long]("xlo") > 80L ||
-        r.getAs[Double]("yhi") < 60.0 || r.getAs[Double]("ylo") > 80.0)
-    }
-    assert(hit <= perFile.length / 2,
-      s"z-clustering must localize a 2-d box: $hit of ${perFile.length} files intersect")
-  }
-
-  test("compact collapses a fragmented sink directory without changing data") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_compact").toString
-    val path = s"$root/events_sink"
-    // simulate 5 micro-batch appends x 20 tasks = 100 tiny files
-    val df = Tables.events(spark, dir).select(col("event_id"), col("user_id"), col("value"))
-    (0 until 5).foreach(_ => df.repartition(20).write.mode("append").parquet(path))
-    def parquetFiles() = Option(new java.io.File(path).listFiles())
-      .get.count(_.getName.endsWith(".parquet"))
-    val before = parquetFiles()
-    assert(before >= 100, s"fixture must be fragmented, got $before files")
-    val want = spark.read.parquet(path).collect().map(_.toString).sorted
-    Warehouse.compact(spark, path, targetBytes = 64L << 20)
-    val afterFiles = parquetFiles()
-    assert(afterFiles < before / 10, s"compaction must collapse files: $before -> $afterFiles")
-    val got = spark.read.parquet(path).collect().map(_.toString).sorted
-    assert(got.sameElements(want), "compaction must not change the data")
-    // range-clustered variant: files carry tight, non-overlapping event_id
-    // ranges so footer min/max stats skip files on point/range filters
-    Warehouse.compact(spark, path, targetBytes = 1L << 18, sortCol = Some("event_id"))
-    val got2 = spark.read.parquet(path).collect().map(_.toString).sorted
-    assert(got2.sameElements(want), "range compaction must not change the data")
-    val perFile = spark.read.parquet(path)
-      .select(col("event_id"), input_file_name().as("f"))
-      .groupBy(col("f")).agg(min(col("event_id")).as("lo"), max(col("event_id")).as("hi"))
-      .collect().map(r => (r.getAs[Long]("lo"), r.getAs[Long]("hi"))).sortBy(_._1)
-    if (perFile.length > 1) {
-      perFile.sliding(2).foreach { case Array((_, hi1), (lo2, _)) =>
-        assert(hi1 <= lo2, s"file ranges must not overlap: $hi1 vs $lo2")
-      }
-    }
-  }
-
-  test("compaction plan + execution over real parquet footers") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cplan").toString
-    val path = s"$root/docs_sink"
-    val docs = Tables.load(spark, dir, "documents")
-    // 24 small files plus one coalesced large one appended after — the
-    // mixed manifest a real micro-batch sink accumulates
-    docs.repartition(24).write.mode("overwrite").parquet(path)
-    docs.union(docs).union(docs).coalesce(1).write.mode("append").parquet(path)
-    val manifest = Warehouse.fileManifest(spark, path)
-    val files = manifest.collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-    assert(files.length >= 25)
-    assert(files.forall(_._2 == ""), "flat layout must manifest as partition ''")
-    val sizes = files.map(_._4)
-    // target between the small-file and big-file footer sizes
-    val target = sizes.max / 2
-    assert(sizes.count(_ >= target) >= 1 && sizes.count(_ < target) >= 24,
-      s"fixture must have both keeps and rewrites at target=$target: ${sizes.sorted.toSeq}")
-    val outPath = s"$root/compacted"
-    val plan = Warehouse.compactByPlan(spark, path, target, outPath)
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getString(3), r.getLong(4)))
-    // plan shape: every file decided once; keeps are exactly the >= target
-    // ones; rewrite bins dense from 0; no bin over 2x target
-    assert(plan.length == files.length)
-    assert(plan.filter(_._3 == "keep").map(_._1).toSet ==
-      files.filter(_._4 >= target).map(_._1).toSet)
+    val target = 2000L
+    // hash-scattered sizes around the target: keeps and rewrites both hit
+    val files = (0L until 500L).map(i => (i, (i * 2654435761L % 4096L) + 1L))
+    val plan = Warehouse.compactionPlan(files.toDF("file_id", "bytes"),
+        col("file_id"), col("bytes"), target)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+    // every file decided once; keeps are exactly the >= target ones
+    assert(plan.map(_._1).sorted.toSeq == files.map(_._1))
+    val keeps = files.filter(_._2 >= target).map(_._1).toSet
+    assert(keeps.nonEmpty && keeps.size < files.size,
+      "fixture must have both keeps and rewrites")
+    assert(plan.filter(_._3 == "keep").map(_._1).toSet == keeps)
+    // rewrite bins dense from 0; no bin over 2x target
     val bins = plan.filter(_._3 == "rewrite").groupBy(_._4)
       .map { case (b, fs) => (b, fs.map(_._2).sum) }
     assert(bins.keySet == (0L until bins.size).toSet, s"bins not dense: ${bins.keySet}")
@@ -153,164 +35,10 @@ class WarehouseSpec extends AnyFunSuite {
       s"bin over 2x target: ${bins.values.max} vs $target")
     // exact bin-count law: floor((sum - last_file_bytes)/target) + 1 — NOT
     // floor(sum/target)+1, which is off by one when sum is an exact
-    // multiple of target (footer sizes are measured, not controlled)
-    val small = files.filter(_._4 < target).sortBy(_._1)
-    val maxExcl = small.map(_._4).sum - small.last._4
+    // multiple of target
+    val small = files.filter(_._2 < target)
+    val maxExcl = small.map(_._2).sum - small.last._2
     assert(bins.size == maxExcl / target + 1)
-    // execution: a UNIFORM flat layout — one compacted-<bin>.parquet per
-    // bin next to the kept files, readable as ONE parquet table
-    val outFiles = Option(new java.io.File(outPath).listFiles()).get
-      .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-    val compacted = outFiles.filter(_.getName.startsWith("compacted-"))
-    assert(compacted.length == bins.size,
-      s"one file per bin: ${compacted.length} vs ${bins.size}")
-    assert(compacted.forall(_.length() > 0))
-    assert(outFiles.length - compacted.length == plan.count(_._3 == "keep"))
-    val want = spark.read.parquet(path).collect().map(_.toString).sorted
-    val got = spark.read.parquet(outPath).collect().map(_.toString).sorted
-    assert(got.sameElements(want), "compaction must preserve data, one-table read")
-  }
-
-  test("partitioned compaction: bins scoped per partition, layout preserved") {
-    val root = java.nio.file.Files.createTempDirectory("graft_cpart").toString
-    val path = s"$root/docs_part"
-    val docs = Tables.load(spark, dir, "documents")
-    // hive-partitioned micro-batch-sink shape: many small files per
-    // source=... dir, plus one pre-coalesced big file in src0
-    docs.repartition(8).write.partitionBy("source")
-      .mode("overwrite").parquet(path)
-    docs.filter(col("source") === "src0").union(
-        docs.filter(col("source") === "src0"))
-      .coalesce(1).write.partitionBy("source").mode("append").parquet(path)
-    val manifest = Warehouse.fileManifest(spark, path)
-    val rows = manifest.collect().map(r =>
-      (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
-    assert(rows.nonEmpty, "recursive manifest must see partitioned leaves")
-    assert(rows.forall(_._2.startsWith("source=")),
-      s"partition col must be the relative dir: ${rows.take(3).toSeq}")
-    val target = rows.map(_._4).max / 2
-    val outPath = s"$root/compacted"
-    val plan = Warehouse.compactByPlan(spark, path, target, outPath)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(3), r.getLong(4)))
-    // bins dense from 0 WITHIN each partition — never shared across
-    plan.filter(_._3 == "rewrite").groupBy(_._2).foreach { case (p, fs) =>
-      val bs = fs.map(_._4).toSet
-      assert(bs == (0L until bs.size).toSet, s"$p bins not dense: $bs")
-    }
-    // layout preserved: same partition dirs, compacted files inside them
-    val parts = rows.map(_._2).distinct.sorted
-    parts.foreach { p =>
-      val d = new java.io.File(s"$outPath/$p")
-      assert(d.isDirectory, s"partition dir $p must survive compaction")
-      assert(d.listFiles().exists(_.getName.endsWith(".parquet")))
-    }
-    // one-table read, hive partition column intact, data preserved
-    val want = spark.read.parquet(path).collect().map(_.toString).sorted
-    val got = spark.read.parquet(outPath).collect().map(_.toString).sorted
-    assert(got.sameElements(want), "partitioned compaction must preserve data")
-  }
-
-  test("repeated compaction cycles: prior compacted keeps never alias new bins") {
-    // cycle 1 output holds compacted-* files; cycle 2 sees them as KEEPS
-    // next to freshly ingested small files — the keep copy must not
-    // clobber (or be clobbered by) cycle 2's bin files (review finding:
-    // the pre-fix naming lost a whole bin silently on this exact path)
-    val root = java.nio.file.Files.createTempDirectory("graft_ccycle").toString
-    val docs = Tables.load(spark, dir, "documents")
-    docs.repartition(12).write.mode("overwrite").parquet(s"$root/gen0")
-    val target = Warehouse.fileManifest(spark, s"$root/gen0")
-      .agg(max(col("bytes"))).head().getLong(0) * 6 // all small -> bins
-    Warehouse.compactByPlan(spark, s"$root/gen0", target, s"$root/gen1")
-    // new micro-batch appends land next to the compacted keeps
-    docs.limit(100).repartition(8).write.mode("append").parquet(s"$root/gen1")
-    val want = spark.read.parquet(s"$root/gen1").count()
-    // cycle-2 target sized so the prior compacted files are KEEPS and the
-    // appended micro-batch files are rewrites — the collision regime
-    val gen1 = Warehouse.fileManifest(spark, s"$root/gen1").collect()
-      .map(r => (r.getString(2), r.getLong(3)))
-    val target2 = gen1.filter(_._1.startsWith("compacted-")).map(_._2).min
-    assert(gen1.filter(!_._1.startsWith("compacted-")).forall(_._2 < target2),
-      "appended files must be small enough to rewrite")
-    val plan2 = Warehouse.compactByPlan(spark, s"$root/gen1", target2,
-      s"$root/gen2").collect()
-    assert(plan2.exists(_.getString(3) == "keep") &&
-      plan2.exists(_.getString(3) == "rewrite"), "both actions must occur")
-    val got = spark.read.parquet(s"$root/gen2").count()
-    assert(got == want, s"second cycle lost rows: $got vs $want")
-  }
-
-  test("fileManifest excludes hidden/temp dirs — crashed-write data never resurrects") {
-    // a crashed Spark write leaves _temporary/<attempt>/ task files that
-    // spark.read ignores; the recursive manifest must ignore them the same
-    // way or compactByPlan copies uncommitted (duplicate) task data into
-    // its output (round-13 advice, medium)
-    val root = java.nio.file.Files.createTempDirectory("graft_hidden").toString
-    val path = s"$root/t"
-    val docs = Tables.load(spark, dir, "documents")
-    docs.repartition(4).write.mode("overwrite").parquet(path)
-    val real = Warehouse.fileManifest(spark, path).count()
-    // plant a crashed write's _temporary leaf, a stale staging dir and a
-    // dot-dir, each holding a REAL parquet file (copied from the table)
-    val aPart = new java.io.File(path).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    for (d <- Seq("_temporary/0/attempt_1/", "__compact_staging/__bin=0/",
-        ".hidden/")) {
-      val dd = new java.io.File(s"$path/$d"); dd.mkdirs()
-      java.nio.file.Files.copy(aPart.toPath,
-        new java.io.File(dd, "part-phantom.parquet").toPath)
-    }
-    // and a dot-FILE next to the real parts
-    java.nio.file.Files.copy(aPart.toPath,
-      new java.io.File(s"$path/.part-crc-like.parquet").toPath)
-    val m = Warehouse.fileManifest(spark, path)
-    assert(m.count() == real, "hidden/temp files must not be manifested")
-    assert(m.collect().forall(r => !r.getString(2).contains("phantom")))
-    // end-to-end: compaction over the poisoned dir equals spark.read
-    val out = s"$root/out"
-    Warehouse.compactByPlan(spark, path, 1L << 30, out)
-    assert(spark.read.parquet(out).count() == spark.read.parquet(path).count(),
-      "compaction must carry exactly the committed rows")
-  }
-
-  test("compactByPlan survives bins that legally write multiple files") {
-    // spark.sql.files.maxRecordsPerFile makes a single-bin task write 2+
-    // parquet files — a valid rewrite that the pre-fix arity require failed
-    // AFTER the job ran (round-13 advice, low)
-    val root = java.nio.file.Files.createTempDirectory("graft_multi").toString
-    val path = s"$root/t"
-    val docs = Tables.load(spark, dir, "documents")
-    docs.repartition(8).write.mode("overwrite").parquet(path)
-    val want = spark.read.parquet(path).collect().map(_.toString).sorted
-    val key = "spark.sql.files.maxRecordsPerFile"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "50") // docs is 500 rows -> every bin splits
-    try {
-      val out = s"$root/out"
-      Warehouse.compactByPlan(spark, path, 1L << 30, out) // all files -> one bin
-      val outFiles = new java.io.File(out).listFiles()
-        .filter(f => f.isFile && f.getName.endsWith(".parquet"))
-        .filter(_.getName.startsWith("compacted-"))
-      assert(outFiles.length >= 2,
-        s"fixture must actually split the bin: ${outFiles.length} files")
-      val got = spark.read.parquet(out).collect().map(_.toString).sorted
-      assert(got.sameElements(want), "multi-file bins must preserve data")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
-
-  test("partitioned planner over one partition equals the flat two-pass planner") {
-    import spark.implicits._
-    // hash-scattered sizes around the target: keeps and rewrites both hit
-    val files = (0L until 500L).map(i => (i, (i * 2654435761L % 4096L) + 1L))
-      .toDF("file_id", "bytes")
-    val flat = Warehouse.compactionPlan(files, col("file_id"), col("bytes"),
-        targetBytes = 2000L)
-      .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).sorted
-    val part = Warehouse.compactionPlanPartitioned(
-        files.withColumn("p", lit("")), col("file_id"), col("p"),
-        col("bytes"), targetBytes = 2000L)
-      .collect().map(r => (r.getLong(0), r.getString(3), r.getLong(4))).sorted
-    assert(flat.sameElements(part),
-      "one-partition window form must reproduce the two-pass prefix-sum bins")
   }
 
   test("mergeUpsert: updates win per key, survivors pass through, base never shuffles") {
@@ -335,73 +63,6 @@ class WarehouseSpec extends AnyFunSuite {
     val plan = merged.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoop"),
       s"anti join must broadcast the touched keyset:\n$plan")
-  }
-
-  test("mergeUpsertPartitioned rewrites only touched partitions; epoch replay no-ops") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_merge").toString
-    val basePath = s"$root/state"
-    val base = Seq((1L, "a", 10L, 1L), (2L, "a", 20L, 1L), (3L, "b", 30L, 1L),
-      (5L, "c", 50L, 1L)).toDF("k", "part", "v", "seq")
-    base.write.partitionBy("part").parquet(basePath)
-    def filesOf(p: String): Map[String, (Long, Long)] =
-      Option(new java.io.File(s"$basePath/part=$p").listFiles()).get
-        .filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getName -> (f.length(), f.lastModified())).toMap
-    val bBefore = filesOf("b"); val cBefore = filesOf("c")
-    // updates touch only partition a (update k=2, insert k=7)
-    val updates = Seq((2L, "a", 99L, 2L), (7L, "a", 70L, 2L))
-      .toDF("k", "part", "v", "seq")
-    Warehouse.mergeUpsertBatch(updates, 0L, basePath, Seq("k"), "seq", "part",
-      s"$root/ledger")
-    // untouched partitions byte-identical (same files, sizes, mtimes)
-    assert(filesOf("b") == bBefore, "partition b must not be rewritten")
-    assert(filesOf("c") == cBefore, "partition c must not be rewritten")
-    val got = spark.read.parquet(basePath)
-      .select(col("k"), col("v"), col("seq")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(got.toSeq == Seq((1L, 10L, 1L), (2L, 99L, 2L), (3L, 30L, 1L),
-      (5L, 50L, 1L), (7L, 70L, 2L)))
-    // epoch replay: same batchId no-ops (ledger marker), nothing changes
-    val aAfter = filesOf("a")
-    Warehouse.mergeUpsertBatch(updates, 0L, basePath, Seq("k"), "seq", "part",
-      s"$root/ledger")
-    assert(filesOf("a") == aAfter, "replayed epoch must no-op on the ledger")
-    // a NEW epoch with the same content is idempotent by merge semantics
-    Warehouse.mergeUpsertBatch(updates, 1L, basePath, Seq("k"), "seq", "part",
-      s"$root/ledger")
-    val got2 = spark.read.parquet(basePath)
-      .select(col("k"), col("v"), col("seq")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(got2.toSeq == got.toSeq, "re-merging the same updates must converge")
-  }
-
-  test("mergeUpsertStream: micro-batched updates maintain the base table end-to-end") {
-    import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_mstream").toString
-    val basePath = s"$root/state"
-    Seq((1L, "a", 10L, 1L), (2L, "b", 20L, 1L))
-      .toDF("k", "part", "v", "seq").write.partitionBy("part").parquet(basePath)
-    implicit val sq = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[(Long, String, Long, Long)]
-    val q = graft.sources.Warehouse.mergeUpsertStream(
-      mem.toDF().toDF("k", "part", "v", "seq"), basePath, Seq("k"), "seq",
-      "part", s"$root/ckpt", s"$root/ledger")
-    try {
-      mem.addData((1L, "a", 11L, 2L)) // update k=1
-      q.processAllAvailable()
-      mem.addData((3L, "c", 30L, 2L)) // insert new key, new partition
-      q.processAllAvailable()
-    } finally q.stop()
-    val got = spark.read.parquet(basePath)
-      .select(col("k"), col("v"), col("seq")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(got.toSeq == Seq((1L, 11L, 2L), (2L, 20L, 1L), (3L, 30L, 2L)))
-    // one ledger marker per committed epoch
-    val markers = Option(new java.io.File(s"$root/ledger").listFiles())
-      .get.map(_.getName).filter(_.startsWith("epoch-")).sorted
-    assert(markers.length == 2, s"epoch markers: ${markers.toSeq}")
   }
 
   test("TableLog: rename-is-the-commit, stray tmp ignored, CAS loser throws") {

@@ -41,6 +41,52 @@ class WarehouseSpec extends AnyFunSuite {
     assert(bins.size == maxExcl / target + 1)
   }
 
+  test("compaction plan + execution over real parquet footers") {
+    import graft.sources.TableLog
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_cplan").toString
+    val docs = Tables.load(spark, dir, "documents")
+    // 24 small files plus one coalesced large one appended after — the
+    // mixed manifest a real micro-batch sink accumulates
+    TableLog.overwrite(docs.repartition(24), root)
+    TableLog.append(docs.union(docs).union(docs).coalesce(1), root)
+    val before = TableLog.manifest(spark, root)
+    val files = before.zipWithIndex.map { case (p, i) =>
+      (i.toLong, new java.io.File(s"$root/$p").length()) }
+    assert(files.length >= 25)
+    val sizes = files.map(_._2)
+    // target between the small-file and big-file footer sizes
+    val target = sizes.max / 2
+    assert(sizes.count(_ >= target) >= 1 && sizes.count(_ < target) >= 24,
+      s"fixture must have both keeps and rewrites at target=$target: ${sizes.sorted}")
+    val plan = Warehouse.compactionPlan(files.toDF("file_id", "bytes"),
+        col("file_id"), col("bytes"), target)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+    // plan shape on measured sizes: every file decided once; keeps are
+    // exactly the >= target ones; rewrite bins dense from 0, under 2x target
+    assert(plan.map(_._1).sorted.toSeq == files.map(_._1))
+    assert(plan.filter(_._3 == "keep").map(_._1).toSet ==
+      files.filter(_._2 >= target).map(_._1).toSet)
+    val bins = plan.filter(_._3 == "rewrite").groupBy(_._4)
+      .map { case (b, fs) => (b, fs.map(_._2).sum) }
+    assert(bins.keySet == (0L until bins.size).toSet, s"bins not dense: ${bins.keySet}")
+    assert(bins.values.forall(_ < 2 * target),
+      s"bin over 2x target: ${bins.values.max} vs $target")
+    // execution: TableLog.compact at the same target references exactly the
+    // plan's keeps and retires every file the plan rewrites
+    val want = TableLog.read(spark, root).collect().map(_.toString).sorted
+    val v = TableLog.compact(spark, root, target)
+    val after = TableLog.manifest(spark, root, Some(v)).toSet
+    val decided = plan.map(r => before(r._1.toInt) -> r._3).toMap
+    assert(decided.collect { case (p, "keep") => p }.forall(after.contains),
+      "planned keeps must stay referenced")
+    assert(!decided.collect { case (p, "rewrite") => p }.exists(after.contains),
+      "planned rewrites must leave the head")
+    assert(after.size < before.size, s"compaction must shrink: ${before.size} -> ${after.size}")
+    val got = TableLog.read(spark, root).collect().map(_.toString).sorted
+    assert(got.sameElements(want), "compaction must preserve data")
+  }
+
   test("mergeUpsert: updates win per key, survivors pass through, base never shuffles") {
     import spark.implicits._
     val base = Seq((1L, "a", 10L, 1L), (2L, "a", 20L, 1L), (3L, "b", 30L, 1L))

@@ -32,12 +32,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // manifest) as the manifest-committing command — runs after the
     // session's own post-hoc rules, so the command to intercept exists
     ext.injectPostHocResolutionRule(_ => graft.sources.GraftLogInsertRewrite)
-    // inline-eligible DELETION-VECTOR snapshots stay native: the relation
-    // carries the run-set marker, this rule expands it into the scan-side
-    // graft_dv_live filter at optimization (the RDD[Row] fallback remains
-    // only for over-cap vectors and extension-less sessions); see the
-    // rule's scaladoc for why optimization-time, not resolution-time
-    ext.injectOptimizerRule(_ => graft.sources.GraftLogDvRewrite)
+    // a format("graftlog") snapshot with deletion vectors or renamed
+    // columns carries TableLog's read step on its index; this rule expands
+    // it into that read at optimization (see the rule's scaladoc for why
+    // optimization-time, not resolution-time)
+    ext.injectOptimizerRule(_ => graft.sources.GraftLogReadRewrite)
   }
 }
 

@@ -3,17 +3,14 @@ package graft.sources
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, PlanExpression, Predicate}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.Internals
-import org.apache.spark.sql.sources
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, StreamSourceProvider}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, RelationProvider, StreamSourceProvider}
 import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -52,28 +49,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * incremental consumption via `spark.readStream.format("graftlog")` —
   * [[GraftLogSource]], the versions-as-offsets micro-batch source that
   * retired the driver-side MemoryStream bridge.
+  *
+  * A snapshot with DELETION VECTORS or a COLUMN MAPPING is still this one
+  * relation, exposing the logical table schema, but its index carries the
+  * snapshot's [[TableLog.EntryRead]] as `read`: [[GraftLogReadRewrite]]
+  * replaces every occurrence of such a relation with the read that
+  * [[TableLog]] plans for it, and the index refuses to list files for a
+  * session that never ran the rule.
   */
-/** The DELETION-VECTOR literal triple an inline-eligible snapshot ships to
-  * its scan filter: sorted file keys, per-file run-pair offsets, flat
-  * [start, endExclusive) row-index runs — [[graft.functions.DvLive]]'s
-  * argument shape.
-  */
-private[graft] final case class DvSpec(files: Array[String],
-  offsets: Array[Long], runs: Array[Long])
-
 private[graft] class GraftLogFileIndex(
-    spark: SparkSession, val root: String, entries: Seq[TableLog.Entry],
-    dataSchema: StructType, override val partitionSchema: StructType,
-    val pendingDv: Option[DvSpec] = None)
+    spark: SparkSession, val root: String, val entries: Seq[TableLog.Entry],
+    override val partitionSchema: StructType,
+    val read: Option[TableLog.EntryRead] = None)
   extends FileIndex {
-
-  /** The same index with the DV marker CONSUMED — what
-    * [[GraftLogDvRewrite]] substitutes once it has injected the run filter
-    * (the marker must not survive or the rewrite would never reach a fixed
-    * point).
-    */
-  def withoutDv: GraftLogFileIndex =
-    new GraftLogFileIndex(spark, root, entries, dataSchema, partitionSchema)
 
   private val hadoopConf = spark.sessionState.newHadoopConf()
   private val rootPath = {
@@ -116,10 +104,16 @@ private[graft] class GraftLogFileIndex(
   }
 
   override def listFiles(partitionFilters: Seq[Expression],
-      dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+    if (read.nonEmpty) throw new UnsupportedOperationException(
+      s"the graftlog snapshot at $root has deletion vectors or renamed " +
+        "columns, which a bare file scan would ignore: install " +
+        "graft.GraftExtensions (spark.sql.extensions) so the read plans " +
+        "through TableLog, or read it with TableLog.read")
     select(partitionFilters, dataFilters).collect {
       case (row, es) if es.nonEmpty => PartitionDirectory(row, es.map(_._2).toArray)
     }
+  }
 
   /** The groups, and within them the files, a scan with this filter split
     * can touch. Partition filters evaluate against the typed partition row;
@@ -225,17 +219,17 @@ private[graft] object GraftLog {
 
   /** The one-relation read over an entry subset: partition schema split
     * from the table schema by `partCols`, manifest-fed index, native
-    * parquet format — Catalyst sees exactly a parquet table.
+    * parquet format — Catalyst sees exactly a parquet table. `read` marks
+    * a relation that stands for more than its files (see
+    * [[GraftLogReadRewrite]]).
     */
   def relation(spark: SparkSession, root: String,
       entries: Seq[TableLog.Entry], tableSchema: StructType,
-      partCols: Seq[String], pendingDv: Option[DvSpec] = None)
+      partCols: Seq[String], read: Option[TableLog.EntryRead] = None)
       : HadoopFsRelation = {
     val partitionSchema = StructType(partCols.map(c =>
       tableSchema.find(_.name == c).getOrElse(StructField(c, StringType))))
-    val index = new GraftLogFileIndex(spark, root, entries,
-      StructType(tableSchema.filterNot(f => partCols.contains(f.name))),
-      partitionSchema, pendingDv)
+    val index = new GraftLogFileIndex(spark, root, entries, partitionSchema, read)
     // dataSchema is the FULL table schema: partition columns ride as
     // OVERLAPPED partition columns (HadoopFsRelation serves them from the
     // partition values, and the planner never asks the files for them), so
@@ -246,15 +240,12 @@ private[graft] object GraftLog {
   }
 
   /** The batch relation `format("graftlog")` serves: the snapshot at
-    * `version` (default head) as a [[HadoopFsRelation]]. A snapshot
-    * carrying DELETION VECTORS stays NATIVE when the sidecars fit the
-    * inline bound and [[GraftLogDvRewrite]] is installed: the relation
-    * ships the run-set triple on its index, and the rewrite injects the
-    * scan-side `graft_dv_live` filter at analysis — file scan, pruning and
-    * codegen all engage exactly as on a DV-free snapshot (round 16; this
-    * retired the RDD[Row] seam for the common case). Only snapshots whose
-    * vectors exceed the inline caps — or sessions without the extensions
-    * rule — fall back to [[GraftLogDvRelation]]'s anti-join.
+    * `version` (default head) as a [[HadoopFsRelation]] over the logical
+    * table schema, its entries pinned at load. A snapshot with deletion
+    * vectors or a column mapping carries its [[TableLog.EntryRead]],
+    * decided here once (vectors' runs collected when they fit inline), for
+    * [[GraftLogReadRewrite]] to expand; a plain snapshot is the bare
+    * relation.
     */
   def batchRelation(spark: SparkSession, root: String,
       version: Option[Long]): BaseRelation = {
@@ -263,168 +254,55 @@ private[graft] object GraftLog {
     // analysis), so the delta chain replays exactly once
     val st = TableLog.state(spark, root, version)
     val schema = TableLog.tableSchemaFor(spark, root, st.entries, st.schemaJson)
-    val dvPaths = st.entries.flatMap(_.dvs).distinct
-    def dvRewriteActive: Boolean =
-      try spark.sessionState.optimizer.extendedOperatorOptimizationRules
-        .exists(_ eq GraftLogDvRewrite)
-      catch { case NonFatal(_) => false }
-    if (TableLog.colmapOf(st).nonEmpty)
-      // COLUMN-MAPPED snapshot: the files carry physical names while the
-      // relation must expose logical ones — a V1 relation cannot project,
-      // so serve the full aliased read pipeline behind the fallback
-      // (renames are metadata-rare; TableLog.read and the graft_log TVF
-      // stay fully native via one alias projection)
-      new GraftLogDvRelation(spark, root, version.orElse(Some(st.version)),
-        schema)
-    else if (dvPaths.isEmpty)
-      relation(spark, root, st.entries, schema,
-        TableLog.partColsOf(st).filter(schema.fieldNames.contains))
-    else if (dvRewriteActive && !schema.fieldNames.contains("_metadata") &&
-        TableLog.dvInlineEligible(spark, root, dvPaths)) {
-      val (files, offsets, runs) = TableLog.collectDvRuns(spark, root, dvPaths)
-      relation(spark, root, st.entries, schema,
-        TableLog.partColsOf(st).filter(schema.fieldNames.contains),
-        pendingDv = Some(DvSpec(files, offsets, runs)))
-    } else
-      // PIN the snapshot: buildScan must read the version this relation was
-      // planned against, never a re-resolved head — two actions on one
-      // DataFrame (or a self-join) over a mutating table would otherwise
-      // read different versions, and the schema computed here could diverge
-      // from the data scanned (the DV-free path pins entries at load).
-      new GraftLogDvRelation(spark, root, version.orElse(Some(st.version)), schema)
+    val read = TableLog.entryRead(spark, root, st.entries, TableLog.colmapOf(st))
+    relation(spark, root, st.entries, schema,
+      TableLog.partColsOf(st).filter(schema.fieldNames.contains),
+      Some(read).filterNot(_.isPlain))
   }
 }
 
-/** OPTIMIZER rule (injected via [[graft.GraftExtensions]]) that turns a
-  * DV-marked native graftlog relation into the filtered read it stands
-  * for: `Project(table cols, Filter(graft_dv_live(file_key, row_index,
-  * <run literals>), relation + _metadata))`. The relation itself cannot
-  * carry a row filter (V1 relations only *produce* rows), so the marker
-  * rides on [[GraftLogFileIndex.pendingDv]] and this rule expands it at
-  * the start of operator optimization — after which filter pushdown,
-  * partition pruning and whole-stage codegen around the scan all see the
-  * same shape as a hand-written `.filter` over metadata columns, the
-  * exact plan [[TableLog.read]] builds for inline-eligible snapshots.
+/** OPTIMIZER rule (injected via [[graft.GraftExtensions]]) that replaces
+  * each graftlog relation whose index carries a [[TableLog.EntryRead]]
+  * with the read that step plans: a fresh physical-named relation over the
+  * same pinned entries, through the step's column aliases and
+  * deletion-vector filter or anti-join, aliased back to the relation's own
+  * output attributes. Every occurrence gets its own fresh inner plan, so a
+  * self-join of one loaded frame keeps distinct attribute ids per side.
   *
   * Optimization-time (not resolution-time) is deliberate: the ANALYZED
-  * plan keeps the bare LogicalRelation, so `CREATE TEMPORARY VIEW`
-  * stores an insertable relation (`INSERT INTO` a DV-carrying view works
-  * through the normal command path) and schema surfaces stay the plain
-  * table schema; every execution then expands the marker here. The
-  * marker is consumed in the rewrite (fixed-point safe); the `_metadata`
-  * struct is surfaced through the relation's own metadata output.
+  * plan keeps the bare LogicalRelation, so `CREATE TEMPORARY VIEW` stores
+  * an insertable relation (`INSERT INTO` goes through
+  * [[GraftLogInsertRewrite]] like any graftlog insert) and schema surfaces
+  * stay the plain table schema. The expansion holds no marked relation, so
+  * the rule reaches a fixed point.
   */
-object GraftLogDvRewrite
+object GraftLogReadRewrite
   extends org.apache.spark.sql.catalyst.rules.Rule[
     org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.{ExtractValue, RegExpExtract}
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project}
+  import org.apache.spark.sql.catalyst.expressions.Alias
+  import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
   import org.apache.spark.sql.execution.datasources.LogicalRelation
-  import org.apache.spark.sql.types.{ArrayType, LongType}
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case l: LogicalRelation if pending(l).nonEmpty =>
-      val rel = l.relation.asInstanceOf[HadoopFsRelation]
-      val idx = rel.location.asInstanceOf[GraftLogFileIndex]
-      val spec = idx.pendingDv.get
-      // consume the marker, then surface the _metadata struct the filter
-      // needs through the relation's own metadata output
-      val consumed = l.copy(relation =
-        rel.copy(location = idx.withoutDv)(rel.sparkSession))
-      val withMeta = consumed.withMetadataColumns()
-      val meta = withMeta.output.filterNot(l.outputSet.contains)
-        .find(_.name == "_metadata").getOrElse(
-          throw new IllegalStateException(
-            "graftlog DV rewrite: relation exposed no _metadata column"))
-      val fileKey = RegExpExtract(
-        ExtractValue(meta, Literal("file_path"), conf.resolver),
-        Literal(TableLog.FileKeyRegex), Literal(1))
-      val rowIdx = ExtractValue(meta, Literal("row_index"), conf.resolver)
-      val cond = graft.functions.DvLive(fileKey, rowIdx,
-        Literal.create(spec.files.toSeq, ArrayType(StringType)),
-        Literal.create(spec.offsets.toSeq, ArrayType(LongType)),
-        Literal.create(spec.runs.toSeq, ArrayType(LongType)))
-      Project(l.output, Filter(cond, withMeta))
-  }
-
-  private def pending(l: LogicalRelation): Option[DvSpec] = l.relation match {
-    case r: HadoopFsRelation => r.location match {
-      case i: GraftLogFileIndex => i.pendingDv
-      case _ => None
+    case l: LogicalRelation => l.relation match {
+      case rel @ HadoopFsRelation(idx: GraftLogFileIndex, _, _, _, _, _)
+          if idx.read.nonEmpty =>
+        val spark = rel.sparkSession
+        val step = idx.read.get
+        val phys = GraftLog.relation(spark, idx.root, idx.entries,
+          TableLog.physicalSchema(rel.dataSchema, step.colmap),
+          rel.partitionSchema.fieldNames.toSeq)
+        val read = step.over(spark.baseRelationToDataFrame(phys))
+          .queryExecution.analyzed
+        if (read.output.size != l.output.size)
+          throw new UnsupportedOperationException(
+            s"the graftlog snapshot at ${idx.root} has deletion vectors or " +
+              "renamed columns; its _metadata column is not readable")
+        Project(read.output.zip(l.output).map { case (a, o) =>
+          Alias(a, o.name)(exprId = o.exprId, qualifier = o.qualifier)
+        }, read)
+      case _ => l
     }
-    case _ => None
-  }
-}
-
-/** Fallback relation for snapshots with live DELETION VECTORS: the dead
-  * rows are anti-joined away inside [[TableLog.read]], which cannot be
-  * expressed as a file relation — so the scan is the full read pipeline
-  * behind an RDD boundary. Column pruning and the translatable filters are
-  * pushed INSIDE that pipeline (they reach the parquet scan through
-  * Catalyst); Spark re-applies every filter above the boundary, so partial
-  * translation stays sound. Reads of DV-free snapshots never take this
-  * path, and a compaction (which materializes the vectors) restores the
-  * native relation.
-  */
-private[graft] class GraftLogDvRelation(spark: SparkSession, root: String,
-    version: Option[Long], override val schema: StructType)
-  extends BaseRelation with PrunedFilteredScan
-  with org.apache.spark.sql.sources.InsertableRelation {
-
-  override def sqlContext: SQLContext = spark.sqlContext
-
-  /** `INSERT INTO` over a DV-carrying snapshot: the V1 InsertableRelation
-    * route (the analyzer plans InsertIntoDataSourceCommand for it — no
-    * extension rule needed on this path). Writes go to the HEAD, never the
-    * pinned read version: SQL insert semantics mutate the table.
-    */
-  override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    if (overwrite) TableLog.insertOverwrite(data, root)
-    else TableLog.append(data, root)
-    ()
-  }
-
-  override def buildScan(requiredColumns: Array[String],
-      filters: Array[Filter]): RDD[Row] = {
-    val base = TableLog.read(spark, root, version)
-    val filtered = filters.flatMap(filterToColumn)
-      .foldLeft(base)((df, c) => df.filter(c))
-    filtered.select(requiredColumns.toSeq.map(col): _*).rdd
-  }
-
-  /** Top-level (relaxed) translation: an AND may keep just one translated
-    * side — applying a SUPERSET of the pushed filter is sound because
-    * Spark re-applies every filter above the relation boundary. Anything
-    * under Or/Not goes through [[exactCol]]: negating or disjoining a
-    * PARTIAL translation would apply a predicate the original does not
-    * imply and silently drop matching rows.
-    */
-  private[graft] def filterToColumn(f: Filter): Option[Column] = f match {
-    case sources.And(l, r) =>
-      (filterToColumn(l), filterToColumn(r)) match {
-        case (Some(a), Some(b)) => Some(a && b)
-        case (a, b) => a.orElse(b)
-      }
-    case other => exactCol(other)
-  }
-
-  /** Complete-or-nothing translation — None unless EVERY leaf translated. */
-  private[graft] def exactCol(f: Filter): Option[Column] = f match {
-    case sources.EqualTo(a, v) => Some(col(a) === lit(v))
-    case sources.GreaterThan(a, v) => Some(col(a) > lit(v))
-    case sources.GreaterThanOrEqual(a, v) => Some(col(a) >= lit(v))
-    case sources.LessThan(a, v) => Some(col(a) < lit(v))
-    case sources.LessThanOrEqual(a, v) => Some(col(a) <= lit(v))
-    case sources.In(a, vs) => Some(col(a).isInCollection(vs.toSeq))
-    case sources.IsNull(a) => Some(col(a).isNull)
-    case sources.IsNotNull(a) => Some(col(a).isNotNull)
-    case sources.StringStartsWith(a, v) => Some(col(a).startsWith(v))
-    case sources.StringEndsWith(a, v) => Some(col(a).endsWith(v))
-    case sources.StringContains(a, v) => Some(col(a).contains(v))
-    case sources.And(l, r) => for { a <- exactCol(l); b <- exactCol(r) } yield a && b
-    case sources.Or(l, r) => for { a <- exactCol(l); b <- exactCol(r) } yield a || b
-    case sources.Not(c) => exactCol(c).map(!_)
-    case _ => None
   }
 }
 

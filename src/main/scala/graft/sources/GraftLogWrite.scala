@@ -38,9 +38,8 @@ import org.apache.spark.sql.graft.Internals
   *    [[graft.GraftExtensions]], which runs AFTER the built-in post-hoc
   *    rules) intercepts exactly those commands — recognized by their
   *    [[GraftLogFileIndex]] — and replans them as [[GraftLogInsertCommand]],
-  *    the manifest-committing insert. DV-carrying snapshots read through
-  *    [[GraftLogDvRelation]], which implements InsertableRelation — the
-  *    analyzer routes those inserts natively.
+  *    the manifest-committing insert — every graftlog insert, including
+  *    one into a snapshot with deletion vectors or renamed columns.
   */
 class GraftLogSink(spark: SparkSession, root: String,
     parameters: Map[String, String]) extends Sink {

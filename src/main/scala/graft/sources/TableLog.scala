@@ -1196,64 +1196,135 @@ object TableLog {
       .getOrElse(1L << 21)
 
   /** Exact sidecar position count from parquet footer metadata. */
-  private def dvPositionCount(spark: SparkSession, root: String,
-      dvPaths: Seq[String]): Long = {
+  private def dvPositionCount(spark: SparkSession,
+      sidecars: Seq[String]): Long = {
     val conf = spark.sessionState.newHadoopConf()
-    dvPaths.map { p =>
+    sidecars.map { p =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(s"$root/$p"), conf)
+        new org.apache.hadoop.fs.Path(p), conf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     }.sum
   }
 
-  /** Whether a snapshot's sidecars fit the INLINE representation (the
-    * run-set scan filter): at most [[DvInlineMaxPositionsKey]] positions.
-    * Costs O(#sidecars) driver metadata reads, no job.
+  /** How an entry set of one snapshot reads beyond its bare file
+    * relation, decided ONCE when the read is planned: the column
+    * mapping's physical → logical aliases, and how the deletion vectors
+    * apply — the inline `graft_dv_live` run filter when the sidecars hold
+    * at most [[DvInlineMaxPositionsKey]] positions (their runs are
+    * collected here, one small job), else the anti-join against the
+    * sidecars. [[readEntrySet]] applies it to the frame it builds; a
+    * `format("graftlog")` relation carries it on its [[GraftLogFileIndex]]
+    * and [[GraftLogReadRewrite]] applies it to each occurrence of that
+    * relation at optimization. This is the only code that decides how a
+    * snapshot is read.
     */
-  private[graft] def dvInlineEligible(spark: SparkSession, root: String,
-      dvPaths: Seq[String]): Boolean =
-    dvPositionCount(spark, root, dvPaths) <= dvInlineMaxPositions(spark)
+  private[graft] final class EntryRead private[TableLog] (
+      val colmap: Map[String, String], sidecars: Seq[String],
+      runs: Option[(Array[String], Array[Long], Array[Long])]) {
 
-  /** Collect the sidecars' positions into the [[graft.functions.DvLive]]
-    * literal triple (one small parquet read job — the collect that
-    * replaces a per-read shuffle at execution).
+    /** No column mapping and no deletion vector: the bare relation is the
+      * whole read.
+      */
+    def isPlain: Boolean = colmap.isEmpty && sidecars.isEmpty
+
+    /** `raw`, a scan of the entry set under PHYSICAL names, read under
+      * logical names with every dead row gone. `withPos = true` keeps the
+      * `__file`/`__ri` position columns (the [[deleteVectors]] build side).
+      */
+    def over(raw: DataFrame, withPos: Boolean = false): DataFrame = {
+      import org.apache.spark.sql.functions._
+      val logical = colmap.map(_.swap)
+      val pos =
+        if (withPos || sidecars.nonEmpty)
+          Seq(fileKeyCol.as("__file"), col("_metadata.row_index").as("__ri"))
+        else Nil
+      val named = raw.select(raw.columns.toSeq.map(c =>
+        col(c).as(logical.getOrElse(c, c))) ++ pos: _*)
+      val undeleted = runs match {
+        case _ if sidecars.isEmpty => named
+        case Some((files, offsets, rs)) =>
+          graft.functions.GraftFunctions.register(raw.sparkSession)
+          named.filter(call_function("graft_dv_live", col("__file"),
+            col("__ri"), lit(files), lit(offsets), lit(rs)))
+        case None =>
+          // the sidecar side dedups through an Aggregate, not .distinct():
+          // GraftLogReadRewrite inserts this plan during operator
+          // optimization, after the batch that replaces Distinct has run
+          named.join(raw.sparkSession.read.parquet(sidecars: _*)
+            .select(col("file").as("__file"), col("ri").as("__ri"))
+            .groupBy("__file", "__ri").agg(Map.empty[String, String]),
+            Seq("__file", "__ri"), "left_anti")
+      }
+      if (withPos) undeleted else undeleted.drop("__file", "__ri")
+    }
+  }
+
+  /** Decide an entry set's [[EntryRead]]. A DV-free entry set costs
+    * nothing; one with vectors costs O(#sidecars) footer reads for the
+    * exact position count, plus the collect of the runs when they fit
+    * inline.
     */
-  private[graft] def collectDvRuns(spark: SparkSession, root: String,
-      dvPaths: Seq[String]): (Array[String], Array[Long], Array[Long]) = {
-    import org.apache.spark.sql.functions.col
-    dvRuns(spark.read.parquet(dvPaths.map(p => s"$root/$p"): _*)
-      .select(col("file"), col("ri")).collect())
+  private[graft] def entryRead(spark: SparkSession, root: String,
+      entries: Seq[Entry], colmap: Map[String, String]): EntryRead = {
+    val sidecars = entries.flatMap(_.dvs).distinct.map(p => s"$root/$p")
+    val inline = sidecars.nonEmpty &&
+      dvPositionCount(spark, sidecars) <= dvInlineMaxPositions(spark)
+    new EntryRead(colmap, sidecars,
+      if (!inline) None
+      else Some(dvRuns(spark.read.parquet(sidecars: _*)
+        .select("file", "ri").collect())))
   }
 
   /** Build a frame over an arbitrary entry subset of one snapshot (the
     * shared machinery of [[read]], the deletes' rewrite side and
-    * per-version change reads). Entries carrying DELETION VECTORS get
-    * their dead rows filtered away on (file key, row_index) — zero effect
-    * on DV-less snapshots. `withPos = true` keeps the `__file`/`__ri`
-    * helper columns in the output (the [[deleteVectors]] build side).
+    * per-version change reads) through its [[EntryRead]]: dead rows of
+    * entries carrying DELETION VECTORS are filtered away on (file key,
+    * row_index) — zero effect on DV-less snapshots. `withPos = true` keeps
+    * the `__file`/`__ri` helper columns in the output (the
+    * [[deleteVectors]] build side).
     */
   private[graft] def readEntrySet(spark: SparkSession, root: String,
       entries: Seq[Entry], schemaJson: Option[String],
       withPos: Boolean = false,
       colmap: Map[String, String] = Map.empty): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dvPaths = entries.flatMap(_.dvs).distinct
-    val needPos = withPos || dvPaths.nonEmpty
-    val raw = buildEntryFrame(spark, root, entries, schemaJson, needPos, colmap)
-    val undeleted =
-      if (dvPaths.isEmpty) raw
-      else if (dvInlineEligible(spark, root, dvPaths)) {
-        val (files, offsets, runs) = collectDvRuns(spark, root, dvPaths)
-        graft.functions.GraftFunctions.register(spark)
-        raw.filter(call_function("graft_dv_live",
-          col("__file"), col("__ri"),
-          lit(files), lit(offsets), lit(runs)))
-      } else
-        raw.join(spark.read.parquet(dvPaths.map(p => s"$root/$p"): _*)
-          .select(col("file").as("__file"), col("ri").as("__ri"))
-          .distinct(), Seq("__file", "__ri"), "left_anti")
-    if (withPos) undeleted else undeleted.drop("__file", "__ri")
+    val partCols = entries.headOption.map(_.partition.keys.toSeq.sorted)
+      .getOrElse(Seq.empty)
+    if (entries.isEmpty) {
+      val s = schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
+        .getOrElse(throw new IllegalArgumentException(
+          "empty snapshot with no recorded schema — nothing to infer from"))
+      val base = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
+      if (!withPos) base
+      else base.withColumn("__file", lit(null).cast("string"))
+        .withColumn("__ri", lit(null).cast("long"))
+    } else {
+      val raw =
+        if (schemaJson.isEmpty && partCols.isEmpty)
+          // legacy (pre-schema) flat table: parquet footer inference
+          spark.read.parquet(entries.map(f => s"$root/${f.path}"): _*)
+        else {
+          require(entries.forall(_.partition.keys.toSeq.sorted == partCols),
+            "mixed partition layouts in one snapshot are not readable")
+          // ONE manifest-fed relation for the whole entry set — flat or
+          // partitioned — via [[GraftLogFileIndex]]: partition values are
+          // real partition columns of the scan (typed from the recorded
+          // schema), Catalyst prunes partitions and skips on manifest
+          // stats inside listFiles, and no directory is ever listed.
+          // (Spark's own basePath partition discovery cannot read the
+          // commit-dir layout — the walk stops at the first non-k=v
+          // segment.) Under COLUMN MAPPING the relation reads the files'
+          // PHYSICAL names and the EntryRead aliases them back — Catalyst
+          // pushes filters straight through the alias, so stats keyed by
+          // physical name keep skipping after any number of renames.
+          val physSchema = physicalSchema(
+            tableSchemaFor(spark, root, entries, schemaJson), colmap)
+          spark.baseRelationToDataFrame(GraftLog.relation(spark, root,
+            entries, physSchema, partCols.filter(physSchema.fieldNames.contains)))
+        }
+      entryRead(spark, root, entries, colmap).over(raw, withPos)
+    }
   }
 
   /** Pack collected (file, ri) positions into the [[graft.functions.DvLive]]
@@ -1287,57 +1358,6 @@ object TableLog {
     }
     offsets(files.length) = pairs
     (files, offsets, runs.result())
-  }
-
-  private def buildEntryFrame(spark: SparkSession, root: String,
-      entries: Seq[Entry], schemaJson: Option[String],
-      withPos: Boolean, colmap: Map[String, String] = Map.empty): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val schema = schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
-    val partCols = entries.headOption.map(_.partition.keys.toSeq.sorted)
-      .getOrElse(Seq.empty)
-    def pos(df: DataFrame): DataFrame =
-      if (!withPos) df
-      else df.select(col("*"), fileKeyCol.as("__file"),
-        col("_metadata.row_index").as("__ri"))
-    if (entries.isEmpty) {
-      val s = schema.getOrElse(throw new IllegalArgumentException(
-        "empty snapshot with no recorded schema — nothing to infer from"))
-      val base = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-      if (!withPos) base
-      else base.withColumn("__file", lit(null).cast("string"))
-        .withColumn("__ri", lit(null).cast("long"))
-    } else if (schema.isEmpty && partCols.isEmpty) {
-      // legacy (pre-schema) flat table: parquet footer inference
-      pos(spark.read.parquet(entries.map(f => s"$root/${f.path}"): _*))
-    } else {
-      require(entries.forall(_.partition.keys.toSeq.sorted == partCols),
-        "mixed partition layouts in one snapshot are not readable")
-      // ONE manifest-fed relation for the whole entry set — flat or
-      // partitioned — via [[GraftLogFileIndex]]: partition values are real
-      // partition columns of the scan (typed from the recorded schema),
-      // Catalyst prunes partitions and skips on manifest stats inside
-      // listFiles, and no directory is ever listed. (Spark's own basePath
-      // partition discovery cannot read the commit-dir layout — the walk
-      // stops at the first non-k=v segment — and a manifest-driven read
-      // shouldn't re-infer from paths anyway.) Pre-round-15 this planned
-      // one union branch per distinct partition value; a 10k-partition
-      // table built a 10k-way plan.
-      val tableSchema = tableSchemaFor(spark, root, entries, schemaJson)
-      // under COLUMN MAPPING the relation reads the files' PHYSICAL names;
-      // one alias projection restores the logical view — Catalyst pushes
-      // filters straight through it, so stats keyed by physical name keep
-      // skipping after any number of renames
-      val physSchema = physicalSchema(tableSchema, colmap)
-      val rel = GraftLog.relation(spark, root, entries, physSchema,
-        partCols.filter(physSchema.fieldNames.contains))
-      val helpers =
-        (if (withPos) Seq("__file", "__ri") else Nil).map(c => col(c))
-      val logicalCols = tableSchema.fields.toSeq.map(f =>
-        col(colmap.getOrElse(f.name, f.name)).as(f.name))
-      pos(spark.baseRelationToDataFrame(rel))
-        .select(logicalCols ++ helpers: _*)
-    }
   }
 
   /** Decode %XX escaping (hive partition values, URI paths). Consecutive

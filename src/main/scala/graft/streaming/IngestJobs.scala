@@ -70,23 +70,20 @@ object IngestJobs {
 
   /** Append a parsed frame stream to `table` through the configured sink.
     * One checkpointed query per table, like one Flink sink operator each.
+    * The jdbc sink commits each micro-batch exactly once
+    * ([[jdbcBatchExactlyOnce]]).
     */
   def writeTable(parsed: DataFrame, table: String, sink: SinkConfig,
       checkpointDir: String): StreamingQuery =
     parsed.writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", s"$checkpointDir/$table")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         sink.format match {
           case "parquet" =>
             batch.write.mode("append").parquet(s"${sink.path}/$table")
           case "jdbc" =>
-            batch.write.mode("append").format("jdbc")
-              .option("url", sink.url)
-              .option("dbtable", table)
-              .option("user", sink.user)
-              .option("password", sink.password)
-              .save()
+            jdbcBatchExactlyOnce(batch, batchId, table, sink)
           case other =>
             throw new IllegalArgumentException(s"unknown sink format: $other")
         }
@@ -136,12 +133,12 @@ object IngestJobs {
       val c = java.sql.DriverManager.getConnection(sink.url, sink.user, sink.password)
       try f(c) finally c.close()
     }
-    // ledger + target existence: create-if-missing (Derby has no IF NOT
-    // EXISTS — swallow the already-exists SQLState X0Y32)
+    // ledger existence: create-if-missing (Derby has no IF NOT EXISTS —
+    // swallow the engine's already-exists error)
     def ensure(c: java.sql.Connection, ddl: String): Unit = {
       val st = c.createStatement()
       try st.executeUpdate(ddl)
-      catch { case e: java.sql.SQLException if e.getSQLState == "X0Y32" => () }
+      catch { case e: java.sql.SQLException if alreadyExists(e) => () }
       finally st.close()
     }
     withConn { c =>
@@ -185,19 +182,11 @@ object IngestJobs {
     }
   }
 
-  /** [[writeTable]]'s jdbc branch upgraded to exactly-once via
-    * [[jdbcBatchExactlyOnce]] — epoch replays after a crash become no-ops
-    * instead of duplicate inserts.
+  /** A CREATE TABLE failed because the table exists: SQLState X0Y32 on
+    * Derby, 42P07 (duplicate_table) on Postgres.
     */
-  def writeTableJdbcExactlyOnce(parsed: DataFrame, table: String,
-      sink: SinkConfig, checkpointDir: String): StreamingQuery =
-    parsed.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", s"$checkpointDir/$table")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        jdbcBatchExactlyOnce(batch, id, table, sink)
-      }
-      .start()
+  private[graft] def alreadyExists(e: java.sql.SQLException): Boolean =
+    e.getSQLState == "X0Y32" || e.getSQLState == "42P07"
 
   /** Parsed topic frame → the reference table's column set: UTC timestamp
     * first (as the DDL orders it), raw wire timestamp kept as `ts_raw`.

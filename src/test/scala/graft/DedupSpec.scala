@@ -218,7 +218,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("multimodal metaOnly prunes the bytes column at the parquet scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_media").toString
+    val dir = TestSpark.tmpDir("media")
     Seq(
       MediaRecord(1L, "image", Array.fill[Byte](64)(1), Map("f" -> "jpg"))
     ).toDS().write.mode("overwrite").parquet(dir)
@@ -294,7 +294,7 @@ class DedupSpec extends AnyFunSuite {
     val pairs = Seq(
       (11L, 10L), (11L, 12L), (13L, 12L), (14L, 13L),
       (20L, 21L), (21L, 22L), (31L, 30L)).toDF("doc_a", "doc_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cc_ckpt").toString
+    val dir = TestSpark.tmpDir("cc_ckpt")
     try {
       val local = Dedup.connectedComponents(pairs).collect()
         .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq

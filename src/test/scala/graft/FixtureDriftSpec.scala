@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -36,7 +34,7 @@ class FixtureDriftSpec extends AnyFunSuite {
   }
 
   private def roundtrip(df: DataFrame): DataFrame = {
-    val dir = Files.createTempDirectory("graft-drift").toString
+    val dir = TestSpark.tmpDir("drift")
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
     val loaded = Tables.events(spark, dir)
     assert(loaded.schema("ts").dataType == TimestampType,

@@ -20,8 +20,10 @@ class GraftLogSourceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+  private def tmp(tag: String): String = TestSpark.tmpDir(tag)
+
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   test("batch relation: one scan (no union), typed partition column, time travel, evolution") {
     val docs = Tables.load(spark, dir, "documents")
@@ -164,25 +166,9 @@ class GraftLogSourceSpec extends AnyFunSuite {
       "delete(v >= 0.0) must remove the -0.0 rows")
   }
 
-  test("DV fallback translation: Not/Or need complete children; top-level And may drop a side") {
-    import org.apache.spark.sql.sources
-    val rel = new graft.sources.GraftLogDvRelation(spark, "/nonexistent",
-      None, org.apache.spark.sql.types.StructType(Nil))
-    val known = sources.EqualTo("k", 1)
-    val unknown = sources.AlwaysTrue() // no Column translation
-    // partial AND at top level is a sound superset
-    assert(rel.filterToColumn(sources.And(known, unknown)).nonEmpty)
-    // but negating / disjoining a partial translation is NOT implied by
-    // the original predicate — must refuse
-    assert(rel.filterToColumn(sources.Not(sources.And(known, unknown))).isEmpty)
-    assert(rel.filterToColumn(sources.Or(known, unknown)).isEmpty)
-    assert(rel.filterToColumn(sources.Not(known)).nonEmpty)
-    assert(rel.filterToColumn(
-      sources.Not(sources.And(known, sources.IsNull("v")))).nonEmpty)
-  }
-
   test("DV snapshot: inline-eligible format read stays NATIVE; over-cap falls back exact") {
     import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.LeftAnti
     import org.apache.spark.sql.execution.joins.BaseJoinExec
     val root = tmp("gldv")
     val df = (1L to 100L).map(i => (i, i * 10)).toDF("k", "v")
@@ -190,9 +176,8 @@ class GraftLogSourceSpec extends AnyFunSuite {
     TableLog.overwrite(df, root, statCols = Seq("v"))
     TableLog.deleteVectors(spark, root, col("v") <= 300L)
     val got = spark.read.format("graftlog").load(root)
-    // round 16: the RDD[Row] seam is retired for inline-eligible vectors —
-    // the plan is ONE native file scan with the run filter riding the scan
-    // stage, no join, codegen preserved
+    // inline-eligible vectors: ONE native file scan with the run filter
+    // riding the scan stage, no join, codegen preserved
     assert(got.queryExecution.sparkPlan.collect {
       case f: FileSourceScanExec => f }.size == 1,
       s"inline-eligible DV read must plan the native file scan:\n" +
@@ -200,18 +185,24 @@ class GraftLogSourceSpec extends AnyFunSuite {
     assert(got.queryExecution.sparkPlan.collect {
       case j: BaseJoinExec => j }.isEmpty)
     assert(got.select("k").as[Long].collect().sorted.toSeq == (31L to 100L))
+    assert(rows(got) == rows(TableLog.read(spark, root)))
     // filter + projection still exact through the injected run filter,
     // and manifest-stat skipping still engages on the same scan
     assert(got.filter(col("v") > 900L).select("k").as[Long].collect()
       .sorted.toSeq == (91L to 100L))
-    // over-cap vectors: the pinned fallback relation, byte-identical rows
+    // over-cap vectors: the same native relation, expanded into the
+    // anti-join against the sidecars — still a file scan, exact rows
     spark.conf.set(TableLog.DvInlineMaxPositionsKey, "1")
     try {
       val fb = spark.read.format("graftlog").load(root)
       assert(fb.queryExecution.sparkPlan.collect {
-        case f: FileSourceScanExec => f }.isEmpty,
-        "over-cap DV read must take the fallback relation")
+        case f: FileSourceScanExec => f }.nonEmpty &&
+        fb.queryExecution.sparkPlan.collect {
+          case j: BaseJoinExec if j.joinType == LeftAnti => j }.size == 1,
+        "over-cap DV read must plan the file scan anti-joined with the " +
+          "sidecars:\n" + fb.queryExecution.sparkPlan)
       assert(fb.select("k").as[Long].collect().sorted.toSeq == (31L to 100L))
+      assert(rows(fb) == rows(TableLog.read(spark, root)))
     } finally spark.conf.unset(TableLog.DvInlineMaxPositionsKey)
     // a compaction materializes the vectors: plain native relation returns
     TableLog.compact(spark, root, targetBytes = 1L << 30)
@@ -385,9 +376,9 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val root = tmp("gldvpin")
     TableLog.overwrite((1L to 50L).toDF("k"), root)
     TableLog.deleteVectors(spark, root, col("k") > 40L)
-    // force the FALLBACK relation (the native inline path pins entries by
-    // construction; this pins the buildScan-per-action fallback): its scan
-    // must read the version resolved AT LOAD, not re-resolve the head
+    // force the ANTI-JOIN expansion: every action re-plans the read from
+    // the relation's marker, which must pin the entries resolved AT LOAD,
+    // never re-resolve the head
     spark.conf.set(TableLog.DvInlineMaxPositionsKey, "1")
     try {
       val pinned = spark.read.format("graftlog").load(root)
@@ -397,7 +388,8 @@ class GraftLogSourceSpec extends AnyFunSuite {
         (1L to 40L).toSeq,
         "a loaded DataFrame must keep reading the snapshot it was planned " +
           "against after a concurrent append")
-      // a self-join over the pinned frame sees ONE version on both sides
+      // a self-join over the pinned frame sees ONE version on both sides,
+      // each side its own expansion with its own attribute ids
       assert(pinned.as("a").join(pinned.as("b"), "k").count() == 40L)
       // a fresh load sees the new head
       assert(spark.read.format("graftlog").load(root).count() == 51L)
@@ -498,10 +490,16 @@ class GraftLogSourceSpec extends AnyFunSuite {
     assert(TableLog.read(spark, root).count() == 1010L)
     assert(TableLog.read(spark, root).filter(col("val3") === 3030L)
       .select("k").as[Long].head() == 1010L)
-    // a format load of a mapped snapshot serves logical names (fallback)
+    // a format load of a mapped snapshot serves logical names through the
+    // native file scan, and a filter on the logical name still prunes
     val viaFormat = spark.read.format("graftlog").load(root)
     assert(viaFormat.columns.toSeq == Seq("k", "val3"))
+    assert(viaFormat.queryExecution.sparkPlan.collect {
+      case f: FileSourceScanExec => f }.size == 1)
+    assert(rows(viaFormat) == rows(TableLog.read(spark, root)))
     assert(viaFormat.count() == 1010L)
+    assert(PlannedFiles(viaFormat.filter(col("val3") > 2500L)) <
+      PlannedFiles(viaFormat))
     // delete triage re-keys logical bounds to physical stats: files
     // provably outside the range are kept by reference
     val before = TableLog.manifestEntries(spark, root)

@@ -9,17 +9,16 @@ import graft.sources.TableLog
 
 /** Round-16 WRITE side of `format("graftlog")`: the batch writer's four
   * save modes, pure-SQL INSERT INTO / INSERT OVERWRITE through the
-  * extension rewrite, the InsertableRelation route on DV-carrying
-  * snapshots, the exactly-once streaming sink across checkpoint restart,
-  * and the fail-loud guard for sessions without the extensions. The
-  * SQL-visible semantics are the q232 oracle gate; these specs pin the
+  * extension rewrite (also into snapshots with deletion vectors or
+  * renamed columns), the exactly-once streaming sink across checkpoint
+  * restart, and the fail-loud guards for sessions without the extensions.
+  * The SQL-visible semantics are the q232 oracle gate; these specs pin the
   * mode/protocol behaviors SQL cannot see.
   */
 class GraftLogWriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+  private def tmp(tag: String): String = TestSpark.tmpDir(tag)
 
   test("batch writer: save modes commit through the manifest") {
     import spark.implicits._
@@ -101,17 +100,48 @@ class GraftLogWriteSpec extends AnyFunSuite {
     assert(TableLog.read(spark, root, Some(2L)).count() == 100L)
   }
 
-  test("INSERT INTO a DV-carrying snapshot routes through InsertableRelation") {
+  test("INSERT INTO DV-carrying or renamed views goes through GraftLogInsertRewrite") {
     import spark.implicits._
+    // a raw file insert would throw (GraftLogParquetFormat refuses
+    // writes), so one new committed version is the manifest commit
+    def insertInto(view: String, root: String, sql: String): Unit = {
+      spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW $view " +
+        s"USING graftlog OPTIONS (path '$root')")
+      val before = TableLog.headVersion(spark, root).get
+      spark.sql(sql)
+      assert(TableLog.headVersion(spark, root).contains(before + 1))
+    }
+    def keys(root: String) = spark.read.format("graftlog").load(root)
+      .select("k").as[Long].collect().sorted.toSeq
+    // inline-eligible deletion vectors (the default cap)
     val root = tmp("glwdv")
     (1L to 40L).toDF("k").write.format("graftlog").save(root)
     TableLog.deleteVectors(spark, root, col("k") > 30L)
-    spark.sql(s"CREATE OR REPLACE TEMPORARY VIEW glw_dv " +
-      s"USING graftlog OPTIONS (path '$root')")
-    spark.sql("INSERT INTO glw_dv SELECT id AS k FROM range(100, 105)")
-    assert(spark.read.format("graftlog").load(root)
-      .select("k").as[Long].collect().sorted.toSeq ==
-      ((1L to 30L) ++ (100L to 104L)))
+    insertInto("glw_dv", root,
+      "INSERT INTO glw_dv SELECT id AS k FROM range(100, 105)")
+    assert(keys(root) == ((1L to 30L) ++ (100L to 104L)))
+    // over-cap deletion vectors: the same route, the read an anti-join
+    val over = tmp("glwdvcap")
+    (1L to 40L).toDF("k").write.format("graftlog").save(over)
+    TableLog.deleteVectors(spark, over, col("k") > 30L)
+    spark.conf.set(TableLog.DvInlineMaxPositionsKey, "1")
+    try {
+      insertInto("glw_dvcap", over,
+        "INSERT INTO glw_dvcap SELECT id AS k FROM range(100, 105)")
+      assert(keys(over) == ((1L to 30L) ++ (100L to 104L)))
+    } finally spark.conf.unset(TableLog.DvInlineMaxPositionsKey)
+    // a renamed column: the insert is positional over LOGICAL names and
+    // lands under the physical one
+    val mapped = tmp("glwmap")
+    (1L to 10L).map(i => (i, i * 2)).toDF("k", "v")
+      .write.format("graftlog").save(mapped)
+    TableLog.renameColumn(spark, mapped, "v", "w")
+    insertInto("glw_map", mapped,
+      "INSERT INTO glw_map SELECT id AS k, id * 2 AS w FROM range(11, 13)")
+    val got = spark.read.format("graftlog").load(mapped)
+    assert(got.columns.toSeq == Seq("k", "w"))
+    assert(got.as[(Long, Long)].collect().sorted.toSeq ==
+      (1L to 12L).map(i => (i, i * 2)))
   }
 
   test("streaming sink: exactly-once across checkpoint restart, stats ride along") {
@@ -222,5 +252,23 @@ class GraftLogWriteSpec extends AnyFunSuite {
         Map.empty, new org.apache.spark.sql.types.StructType)
     }
     assert(ex.getMessage.contains("commit log"))
+    // READ side: a snapshot with deletion vectors or renamed columns must
+    // never be scanned bare (deleted rows back, NULL renamed columns) —
+    // its marked index refuses to list files unless the extension's
+    // rewrite replaced it first
+    import spark.implicits._
+    val root = tmp("glwnoext")
+    (1L to 10L).toDF("k").write.format("graftlog").save(root)
+    TableLog.deleteVectors(spark, root, col("k") > 5L)
+    def bareListing() = graft.sources.GraftLog.batchRelation(spark, root, None)
+      .asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+      .location.listFiles(Nil, Nil)
+    val dvEx = intercept[UnsupportedOperationException](bareListing())
+    assert(dvEx.getMessage.contains("graft.GraftExtensions"), dvEx.getMessage)
+    TableLog.compact(spark, root, targetBytes = 1L << 30)
+    assert(bareListing().nonEmpty, "a plain snapshot lists its files")
+    TableLog.renameColumn(spark, root, "k", "key")
+    val cmEx = intercept[UnsupportedOperationException](bareListing())
+    assert(cmEx.getMessage.contains("graft.GraftExtensions"), cmEx.getMessage)
   }
 }

@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * builder, so no tool or entry point can drift from the bench's config
   * again; MemoryReplay's runner is the only memory sink, the streaming
   * package keeps no mutable slots a second run in the same JVM could read,
-  * and TableLog's manifest commit is the only way a table file is rewritten
-  * (no directory swap, no dynamic partition overwrite).
+  * TableLog's manifest commit is the only way a table file is rewritten
+  * (no directory swap, no dynamic partition overwrite), and no relation
+  * reads or inserts rows outside the native file relation (no V1 scan or
+  * insertable relation).
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -38,5 +40,11 @@ class GraftSessionSpec extends AnyFunSuite {
   test("no renameTo or partitionOverwriteMode in src/main/scala") {
     val found = hits("", """renameTo|partitionOverwriteMode""")
     assert(found.isEmpty, s"in-place table rewrites: $found")
+  }
+
+  test("no PrunedFilteredScan, PrunedScan, TableScan or InsertableRelation in src/main/scala") {
+    val found = hits("",
+      """\b(PrunedFilteredScan|PrunedScan|TableScan|InsertableRelation)\b""")
+    assert(found.isEmpty, s"V1 row relations: $found")
   }
 }

@@ -54,7 +54,7 @@ class GraphSpec extends AnyFunSuite {
     import spark.implicits._
     val nodes = (1L to 30L).toDF("doc_id")
     val edges = (1L until 30L).map(i => (i, i % 7 + 1)).toDF("doc_a", "doc_b")
-    val dir = java.nio.file.Files.createTempDirectory("graft_pr_ckpt").toString
+    val dir = TestSpark.tmpDir("pr_ckpt")
     try {
       val local = Graph.pagerank(nodes, edges, iters = 4, checkpointEvery = 2)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq

@@ -111,7 +111,7 @@ class IngestJobsSpec extends AnyFunSuite {
     val tape = MarketGen.marketTape(seed = 42, steps = steps)
     val lmp = MarketGen.lmpTape(seed = 43, steps = 100)
 
-    val root = Files.createTempDirectory("graft_ingest_e2e")
+    val root = Paths.get(TestSpark.tmpDir("ingest_e2e"))
     val warehouse = root.resolve("warehouse").toString
     val ckpt = root.resolve("ckpt").toString
     val topics = root.resolve("topics").toString
@@ -186,7 +186,7 @@ class IngestJobsSpec extends AnyFunSuite {
   private def killAndRestart(
       first: (Dataset[PnlRow], String, String) => StreamingQuery): (Long, Long) = {
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_ingest_ckpt")
+    val root = Paths.get(TestSpark.tmpDir("ingest_ckpt"))
     val inDir = root.resolve("in"); Files.createDirectories(inDir)
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -263,7 +263,7 @@ class IngestJobsSpec extends AnyFunSuite {
   }
 
   test("publishFile is atomic: no temp file left, a file-source tail sees only whole files") {
-    val root = Files.createTempDirectory("graft_publish").toString
+    val root = TestSpark.tmpDir("publish")
     val topic = Paths.get(root, "prices"); Files.createDirectories(topic)
     val lines = 20000
     val nFiles = 8

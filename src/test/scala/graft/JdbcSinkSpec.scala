@@ -5,16 +5,14 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.IngestJobs
 
-/** EXECUTES the jdbc sink branch (IngestJobs.writeTable format="jdbc") —
-  * until round 10 the only never-run reference twin besides the kafka
-  * source (VERDICT r9 Missing #1). The sandbox ships no broker and no
-  * Postgres, but Derby rides in /opt/spark/jars, so the real streaming
-  * foreachBatch → DataFrameWriter.jdbc path (URL/table/user options, type
-  * binding, mode=append table auto-create, cross-batch appends) runs
-  * against a genuine embedded JDBC database here. The kafka SOURCE branch
-  * remains spec-pinned only: no kafka-clients/spark-sql-kafka artifact
-  * exists offline (see BASELINE.md r10 note) — that half stays
-  * environmental, this half no longer is.
+/** EXECUTES the jdbc sink branch (IngestJobs.writeTable format="jdbc")
+  * against embedded Derby: the real streaming foreachBatch → exactly-once
+  * commit (`jdbcBatchExactlyOnce`: zero-row create, staging write, one
+  * transaction moving the rows and recording the epoch), across
+  * micro-batches and across a restarted stream. Postgres, the reference
+  * deploy, differs in its already-exists SQLState, pinned here by a unit
+  * test; the kafka SOURCE branch stays spec-pinned only (no connector
+  * artifact offline).
   */
 class JdbcSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -23,7 +21,7 @@ class JdbcSinkSpec extends AnyFunSuite {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val url = "jdbc:derby:memory:graftsmoke;create=true"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_jdbc").toString
+    val ckpt = TestSpark.tmpDir("jdbc")
     val pIn = MemoryStream[String]
     val tIn = MemoryStream[String]
     val qs = IngestJobs.ingestPricesAndTrades(pIn.toDF(), tIn.toDF(),
@@ -95,11 +93,11 @@ class JdbcSinkSpec extends AnyFunSuite {
   test("jdbc exactly-once through a real restarted stream: no duplicates across recovery") {
     val url = "jdbc:derby:memory:graftxostream;create=true"
     val sink = IngestJobs.SinkConfig("jdbc", url = url)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_xo").toString
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_xo_src").toString
+    val ckpt = TestSpark.tmpDir("xo")
+    val srcDir = TestSpark.tmpDir("xo_src")
     def write(name: String, lines: String): Unit =
       java.nio.file.Files.writeString(java.nio.file.Paths.get(srcDir, name), lines)
-    def stream() = IngestJobs.writeTableJdbcExactlyOnce(
+    def stream() = IngestJobs.writeTable(
       IngestJobs.rawStream(spark, IngestJobs.SourceConfig("file", srcDir))
         .selectExpr("value AS v"),
       "events_xo", sink, ckpt)
@@ -117,5 +115,14 @@ class JdbcSinkSpec extends AnyFunSuite {
       .map(_.getAs[String]("v")).sorted.toSeq
     assert(vals == Seq("r1", "r2", "r3"),
       s"exactly the three source rows, no recovery duplicates: $vals")
+  }
+
+  test("jdbc ledger create swallows only Derby's and Postgres's already-exists SQLStates") {
+    def state(s: String) = new java.sql.SQLException("boom", s)
+    assert(IngestJobs.alreadyExists(state("X0Y32")))  // Derby
+    assert(IngestJobs.alreadyExists(state("42P07")))  // Postgres duplicate_table
+    assert(!IngestJobs.alreadyExists(state("42P01"))) // Postgres undefined_table
+    assert(!IngestJobs.alreadyExists(state("08006"))) // connection failure
+    assert(!IngestJobs.alreadyExists(new java.sql.SQLException("no state")))
   }
 }

@@ -92,8 +92,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("curate with a reliable checkpoint dir yields identical rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-pipeline-ckpt")
-      .toString
+    val dir = TestSpark.tmpDir("pipeline-ckpt")
     val local = Pipeline.curate(fixture(), col("doc_id"), col("text"),
       benchPred = col("doc_id") === 0L).orderBy("doc_id").collect()
     val reliable = Pipeline.curate(fixture(), col("doc_id"), col("text"),

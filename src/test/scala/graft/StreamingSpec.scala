@@ -150,7 +150,7 @@ class StreamingSpec extends AnyFunSuite {
       restart: Boolean)(f: Dataset[I] => Dataset[_]): Seq[(Long, Seq[String])] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val input = MemoryStream[I]
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_fold_ckpt").toString
+    val ckpt = TestSpark.tmpDir("fold_ckpt")
     val out = scala.collection.concurrent.TrieMap.empty[Long, Seq[String]]
     def start() = f(input.toDS()).toDF().writeStream.outputMode(mode)
       .option("checkpointLocation", ckpt)
@@ -453,7 +453,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("windowedAgg recovers watermark+window state across kill-and-restart") {
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_wagg_ckpt")
+    val root = java.nio.file.Paths.get(TestSpark.tmpDir("wagg_ckpt"))
     val inDir = root.resolve("in"); java.nio.file.Files.createDirectories(inDir)
     val outDir = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString

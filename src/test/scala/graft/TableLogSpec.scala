@@ -16,8 +16,7 @@ class TableLogSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  private def tmp(tag: String): String =
-    java.nio.file.Files.createTempDirectory(s"graft_$tag").toString
+  private def tmp(tag: String): String = TestSpark.tmpDir(tag)
 
   private def withInterval[A](n: Int)(f: => A): A = {
     val prev = spark.conf.getOption(TableLog.CheckpointIntervalKey)

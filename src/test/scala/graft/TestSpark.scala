@@ -2,8 +2,28 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all Spark-backed specs. */
+/** One shared local session for all Spark-backed specs, and their scratch
+  * dirs.
+  */
 object TestSpark {
+  /** Every [[tmpDir]] this JVM made; one shutdown hook deletes them all. */
+  private val tmpDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+  sys.addShutdownHook(tmpDirs.forEach(rmTree))
+
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmTree)); f.delete(); ()
+  }
+
+  /** A new `graft_<tag>…` dir under java.io.tmpdir (table roots,
+    * checkpoints, source dirs), deleted with its contents when the test
+    * JVM exits.
+    */
+  def tmpDir(tag: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(s"graft_$tag").toFile
+    tmpDirs.add(d)
+    d.toString
+  }
+
   lazy val spark: SparkSession = {
     // keep test-run droppings out of the repo root: Derby (JdbcSinkSpec)
     // writes derby.log to CWD unless told otherwise, and the catalog

@@ -44,7 +44,7 @@ class WarehouseSpec extends AnyFunSuite {
   test("compaction plan + execution over real parquet footers") {
     import graft.sources.TableLog
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_cplan").toString
+    val root = TestSpark.tmpDir("cplan")
     val docs = Tables.load(spark, dir, "documents")
     // 24 small files plus one coalesced large one appended after — the
     // mixed manifest a real micro-batch sink accumulates
@@ -114,7 +114,7 @@ class WarehouseSpec extends AnyFunSuite {
   test("TableLog: rename-is-the-commit, stray tmp ignored, CAS loser throws") {
     import graft.sources.TableLog
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_tlog").toString
+    val root = TestSpark.tmpDir("tlog")
     val v1 = TableLog.overwrite(Seq((1L, 10L), (2L, 20L)).toDF("k", "v"), root)
     assert(v1 == 1L && TableLog.versions(spark, root) == Seq(1L))
     // a crash mid-commit leaves only a .tmp manifest — invisible
@@ -149,7 +149,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("TableLog.compact: keeps by reference, atomic swap, old snapshots intact") {
     import graft.sources.TableLog
-    val root = java.nio.file.Files.createTempDirectory("graft_tlogc").toString
+    val root = TestSpark.tmpDir("tlogc")
     val docs = Tables.load(spark, dir, "documents")
     // fragmented initial snapshot: 24 small files + one big appended
     TableLog.overwrite(docs.repartition(24), root)
@@ -176,7 +176,7 @@ class WarehouseSpec extends AnyFunSuite {
   test("TableLog.vacuum: horizon enforced, head intact, orphans swept by age") {
     import graft.sources.TableLog
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_tlogv").toString
+    val root = TestSpark.tmpDir("tlogv")
     TableLog.overwrite(Seq((1L, 10L)).toDF("k", "v"), root) // v1
     TableLog.append(Seq((2L, 20L)).toDF("k", "v"), root)    // v2
     TableLog.overwrite(Seq((9L, 90L)).toDF("k", "v"), root) // v3: v1/v2 files unreferenced
@@ -210,7 +210,7 @@ class WarehouseSpec extends AnyFunSuite {
   test("TableLog.appendStream: every batch is one atomic commit; epochs replay as no-ops") {
     import graft.sources.TableLog
     import spark.implicits._
-    val root = java.nio.file.Files.createTempDirectory("graft_tlogs").toString
+    val root = TestSpark.tmpDir("tlogs")
     TableLog.overwrite(Seq((0L, 0L)).toDF("k", "v"), root)
     implicit val sq = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime
@@ -244,7 +244,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("TableLog manifest stats prune whole files from the plan, soundly") {
     import graft.sources.TableLog
-    val root = java.nio.file.Files.createTempDirectory("graft_tskip").toString
+    val root = TestSpark.tmpDir("tskip")
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
     TableLog.overwrite(docs.repartitionByRange(8, col("n_chars")),
@@ -268,7 +268,7 @@ class WarehouseSpec extends AnyFunSuite {
 
   test("TableLog.deleteRange: only stat-intersecting files rewritten; old snapshot keeps the rows") {
     import graft.sources.TableLog
-    val root = java.nio.file.Files.createTempDirectory("graft_tdel").toString
+    val root = TestSpark.tmpDir("tdel")
     val docs = Tables.load(spark, dir, "documents")
       .select(col("doc_id"), col("n_chars"))
     TableLog.overwrite(docs.repartitionByRange(8, col("n_chars")),

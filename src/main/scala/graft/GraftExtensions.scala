@@ -14,9 +14,28 @@ import graft.functions.{DotProductD, DotProductL, HashCountVec, HashFeatScore, M
   * Scala API. `GraftFunctions.register` stays as the imperative
   * per-session path the operators call themselves (idempotent; both routes
   * bind the same builders).
+  *
+  * It also sizes Spark's generated-class cache. Spark keeps the classes
+  * Janino compiles (whole-stage, projections, state encoders) in one
+  * JVM-wide LRU cache whose size, `spark.sql.codegen.cache.maxEntries`
+  * (default 100), is read once, at the first compile. One step of the
+  * pipeline (four ingest jobs, forecast, PnL + exposure, then a 7-panel
+  * refresh) uses about 99 distinct classes and a whole run about 150, so at
+  * 100 the LRU evicts each class before its next use and every step
+  * recompiles about 135 of them. `apply` therefore sets that system property
+  * to [[GraftExtensions.CodegenCacheEntries]] when it is absent: a session
+  * builder's `withExtensions(...)` runs `apply` before `getOrCreate()`
+  * copies the `spark.*` system properties into the SparkConf, so every
+  * session built with the extension gets it. The setting is JVM-wide and
+  * fixed at the first compile, and any explicit one wins: a `-D` flag,
+  * spark-submit's `--conf`, a builder `.config`. Under
+  * `spark.sql.extensions` the SparkContext exists before `apply` runs, so
+  * such a deployment sets the conf itself.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    System.getProperties.putIfAbsent(GraftExtensions.CodegenCacheKey,
+      GraftExtensions.CodegenCacheEntries.toString)
     GraftExtensions.injected.foreach { case (name, usage, builder) =>
       ext.injectFunction(
         (FunctionIdentifier(name), new ExpressionInfo("graft", name, usage), builder))
@@ -41,6 +60,13 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  private[graft] val CodegenCacheKey = "spark.sql.codegen.cache.maxEntries"
+
+  /** Generated-class cache entries: room for one pipeline step's ~99
+    * classes and a whole run's ~150, with headroom for the query gates.
+    */
+  private[graft] val CodegenCacheEntries = 1000
+
   /** (name, usage, builder) for every native function — the single source
     * shared by the extension injector; keep in sync with
     * [[graft.functions.GraftFunctions.register]].

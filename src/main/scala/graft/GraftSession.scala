@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
   * Verify, the tools and the test suite, so every caller runs, times and
   * explains the plans the bench runs (GraftExtensions' functions and rules
   * included). GraftSessionSpec fails if any other main source builds a
-  * session.
+  * session. It sets no codegen cache size of its own: it inherits
+  * GraftExtensions' `spark.sql.codegen.cache.maxEntries`, which a `-D` flag
+  * still overrides.
   */
 object GraftSession {
   def local(cpus: Int): SparkSession = {

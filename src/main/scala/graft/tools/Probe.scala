@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -10,8 +11,9 @@ import graft.operators.{Quantize, Similarity}
   * (GraftSession at local[$SPARK_GRAFT_CPUS], default 32, as Bench):
   *
   *   time   <sfDir> <query...> [reps]  one warm run, then `reps` (default 3)
-  *                                     noop-sink runs each; prints every run
-  *                                     and the min (the stable signal)
+  *                                     noop-sink runs each; prints every run,
+  *                                     the classes each run compiled, and
+  *                                     the min (the stable signal)
   *   plan   <sfDir> [query...]         formatted physical plans; every
   *                                     query when none is named
   *   show   <sfDir> <query...>         the first 50 output rows
@@ -36,14 +38,19 @@ object Probe {
           if (rest.length > 1 && rest.last.forall(_.isDigit)) (rest.init, rest.last.toInt)
           else (rest, 3)
         names.foreach { name =>
-          def run(): Double = {
+          // (seconds, classes compiled): a warm run that still compiles
+          // is losing its classes from Spark's generated-class cache
+          def run(): (Double, Long) = {
+            val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
             val t0 = System.nanoTime()
             query(name).write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
+            ((System.nanoTime() - t0) / 1e9,
+              CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
           }
           run() // warm: parquet footers, codegen
-          val times = Seq.fill(reps)(run())
-          println(f"$name: runs=${times.map(t => f"$t%.2f").mkString(",")} min=${times.min}%.2f")
+          val (times, compiles) = Seq.fill(reps)(run()).unzip
+          println(f"$name: runs=${times.map(t => f"$t%.2f").mkString(",")} " +
+            f"compiles=${compiles.mkString(",")} min=${times.min}%.2f")
         }
       case "plan" =>
         val names = if (rest.nonEmpty) rest else SparkEntry.queries.keys.toSeq.sorted

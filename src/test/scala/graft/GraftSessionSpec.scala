@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.SparkSessionExtensions
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-scan guards on the main sources. GraftSession is the only session
@@ -12,7 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * TableLog's manifest commit is the only way a table file is rewritten
   * (no directory swap, no dynamic partition overwrite), and no relation
   * reads or inserts rows outside the native file relation (no V1 scan or
-  * insertable relation).
+  * insertable relation). GraftExtensions sizes Spark's generated-class cache
+  * for every session built with it, unless the conf is already set.
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -46,5 +48,26 @@ class GraftSessionSpec extends AnyFunSuite {
     val found = hits("",
       """\b(PrunedFilteredScan|PrunedScan|TableScan|InsertableRelation)\b""")
     assert(found.isEmpty, s"V1 row relations: $found")
+  }
+
+  test("a GraftSession session sizes the generated-class cache from GraftExtensions") {
+    assert(TestSpark.spark.conf.get(GraftExtensions.CodegenCacheKey) ==
+      GraftExtensions.CodegenCacheEntries.toString)
+  }
+
+  test("GraftExtensions.apply sets an absent codegen cache property and leaves a preset one alone") {
+    val key = GraftExtensions.CodegenCacheKey
+    val saved = Option(System.getProperty(key))
+    try {
+      System.clearProperty(key)
+      new GraftExtensions().apply(new SparkSessionExtensions)
+      assert(System.getProperty(key) == GraftExtensions.CodegenCacheEntries.toString)
+      System.setProperty(key, "37")
+      new GraftExtensions().apply(new SparkSessionExtensions)
+      assert(System.getProperty(key) == "37")
+    } finally saved match {
+      case Some(v) => System.setProperty(key, v)
+      case None => System.clearProperty(key)
+    }
   }
 }

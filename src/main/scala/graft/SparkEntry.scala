@@ -3895,12 +3895,13 @@ object SparkEntry {
     // IVF-PQ quality gate (q86's pattern on the full composition): coarse
     // quantizer prunes the scan to nprobe/cells of the corpus, PQ codes +
     // LUT scoring inside the probed cells, exact rescore. Four booleans:
-    // recall@10 ≥ 0.3 vs brute force (measured 0.52-0.60 at nprobe=16
+    // recall@10 ≥ 0.3 vs brute force (measured 0.52-0.68 at nprobe=16
     // across sf — the coarse quantizer limits recall on this near-uniform
     // fixture, see Quantize.ivfPqKnn doc), rescored scores bit-identical,
     // non-emptiness, and recall within 0.1 of plain ivfKnn at the SAME
-    // nprobe — pinning that the PQ stage itself is (near-)loss-free, the
-    // property that makes the 64× code compression safe to deploy.
+    // nprobe. Both indexes use one coarse quantizer (Similarity
+    // .coarseCells), so that gap is the PQ stage's own loss, the price of
+    // the 64× code compression.
     "q97_ivfpq_ann_quality" -> ((s, d) => {
       val e = t(s, d, "embeddings")
       val bf = Similarity.bruteForceKnn(e, col("vec_id") < 5, k = 10)

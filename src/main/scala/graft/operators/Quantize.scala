@@ -54,10 +54,10 @@ object Quantize {
 
   /** Product-quantization codebooks: the embedding space split into `m`
     * contiguous subspaces of dim/m dims; each subspace gets `k` centroids —
-    * the subvectors of the k hash-smallest rows (xxhash64(vec_id): the same
-    * seedless deterministic sample ivfKnn's coarse quantizer uses — no
-    * training iteration, bit-reproducible). Collected once driver-side:
-    * m·k·(dim/m) doubles ≈ KBs at any corpus size.
+    * the subvectors of the k hash-smallest rows (xxhash64(vec_id): a
+    * seedless deterministic sample — no training iteration,
+    * bit-reproducible). Collected once driver-side: m·k·(dim/m) doubles ≈
+    * KBs at any corpus size.
     */
   private[graft] def pqCodebooks(emb: DataFrame, m: Int, k: Int): Array[Array[Seq[Double]]] = {
     val sample = emb
@@ -167,9 +167,9 @@ object Quantize {
     * The LUT lookup runs through the native [[graft.functions.PqScore]]
     * kernel (codegen'd — the interpreted HOF fold it replaced was the last
     * interpreted inner loop on the ANN hot paths); the candidate set is
-    * bounded by the broadcast query side and the map-side graft_topk
-    * partial, so the exchange carries ≤ k·oversample rows per query per
-    * partition.
+    * bounded by the broadcast query side and the map-side partial of
+    * [[Similarity.shortlist]], so the exchange carries ≤ k·oversample rows
+    * per query per partition.
     *
     * Defaults (m=8, 256-entry codebooks, 16× oversample) measured: recall@10
     * vs brute force = 0.98 / 1.00 / 0.92 at sf0.001/0.01/0.1 (`Probe recall`).
@@ -187,9 +187,7 @@ object Quantize {
       if (trainIters > 0) pqCodebooksTrained(emb, m, codebookSize, iters = trainIters)
       else pqCodebooks(emb, m, codebookSize)
     val codes = pqEncode(emb, col("vec_id"), col("embedding"), books)
-    val e = emb.select(col("vec_id"),
-        Similarity.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
+    val e = Similarity.normed(emb)
     val sub = books(0)(0).size
     // per-query LUT, flattened [s*k + c]: the native kernel computes the
     // m·k small dots in one loop on the (few) query rows only
@@ -204,27 +202,7 @@ object Quantize {
       .select(col("qid"), col("vec_id"),
         call_function("graft_pqscore", col("codes"), col("lut"),
           lit(codebookSize)).as("score"))
-    val cand = approx
-      .groupBy(col("qid"))
-      .agg(call_function("graft_topk",
-        struct(col("score"), (-col("vec_id")).as("nid"), col("vec_id").as("vec_id")),
-        lit(k * oversample)).as("top"))
-      .select(col("qid"), explode(col("top.vec_id")).as("vec_id"))
-    // the rescore fetch: candidates are ≤ queries·k·oversample rows BY
-    // CONSTRUCTION (graft_topk bound), but Spark can't estimate a
-    // post-aggregate frame, so without the explicit broadcast it picks a
-    // sort-merge join and SHUFFLES THE WHOLE CORPUS to fetch a few hundred
-    // vectors (measured: shuffle exponent 2.28 across the 10×→100× probe
-    // decade, 77 MB at 100× — BASELINE r11). Broadcasting the bounded side
-    // keeps the corpus scan in place: shuffle exponent drops to ~0.
-    // Small-query-set contract applies (Similarity.bruteForceKnn doc): the
-    // broadcast rows carry full query vectors, so a broad queryPred can
-    // exceed the broadcast limit where sort-merge merely ran slow.
-    Similarity.topkOf(broadcast(cand
-        .join(broadcast(q.select(col("qid"), col("qv"), col("qnrm"))), Seq("qid")))
-      .join(e, Seq("vec_id"))
-      .withColumn("score", Similarity.cosine(col("qv"), col("v"),
-        col("qnrm"), col("nrm"))), k)
+    Similarity.rescore(Similarity.shortlist(approx, k * oversample), q, e, k)
   }
 
   /** IVF-PQ approximate top-k — the composition a 100 TB ANN deployment
@@ -236,82 +214,47 @@ object Quantize {
     * cosine rescore of the oversampled survivors (bit-identical scores —
     * the q97 gate, same contract as [[pqKnn]]/[[quantizedKnn]]).
     *
-    * Scale shape: ONE corpus scan assigns the cell (literal centroid dots,
-    * a pure map — [[graft.operators.Similarity.ivfKnn]]'s trick) AND
-    * PQ-encodes, so the whole index is (vec_id, cell, codes) ≈ 16+m bytes
-    * per vector; queries broadcast (few rows, each carrying its LUT); the
-    * candidate join touches only probed cells; the bounded graft_topk
-    * partial keeps the exchange ≤ k·oversample rows per query per
-    * partition; only survivors' full vectors are fetched for the rescore.
-    * Centroids and codebooks are deterministic hash-smallest samples
-    * collected once (KBs), inlined as literals.
+    * Scale shape: ONE corpus scan assigns the cell AND PQ-encodes, both
+    * pure scan-side maps, so the whole index is (vec_id, cell, codes) ≈
+    * 16+m bytes per vector; queries broadcast (few rows, each carrying its
+    * LUT); the candidate join touches only probed cells; the bounded
+    * [[Similarity.shortlist]] keeps the exchange ≤ k·oversample rows per
+    * query per partition; only survivors' full vectors are fetched for the
+    * rescore. The coarse quantizer is [[Similarity.ivfKnn]]'s own
+    * ([[Similarity.coarseCells]]) and the codebooks are [[pqCodebooks]]' —
+    * deterministic hash-smallest samples collected once (KBs), inlined as
+    * literals. With an `oversample` whose k·oversample covers every probed
+    * candidate, the result equals same-`cells`/`nprobe` ivfKnn row for row
+    * (QuantizeSpec), so any recall gap to ivfKnn is the PQ stage's loss.
     *
     * Measured (`Probe recall`, recall@10 vs brute force, embeddings fixture,
-    * sf0.001/0.01/0.1): nprobe=8 → 0.38/0.42/0.48, against 0.44/0.36/0.54
-    * for plain [[graft.operators.Similarity.ivfKnn]] at the same nprobe.
-    * The two do not share a coarse quantizer (ivfKnn samples its centroids
-    * by `Corpus.portableHash`, this one by xxhash64), so the ±0.06 gap is
-    * not a PQ-stage loss figure; [[pqKnn]] alone reads 0.98/1.00/0.92. The
-    * coarse quantizer is the recall limiter: this fixture is near-uniform,
-    * so recall tracks the scanned share (nprobe/cells) plus locality —
-    * nprobe=16 → 0.60/0.52/0.58. On
-    * clustered corpora (the IVF use case) recall follows ivfKnn's ≥ 0.9
-    * (SimilaritySpec). The q97 gate runs nprobe=16 with floor 0.3 and
-    * additionally pins recall ≥ same-nprobe ivfKnn − 0.1 (a bound against
-    * plain IVF). Tuning dials are faiss's: nprobe (scan share),
+    * sf0.001/0.01/0.1): nprobe=8 → 0.44/0.36/0.54, the same figures as
+    * plain ivfKnn at that nprobe; [[pqKnn]] alone reads 0.98/1.00/0.92.
+    * The coarse quantizer is the recall limiter: this fixture is
+    * near-uniform, so recall tracks the scanned share (nprobe/cells) plus
+    * locality — nprobe=16 → 0.56/0.52/0.68. On clustered corpora (the IVF
+    * use case) recall follows ivfKnn's ≥ 0.9 (SimilaritySpec). The q97
+    * gate runs nprobe=16 with floor 0.3 and additionally pins recall ≥
+    * same-nprobe ivfKnn − 0.1, which bounds the PQ stage's loss. Tuning dials are faiss's: nprobe (scan share),
     * codebookSize (code resolution), oversample (rescore pool).
     */
   def ivfPqKnn(emb: DataFrame, queryPred: Column, k: Int,
       cells: Int = 64, nprobe: Int = 8,
       m: Int = 8, codebookSize: Int = 256, oversample: Int = 16): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    // ONE plan-build sample scan feeds both codebooks and coarse centroids:
-    // the hash-smallest `cells` rows are a prefix of the hash-smallest
-    // max(cells, codebookSize) sample, so the codebooks are pqCodebooks'
-    // at half the scans. The centroids are xxhash64-smallest rows, not
-    // ivfKnn's portableHash-smallest ones, so the two indexes differ.
-    val sample: Array[(Long, Seq[Double])] = emb
-      .select(col("vec_id"), Similarity.toDouble(col("embedding")).as("v"))
-      .withColumn("h", xxhash64(col("vec_id")))
-      .orderBy(col("h")).limit(math.max(cells, codebookSize))
-      .select(col("vec_id"), col("v")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1)))
-    require(sample.length >= codebookSize,
-      s"ivfpq codebooks need >= $codebookSize corpus vectors, got ${sample.length}")
-    val sub = sample.head._2.size / m
-    val books: Array[Array[Seq[Double]]] =
-      Array.tabulate(m, codebookSize)((s, c) => sample(c)._2.slice(s * sub, (s + 1) * sub))
+    val books = pqCodebooks(emb, m, codebookSize)
     val booksLit = typedLit(flatBooks(books)).cast("array<double>")
-    val e = emb.select(col("vec_id"), Similarity.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
-    // norms computed driver-side on the sample (cells × dim doubles — KBs)
-    val cents: Array[(Long, Seq[Double], Double)] = sample.take(cells)
-      .map { case (cid, v) =>
-        (cid, v, math.sqrt(v.iterator.map(x => x * x).sum))
-      }
-    // nearest cell / probed cells via the native cell kernels over ONE
-    // graft_pqlut centroid-dot pass — exact semantics of the array_max /
-    // reverse(array_sort) struct spelling, which broke whole-stage codegen
-    // past ~64 cells (r17 — see Similarity.ivfKnn and NativeExprs
-    // CellKernel)
-    val dimV = sample.head._2.size
-    val centsFlat = typedLit(cents.toSeq.flatMap(_._2)).cast("array<double>")
-    val cnrmsLit = typedLit(cents.toSeq.map(_._3)).cast("array<double>")
-    val cidsLit = typedLit(cents.toSeq.map(_._1)).cast("array<bigint>")
-    val cellLut = call_function("graft_pqlut", col("v"), centsFlat,
-      lit(dimV), lit(cents.length))
-    // one scan: cell assignment + PQ codes, both pure scan-side maps
-    val index = e.select(col("vec_id"),
-      call_function("graft_cellargmax", cellLut, col("nrm"), cnrmsLit,
-        cidsLit).as("cell"),
+    val sub = books(0)(0).size
+    val e = Similarity.normed(emb)
+    val cc = Similarity.coarseCells(emb, cells)
+    val index = e.select(col("vec_id"), cc.assign.as("cell"),
       call_function("graft_pqencode", col("v"), booksLit, lit(sub),
         lit(codebookSize)).as("codes"))
     val q = e.where(queryPred)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"),
         call_function("graft_pqlut", col("v"), booksLit, lit(sub),
           lit(codebookSize)).as("lut"),
-        call_function("graft_celltop", cellLut, col("nrm"), cnrmsLit,
-          cidsLit, lit(nprobe)).as("pr"))
+        cc.probe(nprobe).as("pr"))
     val probes = q.select(col("qid"), col("lut"),
       explode(col("pr")).as("cell"))
     // each vector lives in exactly one cell, so (qid, vec_id) meets at most
@@ -321,26 +264,7 @@ object Quantize {
       .select(col("qid"), col("vec_id"),
         call_function("graft_pqscore", col("codes"), col("lut"),
           lit(codebookSize)).as("score"))
-    val cand = approx.groupBy(col("qid"))
-      .agg(call_function("graft_topk",
-        struct(col("score"), (-col("vec_id")).as("nid"), col("vec_id").as("vec_id")),
-        lit(k * oversample)).as("top"))
-      .select(col("qid"), explode(col("top.vec_id")).as("vec_id"))
-    // the rescore fetch: candidates are ≤ queries·k·oversample rows BY
-    // CONSTRUCTION (graft_topk bound), but Spark can't estimate a
-    // post-aggregate frame, so without the explicit broadcast it picks a
-    // sort-merge join and SHUFFLES THE WHOLE CORPUS to fetch a few hundred
-    // vectors (measured: shuffle exponent 2.28 across the 10×→100× probe
-    // decade, 77 MB at 100× — BASELINE r11). Broadcasting the bounded side
-    // keeps the corpus scan in place: shuffle exponent drops to ~0.
-    // Small-query-set contract applies (Similarity.bruteForceKnn doc): the
-    // broadcast rows carry full query vectors, so a broad queryPred can
-    // exceed the broadcast limit where sort-merge merely ran slow.
-    Similarity.topkOf(broadcast(cand
-        .join(broadcast(q.select(col("qid"), col("qv"), col("qnrm"))), Seq("qid")))
-      .join(e, Seq("vec_id"))
-      .withColumn("score", Similarity.cosine(col("qv"), col("v"),
-        col("qnrm"), col("nrm"))), k)
+    Similarity.rescore(Similarity.shortlist(approx, k * oversample), q, e, k)
   }
 
   /** Approximate top-k by quantized score, exact-rescored: per query, the
@@ -353,7 +277,7 @@ object Quantize {
     *
     * Scale shape: the corpus is scanned once through the quantized
     * projection (≈4× less data than the double vectors); the candidate
-    * top-k·oversample runs through the bounded graft_topk aggregate
+    * top-k·oversample runs through the bounded [[Similarity.shortlist]]
     * (map-side partial, ≤ k·oversample rows per query per partition on the
     * exchange); only candidates' full vectors are fetched for the rescore.
     * Quality contract: recall@k vs brute force is gated in q79 (the int8
@@ -373,23 +297,11 @@ object Quantize {
         (col("q_scale") * col("scale") *
           call_function("graft_doti", col("q_codes"), col("codes"))
             .cast("double")).as("score"))
-    val cand = approx
-      .groupBy(col("qid"))
-      .agg(call_function("graft_topk",
-        struct(col("score"), (-col("vec_id")).as("nid"), col("vec_id").as("vec_id")),
-        lit(k * oversample)).as("top"))
-      .select(col("qid"), explode(col("top.vec_id")).as("vec_id"))
     // exact rescore of the surviving sliver only
-    val e = emb.select(col("vec_id"),
-        Similarity.toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", Similarity.norm(col("v")))
-    val qe = e.where(queryPred)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-    // bounded-candidate broadcast on the rescore fetch — see ivfPqKnn's
-    // comment (the corpus must never shuffle to serve a few hundred ids)
-    Similarity.topkOf(broadcast(cand.join(broadcast(qe), Seq("qid")))
-      .join(e, Seq("vec_id"))
-      .withColumn("score", Similarity.cosine(col("qv"), col("v"),
-        col("qnrm"), col("nrm"))), k)
+    val e = Similarity.normed(emb)
+    Similarity.rescore(Similarity.shortlist(approx, k * oversample),
+      e.where(queryPred)
+        .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm")),
+      e, k)
   }
 }

@@ -61,22 +61,55 @@ object Similarity {
         col("col.score").as("score"), (col("pos") + 1).cast("long").as("rn"))
       .select(col("qid"), col("vec_id"), col("score"), col("rn"))
 
-  /** Exact top-k neighbours for each query vector (`queryPred` selects the
-    * query rows). Output: (qid, vec_id, score, rn), rn = 1..k.
+  /** The (vec_id, v, nrm) frame every KNN path scores over: the embedding
+    * as doubles plus its norm.
+    */
+  private[graft] def normed(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
+      .withColumn("nrm", norm(col("v")))
+
+  /** The filter stage's bounded candidate set: (qid, score, vec_id)
+    * approximate scores → the (qid, vec_id) of each query's top `n`.
+    */
+  private[operators] def shortlist(approx: DataFrame, n: Int): DataFrame =
+    topkOf(approx, n).select(col("qid"), col("vec_id"))
+
+  /** The refine stage of every filter-and-refine KNN: (qid, vec_id)
+    * candidates → exact-cosine top-k, (qid, vec_id, score, rn) with scores
+    * bit-identical to [[bruteForceKnn]]. `queries` carries (qid, qv, qnrm)
+    * and `e` is the [[normed]] corpus.
+    *
+    * Candidates are ≤ queries·k·oversample rows BY CONSTRUCTION (the
+    * [[shortlist]] bound), but Spark can't estimate a post-aggregate frame,
+    * so without the explicit broadcast it picks a sort-merge join and
+    * SHUFFLES THE WHOLE CORPUS to fetch a few hundred vectors (measured:
+    * shuffle exponent 2.28 across the 10×→100× probe decade, 77 MB at 100×
+    * — BASELINE r11). Broadcasting the bounded side keeps the corpus scan
+    * in place: shuffle exponent drops to ~0.
     *
     * SMALL-QUERY-SET CONTRACT (every *Knn op here and in
-    * [[graft.operators.Quantize]], including their rescore-fetch joins):
-    * the query side — and the ≤ |queries|·k·oversample candidate rows
-    * carrying full query vectors — is broadcast, so a broad `queryPred`
-    * (≳10⁵ queries at dim 64) can exceed the broadcast/driver limit and
-    * FAIL where an unhinted sort-merge plan merely ran slow. These are
-    * point-lookup/retrieval ops; a corpus-sized query set is a similarity
-    * JOIN and belongs with [[cosineDupPairsLsh]]/[[semDedup]] instead.
+    * [[graft.operators.Quantize]]): the query side — and the bounded
+    * candidate rows carrying full query vectors — is broadcast, so a broad
+    * `queryPred` (≳10⁵ queries at dim 64) can exceed the broadcast/driver
+    * limit and FAIL where an unhinted sort-merge plan merely ran slow.
+    * These are point-lookup/retrieval ops; a corpus-sized query set is a
+    * similarity JOIN and belongs with [[cosineDupPairsLsh]]/[[semDedup]]
+    * instead.
+    */
+  private[operators] def rescore(cand: DataFrame, queries: DataFrame,
+      e: DataFrame, k: Int): DataFrame =
+    topkOf(broadcast(cand
+        .join(broadcast(queries.select(col("qid"), col("qv"), col("qnrm"))), Seq("qid")))
+      .join(e, Seq("vec_id"))
+      .withColumn("score", cosine(col("qv"), col("v"), col("qnrm"), col("nrm"))), k)
+
+  /** Exact top-k neighbours for each query vector (`queryPred` selects the
+    * query rows). Output: (qid, vec_id, score, rn), rn = 1..k. The query
+    * side is broadcast — the small-query-set contract of [[rescore]].
     */
   def bruteForceKnn(emb: DataFrame, queryPred: Column, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val e = normed(emb)
     val q = e.filter(queryPred)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
     // query side is small by construction — broadcast it so the big scan
@@ -195,8 +228,7 @@ object Similarity {
              planes: Int = 4, tables: Int = 16, dim: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val d = if (dim > 0) dim else dimOf(emb)
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val e = normed(emb)
     val eb = withBucketEntries(e, planes, tables, d)
       .select(col("tb.tbl").as("tbl"), col("tb.bucket").as("bucket"), col("vec_id"))
     // sketch the (few) query rows directly — bucketing is a pure function of
@@ -206,14 +238,51 @@ object Similarity {
     val cand = broadcast(qb).join(eb, Seq("tbl", "bucket"))
       .filter(col("vec_id") =!= col("qid"))
       .select(col("qid"), col("vec_id")).distinct()
-    val q = e.filter(queryPred)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-    // bounded-candidate broadcast on the rescore fetch — see
-    // Quantize.ivfPqKnn's comment (the corpus must never shuffle to serve
-    // a few hundred candidate ids)
-    topkOf(broadcast(cand.join(broadcast(q), Seq("qid")))
-      .join(e, Seq("vec_id"))
-      .withColumn("score", cosine(col("qv"), col("v"), col("qnrm"), col("nrm"))), k)
+    rescore(cand, e.filter(queryPred)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm")), e, k)
+  }
+
+  /** A coarse quantizer's two cell columns over a [[normed]] frame. */
+  private[graft] final class CoarseCells(lut: Column, cnrms: Column, cids: Column) {
+    /** The row's nearest cell id. */
+    def assign: Column = call_function("graft_cellargmax", lut, col("nrm"), cnrms, cids)
+    /** The row's `nprobe` nearest cell ids, nearest first. */
+    def probe(nprobe: Int): Column =
+      call_function("graft_celltop", lut, col("nrm"), cnrms, cids, lit(nprobe))
+  }
+
+  /** The IVF coarse quantizer shared by [[ivfKnn]] and
+    * [[Quantize.ivfPqKnn]]: `cells` centroids are the rows with the smallest
+    * [[Corpus.portableHash]] of vec_id (TakeOrdered, collected once —
+    * cells × dim doubles; the hash is injective below 2³², so the sample
+    * needs no tie-break), their norms computed driver-side so the sampling
+    * job pays no per-row dot product.
+    *
+    * Both cell columns run the native cell kernels (r17): the centroid dots
+    * go through ONE graft_pqlut pass (lut[c] = dot(v, cent_c), the same
+    * sequential fold as [[dot]]) and graft_cellargmax / graft_celltop
+    * reproduce exactly what array_max / reverse(array_sort) over
+    * struct(lut[c]/(nrm·cnrm[c]), cid[c]) selected — same mul-then-div
+    * doubles, same nan-safe ordering, same cid tie-breaks (NativeExprSpec
+    * pins kernel ≡ expression). The inlined literal-dot struct array broke
+    * whole-stage codegen past ~64 cells and ran ~100× slower on a 200k
+    * corpus (r17 kernel A/B, VERDICT.md).
+    */
+  private[graft] def coarseCells(emb: DataFrame, cells: Int): CoarseCells = {
+    val cents = emb
+      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
+      .withColumn("h", Corpus.portableHash(col("vec_id")))
+      .orderBy(col("h")).limit(cells)
+      .select(col("vec_id"), col("v"))
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getSeq[Double](1)))
+    new CoarseCells(
+      call_function("graft_pqlut", col("v"),
+        typedLit(cents.flatMap(_._2)).cast("array<double>"),
+        lit(cents.head._2.size), lit(cents.length)),
+      typedLit(cents.map { case (_, v) => math.sqrt(v.iterator.map(x => x * x).sum) })
+        .cast("array<double>"),
+      typedLit(cents.map(_._1)).cast("array<bigint>"))
   }
 
   /** IVF (inverted-file) approximate KNN — the coarse-quantizer scale path
@@ -226,52 +295,21 @@ object Similarity {
     * rerank exactly.
     *
     * Scale shape: centroids are collected once (cells × dim doubles — KB)
-    * and inlined as literal vectors, so cell assignment is `cells` codegen'd
-    * constant-vector dots + an `array_max` per row — a pure map over the
-    * scan, no shuffle, no join. The only exchange is the probe-cell
+    * and inlined as literals ([[coarseCells]]), so cell assignment is one
+    * codegen'd kernel pass per row — a pure map over the scan, no shuffle,
+    * no join. The only exchange is the probe-cell
     * candidate join (query side broadcast) and the final per-query top-k.
     * Recall@10 vs brute force is asserted in SimilaritySpec.
     */
   def ivfKnn(emb: DataFrame, queryPred: Column, k: Int,
              cells: Int = 64, nprobe: Int = 8): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    // TakeOrdered over portableHash(vec_id): norms only for the `cells`
-    // sampled rows, computed driver-side — the sampling job must not pay a
-    // full dot product per corpus row. The hash is injective below 2³², so
-    // the sample needs no tie-break.
-    val cents: Array[(Long, Seq[Double], Double)] = emb
-      .select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("h", Corpus.portableHash(col("vec_id")))
-      .orderBy(col("h")).limit(cells)
-      .select(col("vec_id"), col("v"))
-      .collect()
-      .map { r =>
-        val v = r.getSeq[Double](1)
-        (r.getLong(0), v, math.sqrt(v.iterator.map(x => x * x).sum))
-      }
-    // nearest cell / probed cells via the native cell kernels (r17): the
-    // centroid dots run through ONE graft_pqlut pass (lut[c] = dot(v,
-    // cent_c), the same sequential fold as [[dot]]) and graft_cellargmax /
-    // graft_celltop reproduce exactly what array_max / reverse(array_sort)
-    // over struct(lut[c]/(nrm·cnrm[c]), cid[c]) selected — same
-    // mul-then-div doubles, same nan-safe ordering, same cid tie-breaks
-    // (NativeExprSpec pins kernel ≡ expression). The inlined literal-dot
-    // struct array broke whole-stage codegen past ~64 cells and ran ~100×
-    // slower on a 200k corpus (r17 kernel A/B, VERDICT.md).
-    val dimV = cents.head._2.size
-    val centsFlat = typedLit(cents.toSeq.flatMap(_._2)).cast("array<double>")
-    val cnrmsLit = typedLit(cents.toSeq.map(_._3)).cast("array<double>")
-    val cidsLit = typedLit(cents.toSeq.map(_._1)).cast("array<bigint>")
-    val lutCol = call_function("graft_pqlut", col("v"), centsFlat,
-      lit(dimV), lit(cents.length))
-    val assigned = e.withColumn("cell",
-      call_function("graft_cellargmax", lutCol, col("nrm"), cnrmsLit, cidsLit))
+    val e = normed(emb)
+    val cc = coarseCells(emb, cells)
+    val assigned = e.withColumn("cell", cc.assign)
     val probes = e.filter(queryPred)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"),
-        call_function("graft_celltop", lutCol, col("nrm"), cnrmsLit, cidsLit,
-          lit(nprobe)).as("pr"))
+        cc.probe(nprobe).as("pr"))
       .withColumn("cell", explode(col("pr")))
       .drop("pr")
     topkOf(broadcast(probes).join(assigned, Seq("cell"))
@@ -301,22 +339,17 @@ object Similarity {
   def matryoshkaKnn(emb: DataFrame, queryPred: Column, k: Int,
                     prefixDim: Int = 32, shortlist: Int = 100): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val e = normed(emb)
       .withColumn("p", slice(col("v"), 1, prefixDim))
       .withColumn("pnrm", norm(col("p")))
     val q = e.filter(queryPred)
       .select(col("vec_id").as("qid"), col("p").as("qp"), col("pnrm").as("qpnrm"),
         col("v").as("qv"), col("nrm").as("qnrm"))
-    val cand = topkOf(broadcast(q.select(col("qid"), col("qp"), col("qpnrm")))
+    val cand = Similarity.shortlist(broadcast(q.select(col("qid"), col("qp"), col("qpnrm")))
         .join(e, col("vec_id") =!= col("qid"))
         .withColumn("score", cosine(col("qp"), col("p"), col("qpnrm"), col("pnrm"))),
         shortlist)
-      .select(col("qid"), col("vec_id"))
-    topkOf(broadcast(cand
-        .join(broadcast(q.select(col("qid"), col("qv"), col("qnrm"))), Seq("qid")))
-      .join(e, Seq("vec_id"))
-      .withColumn("score", cosine(col("qv"), col("v"), col("qnrm"), col("nrm"))), k)
+    rescore(cand, q, e, k)
   }
 
   /** EXACT all pairs with cosine ≥ threshold (the q26 oracle mode).
@@ -340,8 +373,7 @@ object Similarity {
       if (blocks > 0) blocks
       else math.max(16, math.ceil(math.sqrt(
         2.0 * emb.sparkSession.sparkContext.defaultParallelism)).toInt)
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val e = normed(emb)
       .withColumn("b", pmod(xxhash64(col("vec_id")), lit(nb)).cast("int"))
     val x = e
       .withColumn("key", explode(transform(
@@ -383,8 +415,7 @@ object Similarity {
                         corpusSize: Long = 0L, dim: Int = 0): DataFrame = {
     graft.functions.GraftFunctions.register(emb.sparkSession)
     val d = if (dim > 0) dim else dimOf(emb)
-    val e = emb.select(col("vec_id"), toDouble(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
+    val e = normed(emb)
     val p =
       if (planes > 0) planes
       else autoPlanes(corpusRows(emb, corpusSize))

@@ -300,22 +300,13 @@ object ScaleProbe {
       // cell-population skew at each scale: the probed-cell candidate
       // join's per-cell fan-out is the suspected super-linear term (q172
       // audits the Gini; this prints max/mean occupancy next to the wall),
-      // assignment mirroring ivfKnn's hash-smallest-sample centroids +
-      // nearest-by-distance rule
+      // counted from the index's own cell assignment (the q97 chain's
+      // default 64-cell coarse quantizer)
       Seq(("1x", srcDir), ("10x", dir), ("100x", d100)).foreach {
         case (label, d) =>
-          val e = embOf(d).select(col("vec_id"),
-            Similarity.toDouble(col("embedding")).as("v"))
-          val cents = e.withColumn("h", xxhash64(col("vec_id")))
-            .orderBy(col("h")).limit(64)
-            .select(col("vec_id").as("cid"), col("v").as("cv"))
-          val dist2 = (Similarity.dot(col("v"), col("v"))
-            - lit(2.0) * Similarity.dot(col("v"), col("cv"))) +
-            Similarity.dot(col("cv"), col("cv"))
-          val cellStats = e.crossJoin(broadcast(cents))
-            .select(col("vec_id"), struct(dist2.as("d"), col("cid")).as("dc"))
-            .groupBy(col("vec_id")).agg(min(col("dc")).as("best"))
-            .select(col("best.cid").as("cell"))
+          val emb = embOf(d)
+          val cellStats = Similarity.normed(emb)
+            .select(Similarity.coarseCells(emb, 64).assign.as("cell"))
             .groupBy(col("cell")).agg(count(lit(1)).as("n"))
             .agg(count(lit(1)).as("n_cells"), max(col("n")).as("mx"),
               avg(col("n")).as("mean")).collect().head

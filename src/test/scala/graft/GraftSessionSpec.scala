@@ -14,7 +14,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (no directory swap, no dynamic partition overwrite), and no relation
   * reads or inserts rows outside the native file relation (no V1 scan or
   * insertable relation). GraftExtensions sizes Spark's generated-class cache
-  * for every session built with it, unless the conf is already set.
+  * for every session built with it, unless the conf is already set. The
+  * IVF coarse quantizer and the bounded KNN shortlist are built only in
+  * Similarity; Quantize keeps what is PQ- or int8-specific.
   */
 class GraftSessionSpec extends AnyFunSuite {
 
@@ -48,6 +50,14 @@ class GraftSessionSpec extends AnyFunSuite {
     val found = hits("",
       """\b(PrunedFilteredScan|PrunedScan|TableScan|InsertableRelation)\b""")
     assert(found.isEmpty, s"V1 row relations: $found")
+  }
+
+  test("Quantize spells no graft_topk or cell kernel; cell kernels only in Similarity") {
+    val quantize = hits("graft/operators", """graft_(topk|cellargmax|celltop)\b""")
+      .filter(_._1 == "Quantize.scala")
+    assert(quantize.isEmpty, s"Quantize builds its own shortlist or cells: $quantize")
+    val cells = hits("graft/operators", """graft_(cellargmax|celltop)\b""").map(_._1)
+    assert(cells == Seq("Similarity.scala"), s"coarse quantizers: $cells")
   }
 
   test("a GraftSession session sizes the generated-class cache from GraftExtensions") {

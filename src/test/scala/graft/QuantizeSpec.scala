@@ -110,7 +110,7 @@ class QuantizeSpec extends AnyFunSuite {
     assert(j.filter(col("score") =!= col("score_q")).count() == 0)
   }
 
-  test("ivfPqKnn: PQ stage loss-free vs same-nprobe ivfKnn, scores bit-identical") {
+  test("ivfPqKnn: recall within 0.1 of ivfKnn, equal at full oversample, exact scores") {
     val exact = Similarity.bruteForceKnn(emb, col("vec_id") < 5, k = 10)
       .select(col("qid"), col("vec_id"), col("score"))
     val ivfpq = Quantize.ivfPqKnn(emb, col("vec_id") < 5, k = 10, nprobe = 16)
@@ -129,6 +129,16 @@ class QuantizeSpec extends AnyFunSuite {
     val j = exact.join(ivfpq, Seq("qid", "vec_id"))
     assert(j.filter(col("score") =!= col("score_q")).count() == 0,
       "rescored scores must be bit-identical to brute force")
+    // both indexes share one coarse quantizer: once k·oversample covers
+    // every probed candidate (the fixture has 500 vectors), the PQ
+    // shortlist drops nothing and the rescore ranks exactly what ivfKnn
+    // ranks
+    val full = Quantize.ivfPqKnn(emb, col("vec_id") < 5, k = 10, nprobe = 16,
+      oversample = 50).orderBy("qid", "rn").collect()
+    val plain = Similarity.ivfKnn(emb, col("vec_id") < 5, k = 10, nprobe = 16)
+      .orderBy("qid", "rn").collect()
+    assert(plain.nonEmpty && full.sameElements(plain),
+      s"full-oversample ivfPqKnn != ivfKnn:\n${full.mkString("\n")}\nvs\n${plain.mkString("\n")}")
   }
 
   test("bm25: higher tf scores higher; absent term contributes no row") {
